@@ -4,6 +4,7 @@ import java.util
 
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -48,10 +49,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def listTables(namespace: Array[String]): Array[Identifier] =
     tableNames.map(t => Identifier.of(namespace, t)).toArray
 
+  /** Names match case-insensitively unless `spark.sql.caseSensitive`
+    * is set — how Spark resolves temp views and session tables. An exact
+    * match wins; several case-insensitive ones are no match. */
   override def loadTable(ident: Identifier): Table = {
-    val t = ident.name()
-    if (!tableNames.contains(t))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
+    val names = tableNames
+    val t = (
+      if (names.contains(ident.name())) Some(ident.name())
+      else if (SQLConf.get.caseSensitiveAnalysis) None
+      else names.filter(_.equalsIgnoreCase(ident.name())) match {
+        case Seq(only) => Some(only)
+        case _ => None
+      }).getOrElse(
+        throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
     // catalog tables keep the Spark-side contract: always split-scan
     // (the reference's split=false default is the raw-OPTION default
     // only — a 1000-executor catalog read wants N partitions, not 1)

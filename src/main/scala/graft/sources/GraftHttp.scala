@@ -113,18 +113,29 @@ class GraftHttpServer(dir: String,
   // an id — scoping cancels to (id, nonce) keeps one consumer's cancel
   // from truncating the other's streams. Monotonic per server.
   private val nonces = new AtomicLong(0L)
-  // (id, nonce) → cancel-entry expiry. The TTL bounds the blast radius
-  // to streams in flight around the cancel — the reference's
-  // best-effort contract (cancel_monitor.cpp).
+  // (id, nonce, split) → cancel-entry expiry; split -1 cancels the
+  // whole plan, a split id only that split's stream (a task closing its
+  // own split early must not fail its siblings). The TTL bounds the
+  // blast radius to streams in flight around the cancel — the
+  // reference's best-effort contract (cancel_monitor.cpp).
   private val cancelledIds =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Long), Long]()
+    new java.util.concurrent.ConcurrentHashMap[(Long, Long, Int), Long]()
   private val CancelTtlMillis = 60000L
-  private def isCancelled(id: Long, nonce: Long): Boolean = {
-    val exp = cancelledIds.get((id, nonce))
+  private val WholePlan = -1
+  private def live(key: (Long, Long, Int)): Boolean = {
+    val exp = cancelledIds.get(key)
     exp != 0L && {
       if (System.currentTimeMillis() < exp) true
-      else { cancelledIds.remove((id, nonce)); false }
+      else { cancelledIds.remove(key); false }
     }
+  }
+  /** Whether the stream of `split` (or, for [[WholePlan]], the plan
+    * itself) is cancelled. */
+  private def isCancelled(id: Long, nonce: Long, split: Int): Boolean =
+    live((id, nonce, WholePlan)) || (split != WholePlan && live((id, nonce, split)))
+  private def registerCancel(id: Long, nonce: Long, split: Int): Unit = {
+    cancels.incrementAndGet()
+    cancelledIds.put((id, nonce, split), System.currentTimeMillis() + CancelTtlMillis)
   }
   @volatile private var server: HttpServer = _
 
@@ -176,10 +187,7 @@ class GraftHttpServer(dir: String,
   /** Producer-side cancel of a running statement — what an admin (or
     * the producer's own resource governor) does; consumers learn of it
     * through the client-side [[CancelPollMonitor]]. */
-  def cancelStatement(id: Long, nonce: Long): Unit = {
-    cancels.incrementAndGet()
-    cancelledIds.put((id, nonce), System.currentTimeMillis() + CancelTtlMillis)
-  }
+  def cancelStatement(id: Long, nonce: Long): Unit = registerCancel(id, nonce, WholePlan)
   /** Streams terminated early by client disconnect or /v1/cancel. */
   def abortedScans: Int = aborted.get()
   /** /v1/cancel requests received (the task-close propagation observable). */
@@ -287,12 +295,15 @@ class GraftHttpServer(dir: String,
     }
   }
 
-  /** GET /v1/cancel?q=&id=N[&nonce=M] — best-effort: in-flight
-    * /v1/query streams carrying that (id, nonce) stop at their next
-    * frame (the reference's cancel monitor polls the same way,
+  /** GET /v1/cancel?q=&id=N[&nonce=M][&split=S] — best-effort:
+    * in-flight /v1/query streams carrying that (id, nonce) stop at their
+    * next frame (the reference's cancel monitor polls the same way,
     * cancel_monitor.cpp). The nonce comes from the plan's statement
     * handle; a cancel without one targets nonce-less streams only
-    * (hand-built scans), never a planned consumer's. */
+    * (hand-built scans), never a planned consumer's. With `split`, only
+    * that split's stream stops — what a task closing its split early
+    * sends — and the plan stays live: the `check` probe, which the
+    * consumers' poll monitors read, reports plan-wide cancels only. */
   private def cancel(ex: HttpExchange): Unit = {
     val p = params(ex.getRequestURI.getRawQuery)
     p.get("id").flatMap(_.toLongOption) match {
@@ -304,10 +315,11 @@ class GraftHttpServer(dir: String,
           // Read-only: never registers a cancel, never bumps the
           // cancels counter.
           respond(ex, 200,
-            s"""{"cancelled":${isCancelled(id, nonce)}}""",
+            s"""{"cancelled":${isCancelled(id, nonce, WholePlan)}}""",
             "application/json")
         } else {
-          cancelStatement(id, nonce)
+          registerCancel(id, nonce,
+            p.get("split").flatMap(_.toIntOption).getOrElse(WholePlan))
           respond(ex, 200, "cancelled")
         }
       case None => respond(ex, 400, "graft-http: cancel requires id")
@@ -391,6 +403,7 @@ class GraftHttpServer(dir: String,
     val p = params(ex.getRequestURI.getRawQuery)
     val queryId = p.get("id").flatMap(_.toLongOption).getOrElse(-1L)
     val nonce = p.get("nonce").flatMap(_.toLongOption).getOrElse(0L)
+    val splitId = p.get("split").flatMap(_.toIntOption).getOrElse(WholePlan)
     val structured = p.contains("table") || p.contains("sql")
 
     if (structured && p.get("limit").contains("0")) {
@@ -466,7 +479,7 @@ class GraftHttpServer(dir: String,
       // /v1/cancel for this id stops at the next frame boundary
       val guarded = new Iterator[Array[Byte]] {
         override def hasNext: Boolean = {
-          if (queryId >= 0 && isCancelled(queryId, nonce))
+          if (queryId >= 0 && isCancelled(queryId, nonce, splitId))
             throw new java.io.IOException(s"query $queryId cancelled")
           ipc.hasNext
         }
@@ -691,10 +704,12 @@ class HttpEndpoint(baseUrl: String, token: Option[String],
   /** Best-effort server-side cancel of a (query id, plan nonce)
     * (arrow_http_client.cpp:170-199: errors ignored). The nonce scopes
     * the cancel to THIS plan's streams — ids are deterministic hashes
-    * of the wire SQL, shared across consumers. */
-  def cancelQuery(queryId: Long, nonce: Long = 0L): Unit =
+    * of the wire SQL, shared across consumers. With `splitId`, only that
+    * split's stream is cancelled and the plan's other splits run on. */
+  def cancelQuery(queryId: Long, nonce: Long = 0L, splitId: Option[Int] = None): Unit =
     try {
-      val conn = open(s"/v1/cancel?q=&id=$queryId&nonce=$nonce", "text/plain")
+      val split = splitId.map(s => s"&split=$s").getOrElse("")
+      val conn = open(s"/v1/cancel?q=&id=$queryId&nonce=$nonce$split", "text/plain")
       conn.getResponseCode
       conn.disconnect()
     } catch { case _: Exception => }

@@ -1,26 +1,26 @@
 package graft.sources
 
-import java.util.Locale
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.graft.ArrowBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
@@ -31,12 +31,14 @@ import scala.jdk.CollectionConverters._
   * `<dir>/<table>.parquet` and streams Arrow IPC record batches, just
   * like the reference server answers `dd_read_arrow`'s HTTP query.
   *
-  * Pushdown is real, not cosmetic: the projection becomes the parquet
-  * requested-schema (unread columns are never decoded), filters become
-  * parquet FilterPredicates (row groups are skipped on statistics and
-  * records filtered at read), and splits are row-group byte ranges so N
+  * Pushdown is real, not cosmetic: splits are decoded column-wise by
+  * Spark's vectorized parquet reader, the projection becomes its
+  * requested schema (unread columns are never decoded), filters become
+  * parquet FilterPredicates (row groups are skipped on statistics, rows
+  * checked per decoded batch), and splits are row-group byte ranges so N
   * splits decode disjoint data — the same parallel-split contract as the
-  * reference's `/plan` API (split_info.cpp).
+  * reference's `/plan` API (split_info.cpp). A killed task stops at the
+  * next reader batch of [[LocalParquetEndpoint.CancelCheckRows]] rows.
   */
 class LocalParquetEndpoint(dir: String) extends Endpoint {
 
@@ -135,7 +137,7 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     // STRICT filtering contract (r14): a raw scan may under-filter (the
     // client re-evaluates residuals — the DSv2 contract), but a partial
     // AGGREGATE over under-filtered rows is silently wrong, so every
-    // filter must translate to an exact parquet record predicate here
+    // filter must translate to an exact parquet predicate here
     // or the request is refused loudly.
     val fsch = fileSchema(new Path(split.endpoint.stripPrefix("local://")))
     val unapplied = query.filters.filterNot(ParquetFilters.translatable(_, fsch))
@@ -177,23 +179,32 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     }
   }
 
-  /** Read the split's records with projection + filter applied by the
-    * parquet layer itself. The third element closes the underlying
-    * parquet reader (idempotent — exhaustion also triggers it).
+  /** Read the split's rows with projection + filter applied at the
+    * source, through Spark's vectorized parquet reader over the split's
+    * byte range. The third element closes the reader (idempotent —
+    * exhaustion also triggers it).
+    *
+    * The translated filter goes to the reader, which skips row groups on
+    * their statistics and dictionaries, and is then checked on every
+    * decoded row with the record filter's semantics
+    * ([[ParquetFilters.rowCheck]]).
     *
     * Filters may reference columns OUTSIDE the projection (the DSv2
     * client always projects filter columns for re-evaluation, but a
-    * hand-built HTTP client need not): those columns are ADDED to the
-    * parquet read schema — a record filter over an unread column sees
-    * null and silently drops every row — and stripped from the emitted
-    * rows (r14). Zero cost on the common path (no extra refs → no
-    * per-row work). */
+    * hand-built HTTP client need not): those columns are appended to the
+    * read schema past the emitted ordinals, so the row check sees them,
+    * and are never emitted (r14).
+    *
+    * The rows are views of the reader's reused batch: a consumer that
+    * keeps a value past the next row must copy it ([[PartialAgg]] does).
+    * TIMESTAMP(NANOS) columns decode as raw nanos (the check compares in
+    * that unit) and are emitted rescaled to micros with `/ 1000`. */
   private def readRows(split: SplitInfo, query: QuerySpec): (Iterator[InternalRow], StructType, () => Unit) = {
     // the split locator carries the part file it covers (splits never
     // span files); the schema is per-file but uniform across the table
     val file = new Path(split.endpoint.stripPrefix("local://"))
     val fs = fileSchema(file)
-    // columns the translated record filter needs but the projection lacks
+    // columns the translated filter needs but the projection lacks
     val extraRefs: Array[String] =
       if (query.requiredColumns.isEmpty) Array.empty
       else query.filters
@@ -202,79 +213,135 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
         .distinct
         .filterNot(query.requiredColumns.contains)
         .filter(fs.containsField)
-    val readCols = query.requiredColumns ++ extraRefs
     val projected: MessageType =
-      if (query.requiredColumns.isEmpty) Types.buildMessage().named(fs.getName)
+      if (query.requiredColumns.isEmpty) fs
       else {
         val b = Types.buildMessage()
-        readCols.foreach(c => b.addField(fs.getType(fs.getFieldIndex(c))))
+        (query.requiredColumns ++ extraRefs)
+          .foreach(c => b.addField(fs.getType(fs.getFieldIndex(c))))
         b.named(fs.getName)
       }
-    val readSchema = ArrowBridge.parquetToSparkSchema(
-      if (query.requiredColumns.isEmpty) fs else projected, hadoopConf)
-    // the emitted schema: extras (appended last) stripped back off
-    val sparkSchema =
-      if (extraRefs.isEmpty) readSchema
-      else StructType(readSchema.fields.dropRight(extraRefs.length))
-    val conf = new Configuration(hadoopConf)
-    if (query.requiredColumns.nonEmpty)
-      conf.set(ReadSupport.PARQUET_READ_SCHEMA, projected.toString)
-    var builder = ParquetReader.builder(new GroupReadSupport(), file)
-      .withConf(conf)
-      .withFileRange(split.startByte, split.endByte)
-    ParquetFilters.translate(query.filters, fs)
-      .foreach(p => builder = builder.withFilter(FilterCompat.get(p)))
-    val reader = builder.build()
+    val readSchema = ArrowBridge.parquetToSparkSchema(projected, hadoopConf)
+    // the emitted schema: extras (appended last) stay past its ordinals
+    val nOut = readSchema.length - extraRefs.length
+    val sparkSchema = StructType(readSchema.fields.take(nOut))
+    val nanos = projected.getFields.asScala.map(_.getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+      case _ => false
+    }).toArray
+    val requested = StructType(readSchema.fields.zip(nanos).map {
+      case (f, true) => f.copy(dataType = LongType)
+      case (f, false) => f
+    })
+    val conf = readerConf(requested)
+    val predicate = ParquetFilters.translate(query.filters, fs)
+    predicate.foreach(ParquetInputFormat.setFilterPredicate(conf, _))
+    val reader = new VectorizedParquetRecordReader(
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, CancelCheckRows)
+    // the emitted view: the reader's columns, NANOS ones swapped for
+    // micros vectors refilled per batch
+    val micros: Array[WritableColumnVector] = (0 until nOut).map { i =>
+      if (nanos(i)) new OnHeapColumnVector(CancelCheckRows, readSchema(i).dataType)
+      else null
+    }.toArray
     val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val closeOnce: () => Unit = () => if (closed.compareAndSet(false, true)) reader.close()
-    val conv = new GroupRowConverter(
-      if (query.requiredColumns.isEmpty) fs else projected, readSchema)
-    val nOut = sparkSchema.length
+    val closeOnce: () => Unit = () => if (closed.compareAndSet(false, true)) {
+      try reader.close() finally micros.foreach(v => if (v != null) v.close())
+    }
+    val batch =
+      try {
+        reader.initialize(
+          new FileSplit(file, split.startByte, split.endByte - split.startByte, Array.empty[String]),
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        reader.resultBatch()
+      } catch { case e: Throwable => closeOnce(); throw e }
+    val check: Int => Boolean = predicate
+      .map(ParquetFilters.rowCheck(_, fs, batch, projected.getFieldIndex))
+      .orNull
+    val out = new ColumnarBatch((0 until nOut).map { i =>
+      if (micros(i) != null) micros(i) else batch.column(i)
+    }.toArray)
     // Mid-stream cancellation (the reference runs a cancel monitor that
     // aborts in-flight HTTP streams — src/http/cancel_monitor.cpp): a
     // killed Spark task stops consuming promptly instead of finishing
-    // its split. Checked every CancelCheckRows records so the hot path
-    // stays a counter increment; PartitionReader.close releases the
-    // reader either way.
+    // its split. Checked once per reader batch of CancelCheckRows rows,
+    // so the row loop carries no check; PartitionReader.close releases
+    // the reader either way.
     val ctx = org.apache.spark.TaskContext.get()
     val it = new Iterator[InternalRow] {
-      private var nextGroup: Group = reader.read()
-      private var sinceCheck = 0
-      override def hasNext: Boolean = {
-        if (ctx != null) {
-          sinceCheck += 1
-          if (sinceCheck >= LocalParquetEndpoint.CancelCheckRows) {
-            sinceCheck = 0
-            if (ctx.isInterrupted()) {
-              closeOnce()
-              throw new org.apache.spark.TaskKilledException(
-                "graft-arrow scan cancelled")
-            }
-          }
+      private var rowId = 0
+      private var numRows = 0
+      private var ready = false // rowId is a row that passed the check
+      private var done = false
+      private def nextBatch(): Unit = {
+        if (ctx != null && ctx.isInterrupted()) {
+          closeOnce()
+          throw new org.apache.spark.TaskKilledException("graft-arrow scan cancelled")
         }
-        if (nextGroup == null) closeOnce()
-        nextGroup != null
+        if (reader.nextBatch()) {
+          numRows = batch.numRows()
+          rowId = 0
+          var c = 0
+          while (c < nOut) {
+            val dst = micros(c)
+            if (dst != null) {
+              val src = batch.column(c)
+              dst.reset()
+              var i = 0
+              while (i < numRows) {
+                if (src.isNullAt(i)) dst.putNull(i) else dst.putLong(i, src.getLong(i) / 1000L)
+                i += 1
+              }
+            }
+            c += 1
+          }
+          out.setNumRows(numRows)
+        } else {
+          done = true
+          closeOnce()
+        }
+      }
+      override def hasNext: Boolean = {
+        while (!ready && !done) {
+          if (rowId < numRows) {
+            if (check == null || check(rowId)) ready = true else rowId += 1
+          } else nextBatch()
+        }
+        ready
       }
       override def next(): InternalRow = {
-        val g = nextGroup
-        nextGroup = reader.read()
-        val row = conv.convert(g)
-        if (extraRefs.isEmpty) row
-        else {
-          // strip the filter-only columns (appended last by readCols)
-          val vals = new Array[Any](nOut)
-          var j = 0
-          while (j < nOut) { vals(j) = row.get(j, sparkSchema.fields(j).dataType); j += 1 }
-          new GenericInternalRow(vals)
-        }
+        if (!hasNext) throw new NoSuchElementException("graft-arrow split exhausted")
+        ready = false
+        rowId += 1
+        out.getRow(rowId - 1)
       }
     }
     (it, sparkSchema, closeOnce)
   }
+
+  /** Reader configuration: Spark's parquet read support with the
+    * requested schema, and the schema-conversion flags of the session
+    * [[ArrowBridge.parquetToSparkSchema]] reads, except that
+    * TIMESTAMP(NANOS) converts to a long. Names match exactly — they
+    * come from the file schema itself. */
+  private def readerConf(requested: StructType): Configuration = {
+    val sql = SQLConf.get
+    val conf = new Configuration(hadoopConf)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, true)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sql.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sql.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sql.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, true)
+    conf
+  }
 }
 
 object LocalParquetEndpoint {
-  /** Rows between task-interrupt checks in the scan hot loop. */
+  /** Rows per reader batch; the task-interrupt check runs once per
+    * batch. */
   val CancelCheckRows = 1024
 }
 
@@ -295,6 +362,71 @@ object ParquetFilters {
   }
 
   def translatable(f: Filter, schema: MessageType): Boolean = one(f, schema).isDefined
+
+  /** A translated predicate as a check on row `i` of a decoded batch,
+    * with the semantics of parquet's record-level filter: each leaf
+    * compares the value in the column's physical type and unit with the
+    * column's own comparator, a null never matches, AND/OR combine.
+    * `ordinal` maps a column name to its position in `batch`; MILLIS
+    * timestamps decode to micros and compare back in millis (exact), a
+    * BINARY column orders by unsigned bytes — UTF8String's order. */
+  def rowCheck(p: FilterPredicate, schema: MessageType, batch: ColumnarBatch,
+               ordinal: String => Int): Int => Boolean = p match {
+    case a: Operators.And =>
+      val l = rowCheck(a.getLeft, schema, batch, ordinal)
+      val r = rowCheck(a.getRight, schema, batch, ordinal)
+      i => l(i) && r(i)
+    case o: Operators.Or =>
+      val l = rowCheck(o.getLeft, schema, batch, ordinal)
+      val r = rowCheck(o.getRight, schema, batch, ordinal)
+      i => l(i) || r(i)
+    case e: Operators.Eq[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ == 0)
+    case e: Operators.Lt[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ < 0)
+    case e: Operators.LtEq[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ <= 0)
+    case e: Operators.Gt[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ > 0)
+    case e: Operators.GtEq[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ >= 0)
+    case other => throw new IllegalArgumentException(s"not a translated predicate: $other")
+  }
+
+  /** One comparison leaf of [[rowCheck]]; `test` reads the comparator's
+    * sign. */
+  private def leaf(schema: MessageType, batch: ColumnarBatch, ordinal: String => Int,
+                   column: Operators.Column[_], value: Any,
+                   test: Int => Boolean): Int => Boolean = {
+    val name = column.getColumnPath.toDotString
+    val v = batch.column(ordinal(name))
+    val pt = schema.getType(schema.getFieldIndex(name)).asPrimitiveType
+    val cmp = pt.comparator()
+    pt.getPrimitiveTypeName match {
+      case INT32 =>
+        val x = value.asInstanceOf[java.lang.Integer].intValue
+        v.dataType match {
+          case ByteType => i => !v.isNullAt(i) && test(cmp.compare(v.getByte(i).toInt, x))
+          case ShortType => i => !v.isNullAt(i) && test(cmp.compare(v.getShort(i).toInt, x))
+          case _ => i => !v.isNullAt(i) && test(cmp.compare(v.getInt(i), x))
+        }
+      case INT64 =>
+        val x = value.asInstanceOf[java.lang.Long].longValue
+        val millis = pt.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation =>
+            t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS
+          case _ => false
+        }
+        if (millis) i => !v.isNullAt(i) && test(cmp.compare(v.getLong(i) / 1000L, x))
+        else i => !v.isNullAt(i) && test(cmp.compare(v.getLong(i), x))
+      case FLOAT =>
+        val x = value.asInstanceOf[java.lang.Float].floatValue
+        i => !v.isNullAt(i) && test(cmp.compare(v.getFloat(i), x))
+      case DOUBLE =>
+        val x = value.asInstanceOf[java.lang.Double].doubleValue
+        i => !v.isNullAt(i) && test(cmp.compare(v.getDouble(i), x))
+      case BINARY =>
+        val x = UTF8String.fromBytes(value.asInstanceOf[Binary].getBytes)
+        if (v.dataType == StringType) i => !v.isNullAt(i) && test(v.getUTF8String(i).compareTo(x))
+        else i => !v.isNullAt(i) && test(UTF8String.fromBytes(v.getBinary(i)).compareTo(x))
+      case other => throw new IllegalArgumentException(s"not a translated column type: $other")
+    }
+  }
 
   private def primitive(schema: MessageType, name: String): Option[PrimitiveType] = {
     if (!schema.containsField(name)) return None
@@ -435,98 +567,6 @@ object ParquetFilters {
   }
 }
 
-/** parquet example Group → Spark InternalRow for the engine's column
-  * repertoire (SURVEY.md §3): int32/int64/float/double/string/bool/
-  * timestamp(ns|us|ms)/list-of-float-or-double. */
-class GroupRowConverter(mt: MessageType, sparkSchema: StructType) {
-  private val fields = mt.getFields.asScala.toArray
-
-  private val getters: Array[(Group, Int) => Any] = fields.zipWithIndex.map { case (f, i) =>
-    fieldGetter(f, sparkSchema.fields(i).dataType)
-  }.toArray
-
-  private def tsDivisor(ann: LogicalTypeAnnotation): Long = ann match {
-    case t: TimestampLogicalTypeAnnotation => t.getUnit match {
-      case LogicalTypeAnnotation.TimeUnit.NANOS => 1000L
-      case LogicalTypeAnnotation.TimeUnit.MICROS => 1L
-      case LogicalTypeAnnotation.TimeUnit.MILLIS => -1000L // multiply
-    }
-    case _ => 1L
-  }
-
-  private def fieldGetter(f: Type, dt: DataType): (Group, Int) => Any = f match {
-    case p: PrimitiveType =>
-      (p.getPrimitiveTypeName, dt) match {
-        case (INT64, TimestampType) | (INT64, TimestampNTZType) =>
-          val d = tsDivisor(p.getLogicalTypeAnnotation)
-          if (d >= 0) (g, i) => g.getLong(i, 0) / d
-          else (g, i) => g.getLong(i, 0) * (-d)
-        case (INT64, t: DecimalType) =>
-          (g, i) => Decimal(g.getLong(i, 0), t.precision, t.scale)
-        case (INT64, _) => (g, i) => g.getLong(i, 0)
-        case (INT32, t: DecimalType) =>
-          (g, i) => Decimal(g.getInteger(i, 0).toLong, t.precision, t.scale)
-        case (INT32, ByteType) => (g, i) => g.getInteger(i, 0).toByte
-        case (INT32, ShortType) => (g, i) => g.getInteger(i, 0).toShort
-        // DateType is epoch-day int both in parquet and internally
-        case (INT32, _) => (g, i) => g.getInteger(i, 0)
-        case (DOUBLE, _) => (g, i) => g.getDouble(i, 0)
-        case (FLOAT, _) => (g, i) => g.getFloat(i, 0)
-        case (BOOLEAN, _) => (g, i) => g.getBoolean(i, 0)
-        case (BINARY | FIXED_LEN_BYTE_ARRAY, t: DecimalType) =>
-          (g, i) => Decimal(
-            new java.math.BigDecimal(
-              new java.math.BigInteger(g.getBinary(i, 0).getBytes), t.scale),
-            t.precision, t.scale)
-        case (BINARY, StringType) | (FIXED_LEN_BYTE_ARRAY, StringType) =>
-          (g, i) => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-        case (BINARY, _) | (FIXED_LEN_BYTE_ARRAY, _) =>
-          (g, i) => g.getBinary(i, 0).getBytes
-        case (other, _) => throw new UnsupportedOperationException(
-          s"graft-arrow: unsupported parquet type $other for field ${f.getName}")
-      }
-    case gt: GroupType =>
-      dt match {
-        case ArrayType(elemType, _) =>
-          // 3-level list encoding: field { repeated group list { element } }
-          (g, i) => {
-            val lg = g.getGroup(i, 0)
-            val n = lg.getFieldRepetitionCount(0)
-            val out = new Array[Any](n)
-            var k = 0
-            while (k < n) {
-              val item = lg.getGroup(0, k)
-              out(k) =
-                if (item.getFieldRepetitionCount(0) == 0) null
-                else elemType match {
-                  case FloatType => item.getFloat(0, 0)
-                  case DoubleType => item.getDouble(0, 0)
-                  case LongType => item.getLong(0, 0)
-                  case IntegerType => item.getInteger(0, 0)
-                  case StringType => UTF8String.fromBytes(item.getBinary(0, 0).getBytes)
-                  case t => throw new UnsupportedOperationException(
-                    s"graft-arrow: unsupported list element type $t")
-                }
-              k += 1
-            }
-            new GenericArrayData(out)
-          }
-        case t => throw new UnsupportedOperationException(
-          s"graft-arrow: unsupported nested type $t for field ${gt.getName}")
-      }
-  }
-
-  def convert(g: Group): InternalRow = {
-    val values = new Array[Any](fields.length)
-    var i = 0
-    while (i < fields.length) {
-      values(i) = if (g.getFieldRepetitionCount(i) == 0) null else getters(i)(g, i)
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-}
-
 /** Streaming partial-aggregate computation for aggregation pushdown. */
 object PartialAgg {
   /** Spark's expected result type for a pushed aggregate (must line up
@@ -622,7 +662,9 @@ object PartialAgg {
               (calls(i).op == "min" && ords(i).lt(v, cur)) ||
               (calls(i).op == "max" && ords(i).gt(v, cur))
             if (better) {
-              if (calls(i).op == "min") acc.mins(i) = v else acc.maxs(i) = v
+              // rows are views of a reused batch: keep a copy
+              val kept = InternalRow.copyValue(v)
+              if (calls(i).op == "min") acc.mins(i) = kept else acc.maxs(i) = kept
             }
           }
       }
@@ -670,9 +712,9 @@ object PartialAgg {
   }
 
   /** Grouped partials (r8, capped r9): one output row per distinct key
-    * tuple the hash map holds, key values first then partials. Keys are
-    * freshly extracted per row (the reader materializes a new row per
-    * record), so map keys are stable.
+    * tuple the hash map holds, key values first then partials. Rows are
+    * views of the reader's reused batch, so a key is copied when it is
+    * stored; lookups use the view.
     *
     * Memory: the map is bounded by `maxGroups` entries, NOT by the
     * split's group cardinality — a near-unique group key would
@@ -716,7 +758,7 @@ object PartialAgg {
       if (existing != null) {
         update(existing, r, calls, fieldIdx, types, ords); Nil
       } else if (groups.size < maxGroups) {
-        val acc = new Acc(n); groups.put(key, acc)
+        val acc = new Acc(n); groups.put(key.map(InternalRow.copyValue), acc)
         update(acc, r, calls, fieldIdx, types, ords); Nil
       } else {
         // primary cap reached: combine into the bounded secondary run;
@@ -726,7 +768,7 @@ object PartialAgg {
           update(inRun, r, calls, fieldIdx, types, ords); Nil
         } else {
           val flushed = if (run.size < maxGroups) Vector.empty else drain(run)
-          val acc = new Acc(n); run.put(key, acc)
+          val acc = new Acc(n); run.put(key.map(InternalRow.copyValue), acc)
           update(acc, r, calls, fieldIdx, types, ords)
           flushed
         }

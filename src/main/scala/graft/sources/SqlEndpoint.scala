@@ -12,14 +12,14 @@ import org.apache.spark.sql.types.StructType
   * the server's result set, not a named table).
   *
   * In-process analogue: the "server side" executes the query ONCE in an
-  * isolated `SparkSession.newSession()` (its own temp-view namespace
-  * over the endpoint directory's tables — the local stand-in for the
-  * remote server's query engine) and materializes the result as parquet
-  * under the JVM temp dir, keyed by (dir, sql, table-file state). From
-  * there the whole table machinery is inherited unchanged: row-group-
-  * aligned splits, projection/filter/aggregation pushdown — i.e. the
-  * client scans the server-held result in parallel splits, the remote
-  * contract.
+  * isolated `SparkSession.newSession()` (whose default catalog is a
+  * [[GraftCatalog]] over the endpoint directory's tables — the local
+  * stand-in for the remote server's query engine) and materializes the
+  * result as parquet under the JVM temp dir, keyed by (dir, sql,
+  * table-file state). From there the whole table machinery is
+  * inherited unchanged: row-group-aligned splits,
+  * projection/filter/aggregation pushdown — i.e. the client scans the
+  * server-held result in parallel splits, the remote contract.
   *
   * Scale posture: only driver-side schema()/plan() trigger the one-time
   * server execution; executors never do — scan()/scanAgg() resolve the
@@ -41,6 +41,10 @@ class SqlEndpoint(dir: String, sqlQuery: String)
 }
 
 object SqlEndpoint {
+  /** The server session's default catalog: unqualified table names in
+    * the shipped sql resolve to the endpoint directory's tables. */
+  private val Catalog = "graft_server"
+
   /** Server-side result cache. Deterministic (not per-process random) so
     * repeated reads of the same (dir, sql, data) across sessions reuse
     * the materialized result instead of re-executing. Layout:
@@ -111,18 +115,15 @@ object SqlEndpoint {
         // the reference server has its extension loaded, so shipped sql
         // may call dd_* functions — mirror that on the server session
         graft.functions.GraftFunctions.register(server)
-        dfs.listStatus(dirPath).map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet") &&
-            !p.getName.startsWith("_") && !p.getName.startsWith("."))
-          .foreach { p =>
-            // views go through the graft-arrow source, not
-            // spark.read.parquet: the server reads its own tables with
-            // its own scanner (which also handles TIMESTAMP(NANOS)
-            // files Spark's native reader rejects), and the executed
-            // query benefits from the same pushdown as a table scan
-            GraftArrow.read(server, dir, p.getName.stripSuffix(".parquet"))
-              .createOrReplaceTempView(p.getName.stripSuffix(".parquet"))
-          }
+        // tables resolve lazily through the graft catalog as the
+        // session's default catalog, so only the tables the query names
+        // get their footer read. Not spark.read.parquet: the server
+        // reads its own tables with its own scanner (which also handles
+        // TIMESTAMP(NANOS) files Spark's native reader rejects), and the
+        // executed query benefits from the same pushdown as a table scan
+        server.conf.set(s"spark.sql.catalog.$Catalog", classOf[GraftCatalog].getName)
+        server.conf.set(s"spark.sql.catalog.$Catalog.dir", dir)
+        server.conf.set("spark.sql.defaultCatalog", Catalog)
         server.sql(sql).write.mode("overwrite").parquet(out.toString)
       }
       // evict superseded results of this (dir, sql) — old data's keys

@@ -19,6 +19,58 @@ class GraftArrowSpec extends SparkSpec {
   // r10 — see NanosFixture scaladoc); one write shared across tests
   private lazy val nanosDir = NanosFixture.write()
 
+  // repo-owned table for the per-row filter check: every translatable
+  // physical type, each column null on its own seventh of the rows, in
+  // runs of 15 rows so small row groups carry disjoint statistics
+  private val FilterRows = 3000
+  private val FilterLongStep = 1000000007L
+  private val FilterMicrosBase = 1700000000000000L
+  private val FilterMillisBase = 1700000000000L
+  private lazy val filterDir: String = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.schema.{LogicalTypeAnnotation => L, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-filters").toString
+    val schema = Types.buildMessage()
+      .required(INT64).named("id")
+      .optional(INT32).as(L.intType(8, true)).named("i8")
+      .optional(INT32).as(L.intType(16, true)).named("i16")
+      .optional(INT32).named("i32")
+      .optional(INT32).as(L.dateType()).named("d")
+      .optional(INT64).named("i64")
+      .optional(INT64).as(L.timestampType(true, L.TimeUnit.MICROS)).named("ts_us")
+      .optional(INT64).as(L.timestampType(true, L.TimeUnit.MILLIS)).named("ts_ms")
+      .optional(FLOAT).named("f")
+      .optional(DOUBLE).named("dbl")
+      .optional(BINARY).as(L.stringType()).named("s")
+      .named("typed")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val writer = ExampleParquetWriter.builder(new Path(s"$tmp/typed.parquet"))
+      .withConf(conf).withType(schema).withRowGroupSize(16 * 1024L).build()
+    val gf = new SimpleGroupFactory(schema)
+    try (0 until FilterRows).foreach { i =>
+      val v = (i / 15) % 200 - 100
+      val g = gf.newGroup()
+      g.add("id", i.toLong)
+      def put(phase: Int)(add: => Unit): Unit = if (i % 7 != phase) add
+      put(0)(g.add("i8", v))
+      put(1)(g.add("i16", v * 100))
+      put(2)(g.add("i32", v * 10000))
+      put(3)(g.add("d", 18000 + v))
+      put(4)(g.add("i64", v * FilterLongStep))
+      put(5)(g.add("ts_us", FilterMicrosBase + v * 1000001L))
+      put(6)(g.add("ts_ms", FilterMillisBase + v * 1001L))
+      put(0)(g.add("f", v / 4f))
+      put(1)(g.add("dbl", v / 8.0))
+      put(2)(g.add("s", f"s${v + 100}%03d"))
+      writer.write(g)
+    } finally writer.close()
+    tmp
+  }
+
   test("full scan parity with the native parquet reader (all tables)") {
     Seq("region", "nation", "customer", "orders", "documents", "embeddings")
       .foreach { t =>
@@ -443,6 +495,145 @@ class GraftArrowSpec extends SparkSpec {
       s"wire rows ${capped.size} must stay below input rows under flushing")
   }
 
+  test("pushed string min/max and group keys survive reader batch reuse") {
+    import spark.implicits._
+    // one split of 5120 rows spans several reader batches; the extremes
+    // sit in the first batch and every batch has its own group keys, so
+    // a kept view of a reused batch buffer would be overwritten (plain
+    // encoding: dictionary-decoded strings would not share the buffer)
+    val n = LocalParquetEndpoint.CancelCheckRows * 5
+    val tmp = java.nio.file.Files.createTempDirectory("graft-batchreuse").toString
+    (0 until n).map {
+      case 0 => "a-min"
+      case 1 => "z-max"
+      case i => f"k${i % 7}-b${i / LocalParquetEndpoint.CancelCheckRows}%02d"
+    }.toDF("s").coalesce(1).write.option("parquet.enable.dictionary", "false")
+      .mode("overwrite").parquet(s"$tmp/out")
+    val part = new java.io.File(s"$tmp/out").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$tmp/strs.parquet"))
+    val a = GraftArrow.read(spark, tmp, "strs")
+    val p = spark.read.parquet(s"$tmp/strs.parquet")
+    assert(a.rdd.getNumPartitions === 1, "the fixture must be a single split")
+    val mm = a.agg(max(col("s")), min(col("s")))
+    assert(mm.queryExecution.executedPlan.toString.contains("PushedAggregates"))
+    assert(mm.head === p.agg(max(col("s")), min(col("s"))).head)
+    val g = a.groupBy(col("s")).count()
+    assert(g.queryExecution.executedPlan.toString.contains("PushedAggregates"))
+    val expected = p.groupBy(col("s")).count().collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(expected.size > 7 * 4, "keys differ per batch")
+    assert(g.collect().map(r => (r.getString(0), r.getLong(1))).toSet === expected)
+  }
+
+  test("the per-row filter check equals the parquet record filter, per type, nulls present") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.graft.ArrowBridge
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.types._
+    val ep = new LocalParquetEndpoint(filterDir)
+    val fileSchema = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$filterDir/typed.parquet"),
+          new org.apache.hadoop.conf.Configuration()))
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    }
+    def toCol(f: Filter): Column = f match {
+      case EqualTo(a, v) => col(a) === lit(v)
+      case LessThan(a, v) => col(a) < lit(v)
+      case LessThanOrEqual(a, v) => col(a) <= lit(v)
+      case GreaterThan(a, v) => col(a) > lit(v)
+      case GreaterThanOrEqual(a, v) => col(a) >= lit(v)
+      case In(a, vs) => col(a).isin(vs.toIndexedSeq: _*)
+      case And(l, r) => toCol(l) && toCol(r)
+      case Or(l, r) => toCol(l) || toCol(r)
+    }
+    val idSchema = StructType(Seq(StructField("id", LongType)))
+    val aggSchema = StructType(Seq(StructField("n", LongType), StructField("s", LongType)))
+    val agg = AggSpec(Seq(AggCall("count_star", ""), AggCall("sum", "id")))
+    // the endpoint's rows: only `id` is projected, so the filter
+    // column rides past the emitted ordinals
+    def scanIds(f: Filter): Vector[Long] = {
+      val q = QuerySpec("typed", Array("id"), Array(f))
+      ep.plan("typed", q, 16 * 1024).toVector.flatMap { split =>
+        val st = ep.scan(split, q)
+        try ArrowBridge.fromIpc(st, idSchema).map(_.getLong(0)).toVector finally st.close()
+      }.sorted
+    }
+    def aggOf(f: Filter): (Long, Long) = {
+      val q = QuerySpec("typed", Array.empty, Array(f))
+      ep.plan("typed", q, 16 * 1024).map { split =>
+        val st = ep.scanAgg(split, q, agg)
+        try {
+          val r = ArrowBridge.fromIpc(st, aggSchema).next()
+          (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+        } finally st.close()
+      }.foldLeft((0L, 0L)) { case ((n, s), (n1, s1)) => (n + n1, s + s1) }
+    }
+    assert(ep.plan("typed", QuerySpec("typed", Array("id"), Array.empty), 16 * 1024).size > 1,
+      "several row groups, so row-group pruning takes part")
+    val plainTyped = spark.read.parquet(s"$filterDir/typed.parquet")
+    def ts(micros: Long) = {
+      val t = new java.sql.Timestamp(Math.floorDiv(micros, 1000L))
+      t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt); t
+    }
+    val values: Seq[(String, Int => Any)] = Seq(
+      ("i8", (v: Int) => v.toByte),
+      ("i16", (v: Int) => (v * 100).toShort),
+      ("i32", (v: Int) => v * 10000),
+      ("d", (v: Int) => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(18000L + v))),
+      ("i64", (v: Int) => v * FilterLongStep),
+      ("ts_us", (v: Int) => ts(FilterMicrosBase + v * 1000001L)),
+      ("ts_ms", (v: Int) => ts((FilterMillisBase + v * 1001L) * 1000L)),
+      ("f", (v: Int) => v / 4f),
+      ("dbl", (v: Int) => v / 8.0),
+      ("s", (v: Int) => f"s${v + 100}%03d"))
+    val filters = values.flatMap { case (c, x) =>
+      Seq(EqualTo(c, x(17)), LessThan(c, x(17)), LessThanOrEqual(c, x(17)),
+        GreaterThan(c, x(17)), GreaterThanOrEqual(c, x(17)),
+        In(c, Array(x(-30), x(17), x(40))),
+        And(GreaterThan(c, x(-30)), LessThan(c, x(40))),
+        Or(LessThan(c, x(-30)), GreaterThanOrEqual(c, x(40))))
+    } :+ Or(And(GreaterThan("i32", -300000), LessThan("dbl", 2.0)), EqualTo("s", "s150"))
+    filters.foreach { f =>
+      assert(ParquetFilters.translatable(f, fileSchema), s"$f must translate")
+      val expected = plainTyped.filter(toCol(f)).select("id").collect().map(_.getLong(0)).sorted.toVector
+      assert(expected.nonEmpty && expected.size < FilterRows, s"$f must split the rows")
+      assert(scanIds(f) === expected, s"scan under $f")
+      assert(aggOf(f) === ((expected.size.toLong, expected.sum)), s"scanAgg under $f")
+    }
+
+    // TIMESTAMP(NANOS): the check compares raw nanos with the bound
+    // rescaled to nanos (row k carries k % 1000 extra nanos, so `=` on
+    // hour k holds only for k % 1000 == 0) and emits micros
+    val nep = new LocalParquetEndpoint(nanosDir)
+    val nSchema = nep.schema("events_ns")
+    def hour(k: Int) = java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusHours(k)
+    def hourNanos(k: Int) = NanosFixture.tsNanos(k) - k % 1000
+    def cmpWith(f: Filter): Long => Boolean = f match {
+      case EqualTo(_, _) => _ == hourNanos(500)
+      case LessThan(_, _) => _ < hourNanos(500)
+      case LessThanOrEqual(_, _) => _ <= hourNanos(500)
+      case GreaterThan(_, _) => _ > hourNanos(500)
+      case GreaterThanOrEqual(_, _) => _ >= hourNanos(500)
+      case In(_, _) => v => v == hourNanos(0) || v == hourNanos(500)
+    }
+    Seq(EqualTo("ts", hour(500)), LessThan("ts", hour(500)), LessThanOrEqual("ts", hour(500)),
+        GreaterThan("ts", hour(500)), GreaterThanOrEqual("ts", hour(500)),
+        In("ts", Array(hour(0), hour(500)))).foreach { f =>
+      val q = QuerySpec("events_ns", Array("event_id", "ts"), Array(f))
+      val got = nep.plan("events_ns", q, Long.MaxValue / 4).flatMap { split =>
+        val st = nep.scan(split, q)
+        try ArrowBridge.fromIpc(st, StructType(q.requiredColumns.map(nSchema(_))))
+          .map(r => (r.getLong(0), r.getLong(1))).toVector
+        finally st.close()
+      }.sortBy(_._1)
+      val want = (0 until NanosFixture.Rows).filter(i => cmpWith(f)(NanosFixture.tsNanos(i)))
+        .map(i => (i.toLong, NanosFixture.tsNanos(i) / 1000L))
+      assert(got === want, s"nanos scan under $f")
+    }
+  }
+
   test("filter + aggregation pushdown compose") {
     val df = arrow("lineitem").filter(col("l_quantity") < 10)
       .agg(count(lit(1)).as("n"), sum(col("l_extendedprice")).as("s"))
@@ -661,6 +852,16 @@ class GraftArrowSpec extends SparkSpec {
       .select("o_orderkey", "o_orderdate")
     assert(ts.exceptAll(expected).count() === 0)
     assert(expected.exceptAll(ts).count() === 0)
+  }
+
+  test("sql := mode: table names resolve case-insensitively, like temp views") {
+    val q = "SELECT count(*) AS n FROM LINEITEM WHERE L_QUANTITY < 5"
+    val n = GraftArrow.readSql(spark, dir, q).head.getLong(0)
+    assert(n === plain("lineitem").filter(col("l_quantity") < 5).count())
+    val err = intercept[Exception] {
+      GraftArrow.readSql(spark, dir, "SELECT count(*) AS n FROM no_such_table").collect()
+    }
+    assert(err.getMessage.toLowerCase.contains("no_such_table"), err.getMessage)
   }
 
   test("sql := mode honors auth: no token, no server execution") {

@@ -281,6 +281,48 @@ class GraftHttpSpec extends SparkSpec {
       "early task close should propagate a /v1/cancel")
   }
 
+  test("an early-closed split cancels only itself: a limit written through a sink succeeds") {
+    // lineitem rewritten in ~1 MiB row groups, so a 1 MiB split size
+    // plans many splits that the sink's tasks read side by side; each
+    // task stops after its local limit and cancels its own split while
+    // its siblings are still streaming
+    val tmp = java.nio.file.Files.createTempDirectory("graft-http-limit").toString
+    val hc = spark.sparkContext.hadoopConfiguration
+    val oldBlock = hc.get("parquet.block.size")
+    hc.setInt("parquet.block.size", 1024 * 1024)
+    try spark.read.parquet(s"${sf("sf0.1")}/lineitem.parquet").repartition(1)
+      .write.mode("overwrite").parquet(s"$tmp/out")
+    finally {
+      if (oldBlock == null) hc.unset("parquet.block.size")
+      else hc.set("parquet.block.size", oldBlock)
+    }
+    val part = new java.io.File(s"$tmp/out").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$tmp/li.parquet"))
+    val srv = new GraftHttpServer(tmp).start()
+    try {
+      val df = GraftArrow.readHttp(spark, srv.url, "li", Some(token),
+        splitSize = 1024L * 1024)
+      assert(df.rdd.getNumPartitions >= 4,
+        s"expected at least 4 splits, got ${df.rdd.getNumPartitions}")
+      val before = srv.cancelsReceived
+      df.limit(10).write.format("noop").mode("overwrite").save()
+      assert(srv.cancelsReceived > before, "early-closed splits should send their cancel")
+      // a plan-wide cancel still reaches every split
+      val ep = new HttpEndpoint(srv.url, Some(token))
+      val qs = QuerySpec("li", Array.empty, Array.empty)
+      val splits = ep.plan("li", qs, 1024L * 1024)
+      ep.cancelQuery(splits.head.queryId, splits.head.nonce, Some(splits.head.splitId))
+      val sibling = ep.scan(splits(1), qs)
+      try assert(sibling.size > 1, "a split cancel must leave the sibling streaming")
+      finally sibling.close()
+      ep.cancelQuery(splits.head.queryId, splits.head.nonce)
+      val cancelled = ep.scan(splits(2), qs)
+      try intercept[java.io.IOException](cancelled.foreach(_ => ()))
+      finally cancelled.close()
+    } finally srv.stop()
+  }
+
   test("the all-types column repertoire crosses the socket bit-exactly") {
     import spark.implicits._
     import org.apache.spark.sql.types._

@@ -9,8 +9,9 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
 
 /** Repo-owned TIMESTAMP(NANOS) parquet fixture.
   *
-  * The nanos read/decline behaviors (micros-rescale in
-  * [[GroupRowConverter]], overflow decline in [[ParquetFilters]]) used
+  * The nanos read/decline behaviors (raw-nanos row check and `/ 1000`
+  * micros rescale in [[LocalParquetEndpoint]], overflow decline in
+  * [[ParquetFilters]]) used
   * to be exercised against the driver's `events.parquet`, which was
   * TIMESTAMP(NANOS) until the r10 testdata regeneration switched it to
   * micros — taking the nanos paths from tested to untested without any
