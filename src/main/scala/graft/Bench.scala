@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, timing a full materialization through the noop
@@ -11,20 +10,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val entries = Harness.entries()
+    val spark = Harness.session(defaultCpus = 32)
     // JIT/codegen warm-up at the smallest SF so the first timed query
     // doesn't absorb JVM compilation for the whole session
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
-    // optional comma-separated entry filter for focused perf iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     // per-entry repetitions; the documented sf0.1 run-to-run variance
     // (±30% on dedup entries) makes single-run deltas meaningless, so
     // each entry reports its MEDIAN of `reps` runs
@@ -41,8 +32,6 @@ object Bench {
     // pressure and converge better (the r7 lesson).
     val warm = sys.env.get("SPARK_GRAFT_BENCH_WARM").contains("1")
     var failed = 0
-    val entries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // INTERLEAVED rounds (rep 1 of every entry, then rep 2, …) instead
     // of back-to-back reps: back-to-back samples one instant of suite
     // pressure (GC debt, JIT state, page cache) three times, which is
@@ -51,52 +40,24 @@ object Bench {
     // whole suite duration samples independent conditions, so the
     // median converges on the entry's real cost. (Overridden by warm
     // mode above, where per-entry back-to-back is the point.)
-    // r19: no per-family special-casing here. The multimodal decode
-    // fusion now lives in the operator (first-use memo, registered
-    // with SharedFrames); the one-time decode lands inside the first
-    // fused entry's first rep — visible as its `first` vs median, the
-    // same accounting every entry's cold cost gets. The JSON keeps the
-    // multimodal_decode_prewarm field (always 0.0 now) so downstream
-    // readers of older rounds' artifacts don't break.
-    val fuseSec: Double = 0.0
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
     // cold pre-rep timings per entry (warm mode only); negative = the
     // pre-rep failed, matching the `queries`/`first` sign convention
     val coldPre = scala.collection.mutable.Map.empty[String, Double]
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // snapshot the persistent-RDD ids alive BEFORE the entry so the
-      // post-entry cleanup releases only what THIS entry leaked — a
-      // blanket unpersist would also destroy any pre-existing
-      // localCheckpoint'd frame (whose truncated lineage makes it
-      // unrecomputable) or intentional cross-entry cache
-      val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-      System.gc()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-          false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // release the entry's leaked checkpoint blocks so entries don't
-      // inflate each other's timings — measured: ngram 2.5s solo vs
-      // 4.8s late in a full suite run, q1's sf1 scan 1.3-2.3s solo vs
-      // 6-18s in-suite. The explicit blocking unpersist releases
-      // localCheckpoint blocks DETERMINISTICALLY (they are persistent
-      // RDDs outside the CacheManager, otherwise freed only when the
-      // async ContextCleaner reacts to GC)
-      // session-scoped shared frames (SharedFrames registry) are spared
-      // GENERICALLY: an operator family that deliberately shares a
-      // materialized intermediate across entries registers it; every
-      // unregistered leak is still released
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!preexisting.contains(id) && !SharedFrames.contains(id))
-            rdd.unpersist(blocking = true) }
-      if (ok) sec else -sec
-    }
+    def runOnce(name: String, fn: Harness.Entry): Double =
+      Harness.scoped(spark, spareShared = true) {
+        System.gc()
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+            false
+          }
+        val sec = (System.nanoTime() - t0) / 1e9
+        if (ok) sec else -sec
+      }
     if (warm) {
       for ((name, fn) <- entries) {
         coldPre(name) = runOnce(name, fn)
@@ -141,12 +102,13 @@ object Bench {
     val firstRep = entries.map { case (name, _) =>
       "\"" + name + "\":" + coldPre.getOrElse(name, samples(name).head)
     }.mkString("{", ",", "}")
-    // the shared-decode prewarm is real suite cost — fold it into the
-    // headline total so cross-round totals stay comparable
-    val total = results.collect { case (_, v) if v > 0 => v }.sum +
-      math.max(0.0, fuseSec)
+    val total = results.collect { case (_, v) if v > 0 => v }.sum
     val bSuite = results.collect { case (k, v) if k.startsWith("q") && v > 0 => v }.sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"first":$firstRep,"b_suite_total":$bSuite,"multimodal_decode_prewarm":$fuseSec,"failed":$failed,"reps":$reps,"warm":${if (warm) 1 else 0},"sf":"$sfDir"}"""
+    // multimodal_decode_prewarm stays in the JSON, always 0.0, so
+    // readers of older rounds' artifacts don't break: the decode fusion
+    // lives in the operator (Multimodal.fusedFrame) and its one-time
+    // cost sits in the first fused entry's `first`.
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"first":$firstRep,"b_suite_total":$bSuite,"multimodal_decode_prewarm":0.0,"failed":$failed,"reps":$reps,"warm":${if (warm) 1 else 0},"sf":"$sfDir"}"""
     println(json)
     // ALSO write the artifact to a file: the driver captures the log
     // tail, and r8's capture truncated mid-JSON — readers then mistook

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `.explain("formatted")` for declared entries to files — the
@@ -14,19 +13,11 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val names = args(2).split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val entries = Harness.entries(Some(args(2)))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if names.contains(name)) {
+    for ((name, fn) <- entries) {
       try {
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Job-level timing probe for one declared entry: runs the entry under
@@ -10,17 +9,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * Usage: runMain graft.ProbeJobs <entry> [reps]; env like Bench. */
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
-    val entry = args(0)
+    val Seq((entry, fn)) = Harness.entries(Some(args(0)))
     val reps = if (args.length > 1) args(1).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
@@ -48,12 +40,10 @@ object ProbeJobs {
         println(f"[stage ${si.stageId}%4d] wall ${wall}%6d ms run ${run}%7d ms tasks ${si.numTasks}%4d  $site")
       }
     })
-    val fn = SparkEntry.queries(entry)
-    for (r <- 1 to reps) {
+    for (r <- 1 to reps) Harness.scoped(spark, spareShared = false) {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[entry $entry rep $r] ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      spark.sparkContext.getPersistentRDDs.foreach(_._2.unpersist(true))
     }
     spark.stop()
     sys.exit(0)

@@ -1,42 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // optional comma-separated entry filter for focused iteration
+    // optional SPARK_GRAFT_ONLY entry filter for focused iteration
     // (driver runs unfiltered)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      // release each entry's leaked localCheckpoint blocks
-      // deterministically (same scoped hygiene as Bench): without it
-      // the session accretes every entry's checkpoint blocks until the
-      // async ContextCleaner runs, which at large SFs turns into
-      // eviction pressure on later entries. Scoped to the ids the entry
-      // itself leaked so a pre-existing checkpoint'd frame can never be
-      // made unrecomputable.
-      val preexisting = spark.sparkContext.getPersistentRDDs.keySet
+    val entries = Harness.entries()
+    val spark = Harness.session(defaultCpus = 4)
+    new java.io.File(outDir).mkdirs()
+    // the sweep releases shared frames too (SharedFrames scaladoc), so
+    // every gated entry computes its standalone form
+    for ((name, fn) <- entries) Harness.scoped(spark, spareShared = false) {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!preexisting.contains(id)) rdd.unpersist(blocking = true) }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -567,9 +567,10 @@ object Ann {
     * files outside its own probed dirs on the real reader's numFiles
     * metric — so a batch's marginal cost is nprobe/k of the corpus
     * scan, never the build shuffle, which is paid exactly once
-    * (tools/ServedMarginalProbe quantifies build vs marginal;
-    * bench_points_r18). Reference shape: one `dd_read_arrow` endpoint
-    * answering repeated scans (`src/scanner/read_arrow_dd.cpp`).
+    * (build vs marginal measured in
+    * bench_points_r18/served_marginal_*.json). Reference shape: one
+    * `dd_read_arrow` endpoint answering repeated scans
+    * (`src/scanner/read_arrow_dd.cpp`).
     *
     * Search per batch is C15's verbatim, so the gate is the C15
     * algorithm-parity oracle widened to all three query windows

@@ -356,8 +356,8 @@ object Graph {
   /** Checkpoint/witness cadence for [[kleeneDist]]: k rounds are
     * chained LAZILY (each carrying its own observed mass — ALL k
     * Observations complete during the single window-end
-    * localCheckpoint action, probed shuffle- and broadcast-path in
-    * ProbeObserveWindow), so checkpoint I/O and driver jobs drop
+    * localCheckpoint action, on the shuffle and the broadcast path —
+    * pinned by GraphSpec), so checkpoint I/O and driver jobs drop
     * k-fold while per-round mass exactness — and therefore the exact
     * convergence round — is fully preserved. Monotonicity makes the
     * ≤ k−1 rounds of overshoot safe: past the least fixed point the
@@ -502,7 +502,7 @@ object Graph {
         var next: DataFrame = null
         if (observeRidesCheckpoint) {
           // fast path: `window` lazy rounds, one observed mass each,
-          // ONE checkpoint action completes them all (ProbeObserveWindow)
+          // ONE checkpoint action completes them all (GraphSpec pins it)
           val obsList = (1 to window).map(i =>
             org.apache.spark.sql.Observation(s"kleene_mass_${t + i}"))
           var cur = rank

@@ -343,6 +343,10 @@ object Multimodal {
     fusedMemo.compute(fuseKey(spark, dir), (_, old) =>
       if (old != null && fusedLive(old)) old
       else {
+        // a swept frame's ids are dead: drop them so the registry
+        // tracks only live shared frames
+        if (old != null)
+          fusedRdds(old).foreach(r => graft.SharedFrames.unregister(r.id))
         val df = allFeatures(Tables(spark, dir, "documents"))
           .localCheckpoint(true)
         fusedRdds(df).foreach(r => graft.SharedFrames.register(r.id))

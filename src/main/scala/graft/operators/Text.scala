@@ -849,8 +849,8 @@ object Text {
 
   /** [[bpeLearnBatched]] with the knobs as parameters — the gate entry
     * pins the constants (the oracle unrolls exactly that many rounds);
-    * the depth PROBE ([[graft.ProbeBpeDepth]]) runs the same learner at
-    * production merge budgets. */
+    * at production merge budgets the rounds track conflict-graph depth,
+    * not merge count (bench_points_r16/bpeb_depth_sf1*.json). */
   private[graft] def bpeLearnBatchedWith(documents: DataFrame,
       rounds: Int, topC: Int, cap: Int): DataFrame = {
     import documents.sparkSession.implicits._
@@ -895,8 +895,8 @@ object Text {
         // the plan to an RDD scan, so round k's plan holds only ITS
         // merges (§8).
         // r18 opt: the per-round token count RIDES the checkpoint
-        // action via Observation (the C55 witness pattern, probed in
-        // ProbeObserve/ProbeObserveWindow) — one driver job per round
+        // action via Observation (the C55 witness pattern, pinned by
+        // GraphSpec) — one driver job per round
         // instead of checkpoint + a separate 1-row scan. A timeout
         // degrades to the scanned count (same value, one extra job).
         val obs = org.apache.spark.sql.Observation(s"bpeb_toks_$k")

@@ -194,4 +194,50 @@ class GraphSpec extends SparkSpec {
     assert(iters > 10L && iters < 128L,
       s"corpus must genuinely converge before the cap (got $iters)")
   }
+
+  test("observed metrics of k lazily chained rounds all complete on one localCheckpoint action") {
+    // the claim the Observation fast paths of kleeneDist/pagerank,
+    // bpeLearnBatched and qualityTrain rest on: each round's metric is
+    // delivered by the single checkpoint action, on both join paths
+    // (broadcast puts round i's metric under round i+1's
+    // BroadcastExchange) and with AQE on (session default) or off
+    // (kleeneDist's static planning)
+    val edges = spark.range(0, 1000).toDF("u")
+      .select(col("u"), (col("u") + 1).as("v")).localCheckpoint(true)
+    val key = "spark.sql.adaptive.enabled"
+    val prevAqe = spark.conf.get(key)
+    try for (aqe <- Seq("true", "false"); bcast <- Seq(false, true)) {
+      spark.conf.set(key, aqe)
+      val path = s"aqe=$aqe broadcast=$bcast"
+      var cur = spark.range(0, 1000).toDF("node")
+        .select(col("node"), lit(10000L).as("r")).localCheckpoint(true)
+      val rounds = (1 to 4).map { i =>
+        val rs = if (bcast) broadcast(cur) else cur.hint("shuffle_hash")
+        val stepped = edges.join(rs, edges("u") === rs("node"))
+          .groupBy(col("v").as("node")).agg(sum(col("r")).as("r"))
+        val o = org.apache.spark.sql.Observation(s"chain_${aqe}_${bcast}_$i")
+        cur = stepped.observe(o, sum(col("r")).as("mass"))
+        (stepped, o)
+      }
+      val plan = cur.queryExecution.executedPlan.toString
+      if (bcast) assert(plan.contains("BroadcastHashJoin"), path)
+      else assert(plan.contains("ShuffledHashJoin") &&
+        !plan.contains("BroadcastHashJoin"), path)
+      val cp = cur.localCheckpoint(true) // the ONE action for 4 rounds
+      try {
+        // 2 s: the shortest Await the production fast paths use
+        val masses = rounds.map { case (_, o) =>
+          val row = scala.concurrent.Await.result(o.future,
+            scala.concurrent.duration.Duration(2, "seconds"))
+          row.getLong(row.fieldIndex("mass"))
+        }
+        // each round drops node 999's outflow: mass (1001 − i)·10⁴
+        assert(masses === (1 to 4).map(i => (1001L - i) * 10000L), path)
+        assert(masses.last === cp.agg(sum(col("r"))).collect()(0).getLong(0), path)
+        rounds.zip(masses).foreach { case ((stepped, _), m) =>
+          assert(stepped.agg(sum(col("r"))).collect()(0).getLong(0) === m, path)
+        }
+      } finally cp.unpersist(true)
+    } finally spark.conf.set(key, prevAqe)
+  }
 }

@@ -353,6 +353,21 @@ class LibraryApiSpec extends SparkSpec {
         assert(fused === expected,
           s"$name must be identical off the shared decoded frame")
       }
+      // a sweep that spares nothing (Verify's) kills the frame; the
+      // rebuild must swap the registry over to the new checkpoint ids
+      def fusedIds(): Set[Int] = Multimodal.queries("multimodal_features")(spark, dir)
+        .queryExecution.optimizedPlan.collect {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+        }.toSet
+      val oldIds = fusedIds()
+      assert(oldIds.nonEmpty && oldIds.forall(graft.SharedFrames.contains))
+      oldIds.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(true))
+      Multimodal.prewarmFused(spark, dir)
+      val newIds = fusedIds()
+      assert(newIds.nonEmpty && (newIds & oldIds).isEmpty)
+      assert(!oldIds.exists(graft.SharedFrames.contains),
+        "the dead frame's ids must leave the registry")
+      assert(newIds.forall(graft.SharedFrames.contains))
     } finally Multimodal.clearFused(spark, dir)
   }
 }

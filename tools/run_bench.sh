@@ -9,7 +9,7 @@ set -e
 cd "$(dirname "$0")/.."
 SF_DIR=${1:-/root/testdata/sf0.1}
 [ -n "$2" ] && export SPARK_GRAFT_ONLY="$2"
-CLASSES=${CLASSES:-$(ls -d /tmp/graft_classes_r* 2>/dev/null | sort | tail -1)}
+CLASSES=${CLASSES:-$(ls -d /tmp/graft_classes_r* 2>/dev/null | sort -V | tail -1)}
 CLASSES=${CLASSES:-target/scala-2.13/classes}
 export SPARK_GRAFT_SF_DIR="$SF_DIR"
 export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
