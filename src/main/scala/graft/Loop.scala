@@ -1,0 +1,98 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.locks.ReentrantLock
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+
+/** The iterative operators' shared plumbing, written once:
+  *
+  *  - [[observed]]: a per-round metric RIDES the action that already
+  *    materializes the round (a `Dataset.observe` CollectMetrics node
+  *    fires during that job), so a round costs one driver job instead
+  *    of the action plus a separate 1-row scan.
+  *  - [[withConf]]: a session-conf set/restore scope.
+  */
+private[graft] object Loop {
+
+  /** How long [[observed]] waits for a metric after its action ran.
+    * The metric fires during a job that has already COMPLETED, so a
+    * listener that has not delivered by then is not coming; the wait
+    * only bounds the damage of a Spark-behavior change. */
+  val ObserveTimeout: FiniteDuration = 10.seconds
+
+  /** JVM-wide sticky flag: cleared by the first missed wait. After
+    * that no frame is observed and every metric is aggregated from the
+    * frame its caller names — a listener path that never fires will
+    * not start firing later, and paying the wait per round would cost
+    * more than the fallback it guards. */
+  @volatile private[graft] var rides: Boolean = true
+
+  private val seq = new AtomicLong
+
+  /** Run `action` over `frame` carrying `metrics` (aggregate columns)
+    * as an Observation, and return the action's result with the
+    * metric row (the columns in the order given). On a miss — or once
+    * [[rides]] is cleared — the SAME columns are aggregated over
+    * `exact(result)`, which the caller names: the checkpoint when the
+    * action made one, else a frame with `frame`'s rows. Exact either
+    * way; a miss costs one extra job. */
+  def observed[A](frame: DataFrame, metrics: Column*)(action: DataFrame => A)(
+      exact: A => DataFrame, timeout: Duration = ObserveTimeout): (A, Row) = {
+    val obs =
+      if (rides) Some(Observation(s"graft_loop_${seq.incrementAndGet()}"))
+      else None
+    val result = action(obs.fold(frame)(
+      frame.observe(_, metrics.head, metrics.tail: _*)))
+    // re-read the flag: a miss inside `action` (a nested call) already
+    // decided this wait's outcome
+    val fired = obs.filter(_ => rides).flatMap { o =>
+      try Some(Await.result(o.future, timeout))
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          rides = false
+          System.err.println(s"[graft.Loop] Observation ${o.name} did not " +
+            s"complete within $timeout; metrics are aggregated from the " +
+            "materialized frames from now on")
+          None
+      }
+    }
+    (result, fired.getOrElse(
+      exact(result).agg(metrics.head, metrics.tail: _*).head()))
+  }
+
+  private val confLock = new ReentrantLock
+
+  /** Run `body` with the given session conf values, restoring what was
+    * there after — a key that was not set is unset again. Every scope
+    * in the JVM holds one reentrant lock for its whole body (nested
+    * scopes on one thread are fine): two scopes that overlapped would
+    * otherwise restore each other's values, leaving e.g. AQE switched
+    * off for the whole session. The lock is JVM-wide although confs
+    * are per-session. An unrelated query that runs on the session
+    * meanwhile still sees the scoped values.
+    *
+    * Stream starts use it for values a query captures at `start()`
+    * (state partitions, the state store provider): the conf is session-
+    * wide because no per-query option exists, two starts running at
+    * once would capture each other's width into their checkpoints —
+    * which cannot change across restarts — and a started query keeps
+    * its captured values, so the scope ends at `start()`, never at the
+    * query's end. */
+  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    confLock.lock()
+    try {
+      val set = spark.conf.getAll
+      val prev = kvs.map { case (k, _) => k -> set.get(k) }
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    } finally confLock.unlock()
+  }
+}

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Loop, Tables}
 
 /** End-to-end training-data curation (the composition the individual
   * C-ops exist for): language gate → quality threshold → exact dedup →
@@ -1510,58 +1510,32 @@ object Pipeline {
       // the same values flow, they are just computed once.
       var ts = trainScores().persist() // scores under the current w
       for (r <- 1 to TrainRounds) {
-        // r19 opt (§5, the C55 Observation pattern): the 1-row error
-        // COUNT rides the bucket-delta job as a CollectMetrics on the
-        // error frame — one driver action per round where there were
-        // two, same rows observed, same sums. The ppm division moves
-        // to the driver (floor div of non-negative longs ≡ Spark's
-        // `div` on the same operands — identical integers).
-        val eObs = org.apache.spark.sql.Observation(
-          s"qt_err_${r}_${System.nanoTime()}")
+        // r19 opt (§5, graft.Loop): the 1-row error COUNTS ride the
+        // bucket-delta job as a CollectMetrics on the error frame — one
+        // driver action per round where there were two, same rows
+        // observed, same sums. The ppm division moves to the driver
+        // (floor div of non-negative longs ≡ Spark's `div` on the same
+        // operands — identical integers).
         val e = ts.filter(
           (col("y") === 1L && col("s") <= theta) ||
             (col("y") === -1L && col("s") > theta))
           .select(col("doc_id"), col("y"))
-          .observe(eObs,
-            sum(when(col("y") === 1L, 1L).otherwise(0L))
-              .cast("long").as("nep"),
-            sum(when(col("y") === -1L, 1L).otherwise(0L))
-              .cast("long").as("nen"))
         spark.sparkContext.setJobDescription(s"qt:r$r:delta")
-        val pq = tf.join(e.select(col("doc_id")), "doc_id")
-          .groupBy(col("bucket"))
-          .agg((sum(when(col("y") === 1L, col("cnt")).otherwise(0L))
-              * TrainRate).cast("long").as("p"),
-            (sum(when(col("y") === -1L, col("cnt")).otherwise(0L))
-              * TrainRate).cast("long").as("q"))
-          .collect() // bounded: ≤ ModelBuckets rows
-        val (nep, nen) =
-          try {
-            val row = scala.concurrent.Await.result(eObs.future,
-              scala.concurrent.duration.Duration(2, "seconds"))
-            def nz(name: String) = {
-              val i = row.fieldIndex(name)
-              if (row.isNullAt(i)) 1L else math.max(row.getLong(i), 1L)
-            }
-            (nz("nep"), nz("nen"))
-          } catch {
-            case _: java.util.concurrent.TimeoutException =>
-              // a non-firing listener is a Spark-behavior change worth
-              // a signal (the r18 ADVICE item); the fallback recomputes
-              // the same counts from the persisted scores — exact
-              System.err.println("[graft.Pipeline] qualityTrain error-" +
-                "count Observation did not fire; recomputing via scan")
-              val n = ts.filter(
-                (col("y") === 1L && col("s") <= theta) ||
-                  (col("y") === -1L && col("s") > theta))
-                .agg(
-                  sum(when(col("y") === 1L, 1L).otherwise(0L)).cast("long"),
-                  sum(when(col("y") === -1L, 1L).otherwise(0L)).cast("long"))
-                .head()
-              def nz(i: Int) =
-                if (n.isNullAt(i)) 1L else math.max(n.getLong(i), 1L)
-              (nz(0), nz(1))
-          }
+        val (pq, n) = Loop.observed(e,
+            sum(when(col("y") === 1L, 1L).otherwise(0L)).cast("long")
+              .as("nep"),
+            sum(when(col("y") === -1L, 1L).otherwise(0L)).cast("long")
+              .as("nen")) { eo =>
+          tf.join(eo.select(col("doc_id")), "doc_id")
+            .groupBy(col("bucket"))
+            .agg((sum(when(col("y") === 1L, col("cnt")).otherwise(0L))
+                * TrainRate).cast("long").as("p"),
+              (sum(when(col("y") === -1L, col("cnt")).otherwise(0L))
+                * TrainRate).cast("long").as("q"))
+            .collect() // bounded: ≤ ModelBuckets rows
+        }(_ => e)
+        def nz(i: Int) = if (n.isNullAt(i)) 1L else math.max(n.getLong(i), 1L)
+        val (nep, nen) = (nz(0), nz(1))
         val dlt = pq.map(r0 =>
           r0.getLong(0) -> (r0.getLong(1) / nep - r0.getLong(2) / nen)).toMap
         w = (w.keySet ++ dlt.keySet).iterator

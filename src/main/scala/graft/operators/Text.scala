@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Loop, Tables}
 
 /** Text-analysis operators for LLM training-data pipelines (SURVEY.md §2
   * C9–C12): language ID, quality scoring, token counting, document
@@ -644,6 +644,13 @@ object Text {
   /** The segmentation delimiter — chr(31), the C11b convention. */
   private val BD = "\u001f"
 
+  /** Corpus token count of a (cnt, s) vocabulary frame — the learners'
+    * per-merge witness: each word's symbol count (delimiters − 1)
+    * weighted by its frequency. */
+  private val bpeTokenCount: Column = sum(col("cnt") *
+    (length(col("s")) - length(replace(col("s"), lit(BD), lit(""))) - 1))
+    .cast("long").as("toks")
+
   /** Distributed BPE merge-table LEARNING (C37) — the tokenizer
     *-training step itself (Sennrich et al. 2016), completing the BPE
     * story: C11b ([[tokensBpe]]) counts tokens under a FIXED merge
@@ -712,9 +719,8 @@ object Text {
         val rep = lit(BD + a + b + BD)
         cur = cur.withColumn("s",
           replace(replace(replace(col("s"), pat, rep), pat, rep), pat, rep))
-        val toks = cur.agg(sum(col("cnt") *
-            (length(col("s")) - length(replace(col("s"), lit(BD), lit("")))
-              - 1)).cast("long")).collect()(0).getLong(0) // bounded: 1 row
+        val toks = cur.agg(bpeTokenCount)
+          .collect()(0).getLong(0) // bounded: 1 row
         out += ((k.toLong, a, b, c, toks))
       }
       out.result().toDF("rank", "lft", "rgt", "pair_cnt", "corpus_tokens")
@@ -895,37 +901,11 @@ object Text {
         // the plan to an RDD scan, so round k's plan holds only ITS
         // merges (§8).
         // r18 opt: the per-round token count RIDES the checkpoint
-        // action via Observation (the C55 witness pattern, pinned by
-        // GraphSpec) — one driver job per round
-        // instead of checkpoint + a separate 1-row scan. A timeout
-        // degrades to the scanned count (same value, one extra job).
-        val obs = org.apache.spark.sql.Observation(s"bpeb_toks_$k")
-        val next = cur.select(col("cnt"), sc.as("s"))
-          .observe(obs, sum(col("cnt") *
-            (length(col("s")) - length(replace(col("s"), lit(BD), lit("")))
-              - 1)).cast("long").as("toks"))
-          .localCheckpoint(true)
-        val toks =
-          try {
-            // 2 s, down from 10 (r18 ADVICE): the metric fires during
-            // the checkpoint action that ALREADY completed, so a
-            // listener that hasn't delivered within 2 s is not coming —
-            // and the fallback is exact, one cheap scan of checkpointed
-            // blocks. Log the miss: a silently non-firing listener is a
-            // Spark-behavior change worth a visible signal.
-            val row = scala.concurrent.Await.result(obs.future,
-              scala.concurrent.duration.Duration(2, "seconds"))
-            row.getLong(row.fieldIndex("toks"))
-          } catch {
-            case _: java.util.concurrent.TimeoutException =>
-              System.err.println("[graft.Text] bpeLearnBatched round " +
-                s"$k token-count Observation did not fire; " +
-                "recomputing via scan")
-              next.agg(sum(col("cnt") *
-                (length(col("s")) - length(replace(col("s"), lit(BD),
-                  lit(""))) - 1)).cast("long"))
-                .collect()(0).getLong(0) // bounded: 1 row
-          }
+        // action (graft.Loop) — one driver job per round instead of
+        // checkpoint + a separate 1-row scan.
+        val (next, m) = Loop.observed(cur.select(col("cnt"), sc.as("s")),
+          bpeTokenCount)(_.localCheckpoint(true))(identity)
+        val toks = m.getLong(0)
         if (cur ne wc) cur.unpersist(false)
         cur = next
         accepted.foreach { case (l, r, c) =>

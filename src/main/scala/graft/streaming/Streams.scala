@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.Loop
 import graft.sources.GraftArrow
 
 /** Structured-streaming operators over the events table (SURVEY.md §2
@@ -43,25 +44,24 @@ object Streams {
       .as[Event]
   }
 
-  /** Start a streaming query with the state-partition count sized to
-    * the local fixture instead of the session's shuffle width: every
-    * stateful operator commits one state store PER PARTITION PER
-    * MICRO-BATCH, a fixed cost that dwarfs the data at test scale
-    * (measured 8.4s → 2.9s on the stream-stream join). The partition
-    * count is an operational knob — a real deployment sizes it to key
-    * cardinality × store throughput, and it cannot change across
-    * restarts of one checkpointed query — so the adapters own it, not
-    * the query shapes. The session conf is restored immediately after
-    * `start()` captures it.
-    *
-    * The set/restore mutates the SHARED session conf (no per-query
-    * option exists for shuffle partitions), so the whole window is
-    * serialized under a lock: two entries starting concurrently would
-    * otherwise capture each other's width into their checkpoints,
-    * which cannot change across restarts. The lock is held only across
-    * `start()` (query planning captures the conf there), never for the
-    * query's lifetime — concurrent RUNNING queries are fine. */
-  private val statePartitionsLock = new Object
+  /** A stream start's state-partition count, sized to the local
+    * fixture instead of the session's shuffle width: every stateful
+    * operator commits one state store PER PARTITION PER MICRO-BATCH, a
+    * fixed cost that dwarfs the data at test scale (measured 8.4s →
+    * 2.9s on the stream-stream join). The partition count is an
+    * operational knob — a real deployment sizes it to key cardinality
+    * × store throughput, and it cannot change across restarts of one
+    * checkpointed query — so the adapters own it, not the query
+    * shapes. Set with [[graft.Loop.withConf]] around `start()`, which
+    * captures it. */
+  private def statePartitions(n: Int): (String, String) =
+    "spark.sql.shuffle.partitions" -> n.toString
+
+  /** transformWithState requires the RocksDB state store provider;
+    * set beside [[statePartitions]] around a TWS query's `start()`. */
+  private val RocksDbProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Cores-derived state/shuffle width for the CPU-bound sketch gates
     * (D7/D8/D9 and their TTL forms): every stateful operator commits
@@ -74,13 +74,6 @@ object Streams {
     * 32-core behavior is unchanged by construction. */
   private def coresWidth(spark: SparkSession): Int =
     math.max(1, spark.sparkContext.defaultParallelism)
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(start: => A): A =
-    statePartitionsLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, n.toString)
-      try start finally spark.conf.set(key, prev)
-    }
 
   // ---------------------------------------------------------------- D1
   /** The D1 query shape, applicable to a batch OR streaming frame.
@@ -110,7 +103,7 @@ object Streams {
       .load()
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     val sinkName = s"graft_d1_${System.nanoTime()}"
-    val q = withStatePartitions(spark, 8) {
+    val q = Loop.withConf(spark, statePartitions(8)) {
       windowAggQuery(stream)
         .writeStream.format("memory").queryName(sinkName)
         .outputMode(OutputMode.Complete())
@@ -346,7 +339,7 @@ object Streams {
       .select(md5(col("text")).as("h"))
       .dropDuplicates("h")
     val sinkName = s"graft_d3_${System.nanoTime()}"
-    val q = withStatePartitions(spark, 8) {
+    val q = Loop.withConf(spark, statePartitions(8)) {
       stream
         .writeStream.format("memory").queryName(sinkName)
         .outputMode(OutputMode.Append())
@@ -387,7 +380,7 @@ object Streams {
       .load()
       .select(col("event_id"), col("ts"))
     val sinkName = s"graft_d3b_${System.nanoTime()}"
-    val q = withStatePartitions(spark, 8) {
+    val q = Loop.withConf(spark, statePartitions(8)) {
       dedupWithinWatermarkQuery(stream, "1 hour")
         .select(col("event_id"))
         .writeStream.format("memory").queryName(sinkName)
@@ -491,12 +484,9 @@ object Streams {
     val sinkName = s"graft_d3c_${System.nanoTime()}"
     // state partitions: 8 was tuned for the shingle-carrying state
     // (few, heavy RocksDB instances); with 8-byte state the fold is
-    // shuffle/parallelism-bound — 32 matches the other TWS gates.
-    // Scale-adaptive override for cluster deployments:
-    // SPARK_GRAFT_TWS_PARTITIONS (A/B'd at sf1, see
-    // OPTIMIZATION_r19.md; A/B committed in bench_points_r18/).
-    val twsParts = sys.env.get("SPARK_GRAFT_TWS_PARTITIONS")
-      .map(_.toInt).getOrElse(coresWidth(spark))
+    // shuffle/parallelism-bound, so it takes the cores-derived width
+    // of the other TWS gates (A/B'd at sf1, see OPTIMIZATION_r19.md;
+    // A/B committed in bench_points_r18/).
     // r19 (the r18 ADVICE item): candidates go to a DISTRIBUTED file
     // sink, not the driver-resident memory sink — a dup-dense corpus
     // (the expected input of a dedup gate) makes per-bucket pair
@@ -508,7 +498,8 @@ object Streams {
       .createTempDirectory(sinkName + "_out").toString
     val ckDir = java.nio.file.Files
       .createTempDirectory(sinkName + "_ck").toString
-    val q = withTwsConfs(spark, twsParts) {
+    val q = Loop.withConf(spark, statePartitions(coresWidth(spark)),
+        RocksDbProvider) {
       bands.groupByKey(_.band_key)
         .transformWithState(new NearDupProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
@@ -621,7 +612,7 @@ object Streams {
     val views = src.filter(col("event_type") === "view")
     val clicks = src.filter(col("event_type") === "click")
     val sinkName = s"graft_d4_${System.nanoTime()}"
-    val q = withStatePartitions(spark, 8) {
+    val q = Loop.withConf(spark, statePartitions(8)) {
       attributionJoinQuery(views, clicks)
         .writeStream.format("memory").queryName(sinkName)
         .outputMode(OutputMode.Append())
@@ -731,7 +722,7 @@ object Streams {
         col("event_type"), col("value"))
       .as[Event]
     val sinkName = s"graft_d6_${System.nanoTime()}"
-    val q = withStatePartitions(spark, 8) {
+    val q = Loop.withConf(spark, statePartitions(8)) {
       asofEnrichStreaming(stream)
         .writeStream.format("memory").queryName(sinkName)
         .outputMode(OutputMode.Append())
@@ -877,7 +868,7 @@ object Streams {
         text.split(" ", -1).iterator.filter(_.nonEmpty).map(Tok(src, _))
       }
     val sinkName = s"graft_d7_${System.nanoTime()}"
-    val q = withStatePartitions(spark, coresWidth(spark)) {
+    val q = Loop.withConf(spark, statePartitions(coresWidth(spark))) {
       topkSketchStreaming(feed)
         .writeStream.format("memory").queryName(sinkName)
         .outputMode(OutputMode.Append())
@@ -975,7 +966,7 @@ object Streams {
       .as[(String, Long)]
       .map { case (t, u) => Tok(t, u.toString) }
     val sinkName = s"graft_d8_${System.nanoTime()}"
-    val q = withStatePartitions(spark, coresWidth(spark)) {
+    val q = Loop.withConf(spark, statePartitions(coresWidth(spark))) {
       kmvStreaming(feed)
         .writeStream.format("memory").queryName(sinkName)
         .outputMode(OutputMode.Append())
@@ -1100,28 +1091,6 @@ object Streams {
     }
   }
 
-  /** Start a TWS query: state-partition sizing AND the RocksDB state
-    * store provider (transformWithState requires it), both restored
-    * after `start()` captures them — same lock as
-    * [[withStatePartitions]] (shared session conf). */
-  private def withTwsConfs[A](spark: SparkSession, n: Int)(start: => A): A =
-    statePartitionsLock.synchronized {
-      val pKey = "spark.sql.shuffle.partitions"
-      val rKey = "spark.sql.streaming.stateStore.providerClass"
-      val pPrev = spark.conf.get(pKey)
-      val rPrev = spark.conf.getOption(rKey)
-      spark.conf.set(pKey, n.toString)
-      spark.conf.set(rKey, "org.apache.spark.sql.execution.streaming" +
-        ".state.RocksDBStateStoreProvider")
-      try start finally {
-        spark.conf.set(pKey, pPrev)
-        rPrev match {
-          case Some(v) => spark.conf.set(rKey, v)
-          case None => spark.conf.unset(rKey)
-        }
-      }
-    }
-
   /** D8b entry: the events feed replayed through the TTL'd TWS sketch
     * (split=false — one in-order micro-batch, the D6/D7/D8 gate
     * shape) under [[TtlGateWindowMs]], wider than the corpus's time
@@ -1143,7 +1112,8 @@ object Streams {
       .withWatermark("ts", "0 seconds")
       .as[KmvTtlIn]
     val sinkName = s"graft_d8b_${System.nanoTime()}"
-    val q = withTwsConfs(spark, coresWidth(spark)) {
+    val q = Loop.withConf(spark, statePartitions(coresWidth(spark)),
+        RocksDbProvider) {
       feed.groupByKey(_.event_type)
         .transformWithState(new KmvTtlProcessor(TtlGateWindowMs),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
@@ -1294,7 +1264,8 @@ object Streams {
       .withWatermark("ts", "0 seconds")
       .as[SketchTtlIn]
     val sinkName = s"graft_d7b_${System.nanoTime()}"
-    val q = withTwsConfs(spark, coresWidth(spark)) {
+    val q = Loop.withConf(spark, statePartitions(coresWidth(spark)),
+        RocksDbProvider) {
       feed.groupByKey(_.g)
         .transformWithState(
           new CellTtlProcessor(d * w, TtlGateWindowMs, cmsCellsOf),
@@ -1366,7 +1337,8 @@ object Streams {
       .withWatermark("ts", "0 seconds")
       .as[SketchTtlIn]
     val sinkName = s"graft_d9b_${System.nanoTime()}"
-    val q = withTwsConfs(spark, coresWidth(spark)) {
+    val q = Loop.withConf(spark, statePartitions(coresWidth(spark)),
+        RocksDbProvider) {
       feed.groupByKey(_.g)
         .transformWithState(
           new CellTtlProcessor(64, TtlGateWindowMs, histCellsOf),
@@ -1458,7 +1430,7 @@ object Streams {
       .as[(String, Long)]
       .map { case (g, v) => Tok(g, logBucketLocal(v).toString) }
     val sinkName = s"graft_d9_${System.nanoTime()}"
-    val q = withStatePartitions(spark, coresWidth(spark)) {
+    val q = Loop.withConf(spark, statePartitions(coresWidth(spark))) {
       quantileSketchStreaming(feed)
         .writeStream.format("memory").queryName(sinkName)
         .outputMode(OutputMode.Append())

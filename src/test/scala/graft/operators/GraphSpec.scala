@@ -146,19 +146,7 @@ class GraphSpec extends SparkSpec {
 
   test("kleeneDist ≡ collected kleene: ranks AND convergence round on a seeded graph") {
     import spark.implicits._
-    // deterministic pseudo-random weighted digraph, symmetrized so no
-    // node dangles — big enough that convergence takes tens of rounds
-    val rnd = new scala.util.Random(7)
-    val n = 24
-    val halfMap = scala.collection.mutable.Map.empty[(Long, Long), Long]
-    for (_ <- 1 to 120) {
-      val u = rnd.nextInt(n).toLong
-      var v = rnd.nextInt(n).toLong
-      if (v == u) v = (u + 1) % n
-      halfMap((u, v)) = halfMap.getOrElse((u, v), 0L) + rnd.nextInt(9) + 1L
-    }
-    val half = halfMap.toSeq.map { case ((u, v), w) => (u, v, w) }
-    val edges = half ++ half.map { case (u, v, w) => (v, u, w) }
+    val edges = GraphSpec.seededEdges
     val tw = edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._3).sum }
     val tele = tw.keys.map(_ -> 1500L).toMap
     val (rc, itc) = Graph.kleene(edges.toArray, tw, tele)
@@ -204,10 +192,8 @@ class GraphSpec extends SparkSpec {
     // (kleeneDist's static planning)
     val edges = spark.range(0, 1000).toDF("u")
       .select(col("u"), (col("u") + 1).as("v")).localCheckpoint(true)
-    val key = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.get(key)
-    try for (aqe <- Seq("true", "false"); bcast <- Seq(false, true)) {
-      spark.conf.set(key, aqe)
+    for (aqe <- Seq("true", "false"); bcast <- Seq(false, true))
+        graft.Loop.withConf(spark, "spark.sql.adaptive.enabled" -> aqe) {
       val path = s"aqe=$aqe broadcast=$bcast"
       var cur = spark.range(0, 1000).toDF("node")
         .select(col("node"), lit(10000L).as("r")).localCheckpoint(true)
@@ -238,6 +224,25 @@ class GraphSpec extends SparkSpec {
           assert(stepped.agg(sum(col("r"))).collect()(0).getLong(0) === m, path)
         }
       } finally cp.unpersist(true)
-    } finally spark.conf.set(key, prevAqe)
+    }
+  }
+}
+
+object GraphSpec {
+  /** Deterministic pseudo-random weighted digraph (u, v, w),
+    * symmetrized so no node dangles — big enough that the Kleene loop
+    * takes tens of rounds to converge. */
+  lazy val seededEdges: Seq[(Long, Long, Long)] = {
+    val rnd = new scala.util.Random(7)
+    val n = 24
+    val halfMap = scala.collection.mutable.Map.empty[(Long, Long), Long]
+    for (_ <- 1 to 120) {
+      val u = rnd.nextInt(n).toLong
+      var v = rnd.nextInt(n).toLong
+      if (v == u) v = (u + 1) % n
+      halfMap((u, v)) = halfMap.getOrElse((u, v), 0L) + rnd.nextInt(9) + 1L
+    }
+    val half = halfMap.toSeq.map { case ((u, v), w) => (u, v, w) }
+    half ++ half.map { case (u, v, w) => (v, u, w) }
   }
 }

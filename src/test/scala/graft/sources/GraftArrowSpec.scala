@@ -173,13 +173,13 @@ class GraftArrowSpec extends SparkSpec {
     // the 1ms rows BEFORE Spark's re-filter could see them
     val tmp = java.nio.file.Files.createTempDirectory("graft-millis").toString
     import spark.implicits._
-    val prevOut = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
-    try Seq(java.sql.Timestamp.valueOf("2024-01-01 00:00:00.001"),
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00.002"))
-      .toDF("ts").repartition(1)
-      .write.mode("overwrite").parquet(s"$tmp/millis.parquet")
-    finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevOut)
+    graft.Loop.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MILLIS") {
+      Seq(java.sql.Timestamp.valueOf("2024-01-01 00:00:00.001"),
+          java.sql.Timestamp.valueOf("2024-01-01 00:00:00.002"))
+        .toDF("ts").repartition(1)
+        .write.mode("overwrite").parquet(s"$tmp/millis.parquet")
+    }
     val millisSchema = schemaOf(java.nio.file.Files.list(
       java.nio.file.Paths.get(s"$tmp/millis.parquet"))
       .filter(_.toString.endsWith(".parquet")).findFirst().get().toString)
@@ -447,9 +447,7 @@ class GraftArrowSpec extends SparkSpec {
     // end-to-end: a near-unique group key under a tiny conf'd cap still
     // answers exactly, and the pushdown stays on (the cap changes the
     // partial SHAPE, never the plan or the merged answer)
-    val key = AggSpec.MaxGroupsConfKey
-    spark.conf.set(key, "4")
-    try {
+    graft.Loop.withConf(spark, AggSpec.MaxGroupsConfKey -> "4") {
       val g = arrow("lineitem").groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sq"),
           max(col("l_extendedprice")).as("mx"))
@@ -459,7 +457,7 @@ class GraftArrowSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sq"),
           max(col("l_extendedprice")).as("mx"))
       assert(g.collect().map(_.toSeq).toSet === e.collect().map(_.toSeq).toSet)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("grouped pushdown overflow run-merges: adversarial key order stays sublinear (r10)") {

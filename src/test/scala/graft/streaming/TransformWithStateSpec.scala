@@ -38,17 +38,10 @@ import graft.streaming.Streams.{AsofEnriched, AsofState, Event}
   * probe 2 is the committed recipe for that day. */
 class TransformWithStateSpec extends SparkSpec {
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDb[A](body: => A): A =
+    graft.Loop.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   test("TWS twin reproduces the flatMapGroupsWithState D6 output exactly") {
     import spark.implicits._
