@@ -167,7 +167,7 @@ object AggSpec {
     * a partial it can't stand behind. */
   def fromJson(json: String): Option[AggSpec] =
     try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      val root = GraftHttpProtocol.Json.readTree(json)
       val callsNode = root.get("calls")
       if (callsNode == null || !callsNode.isArray) return None
       val calls = (0 until callsNode.size()).map { i =>

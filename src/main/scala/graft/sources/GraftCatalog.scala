@@ -37,7 +37,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   override def name(): String = catalogName
 
-  private def endpoint = new LocalParquetEndpoint(dir)
+  // one per catalog, built after initialize has set dir
+  private lazy val endpoint = new LocalParquetEndpoint(dir)
 
   // a table is a single parquet file OR a directory of part files
   // (LocalParquetEndpoint.partFiles)

@@ -59,6 +59,11 @@ object GraftHttpProtocol {
     * response instead of the generic 500. */
   final class BadRequest(msg: String) extends RuntimeException(msg)
 
+  /** The one JSON mapper of the protocol's readers (plan replies, login
+    * bodies and replies, agg specs); thread-safe once configured, and
+    * never reconfigured. */
+  val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   def enc(s: String): String = URLEncoder.encode(s, UTF_8)
 
   /** Query-string → params (last occurrence wins; values URL-decoded). */
@@ -96,7 +101,15 @@ object GraftHttpProtocol {
   * the plan's per-split `endpoints` array lists this server first and
   * the peers after it (split_info.cpp:44-81 carries several
   * interchangeable endpoints per split), so a client can fail over
-  * when this server dies mid-fleet. */
+  * when this server dies mid-fleet.
+  *
+  * Nagle's algorithm is off on the server's sockets: a reply's last
+  * small chunk (a schema probe is one schema message and the
+  * end-of-stream marker) otherwise waits for the client's delayed ACK,
+  * tens of ms per request on loopback. The JDK reads
+  * `sun.net.httpserver.nodelay` once, when the JVM's first `HttpServer`
+  * is created, so [[start]] sets it before creating one; a server the
+  * JVM created earlier fixes the setting for every later one. */
 class GraftHttpServer(dir: String,
                       secret: String = GraftAuth.DefaultSecret,
                       authRequired: Boolean = true,
@@ -197,6 +210,7 @@ class GraftHttpServer(dir: String,
   def url: String = s"http://127.0.0.1:$port"
 
   def start(): this.type = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val s = HttpServer.create(
       new InetSocketAddress(InetAddress.getLoopbackAddress, 0), 0)
     val tf = new java.util.concurrent.ThreadFactory {
@@ -275,7 +289,7 @@ class GraftHttpServer(dir: String,
     * {"accessToken":"<jwt>"} (dd_login.cpp:84-131). */
   private def login(ex: HttpExchange): Unit = {
     val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+    val root = Json.readTree(body)
     def str(n: String) = Option(root.get(n)).filter(_.isTextual).map(_.asText())
     val claims = Option(root.get("claims")).filter(_.isObject).toSeq.flatMap { c =>
       val it = c.fields()
@@ -574,7 +588,7 @@ class HttpEndpoint(baseUrl: String, token: Option[String],
       "application/json"))
     val body = try new String(conn.getInputStream.readAllBytes(), UTF_8)
       finally conn.disconnect()
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+    val root = Json.readTree(body)
     (0 until root.size()).map { i =>
       val o = root.get(i)
       val h = o.get("descriptor").get("statement_handle")
@@ -744,7 +758,7 @@ object HttpEndpoint {
     }
     val resp = try new String(conn.getInputStream.readAllBytes(), UTF_8)
       finally conn.disconnect()
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(resp)
+    val root = Json.readTree(resp)
     Option(root.get("accessToken")).filter(_.isTextual).map(_.asText())
       .getOrElse(throw new java.io.IOException(
         "graft-http: no accessToken in login response"))

@@ -1,12 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
@@ -42,44 +43,36 @@ import scala.jdk.CollectionConverters._
   */
 class LocalParquetEndpoint(dir: String) extends Endpoint {
 
-  import LocalParquetEndpoint.CancelCheckRows
+  import LocalParquetEndpoint.{CancelCheckRows, SplitFile, hadoopConf}
 
   private def tablePath(table: String) = new Path(s"$dir/$table.parquet")
-
-  @transient private lazy val hadoopConf = new Configuration()
 
   /** A table is a single parquet file OR a directory of part files (the
     * realistic at-scale layout — a 100 TB table is tens of thousands of
     * part files, and splits parallelize across all of them). Part files
     * must share one schema, like any parquet table. Deterministic
-    * name-sorted order so split ids are stable. */
-  private def partFiles(table: String): Seq[Path] = {
+    * name-sorted order so split ids are stable. Each part comes with its
+    * status, the [[FooterCache]] key. */
+  private def partFiles(table: String): Seq[(Path, FileStatus)] = {
     val p = tablePath(table)
     val fs = p.getFileSystem(hadoopConf)
-    if (fs.getFileStatus(p).isDirectory) {
-      val parts = fs.listStatus(p).toSeq.map(_.getPath)
-        .filter(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .sortBy(_.getName.toString)
+    val st = fs.getFileStatus(p)
+    if (st.isDirectory) {
+      val parts = fs.listStatus(p).toSeq
+        .filter(f => f.getPath.getName.endsWith(".parquet") &&
+          !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.getName)
+        .map(f => (f.getPath, f))
       require(parts.nonEmpty,
         s"graft-arrow: table '$table' at $p is a directory with no part files" +
           " (aborted write?)")
       parts
-    } else Seq(p)
+    } else Seq((p, st))
   }
-
-  private def footerOf(file: Path) = {
-    val in = HadoopInputFile.fromPath(file, hadoopConf)
-    val r = ParquetFileReader.open(in)
-    try r.getFooter finally r.close()
-  }
-
-  private def fileSchema(file: Path): MessageType =
-    footerOf(file).getFileMetaData.getSchema
 
   /** The table schema (from the first part file). */
   private def tableSchema(table: String): MessageType =
-    fileSchema(partFiles(table).head)
+    FooterCache.footer(partFiles(table).head._2).getFileMetaData.getSchema
 
   override def schema(table: String): StructType =
     ArrowBridge.parquetToSparkSchema(tableSchema(table), hadoopConf)
@@ -93,8 +86,8 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     val queryId = java.util.UUID.nameUUIDFromBytes(sql.getBytes("UTF-8"))
       .getMostSignificantBits.abs
     var sid = 0
-    partFiles(table).flatMap { file =>
-      val blocks = footerOf(file).getBlocks.asScala.toSeq
+    partFiles(table).flatMap { case (file, status) =>
+      val blocks = FooterCache.footer(status).getBlocks.asScala.toSeq
       // greedily pack consecutive row groups into ≤ splitSizeBytes
       // splits; splits never span files (byte ranges are per-file)
       val groups = scala.collection.mutable.ArrayBuffer.empty[Vector[Int]]
@@ -128,7 +121,7 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
 
   // ------------------------------------------------------------- scan
   override def scan(split: SplitInfo, query: QuerySpec): IpcStream = {
-    val (rows, sparkSchema, close) = readRows(split, query)
+    val (rows, sparkSchema, close) = readRows(split, splitFile(split), query)
     IpcStream(ArrowBridge.toIpc(rows, sparkSchema), close)
   }
 
@@ -139,14 +132,15 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     // AGGREGATE over under-filtered rows is silently wrong, so every
     // filter must translate to an exact parquet predicate here
     // or the request is refused loudly.
-    val fsch = fileSchema(new Path(split.endpoint.stripPrefix("local://")))
+    val file = splitFile(split)
+    val fsch = file.footer.getFileMetaData.getSchema
     val unapplied = query.filters.filterNot(ParquetFilters.translatable(_, fsch))
     if (unapplied.nonEmpty) throw new UnsupportedOperationException(
       s"graft-arrow: aggregate pushdown requires exactly-applicable filters; " +
         s"cannot apply: ${unapplied.mkString(", ")}")
     val aggCols = agg.calls.collect { case AggCall(op, c) if op != "count_star" => c }.distinct
     val cols = (agg.groupBy ++ aggCols.filterNot(agg.groupBy.contains)).toSeq
-    val (rows, sparkSchema, close) = readRows(split, query.copy(requiredColumns = cols.toArray))
+    val (rows, sparkSchema, close) = readRows(split, file, query.copy(requiredColumns = cols.toArray))
     val idx = cols.zipWithIndex.toMap
     val fieldIdx = agg.calls.map(c => if (c.op == "count_star") -1 else idx(c.column))
     val types = agg.calls.zip(fieldIdx).map {
@@ -199,11 +193,11 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     * keeps a value past the next row must copy it ([[PartialAgg]] does).
     * TIMESTAMP(NANOS) columns decode as raw nanos (the check compares in
     * that unit) and are emitted rescaled to micros with `/ 1000`. */
-  private def readRows(split: SplitInfo, query: QuerySpec): (Iterator[InternalRow], StructType, () => Unit) = {
-    // the split locator carries the part file it covers (splits never
-    // span files); the schema is per-file but uniform across the table
-    val file = new Path(split.endpoint.stripPrefix("local://"))
-    val fs = fileSchema(file)
+  private def readRows(split: SplitInfo, file: SplitFile,
+                       query: QuerySpec): (Iterator[InternalRow], StructType, () => Unit) = {
+    // the schema is per-file but uniform across the table
+    val SplitFile(status, footer) = file
+    val fs = footer.getFileMetaData.getSchema
     // columns the translated filter needs but the projection lacks
     val extraRefs: Array[String] =
       if (query.requiredColumns.isEmpty) Array.empty
@@ -248,13 +242,19 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     val closeOnce: () => Unit = () => if (closed.compareAndSet(false, true)) {
       try reader.close() finally micros.foreach(v => if (v != null) v.close())
     }
+    // the reader gets the cached footer restricted to the split's row
+    // groups, so it parses none itself; it closes the stream it is handed
+    val input = HadoopInputFile.fromStatus(status, hadoopConf)
+    val stream = input.newStream()
     val batch =
       try {
         reader.initialize(
-          new FileSplit(file, split.startByte, split.endByte - split.startByte, Array.empty[String]),
-          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+          new FileSplit(status.getPath, split.startByte, split.endByte - split.startByte,
+            Array.empty[String]),
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+          Some(input), Some(stream), Some(FooterCache.restrict(footer, split.startByte, split.endByte)))
         reader.resultBatch()
-      } catch { case e: Throwable => closeOnce(); throw e }
+      } catch { case e: Throwable => try closeOnce() finally stream.close(); throw e }
     val check: Int => Boolean = predicate
       .map(ParquetFilters.rowCheck(_, fs, batch, projected.getFieldIndex))
       .orNull
@@ -319,6 +319,15 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     (it, sparkSchema, closeOnce)
   }
 
+  /** The part file a split covers (the split locator carries its path;
+    * splits never span files): its status and whole footer, resolved
+    * once per request. */
+  private def splitFile(split: SplitInfo): SplitFile = {
+    val file = new Path(split.endpoint.stripPrefix("local://"))
+    val status = file.getFileSystem(hadoopConf).getFileStatus(file)
+    SplitFile(status, FooterCache.footer(status))
+  }
+
   /** Reader configuration: Spark's parquet read support with the
     * requested schema, and the schema-conversion flags of the session
     * [[ArrowBridge.parquetToSparkSchema]] reads, except that
@@ -343,6 +352,73 @@ object LocalParquetEndpoint {
   /** Rows per reader batch; the task-interrupt check runs once per
     * batch. */
   val CancelCheckRows = 1024
+
+  private final case class SplitFile(status: FileStatus, footer: ParquetMetadata)
+
+  /** The Hadoop configuration of every endpoint in the JVM, parsed once:
+    * a `new Configuration()` parses `core-default.xml` out of its jar on
+    * first use, which cost more than a footer read per request. Never
+    * modified — code that sets keys works on a copy
+    * (`new Configuration(hadoopConf)`). */
+  private[sources] lazy val hadoopConf: Configuration = new Configuration()
+}
+
+/** JVM-wide cache of parquet footers, so a footer is parsed once per
+  * file state rather than once per schema probe, plan and split.
+  *
+  * Key: the file's qualified path; an entry holds the (length,
+  * modification time) it was read at, and a lookup whose status differs
+  * re-reads and replaces it, so a file rewritten in place is never
+  * served its old footer. Bound: [[MaxFiles]] footers, least recently
+  * used evicted first. Directories whose files are deleted (superseded
+  * `sql :=` results) drop their entries through [[evictUnder]]. */
+private[sources] object FooterCache {
+  /** Footers kept; a footer is a few KB to a few hundred KB (it grows
+    * with row groups × columns). */
+  val MaxFiles = 256
+
+  private final case class Entry(length: Long, mtime: Long, footer: ParquetMetadata)
+
+  private val entries = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
+      size() > MaxFiles
+  }
+
+  private val parsed = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Footers parsed from disk so far (misses, a test observable). */
+  private[sources] def reads: Long = parsed.get()
+
+  /** The whole footer of the file `status` describes. Two concurrent
+    * misses on one file may both parse it; the later entry wins. */
+  def footer(status: FileStatus): ParquetMetadata = {
+    val key = status.getPath.toString
+    val hit = entries.synchronized(entries.get(key))
+    if (hit != null && hit.length == status.getLen && hit.mtime == status.getModificationTime)
+      hit.footer
+    else {
+      parsed.incrementAndGet()
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(status, LocalParquetEndpoint.hadoopConf))
+      val f = try r.getFooter finally r.close()
+      entries.synchronized(entries.put(key, Entry(status.getLen, status.getModificationTime, f)))
+      f
+    }
+  }
+
+  /** `full` restricted to the row groups of the byte range [start, end):
+    * those whose midpoint lies in it — parquet's own rule for a split
+    * range, which a reader handed a footer does not apply itself. */
+  def restrict(full: ParquetMetadata, start: Long, end: Long): ParquetMetadata =
+    new ParquetMetadata(full.getFileMetaData, full.getBlocks.asScala.filter { b =>
+      val mid = b.getStartingPos + b.getCompressedSize / 2
+      mid >= start && mid < end
+    }.asJava)
+
+  /** Drop the entries of every file under `dir` (a qualified path). */
+  def evictUnder(dir: Path): Unit = {
+    val prefix = dir.toString.stripSuffix("/") + "/"
+    entries.synchronized(entries.keySet.removeIf(_.startsWith(prefix)))
+  }
 }
 
 /** Spark [[Filter]] → parquet [[FilterPredicate]]. Conservative: only

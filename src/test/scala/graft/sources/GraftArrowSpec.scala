@@ -361,6 +361,108 @@ class GraftArrowSpec extends SparkSpec {
     assert(spark.table(name).count() === p.count())
   }
 
+  /** Rows of one split scan, decoded and copied. */
+  private def scanned(ep: Endpoint, split: SplitInfo, q: QuerySpec,
+                      schema: org.apache.spark.sql.types.StructType) = {
+    val st = ep.scan(split, q)
+    try org.apache.spark.sql.graft.ArrowBridge.fromIpc(st, schema).map(_.copy()).toVector
+    finally st.close()
+  }
+
+  test("footer cache: a table rewritten in place is seen by schema, plan and scan") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stale").toString
+    val ep = new LocalParquetEndpoint(tmp)
+    def ids(): Seq[Long] = {
+      val q = QuerySpec("t", Array("id"), Array.empty)
+      val schema = ep.schema("t")
+      ep.plan("t", q, 1L << 30)
+        .flatMap(s => scanned(ep, s, q, org.apache.spark.sql.types.StructType(Seq(schema("id")))))
+        .map(_.getLong(0)).sorted
+    }
+    LineitemFixture.writeSingleFile(spark.range(100).selectExpr("id", "id * 2 AS v"),
+      s"$tmp/t.parquet")
+    assert(ep.schema("t").fieldNames.toSeq === Seq("id", "v"))
+    assert(ep.plan("t", QuerySpec("t", Array("id"), Array.empty), 1L << 30)
+      .map(_.rowCount).sum === 100)
+    assert(ids() === (0L until 100L))
+    val before = new java.io.File(s"$tmp/t.parquet").length()
+    // same path, other rows, another column, another length
+    LineitemFixture.writeSingleFile(
+      spark.range(1000, 1250).selectExpr("id", "id * 3 AS v", "'x' AS tag"), s"$tmp/t.parquet")
+    assert(new java.io.File(s"$tmp/t.parquet").length() !== before)
+    assert(ep.schema("t").fieldNames.toSeq === Seq("id", "v", "tag"))
+    assert(ep.plan("t", QuerySpec("t", Array("id"), Array.empty), 1L << 30)
+      .map(_.rowCount).sum === 250)
+    assert(ids() === (1000L until 1250L))
+  }
+
+  test("split scans hand the reader the cached footer: exact past row group 0, pruned, NANOS") {
+    import org.apache.hadoop.fs.Path
+    import scala.jdk.CollectionConverters._
+    val liDir = LineitemFixture.dir(spark, sf("sf0.1"))
+    val ep = new LocalParquetEndpoint(liDir)
+    val file = new Path(s"$liDir/li.parquet")
+    val status = file.getFileSystem(LocalParquetEndpoint.hadoopConf).getFileStatus(file)
+    // the file is in key order: row group k holds one l_orderkey range
+    val keyRanges = FooterCache.footer(status).getBlocks.asScala.map { b =>
+      val st = b.getColumns.asScala.find(_.getPath.toDotString == "l_orderkey").get.getStatistics
+      (st.genericGetMin.asInstanceOf[Long], st.genericGetMax.asInstanceOf[Long])
+    }.toSeq
+    assert(keyRanges.size >= 8, s"expected many row groups, got ${keyRanges.size}")
+    val (lo, hi) = (keyRanges(2)._2, keyRanges(5)._2)
+    val kept = keyRanges.count { case (mn, mx) => mx > lo && mn <= hi }
+    assert(kept <= 4, s"the key range should prune row groups, keeps $kept of ${keyRanges.size}")
+    val cols = Seq("l_orderkey", "l_linenumber", "l_quantity")
+    val q = QuerySpec("li", cols.toArray, Array.empty)
+    val schema = org.apache.spark.sql.types.StructType(cols.map(ep.schema("li")(_)))
+    val pred = col("l_orderkey") > lo && col("l_orderkey") <= hi
+    val p = spark.read.parquet(file.toString).filter(pred).select(cols.map(col): _*)
+    // one split per row group, and splits of several row groups
+    Seq(1L << 20, 5L << 19).foreach { splitSize =>
+      val plan = ep.plan("li", q, splitSize)
+      assert(plan.count(_.rowGroups.head > 0) >= 4, s"splits past row group 0 at $splitSize")
+      // each split decodes exactly its own row groups
+      plan.foreach(s => assert(scanned(ep, s, q, schema).size === s.rowCount, s"split $s"))
+      val a = GraftArrow.read(spark, liDir, "li", splitSize = splitSize)
+        .filter(pred).select(cols.map(col): _*)
+      assert(a.count() === p.count())
+      assert(a.exceptAll(p).count() === 0 && p.exceptAll(a).count() === 0)
+    }
+    // TIMESTAMP(NANOS) rows decode through the handed footer too
+    val nep = new LocalParquetEndpoint(nanosDir)
+    val nq = QuerySpec("events_ns", Array("event_id", "ts"), Array.empty)
+    val nSchema = nep.schema("events_ns")
+    val got = nep.plan("events_ns", nq, 1L)
+      .flatMap(s => scanned(nep, s, nq, nSchema).map(r => (r.getLong(0), r.getLong(1))))
+      .sortBy(_._1)
+    assert(got === (0 until NanosFixture.Rows).map(i => (i.toLong, NanosFixture.tsNanos(i) / 1000L)))
+  }
+
+  test("footer cache: split scans on a warm cache parse no footer; a new file state parses once") {
+    val liDir = LineitemFixture.dir(spark, sf("sf0.1"))
+    val ep = new LocalParquetEndpoint(liDir)
+    val q = QuerySpec("li", Array("l_orderkey", "l_quantity"),
+      Array(org.apache.spark.sql.sources.LessThan("l_quantity", 10.0)))
+    val schema = ep.schema("li")
+    val plan = ep.plan("li", q, 1L << 20)
+    val warm = FooterCache.reads
+    val rows = plan.take(3).map(s => scanned(ep, s, q,
+      org.apache.spark.sql.types.StructType(q.requiredColumns.map(schema(_)))).size).sum
+    assert(rows > 0)
+    val agg = ep.scanAgg(plan(1), q, AggSpec(Seq(AggCall("count_star", ""))))
+    try assert(agg.nonEmpty) finally agg.close()
+    assert(FooterCache.reads === warm, "a split scan on a warm cache parsed a footer")
+    // a fresh file: schema, plan and scan share one parse
+    val tmp = java.nio.file.Files.createTempDirectory("graft-warm").toString
+    LineitemFixture.writeSingleFile(spark.range(10).toDF("id"), s"$tmp/t.parquet")
+    val tep = new LocalParquetEndpoint(tmp)
+    val cold = FooterCache.reads
+    val tq = QuerySpec("t", Array("id"), Array.empty)
+    val tSchema = tep.schema("t")
+    assert(tep.plan("t", tq, 1L << 30).map(s => scanned(tep, s, tq, tSchema).size).sum === 10)
+    assert(FooterCache.reads === cold + 1)
+  }
+
   test("dd_splits surface (A6)") {
     val s = GraftArrow.splits(spark, dir, "lineitem")
     val row = s.head()

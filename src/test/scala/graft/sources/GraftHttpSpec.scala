@@ -96,6 +96,81 @@ class GraftHttpSpec extends SparkSpec {
     assert(p.exceptAll(a).count() === 0)
   }
 
+  test("a table rewritten in place is seen by schema, plan and scan through a running server") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-http-stale").toString
+    LineitemFixture.writeSingleFile(spark.range(100).selectExpr("id", "id * 2 AS v"),
+      s"$tmp/t.parquet")
+    val srv = new GraftHttpServer(tmp).start()
+    try {
+      val ep = new HttpEndpoint(srv.url, Some(token))
+      def check(first: Long, n: Int, fields: Seq[String]): Unit = {
+        assert(ep.schema("t").fieldNames.toSeq === fields)
+        assert(ep.plan("t", QuerySpec("t", Array("id"), Array.empty), 1L << 30)
+          .map(_.rowCount).sum === n)
+        val df = GraftArrow.readHttp(spark, srv.url, "t", Some(token))
+        assert(df.schema.fieldNames.toSeq === fields)
+        assert(df.select("id").collect().map(_.getLong(0)).sorted.toSeq === (first until first + n))
+      }
+      check(0L, 100, Seq("id", "v"))
+      // same path, other rows, another column, another length
+      LineitemFixture.writeSingleFile(
+        spark.range(1000, 1250).selectExpr("id", "id * 3 AS v", "'x' AS tag"), s"$tmp/t.parquet")
+      check(1000L, 250, Seq("id", "v", "tag"))
+    } finally srv.stop()
+  }
+
+  test("sql := texts share one server session; a non-query text is a 400 and changes nothing") {
+    // the server session is derived from the active session
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val server = SqlEndpoint.serverSession(dir)
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = ran.incrementAndGet()
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    server.listenerManager.register(listener)
+    try {
+      // texts no earlier run materialized (the result cache outlives the JVM)
+      val nonce = System.nanoTime()
+      Seq(1, 2).foreach { k =>
+        val q = s"SELECT count(*) + $nonce AS n, $k AS k FROM region"
+        assert(GraftArrow.readHttpSql(spark, url, q, Some(token)).head.getLong(0) === 5 + nonce)
+      }
+      val deadline = System.currentTimeMillis() + 10000
+      while (ran.get < 2 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(ran.get >= 2, "both texts should execute in the directory's server session")
+      assert(SqlEndpoint.serverSession(dir) eq server)
+
+      def code(path: String): Int = {
+        val conn = new URI(s"$url$path").toURL.openConnection().asInstanceOf[HttpURLConnection]
+        conn.setRequestProperty("Authorization", s"Bearer $token")
+        val c = conn.getResponseCode
+        conn.disconnect(); c
+      }
+      val enc = GraftHttpProtocol.enc _
+      val partitions = server.conf.get("spark.sql.shuffle.partitions")
+      assert(code(s"/v1/query?q=${enc("SET spark.sql.shuffle.partitions=3")}") === 400)
+      assert(code(s"/v1/plan?q=&sql=${enc("SET spark.sql.shuffle.partitions=3")}") === 400)
+      assert(code(s"/v1/query?q=${enc("CREATE TEMP VIEW graft_probe AS SELECT 1 AS x")}") === 400)
+      // statements that run inside analysis, and scripts, are refused too
+      assert(code(s"/v1/query?q=${enc("EXECUTE IMMEDIATE 'SET spark.sql.shuffle.partitions=3'")}") === 400)
+      assert(code(s"/v1/query?q=${enc(
+        "EXECUTE IMMEDIATE 'CREATE TEMP VIEW graft_probe AS SELECT 1 AS x'")}") === 400)
+      assert(code(s"/v1/query?q=${enc("SELECT 1 AS x; SET spark.sql.shuffle.partitions=3")}") === 400)
+      assert(code(s"/v1/query?q=${enc(
+        "BEGIN SET spark.sql.shuffle.partitions=3; SELECT 1 AS x; END")}") === 400)
+      assert(code(s"/v1/query?q=${enc("SELEC 1")}") === 400)
+      // one query with a trailing semicolon is still a query
+      assert(code(s"/v1/query?q=${enc(s"SELECT count(*) + $nonce AS n FROM region;")}") === 200)
+      assert(server.conf.get("spark.sql.shuffle.partitions") === partitions)
+      assert(!server.catalog.tableExists("graft_probe"))
+    } finally server.listenerManager.unregister(listener)
+  }
+
   test("split-parallel read: one HTTP stream per row-group split") {
     // multi-row-group single file (the GraftArrowSpec A5 fixture)
     val tmp = java.nio.file.Files.createTempDirectory("graft-http-split").toString
@@ -286,20 +361,7 @@ class GraftHttpSpec extends SparkSpec {
     // plans many splits that the sink's tasks read side by side; each
     // task stops after its local limit and cancels its own split while
     // its siblings are still streaming
-    val tmp = java.nio.file.Files.createTempDirectory("graft-http-limit").toString
-    val hc = spark.sparkContext.hadoopConfiguration
-    val oldBlock = hc.get("parquet.block.size")
-    hc.setInt("parquet.block.size", 1024 * 1024)
-    try spark.read.parquet(s"${sf("sf0.1")}/lineitem.parquet").repartition(1)
-      .write.mode("overwrite").parquet(s"$tmp/out")
-    finally {
-      if (oldBlock == null) hc.unset("parquet.block.size")
-      else hc.set("parquet.block.size", oldBlock)
-    }
-    val part = new java.io.File(s"$tmp/out").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$tmp/li.parquet"))
-    val srv = new GraftHttpServer(tmp).start()
+    val srv = new GraftHttpServer(LineitemFixture.dir(spark, sf("sf0.1"))).start()
     try {
       val df = GraftArrow.readHttp(spark, srv.url, "li", Some(token),
         splitSize = 1024L * 1024)
