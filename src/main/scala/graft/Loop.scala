@@ -73,15 +73,8 @@ private[graft] object Loop {
     * otherwise restore each other's values, leaving e.g. AQE switched
     * off for the whole session. The lock is JVM-wide although confs
     * are per-session. An unrelated query that runs on the session
-    * meanwhile still sees the scoped values.
-    *
-    * Stream starts use it for values a query captures at `start()`
-    * (state partitions, the state store provider): the conf is session-
-    * wide because no per-query option exists, two starts running at
-    * once would capture each other's width into their checkpoints —
-    * which cannot change across restarts — and a started query keeps
-    * its captured values, so the scope ends at `start()`, never at the
-    * query's end. */
+    * meanwhile still sees the scoped values. Stream starts take their
+    * scope in `graft.streaming.Streams.run`. */
   def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
     confLock.lock()
     try {

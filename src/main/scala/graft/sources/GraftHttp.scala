@@ -442,7 +442,11 @@ class GraftHttpServer(dir: String,
       if (structured) {
         // exact split scan — the sidecar params carry the parsed form
         val (ep, table) = endpointFor(p)
-        val fullSchema = ep.schema(table)
+        val file = validatedFile(p, p.getOrElse("file",
+          throw new BadRequest("file required for split scan")))
+        // the split's own footer has the table's schema: no table
+        // resolution (for `sql :=`, no re-materialization) per split
+        val fullSchema = LocalParquetEndpoint.fileSchema(file)
         val cols = p.get("cols").filter(_.nonEmpty)
           .map(_.split(',').toArray[String]).getOrElse(Array.empty[String])
         val filters = parsedFilters(p)
@@ -450,8 +454,6 @@ class GraftHttpServer(dir: String,
         val projected =
           if (cols.isEmpty) fullSchema
           else StructType(cols.map(c => fullSchema(fullSchema.fieldIndex(c))))
-        val file = validatedFile(p, p.getOrElse("file",
-          throw new BadRequest("file required for split scan")))
         val split = SplitInfo(
           endpoint = file, queryId = queryId, producerId = "graft-http",
           query = p.getOrElse("q", ""), queryChecksum = "",

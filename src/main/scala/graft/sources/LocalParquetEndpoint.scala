@@ -43,7 +43,7 @@ import scala.jdk.CollectionConverters._
   */
 class LocalParquetEndpoint(dir: String) extends Endpoint {
 
-  import LocalParquetEndpoint.{CancelCheckRows, SplitFile, hadoopConf}
+  import LocalParquetEndpoint.{CancelCheckRows, SplitFile, hadoopConf, splitFile}
 
   private def tablePath(table: String) = new Path(s"$dir/$table.parquet")
 
@@ -121,7 +121,7 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
 
   // ------------------------------------------------------------- scan
   override def scan(split: SplitInfo, query: QuerySpec): IpcStream = {
-    val (rows, sparkSchema, close) = readRows(split, splitFile(split), query)
+    val (rows, sparkSchema, close) = readRows(split, splitFile(split.endpoint), query)
     IpcStream(ArrowBridge.toIpc(rows, sparkSchema), close)
   }
 
@@ -132,7 +132,7 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     // AGGREGATE over under-filtered rows is silently wrong, so every
     // filter must translate to an exact parquet predicate here
     // or the request is refused loudly.
-    val file = splitFile(split)
+    val file = splitFile(split.endpoint)
     val fsch = file.footer.getFileMetaData.getSchema
     val unapplied = query.filters.filterNot(ParquetFilters.translatable(_, fsch))
     if (unapplied.nonEmpty) throw new UnsupportedOperationException(
@@ -319,15 +319,6 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     (it, sparkSchema, closeOnce)
   }
 
-  /** The part file a split covers (the split locator carries its path;
-    * splits never span files): its status and whole footer, resolved
-    * once per request. */
-  private def splitFile(split: SplitInfo): SplitFile = {
-    val file = new Path(split.endpoint.stripPrefix("local://"))
-    val status = file.getFileSystem(hadoopConf).getFileStatus(file)
-    SplitFile(status, FooterCache.footer(status))
-  }
-
   /** Reader configuration: Spark's parquet read support with the
     * requested schema, and the schema-conversion flags of the session
     * [[ArrowBridge.parquetToSparkSchema]] reads, except that
@@ -354,6 +345,21 @@ object LocalParquetEndpoint {
   val CancelCheckRows = 1024
 
   private final case class SplitFile(status: FileStatus, footer: ParquetMetadata)
+
+  /** The part file a split locator names (splits never span files):
+    * its status and whole footer, resolved once per request. */
+  private def splitFile(locator: String): SplitFile = {
+    val file = new Path(locator.stripPrefix("local://"))
+    val status = file.getFileSystem(hadoopConf).getFileStatus(file)
+    SplitFile(status, FooterCache.footer(status))
+  }
+
+  /** The whole schema of the part file a split locator names, from its
+    * cached footer — part files share their table's schema, so this is
+    * the table's schema without resolving the table. */
+  private[sources] def fileSchema(locator: String): StructType =
+    ArrowBridge.parquetToSparkSchema(
+      splitFile(locator).footer.getFileMetaData.getSchema, hadoopConf)
 
   /** The Hadoop configuration of every endpoint in the JVM, parsed once:
     * a `new Configuration()` parses `core-default.xml` out of its jar on

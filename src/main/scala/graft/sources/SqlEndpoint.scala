@@ -152,6 +152,12 @@ object SqlEndpoint {
   // state).
   private val inFlight = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  private val materializeCalls = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** [[materialize]] calls so far, cache hits included (a test
+    * observable). */
+  private[sources] def materializations: Long = materializeCalls.get()
+
   /** Execute the query `text` ([[queryOnly]]) against the directory's
     * tables and persist the result as
     * `<cacheRoot>/<sqlKey>/<stateKey>.parquet` (a directory of part
@@ -162,6 +168,7 @@ object SqlEndpoint {
     * keys of the same (dir, sql) are evicted once the new result is
     * complete, and their footers leave the [[FooterCache]] with them. */
   def materialize(dir: String, text: String): String = {
+    materializeCalls.incrementAndGet()
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(LocalParquetEndpoint.hadoopConf)
     // refused before the result cache is consulted: a non-query text is

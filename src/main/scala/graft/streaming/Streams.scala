@@ -4,7 +4,7 @@ import java.time.LocalDateTime
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Loop
 import graft.sources.GraftArrow
@@ -52,8 +52,7 @@ object Streams {
     * operational knob — a real deployment sizes it to key cardinality
     * × store throughput, and it cannot change across restarts of one
     * checkpointed query — so the adapters own it, not the query
-    * shapes. Set with [[graft.Loop.withConf]] around `start()`, which
-    * captures it. */
+    * shapes. [[run]] sets it around `start()`, which captures it. */
   private def statePartitions(n: Int): (String, String) =
     "spark.sql.shuffle.partitions" -> n.toString
 
@@ -75,6 +74,49 @@ object Streams {
   private def coresWidth(spark: SparkSession): Int =
     math.max(1, spark.sparkContext.defaultParallelism)
 
+  /** The graft-arrow micro-batch feed of `table`: one micro-batch per
+    * endpoint split, or with `split = false` one in-order batch of the
+    * whole table (the reference's non-split scan). */
+  private def feed(spark: SparkSession, dir: String, table: String,
+                   split: Boolean): DataFrame =
+    spark.readStream.format("graft-arrow").option("dir", dir)
+      .option("table", table).option("split", split).load()
+
+  /** Start `writer` with the session conf `confs`, process everything
+    * the sources have, and stop the query, also when it fails — the one
+    * stream start of every gate.
+    *
+    * The confs are values a query captures at `start()` (state
+    * partitions, the state store provider). They are session-wide
+    * because no per-query option exists, so they are set in one
+    * [[graft.Loop.withConf]] scope: two starts running at once would
+    * otherwise capture each other's width into their checkpoints, which
+    * cannot change across restarts. A started query keeps its captured
+    * values, so the scope ends at `start()`, never at the query's end. */
+  private def run(spark: SparkSession, confs: Seq[(String, String)])(
+      writer: DataStreamWriter[_]): Unit = {
+    val q = Loop.withConf(spark, confs: _*)(writer.start())
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  private val sinks = new java.util.concurrent.atomic.AtomicLong
+
+  /** Run a gate's streaming `query` to completion ([[run]]) into a
+    * memory sink in output `mode`, and return the sink's rows. The
+    * sink's temp view is dropped before this returns, on the error path
+    * too: the frame keeps the view's plan, so it still reads every sink
+    * row, and the rows live as long as the caller holds the frame
+    * instead of until the session ends. */
+  private[streaming] def drain(spark: SparkSession, mode: OutputMode,
+      confs: (String, String)*)(query: Dataset[_]): DataFrame = {
+    val name = s"graft_sink_${sinks.incrementAndGet()}"
+    try {
+      run(spark, confs)(query.writeStream.format("memory").queryName(name)
+        .outputMode(mode))
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name): Unit
+  }
+
   // ---------------------------------------------------------------- D1
   /** The D1 query shape, applicable to a batch OR streaming frame.
     * Event-time columns must be TIMESTAMP (not NTZ) for watermarks; the
@@ -95,23 +137,10 @@ object Streams {
   /** D1 entry: drive a real micro-batch stream (the graft-arrow source's
     * MICRO_BATCH_READ surface — one micro-batch per endpoint split)
     * through the windowed aggregation and return the completed result. */
-  def windowAgg(spark: SparkSession, dir: String): DataFrame = {
-    val stream = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "events")
-      .option("split", true) // one micro-batch per split (raw default is the reference's non-split scan)
-      .load()
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    val sinkName = s"graft_d1_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(8)) {
-      windowAggQuery(stream)
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
-    spark.table(sinkName)
-  }
+  def windowAgg(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Complete(), statePartitions(8))(windowAggQuery(
+      feed(spark, dir, "events", split = true)
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))))
 
   /** Exact-decimal sum (inputs have ≤2 decimals) so the hash compare is
     * stable — mirrored in the oracle. */
@@ -330,24 +359,11 @@ object Streams {
     * so state is evicted instead of unbounded. The surviving hash SET is
     * order-insensitive (unlike keep-first doc ids across racing
     * micro-batches), so the entry is exactly oracle-checkable. */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val stream = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "documents")
-      .option("split", true) // one micro-batch per split, as for D1
-      .load()
-      .select(md5(col("text")).as("h"))
-      .dropDuplicates("h")
-    val sinkName = s"graft_d3_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(8)) {
-      stream
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
-    spark.table(sinkName)
-  }
+  def streamDedup(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Append(), statePartitions(8))(
+      feed(spark, dir, "documents", split = true)
+        .select(md5(col("text")).as("h"))
+        .dropDuplicates("h"))
 
   val streamDedupSql: String = "SELECT DISTINCT md5(text) AS h FROM documents"
 
@@ -372,24 +388,12 @@ object Streams {
     * duplicate ids, and dropDuplicatesWithinWatermark never drops a
     * NON-duplicate however late it arrives — so the surviving id set is
     * exactly the distinct ids, oracle-checkable. */
-  def streamDedupWatermark(spark: SparkSession, dir: String): DataFrame = {
-    val stream = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "events")
-      .option("split", true)
-      .load()
-      .select(col("event_id"), col("ts"))
-    val sinkName = s"graft_d3b_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(8)) {
-      dedupWithinWatermarkQuery(stream, "1 hour")
-        .select(col("event_id"))
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
-    spark.table(sinkName)
-  }
+  def streamDedupWatermark(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Append(), statePartitions(8))(
+      dedupWithinWatermarkQuery(
+        feed(spark, dir, "events", split = true).select(col("event_id"), col("ts")),
+        "1 hour")
+        .select(col("event_id")))
 
   val streamDedupWatermarkSql: String =
     "SELECT DISTINCT event_id FROM events"
@@ -473,15 +477,10 @@ object Streams {
     * MemoryStream in TransformWithStateSpec, the D5 precedent. */
   def streamDedupNeardup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feed = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "documents")
-      .option("split", false)
-      .load()
-    val bands = graft.operators.Dedup.lshBandRows(feed)
+    val bands = graft.operators.Dedup
+      .lshBandRows(feed(spark, dir, "documents", split = false))
       .select(col("band_key"), col("doc_id"))
       .as[BandArrival]
-    val sinkName = s"graft_d3c_${System.nanoTime()}"
     // state partitions: 8 was tuned for the shingle-carrying state
     // (few, heavy RocksDB instances); with 8-byte state the fold is
     // shuffle/parallelism-bound, so it takes the cores-derived width
@@ -492,32 +491,32 @@ object Streams {
     // (the expected input of a dedup gate) makes per-bucket pair
     // emission quadratic, and the memory sink would buffer all of it
     // on the driver. The file sink spills to executor-written parquet;
-    // the verify pass reads it back distributed. Per-invocation tmp
-    // dirs (the zorderWrite precedent).
-    val outDir = java.nio.file.Files
-      .createTempDirectory(sinkName + "_out").toString
-    val ckDir = java.nio.file.Files
-      .createTempDirectory(sinkName + "_ck").toString
-    val q = Loop.withConf(spark, statePartitions(coresWidth(spark)),
-        RocksDbProvider) {
-      bands.groupByKey(_.band_key)
-        .transformWithState(new NearDupProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append())
-        .writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckDir)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
-    // a pair can match in several buckets → distinct, then one
-    // codegen exact-verify + anti-join pass (schema given explicitly:
-    // a candidate-free corpus leaves no data files to infer from)
-    val cand = spark.read.schema("doc_a LONG, doc_b LONG")
-      .parquet(outDir).distinct()
-    graft.operators.Dedup
-      .nearDupKept(graft.Tables(spark, dir, "documents"), cand)
+    // the verify pass reads it back distributed. Both dirs are
+    // per-invocation scratch ([[graft.Scratch]]): the checkpoint goes
+    // once the query stops, the candidates once the kept set is
+    // eagerly checkpointed (the zorderWrite precedent).
+    val out = graft.Scratch.dir("d3c_out")
+    val ck = graft.Scratch.dir("d3c_ck")
+    try {
+      try run(spark, Seq(statePartitions(coresWidth(spark)), RocksDbProvider))(
+        bands.groupByKey(_.band_key)
+          .transformWithState(new NearDupProcessor,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            OutputMode.Append())
+          .writeStream.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ck)
+          .outputMode(OutputMode.Append()))
+      finally graft.Scratch.delete(ck)
+      // a pair can match in several buckets → distinct, then one
+      // codegen exact-verify + anti-join pass (schema given explicitly:
+      // a candidate-free corpus leaves no data files to infer from)
+      val cand = spark.read.schema("doc_a LONG, doc_b LONG")
+        .parquet(out).distinct()
+      graft.operators.Dedup
+        .nearDupKept(graft.Tables(spark, dir, "documents"), cand)
+        .localCheckpoint(true)
+    } finally graft.Scratch.delete(out)
   }
 
   /** Kept = shingled docs that are nobody's LATER near-duplicate: the
@@ -603,23 +602,11 @@ object Streams {
     * sources (multipleWatermarkPolicy default), so neither side racing
     * ahead can evict state the other still needs. */
   def streamJoin(spark: SparkSession, dir: String): DataFrame = {
-    def src = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "events")
-      .option("split", true)
-      .load()
+    def src = feed(spark, dir, "events", split = true)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val views = src.filter(col("event_type") === "view")
-    val clicks = src.filter(col("event_type") === "click")
-    val sinkName = s"graft_d4_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(8)) {
-      attributionJoinQuery(views, clicks)
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
-    spark.table(sinkName)
+    drain(spark, OutputMode.Append(), statePartitions(8))(attributionJoinQuery(
+      src.filter(col("event_type") === "view"),
+      src.filter(col("event_type") === "click")))
   }
 
   val streamJoinSql: String =
@@ -713,23 +700,11 @@ object Streams {
     * the O(1)-state fold cheap. */
   def streamAsofEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stream = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "events")
-      .option("split", false) // ONE micro-batch: in-order full replay
-      .load()
+    val evs = feed(spark, dir, "events", split = false) // ONE micro-batch: in-order full replay
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[Event]
-    val sinkName = s"graft_d6_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(8)) {
-      asofEnrichStreaming(stream)
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
-    spark.table(sinkName)
+    drain(spark, OutputMode.Append(), statePartitions(8))(asofEnrichStreaming(evs))
   }
 
   // ---------------------------------------------------------------- D7
@@ -857,27 +832,16 @@ object Streams {
     * contract is spec-gated on a MemoryStream (the D5/D6 precedent). */
   def streamTopkSketch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feed = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "documents")
-      .option("split", false)
-      .load()
+    val toks = feed(spark, dir, "documents", split = false)
       .select(col("source"), col("text"))
       .as[(String, String)]
       .flatMap { case (src, text) =>
         text.split(" ", -1).iterator.filter(_.nonEmpty).map(Tok(src, _))
       }
-    val sinkName = s"graft_d7_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(coresWidth(spark))) {
-      topkSketchStreaming(feed)
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
     // per-(source, subshard) counters are monotone → max is the final
     // snapshot; subshards then re-merge by per-cell SUM (C30b's law)
-    val sketch = spark.table(sinkName)
+    val sketch = drain(spark, OutputMode.Append(),
+        statePartitions(coresWidth(spark)))(topkSketchStreaming(toks))
       .groupBy(col("source"), col("sub"), col("r"), col("bucket"))
       .agg(max(col("cnt")).as("c"))
       .groupBy(col("source"), col("r"), col("bucket"))
@@ -957,28 +921,17 @@ object Streams {
     * cross-engine. */
   def streamKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feed = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "events")
-      .option("split", false)
-      .load()
+    val users = feed(spark, dir, "events", split = false)
       .select(col("event_type"), col("user_id"))
       .as[(String, Long)]
       .map { case (t, u) => Tok(t, u.toString) }
-    val sinkName = s"graft_d8_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(coresWidth(spark))) {
-      kmvStreaming(feed)
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
     // latest snapshot per key via a window over the (tiny,
     // types×subshards×K-bounded) cell frame — a groupBy+self-join of
     // the memory table trips conflicting-reference resolution
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"), col("sub"))
-    val hs = spark.table(sinkName)
+    val hs = drain(spark, OutputMode.Append(),
+        statePartitions(coresWidth(spark)))(kmvStreaming(users))
       .withColumn("mv", max(col("ver")).over(w))
       .filter(col("ver") === col("mv"))
       .select(col("event_type"), col("h"))
@@ -1102,30 +1055,19 @@ object Streams {
     * MemoryStream in TransformWithStateSpec, the D5 precedent. */
   def streamKmvTtl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feed = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "events")
-      .option("split", false)
-      .load()
+    val in = feed(spark, dir, "events", split = false)
       .select(col("event_type"), col("user_id"),
         col("ts").cast("timestamp").as("ts"))
       .withWatermark("ts", "0 seconds")
       .as[KmvTtlIn]
-    val sinkName = s"graft_d8b_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(coresWidth(spark)),
-        RocksDbProvider) {
-      feed.groupByKey(_.event_type)
-        .transformWithState(new KmvTtlProcessor(TtlGateWindowMs),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"))
-    val hs = spark.table(sinkName)
+    val hs = drain(spark, OutputMode.Append(),
+        statePartitions(coresWidth(spark)), RocksDbProvider)(
+        in.groupByKey(_.event_type)
+          .transformWithState(new KmvTtlProcessor(TtlGateWindowMs),
+            org.apache.spark.sql.streaming.TimeMode.EventTime(),
+            OutputMode.Append()))
       .withColumn("mv", max(col("ver")).over(w))
       .filter(col("ver") === col("mv") && col("h") >= 0)
       .select(col("event_type"), col("h"))
@@ -1252,32 +1194,21 @@ object Streams {
     import spark.implicits._
     val d = graft.operators.Sketch.CmsDepth
     val w = graft.operators.Sketch.CmsWidth
-    val feed = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "events")
-      .option("split", false)
-      .load()
+    val in = feed(spark, dir, "events", split = false)
       .select(col("event_type").as("g"),
         col("user_id").cast("string").as("item"),
         lit(0L).as("v"),
         col("ts").cast("timestamp").as("ts"))
       .withWatermark("ts", "0 seconds")
       .as[SketchTtlIn]
-    val sinkName = s"graft_d7b_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(coresWidth(spark)),
-        RocksDbProvider) {
-      feed.groupByKey(_.g)
-        .transformWithState(
-          new CellTtlProcessor(d * w, TtlGateWindowMs, cmsCellsOf),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
     val win = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
-    val sketch = spark.table(sinkName)
+    val sketch = drain(spark, OutputMode.Append(),
+        statePartitions(coresWidth(spark)), RocksDbProvider)(
+        in.groupByKey(_.g)
+          .transformWithState(
+            new CellTtlProcessor(d * w, TtlGateWindowMs, cmsCellsOf),
+            org.apache.spark.sql.streaming.TimeMode.EventTime(),
+            OutputMode.Append()))
       .withColumn("mv", max(col("ver")).over(win))
       .filter(col("ver") === col("mv") && col("idx") >= 0)
       .select(col("g").as("event_type"),
@@ -1324,11 +1255,7 @@ object Streams {
     * quantileOrderValuesSql VERBATIM. */
   def streamQuantileTtl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feed = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "orders")
-      .option("split", false)
-      .load()
+    val in = feed(spark, dir, "orders", split = false)
       .select(col("o_orderpriority").as("g"),
         lit("").as("item"),
         (col("o_totalprice").cast("decimal(18,2)") * 100)
@@ -1336,21 +1263,14 @@ object Streams {
         col("o_orderdate").cast("timestamp").as("ts"))
       .withWatermark("ts", "0 seconds")
       .as[SketchTtlIn]
-    val sinkName = s"graft_d9b_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(coresWidth(spark)),
-        RocksDbProvider) {
-      feed.groupByKey(_.g)
-        .transformWithState(
-          new CellTtlProcessor(64, TtlGateWindowMs, histCellsOf),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
     val win = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
-    val sketch = spark.table(sinkName)
+    val sketch = drain(spark, OutputMode.Append(),
+        statePartitions(coresWidth(spark)), RocksDbProvider)(
+        in.groupByKey(_.g)
+          .transformWithState(
+            new CellTtlProcessor(64, TtlGateWindowMs, histCellsOf),
+            org.apache.spark.sql.streaming.TimeMode.EventTime(),
+            OutputMode.Append()))
       .withColumn("mv", max(col("ver")).over(win))
       .filter(col("ver") === col("mv") && col("idx") >= 0)
       .select(col("g").as("o_orderpriority"),
@@ -1419,25 +1339,14 @@ object Streams {
     * is quantileOrderValuesSql VERBATIM. */
   def streamQuantileSketch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feed = spark.readStream.format("graft-arrow")
-      .option("dir", dir)
-      .option("table", "orders")
-      .option("split", false)
-      .load()
+    val toks = feed(spark, dir, "orders", split = false)
       .select(col("o_orderpriority"),
         (col("o_totalprice").cast("decimal(18,2)") * 100)
           .cast("long").as("cents"))
       .as[(String, Long)]
       .map { case (g, v) => Tok(g, logBucketLocal(v).toString) }
-    val sinkName = s"graft_d9_${System.nanoTime()}"
-    val q = Loop.withConf(spark, statePartitions(coresWidth(spark))) {
-      quantileSketchStreaming(feed)
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try { q.processAllAvailable() } finally { q.stop() }
-    val sketch = spark.table(sinkName)
+    val sketch = drain(spark, OutputMode.Append(),
+        statePartitions(coresWidth(spark)))(quantileSketchStreaming(toks))
       .groupBy(col("g"), col("sub"), col("bucket"))
       .agg(max(col("cnt")).as("c"))
       .groupBy(col("g").as("o_orderpriority"), col("bucket"))

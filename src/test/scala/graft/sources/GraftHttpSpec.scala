@@ -260,6 +260,71 @@ class GraftHttpSpec extends SparkSpec {
       expected.agg(sum(col("l_quantity"))).head.getDouble(0))
   }
 
+  test("a planned sql := split scan takes its schema from the split's file, never re-materializing") {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    def get(path: String): HttpURLConnection = {
+      val conn = new URI(s"$url$path").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestProperty("Authorization", s"Bearer $token")
+      conn
+    }
+    val q = "SELECT l_orderkey, l_returnflag, l_quantity FROM lineitem WHERE l_quantity < 10"
+    val sqlParam = s"q=&sql=${GraftHttpProtocol.enc(q)}"
+    val expected = plain("lineitem").filter(col("l_quantity") < 10)
+      .select("l_orderkey", "l_returnflag", "l_quantity")
+    // the schema a split request projected before: the materialized table's
+    val tableSchema = new SqlEndpoint(dir, q).schema(null)
+    assert(tableSchema.fieldNames.toSeq === Seq("l_orderkey", "l_returnflag", "l_quantity"))
+    val planConn = get(s"/v1/plan?$sqlParam")
+    assert(planConn.getResponseCode === 200)
+    val plan = om.readTree(new String(planConn.getInputStream.readAllBytes(), "UTF-8"))
+    planConn.disconnect()
+    assert(plan.size() >= 1)
+    val files = (0 until plan.size()).map(i =>
+      GraftHttpProtocol.enc(plan.get(i).get("split").get("file").asText()))
+
+    def scan(extra: String): (org.apache.spark.sql.types.StructType, Seq[Seq[Any]]) = {
+      val parts = files.map { f =>
+        val conn = get(s"/v1/query?$sqlParam&file=$f&start=0&end=${Long.MaxValue}$extra")
+        assert(conn.getResponseCode === 200)
+        val ch = java.nio.channels.Channels.newChannel(conn.getInputStream)
+        val schema = ArrowBridge.readStreamSchema(ch)
+        val rows = ArrowBridge.fromIpc(ArrowBridge.batchesFromStream(ch), schema)
+          .map(_.toSeq(schema).map {
+            case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+            case v => v
+          }).toVector
+        conn.disconnect()
+        (schema, rows)
+      }
+      (parts.head._1, parts.flatMap(_._2))
+    }
+    def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
+    val before = SqlEndpoint.materializations
+
+    val (all, allRows) = scan("")
+    assert(all === tableSchema)
+    assert(sorted(allRows) === sorted(expected.collect().map(_.toSeq).toSeq))
+
+    val (proj, projRows) = scan("&cols=l_quantity,l_orderkey")
+    assert(proj.fieldNames.toSeq === Seq("l_quantity", "l_orderkey"))
+    assert(proj.fields.toSeq ===
+      Seq(tableSchema("l_quantity"), tableSchema("l_orderkey")))
+    assert(sorted(projRows) === sorted(
+      expected.select("l_quantity", "l_orderkey").collect().map(_.toSeq).toSeq))
+
+    val agg = GraftHttpProtocol.enc(
+      """{"calls":[{"op":"count_star","col":""},{"op":"sum","col":"l_quantity"}]}""")
+    val (aschema, arows) = scan(s"&agg=$agg")
+    assert(aschema.fieldNames.toSeq === Seq("count_star_0", "sum_1"))
+    assert(arows.map(_.head.asInstanceOf[Long]).sum === expected.count())
+    assert(arows.map(_(1).asInstanceOf[Double]).sum ===
+      expected.agg(sum(col("l_quantity"))).head.getDouble(0))
+
+    assert(SqlEndpoint.materializations === before,
+      "a split request must not re-materialize the sql := result")
+  }
+
   test("unparseable where text and agg JSON are a 400, never a partial scan") {
     def code(path: String): Int = {
       val conn = new URI(s"$url$path").toURL

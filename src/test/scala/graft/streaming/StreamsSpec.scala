@@ -594,4 +594,57 @@ class StreamsSpec extends SparkSpec {
     }
     assert(Streams.localCombine(Iterator.empty, 4).isEmpty)
   }
+
+  private def graftViews: Set[String] =
+    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_")).toSet
+
+  private def graftScratch: Set[String] =
+    Option(new java.io.File(sys.props("java.io.tmpdir")).list())
+      .getOrElse(Array.empty[String]).filter(_.startsWith("graft_")).toSet
+
+  test("every stream gate releases its sink: no temp view, no live query, no scratch dir") {
+    val gates = Streams.queries.toSeq.filter(_._1 != "stream_sessionize").sortBy(_._1)
+    assert(gates.size === 12)
+    gates.foreach { case (name, gate) =>
+      val (views0, dirs0) = (graftViews, graftScratch)
+      val df = gate(spark, dir)
+      assert(graftViews -- views0 === Set.empty, s"$name left its sink view")
+      assert(spark.streams.active.isEmpty, s"$name left a query running")
+      assert(graftScratch -- dirs0 === Set.empty, s"$name left scratch dirs")
+      // the caller owns the rows: the frame reads them after the release
+      val n = df.count()
+      assert(df.count() === n, s"$name's frame changed between reads")
+    }
+  }
+
+  test("drain rethrows a failing query's error, having stopped it and dropped its view") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.id): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val input = MemoryStream[Long]
+    input.addData(1L, 2L, 3L)
+    val boom = udf((x: Long) =>
+      if (x == 2L) throw new IllegalStateException("drain-probe failure") else x)
+    val views0 = graftViews
+    spark.streams.addListener(listener)
+    try {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        Streams.drain(spark, OutputMode.Append())(input.toDF().select(boom(col("value"))))
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("drain-probe failure")))
+    } finally spark.streams.removeListener(listener)
+    // onQueryStarted is delivered synchronously by start()
+    assert(started.size === 1)
+    assert(spark.streams.get(started.peek()) === null, "the failed query is still registered")
+    assert(spark.streams.active.isEmpty)
+    assert(graftViews === views0, "the failed query's sink view was not dropped")
+  }
 }
