@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.Locale
 
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -20,6 +21,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 trait Endpoint extends Serializable {
   /** Table schema, as Spark types. */
   def schema(table: String): StructType
+
+  /** For each of `filters` on `table`, whether this endpoint applies it
+    * exactly: its scans emit a row exactly when Spark's own evaluation
+    * of the filter is true, so Spark need not evaluate it again.
+    * Answered from metadata, once per scan build, never per split. A
+    * scan that marks a filter exact ([[QuerySpec.exact]]) is refused
+    * when the endpoint cannot apply it exactly. */
+  def exactFilters(table: String, filters: Array[Filter]): Array[Boolean]
 
   /** Plan the scan: one [[SplitInfo]] per parallel unit, row-group
     * aligned, each targeting ≤ splitSizeBytes of on-disk data (the
@@ -56,6 +65,9 @@ class AuthEndpoint(inner: Endpoint, secret: String,
         "graft-arrow: missing, invalid, or expired auth token"))
 
   override def schema(table: String): StructType = { check(); inner.schema(table) }
+  override def exactFilters(table: String, filters: Array[Filter]): Array[Boolean] = {
+    check(); inner.exactFilters(table, filters)
+  }
   override def plan(table: String, query: QuerySpec, splitSizeBytes: Long): Seq[SplitInfo] = {
     check(); inner.plan(table, query, splitSizeBytes)
   }
@@ -84,9 +96,12 @@ object IpcStream {
 
 /** What the scan asks of the endpoint: projected columns + filters, both
   * structurally (for execution) and as ANSI SQL (the wire protocol the
-  * reference sends to the server — surfaced by `dd_splits`). */
+  * reference sends to the server — surfaced by `dd_splits`). `exact` are
+  * those of `filters` the client left out of its own plan because the
+  * endpoint reported them exact ([[Endpoint.exactFilters]]): the
+  * endpoint applies them exactly or refuses the scan. */
 case class QuerySpec(table: String, requiredColumns: Array[String],
-                     filters: Array[Filter]) {
+                     filters: Array[Filter], exact: Array[Filter] = Array.empty) {
   /** The SQL the reference would send over the wire. */
   def toSql: String = {
     val cols = if (requiredColumns.isEmpty) "*" else requiredColumns.mkString(", ")
@@ -503,7 +518,11 @@ object FilterSql {
     case null => "NULL"
     case s: String => "'" + s.replace("'", "''") + "'"
     case s: org.apache.spark.unsafe.types.UTF8String => lit(s.toString)
-    case t: java.sql.Timestamp => s"TIMESTAMP '${t.toString.stripSuffix(".0")}'"
+    // the instant a Timestamp denotes, printed at UTC like an Instant:
+    // the server reads a TIMESTAMP literal at UTC, and the Timestamp's
+    // own toString prints it in the JVM's default zone
+    case t: java.sql.Timestamp =>
+      lit(DateTimeUtils.microsToInstant(DateTimeUtils.fromJavaTimestamp(t)))
     case d: java.sql.Date => s"DATE '$d'"
     case i: java.time.Instant => s"TIMESTAMP '${i.toString.replace("T", " ").stripSuffix("Z")}'"
     case ld: java.time.LocalDate => s"DATE '$ld'"

@@ -37,8 +37,10 @@ import scala.jdk.CollectionConverters._
   * split (row-group aligned byte ranges), so a 1000-executor cluster
   * scans 1000 splits concurrently and each split decodes only the
   * projected columns of its own byte range. Projection and filters are
-  * pushed through the endpoint to the parquet layer; aggregation
-  * pushdown ships one partial row per split — or per (split, group)
+  * pushed through the endpoint to the parquet layer, and filters the
+  * endpoint applies exactly leave Spark's plan; aggregation pushdown —
+  * also under such filters, the reference's AGG → FILTER → scan
+  * rewrite — ships one partial row per split — or per (split, group)
   * for plain-column GROUP BY (r8, exceeding the reference's
   * local-fallback contract; SURVEY §2/A4) — instead of the data
   * (COUNT-DISTINCT and expression group keys are NOT pushed — the
@@ -146,6 +148,7 @@ class GraftArrowScanBuilder(endpoint: Endpoint, table: String,
 
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
+  private var exact: Array[Filter] = Array.empty
   private var aggSpec: Option[AggSpec] = None
   private var aggSchema: Option[StructType] = None
 
@@ -153,14 +156,20 @@ class GraftArrowScanBuilder(endpoint: Endpoint, table: String,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  // A3: filter pushdown. We accept every filter the SQL serializer can
-  // express (that's what goes over the wire / prunes row groups) but
-  // return them all for Spark re-evaluation — the endpoint's record
-  // filter covers the translated subset only, so correctness never
-  // depends on pushdown (same safety net as Spark's parquet source).
+  // A3: filter pushdown. Every filter the SQL serializer can express
+  // goes to the endpoint (over the wire, pruning row groups, checked
+  // per row). The endpoint says, from the table's footer and once per
+  // scan build, which of them it applies exactly — as Spark would
+  // evaluate them on every value; only the others come back for Spark
+  // to evaluate again. A scan carrying an exact filter the endpoint
+  // cannot apply exactly is refused, never under- or over-filtered.
+  // With no filter left to Spark, a filtered aggregate can push.
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(f => FilterSql.toSql(f).isDefined)
-    filters
+    exact =
+      if (pushed.isEmpty) Array.empty
+      else pushed.zip(endpoint.exactFilters(table, pushed)).collect { case (f, true) => f }
+    filters.filterNot(exact.contains)
   }
   override def pushedFilters(): Array[Filter] = pushed
 
@@ -233,7 +242,8 @@ class GraftArrowScanBuilder(endpoint: Endpoint, table: String,
   }
 
   override def build(): Scan =
-    new GraftArrowScan(endpoint, table, required, pushed, aggSpec, aggSchema,
+    new GraftArrowScan(endpoint, table, required,
+      QuerySpec(table, required.fieldNames, pushed, exact), aggSpec, aggSchema,
       splitSize, splitDefaulted)
 }
 
@@ -257,17 +267,15 @@ object GraftArrowScan {
 }
 
 class GraftArrowScan(endpoint: Endpoint, table: String, required: StructType,
-                     filters: Array[Filter], aggSpec: Option[AggSpec],
+                     query: QuerySpec, aggSpec: Option[AggSpec],
                      aggSchema: Option[StructType], splitSize: Long,
                      splitDefaulted: Boolean = false)
     extends Scan with Batch {
 
-  private val query = QuerySpec(table, required.fieldNames, filters)
-
   override def readSchema(): StructType = aggSchema.getOrElse(required)
   override def toBatch: Batch = this
   override def description(): String = {
-    val aggDesc = aggSpec.map(a => s", PushedAggregates: ${a.toSql(table, filters)}").getOrElse("")
+    val aggDesc = aggSpec.map(a => s", PushedAggregates: ${a.toSql(table, query.filters)}").getOrElse("")
     s"graft-arrow ${query.toSql}$aggDesc"
   }
 

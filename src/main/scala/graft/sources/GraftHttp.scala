@@ -42,15 +42,17 @@ import graft.functions.{GraftAuth, Jwt}
   * exposes and a real server parses with its SQL engine). A free-form
   * `q` alone IS executed (via [[SqlEndpoint]] — the server's engine).
   * For exact split scans the client sends the parsed form alongside
-  * (`file`/`start`/`end`/`rgs`/`cols`/`where`/`agg` parameters) —
-  * ENGINE-NEUTRAL text since r14: `where` is the filters serialized
-  * back to SQL (the reference's own FilterToSQL encoding,
+  * (`file`/`start`/`end`/`rgs`/`cols`/`where`/`exact`/`agg`
+  * parameters) — ENGINE-NEUTRAL text since r14: `where` is the filters
+  * serialized back to SQL (the reference's own FilterToSQL encoding,
   * read_arrow_dd.cpp:198-295, parsed server-side by
-  * [[FilterSql.parseWhere]]) and `agg` is a small JSON spec
-  * ([[AggSpec.toJson]]). Any HTTP client in any language can drive
-  * the split-scan route by hand (GraftHttpSpec proves it with a
-  * string-concatenated URL), and the server holds no
-  * ObjectInputStream deserialization surface.
+  * [[FilterSql.parseWhere]]), `exact` the same for the filters the
+  * client dropped from its plan because `GET /v1/exact` reported them
+  * exact (a split scan the server cannot apply them to exactly is a
+  * 400), and `agg` is a small JSON spec ([[AggSpec.toJson]]). Any
+  * HTTP client in any language can drive the split-scan route by hand
+  * (GraftHttpSpec proves it with a string-concatenated URL), and the
+  * server holds no ObjectInputStream deserialization surface.
   */
 object GraftHttpProtocol {
   val ArrowContentType = "application/vnd.apache.arrow.stream"
@@ -224,6 +226,7 @@ class GraftHttpServer(dir: String,
     s.createContext("/v1/login", handler(login))
     s.createContext("/v1/query", handler(authed(query)))
     s.createContext("/v1/plan", handler(authed(plan)))
+    s.createContext("/v1/exact", handler(authed(exact)))
     s.createContext("/v1/cancel", handler(authed(cancel)))
     server = s
     // the HTTP-Dispatcher thread inherits daemon status from its
@@ -346,18 +349,49 @@ class GraftHttpServer(dir: String,
       case None => (inner, p.getOrElse("table", ""))
     }
 
-  /** The r14 engine-neutral filter wire form: `where=<SQL conjunction>`
+  /** The r14 engine-neutral filter wire form: `<param>=<SQL conjunction>`
     * parsed STRICTLY — unparseable text is a 400, never a partial
     * predicate (a dropped conjunct under an aggregate pushdown would
     * be a silently wrong answer). */
-  private def parsedFilters(p: Map[String, String]): Array[Filter] =
-    p.get("where").filter(_.nonEmpty) match {
+  private def parsedFilters(p: Map[String, String], param: String): Array[Filter] =
+    p.get(param).filter(_.nonEmpty) match {
       case None => Array.empty[Filter]
       case Some(text) => FilterSql.parseWhere(text).getOrElse(
-        throw new BadRequest(s"graft-http: unparseable where clause: $text"))
+        throw new BadRequest(s"graft-http: unparseable $param clause: $text"))
     }
 
-  /** GET /v1/plan?q=<sql>&split_size=N&table=…|sql=…&cols=…&where=… →
+  /** The query a split or plan request describes: `where` and `exact`
+    * filters both apply, and the `exact` ones must apply exactly. */
+  private def querySpec(p: Map[String, String], table: String): QuerySpec = {
+    val cols = p.get("cols").filter(_.nonEmpty)
+      .map(_.split(',').toArray[String]).getOrElse(Array.empty[String])
+    val exact = parsedFilters(p, "exact")
+    QuerySpec(table, cols, parsedFilters(p, "where") ++ exact, exact)
+  }
+
+  /** GET /v1/exact?table=…|sql=…&filters=<JSON array of SQL conditions>
+    * → `{"exact":[…]}`: per condition, whether this server applies it
+    * exactly ([[Endpoint.exactFilters]]). A client asks once per scan
+    * build and drops the exact ones from its own plan. */
+  private def exact(ex: HttpExchange): Unit = {
+    val p = params(ex.getRequestURI.getRawQuery)
+    val (ep, table) = endpointFor(p)
+    val texts = p.get("filters").map { j =>
+      val node = try Json.readTree(j) catch {
+        case _: Exception => throw new BadRequest(s"graft-http: unparseable filters: $j")
+      }
+      if (node == null || !node.isArray)
+        throw new BadRequest(s"graft-http: filters must be an array: $j")
+      (0 until node.size()).map(i => Option(node.get(i)).filter(_.isTextual).map(_.asText())
+        .getOrElse(throw new BadRequest(s"graft-http: filters must be SQL strings: $j")))
+    }.getOrElse(Nil)
+    val filters = texts.map(t => FilterSql.parse(t).getOrElse(
+      throw new BadRequest(s"graft-http: unparseable filter: $t"))).toArray
+    respond(ex, 200, ep.exactFilters(table, filters).mkString("""{"exact":[""", ",", "]}"),
+      "application/json")
+  }
+
+  /** GET /v1/plan?q=<sql>&split_size=N&table=…|sql=…&cols=…&where=…&exact=… →
     * the reference's JSON plan shape: per split an `endpoints` array
     * (this server first, then its peers — the failover order) plus a
     * `descriptor.statement_handle` (split_info.cpp:44-81) carrying the
@@ -366,12 +400,9 @@ class GraftHttpServer(dir: String,
   private def plan(ex: HttpExchange): Unit = {
     val p = params(ex.getRequestURI.getRawQuery)
     val (ep, table) = endpointFor(p)
-    val cols = p.get("cols").filter(_.nonEmpty)
-      .map(_.split(',').toArray[String]).getOrElse(Array.empty[String])
-    val filters = parsedFilters(p)
     val splitSize = p.get("split_size").flatMap(_.toLongOption)
       .getOrElse(128L * 1024 * 1024)
-    val splits = ep.plan(table, QuerySpec(table, cols, filters), splitSize)
+    val splits = ep.plan(table, querySpec(p, table), splitSize)
     val nonce = nonces.incrementAndGet()
     val endpoints = (url +: peers).map(jsonStr).mkString("[", ",", "]")
     val json = splits.map { s =>
@@ -447,10 +478,8 @@ class GraftHttpServer(dir: String,
         // the split's own footer has the table's schema: no table
         // resolution (for `sql :=`, no re-materialization) per split
         val fullSchema = LocalParquetEndpoint.fileSchema(file)
-        val cols = p.get("cols").filter(_.nonEmpty)
-          .map(_.split(',').toArray[String]).getOrElse(Array.empty[String])
-        val filters = parsedFilters(p)
-        val spec = QuerySpec(table, cols, filters)
+        val spec = querySpec(p, table)
+        val cols = spec.requiredColumns
         val projected =
           if (cols.isEmpty) fullSchema
           else StructType(cols.map(c => fullSchema(fullSchema.fieldIndex(c))))
@@ -568,10 +597,27 @@ class HttpEndpoint(baseUrl: String, token: Option[String],
       sb ++= s"&cols=${enc(query.requiredColumns.mkString(","))}"
     // filters go over the wire as the SQL text the reference's
     // FilterToSQL produces (read_arrow_dd.cpp:198-295), parsed back by
-    // FilterSql.parseWhere on the server — engine-neutral since r14
-    FilterSql.toConjunction(query.filters)
+    // FilterSql.parseWhere on the server — engine-neutral since r14;
+    // those the client relies on the server to apply exactly go apart
+    FilterSql.toConjunction(query.filters.filterNot(query.exact.contains))
       .foreach(w => sb ++= s"&where=${enc(w)}")
+    FilterSql.toConjunction(query.exact).foreach(w => sb ++= s"&exact=${enc(w)}")
     sb.toString()
+  }
+
+  override def exactFilters(table: String, filters: Array[Filter]): Array[Boolean] = {
+    val texts = filters.map(f => FilterSql.toSql(f).getOrElse(
+      throw new IllegalArgumentException(s"graft-http: filter has no SQL form: $f")))
+    val target = sql.map(s => s"sql=${enc(s)}").getOrElse(s"table=${enc(table)}")
+    val conn = checked(open(
+      s"/v1/exact?$target&filters=${enc(texts.map(jsonStr).mkString("[", ",", "]"))}",
+      "application/json"))
+    val body = try new String(conn.getInputStream.readAllBytes(), UTF_8)
+      finally conn.disconnect()
+    val answer = Json.readTree(body).get("exact")
+    require(answer != null && answer.size() == filters.length,
+      s"graft-http: /v1/exact answered $body for ${filters.length} filters")
+    Array.tabulate(filters.length)(i => answer.get(i).asBoolean())
   }
 
   override def schema(table: String): StructType = {

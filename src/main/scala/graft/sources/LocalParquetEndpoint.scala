@@ -15,6 +15,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnot
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.graft.ArrowBridge
@@ -36,14 +37,16 @@ import scala.jdk.CollectionConverters._
   * Spark's vectorized parquet reader, the projection becomes its
   * requested schema (unread columns are never decoded), filters become
   * parquet FilterPredicates (row groups are skipped on statistics, rows
-  * checked per decoded batch), and splits are row-group byte ranges so N
-  * splits decode disjoint data — the same parallel-split contract as the
-  * reference's `/plan` API (split_info.cpp). A killed task stops at the
-  * next reader batch of [[LocalParquetEndpoint.CancelCheckRows]] rows.
+  * checked per decoded batch; [[exactFilters]] reports which of them
+  * Spark need not evaluate again), and splits are row-group byte
+  * ranges so N splits decode disjoint data — the same parallel-split
+  * contract as the reference's `/plan` API (split_info.cpp). A killed
+  * task stops at the next reader batch of
+  * [[LocalParquetEndpoint.CancelCheckRows]] rows.
   */
 class LocalParquetEndpoint(dir: String) extends Endpoint {
 
-  import LocalParquetEndpoint.{CancelCheckRows, SplitFile, hadoopConf, splitFile}
+  import LocalParquetEndpoint.{CancelCheckRows, SplitFile, decoded, hadoopConf, splitFile}
 
   private def tablePath(table: String) = new Path(s"$dir/$table.parquet")
 
@@ -76,6 +79,12 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
 
   override def schema(table: String): StructType =
     ArrowBridge.parquetToSparkSchema(tableSchema(table), hadoopConf)
+
+  /** From the table's cached footer: part files share its schema. */
+  override def exactFilters(table: String, filters: Array[Filter]): Array[Boolean] = {
+    val fs = tableSchema(table)
+    filters.map(ParquetFilters.exact(_, fs))
+  }
 
   // ------------------------------------------------------------- plan
   override def plan(table: String, query: QuerySpec,
@@ -121,18 +130,33 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
 
   // ------------------------------------------------------------- scan
   override def scan(split: SplitInfo, query: QuerySpec): IpcStream = {
-    val (rows, sparkSchema, close) = readRows(split, splitFile(split.endpoint), query)
+    val file = splitFile(split.endpoint)
+    requireExact(query, file)
+    val (rows, sparkSchema, close) = readRows(split, file, query)
     IpcStream(ArrowBridge.toIpc(rows, sparkSchema), close)
+  }
+
+  /** A filter the client dropped from its plan as exact must be exact
+    * on this split's file too, or the scan would emit rows the client
+    * no longer filters out: refused loudly instead. */
+  private def requireExact(query: QuerySpec, file: SplitFile): Unit = {
+    val fsch = file.footer.getFileMetaData.getSchema
+    val inexact = query.exact.filterNot(ParquetFilters.exact(_, fsch))
+    if (inexact.nonEmpty) throw new UnsupportedOperationException(
+      "graft-arrow: cannot apply filters marked exact exactly: " +
+        inexact.map(f => FilterSql.toSql(f).getOrElse(f.toString)).mkString(", "))
   }
 
   override def scanAgg(split: SplitInfo, query: QuerySpec,
                        agg: AggSpec): IpcStream = {
-    // STRICT filtering contract (r14): a raw scan may under-filter (the
-    // client re-evaluates residuals — the DSv2 contract), but a partial
-    // AGGREGATE over under-filtered rows is silently wrong, so every
-    // filter must translate to an exact parquet predicate here
-    // or the request is refused loudly.
+    // STRICT filtering contract (r14): a raw scan may return rows a
+    // filter not marked exact rejects (the client re-evaluates those —
+    // the DSv2 contract), but a partial AGGREGATE over such rows is
+    // silently wrong, so every filter must translate to a parquet
+    // predicate the endpoint applies here, or the request is refused
+    // loudly.
     val file = splitFile(split.endpoint)
+    requireExact(query, file)
     val fsch = file.footer.getFileMetaData.getSchema
     val unapplied = query.filters.filterNot(ParquetFilters.translatable(_, fsch))
     if (unapplied.nonEmpty) throw new UnsupportedOperationException(
@@ -179,13 +203,14 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     * exhaustion also triggers it).
     *
     * The translated filter goes to the reader, which skips row groups on
-    * their statistics and dictionaries, and is then checked on every
-    * decoded row with the record filter's semantics
-    * ([[ParquetFilters.rowCheck]]).
+    * their statistics (and on their dictionaries, when the filter has an
+    * equality or IN leaf — [[ParquetFilters.usesDictionary]]), and is
+    * then checked on every decoded row ([[ParquetFilters.rowCheck]]).
     *
     * Filters may reference columns OUTSIDE the projection (the DSv2
-    * client always projects filter columns for re-evaluation, but a
-    * hand-built HTTP client need not): those columns are appended to the
+    * client projects only the columns of filters it evaluates again,
+    * not those of exact ones, and a hand-built HTTP client need not
+    * project any): those columns are appended to the
     * read schema past the emitted ordinals, so the row check sees them,
     * and are never emitted (r14).
     *
@@ -227,8 +252,8 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
       case (f, true) => f.copy(dataType = LongType)
       case (f, false) => f
     })
-    val conf = readerConf(requested)
     val predicate = ParquetFilters.translate(query.filters, fs)
+    val conf = readerConf(requested, predicate.exists(ParquetFilters.usesDictionary))
     predicate.foreach(ParquetInputFormat.setFilterPredicate(conf, _))
     val reader = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, CancelCheckRows)
@@ -280,6 +305,7 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
         }
         if (reader.nextBatch()) {
           numRows = batch.numRows()
+          decoded.add(numRows)
           rowId = 0
           var c = 0
           while (c < nOut) {
@@ -323,8 +349,9 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     * requested schema, and the schema-conversion flags of the session
     * [[ArrowBridge.parquetToSparkSchema]] reads, except that
     * TIMESTAMP(NANOS) converts to a long. Names match exactly — they
-    * come from the file schema itself. */
-  private def readerConf(requested: StructType): Configuration = {
+    * come from the file schema itself. Parquet's dictionary row-group
+    * filter runs only when `dictionary` is set. */
+  private def readerConf(requested: StructType, dictionary: Boolean): Configuration = {
     val sql = SQLConf.get
     val conf = new Configuration(hadoopConf)
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
@@ -335,6 +362,7 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
       sql.parquetInferTimestampNTZEnabled)
     conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, true)
+    conf.setBoolean(ParquetInputFormat.DICTIONARY_FILTERING_ENABLED, dictionary)
     conf
   }
 }
@@ -345,6 +373,12 @@ object LocalParquetEndpoint {
   val CancelCheckRows = 1024
 
   private final case class SplitFile(status: FileStatus, footer: ParquetMetadata)
+
+  private val decoded = new java.util.concurrent.atomic.LongAdder
+
+  /** Rows the split readers of this JVM decoded so far, before the row
+    * check (a test observable: row groups pruned are never decoded). */
+  private[sources] def rowsDecoded: Long = decoded.sum()
 
   /** The part file a split locator names (splits never span files):
     * its status and whole footer, resolved once per request. */
@@ -428,9 +462,13 @@ private[sources] object FooterCache {
 }
 
 /** Spark [[Filter]] → parquet [[FilterPredicate]]. Conservative: only
-  * types with unambiguous value mapping are translated (int32/int64/
-  * float/double/string/timestamp); everything else stays a Spark-side
-  * filter. Record-level semantics of the translated subset are exact.
+  * types with an unambiguous value mapping are translated (signed
+  * int32/int64, date, float/double, string, int64 timestamps), plus
+  * null tests on any primitive column; everything else stays a
+  * Spark-side filter. A translated filter prunes row groups on their
+  * statistics and is checked on every decoded row ([[rowCheck]]);
+  * [[exact]] says which translated filters that check applies exactly
+  * as Spark evaluates them.
   *
   * Timestamps matter most at scale: time ranges are the dominant
   * pruning predicate of a 100 TB log/fact table, and translating them
@@ -438,20 +476,69 @@ private[sources] object FooterCache {
   * shipping every row for Spark to re-filter. Values are rescaled to
   * the column's physical unit (nanos/micros/millis). */
 object ParquetFilters {
-  def translate(filters: Array[Filter], schema: MessageType): Option[FilterPredicate] = {
-    val ps = filters.flatMap(one(_, schema))
-    ps.reduceOption(FilterApi.and)
-  }
+  def translate(filters: Array[Filter], schema: MessageType): Option[FilterPredicate] =
+    filters.flatMap(one(_, schema)).reduceOption(FilterApi.and)
 
   def translatable(f: Filter, schema: MessageType): Boolean = one(f, schema).isDefined
 
-  /** A translated predicate as a check on row `i` of a decoded batch,
-    * with the semantics of parquet's record-level filter: each leaf
-    * compares the value in the column's physical type and unit with the
-    * column's own comparator, a null never matches, AND/OR combine.
-    * `ordinal` maps a column name to its position in `batch`; MILLIS
-    * timestamps decode to micros and compare back in millis (exact), a
-    * BINARY column orders by unsigned bytes — UTF8String's order. */
+  /** Whether the endpoint applies `f` exactly: it translates, and each
+    * leaf keeps a row exactly when Spark's evaluation of it is true.
+    * Exact leaves: null tests, and comparisons on signed ints, dates,
+    * strings and MICROS or MILLIS timestamps (a MILLIS literal that does
+    * not convert exactly declines translation). Not exact: FLOAT/DOUBLE
+    * leaves, whose row groups parquet prunes on statistics that order
+    * −0.0 before 0.0, and TIMESTAMP(NANOS) leaves, compared in raw nanos
+    * but emitted as truncated micros. `And`/`Or`/`In` are exact when
+    * their leaves are. */
+  def exact(f: Filter, schema: MessageType): Boolean =
+    one(f, schema).exists(exactLeaves(_, schema))
+
+  private def exactLeaves(p: FilterPredicate, schema: MessageType): Boolean = p match {
+    case a: Operators.And => exactLeaves(a.getLeft, schema) && exactLeaves(a.getRight, schema)
+    case o: Operators.Or => exactLeaves(o.getLeft, schema) && exactLeaves(o.getRight, schema)
+    case e: Operators.Eq[_] if e.getValue == null => true
+    case e: Operators.NotEq[_] if e.getValue == null => true
+    case e: Operators.Eq[_] => exactColumn(schema, e.getColumn)
+    case e: Operators.Lt[_] => exactColumn(schema, e.getColumn)
+    case e: Operators.LtEq[_] => exactColumn(schema, e.getColumn)
+    case e: Operators.Gt[_] => exactColumn(schema, e.getColumn)
+    case e: Operators.GtEq[_] => exactColumn(schema, e.getColumn)
+    case s: Operators.In[_] => exactColumn(schema, s.getColumn)
+    case _ => false
+  }
+
+  private def exactColumn(schema: MessageType, c: Operators.Column[_]): Boolean = {
+    val pt = physical(schema, c)
+    pt.getPrimitiveTypeName match {
+      case FLOAT | DOUBLE => false
+      case _ => !unit(pt).contains(LogicalTypeAnnotation.TimeUnit.NANOS)
+    }
+  }
+
+  /** Whether `p` has an equality or IN leaf on a value: the leaves
+    * parquet's dictionary row-group filter drops groups for that the
+    * statistics keep (a value inside a group's min/max but absent from
+    * its dictionary). For range leaves the statistics decide the same,
+    * and the dictionary filter would read and hash every group's
+    * dictionary for nothing. */
+  def usesDictionary(p: FilterPredicate): Boolean = p match {
+    case a: Operators.And => usesDictionary(a.getLeft) || usesDictionary(a.getRight)
+    case o: Operators.Or => usesDictionary(o.getLeft) || usesDictionary(o.getRight)
+    case e: Operators.Eq[_] => e.getValue != null
+    case _: Operators.In[_] => true
+    case _ => false
+  }
+
+  /** A translated predicate as a check on row `i` of a decoded batch:
+    * a null never matches a comparison, AND/OR combine, null tests read
+    * the null mask. Each comparison is Spark's on the column's values:
+    * ints, dates and timestamps compare in the column's physical type
+    * and unit (MILLIS timestamps decode to micros and compare back in
+    * millis, exact), a BINARY column orders by unsigned bytes —
+    * UTF8String's order — and FLOAT/DOUBLE values compare as Spark
+    * compares them, −0.0 equal to 0.0 and NaN equal to NaN and above
+    * every other value. An IN leaf is one lookup in its value set.
+    * `ordinal` maps a column name to its position in `batch`. */
   def rowCheck(p: FilterPredicate, schema: MessageType, batch: ColumnarBatch,
                ordinal: String => Int): Int => Boolean = p match {
     case a: Operators.And =>
@@ -462,46 +549,57 @@ object ParquetFilters {
       val l = rowCheck(o.getLeft, schema, batch, ordinal)
       val r = rowCheck(o.getRight, schema, batch, ordinal)
       i => l(i) || r(i)
+    case e: Operators.Eq[_] if e.getValue == null =>
+      val v = batch.column(ordinal(e.getColumn.getColumnPath.toDotString))
+      i => v.isNullAt(i)
+    case e: Operators.NotEq[_] if e.getValue == null =>
+      val v = batch.column(ordinal(e.getColumn.getColumnPath.toDotString))
+      i => !v.isNullAt(i)
     case e: Operators.Eq[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ == 0)
     case e: Operators.Lt[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ < 0)
     case e: Operators.LtEq[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ <= 0)
     case e: Operators.Gt[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ > 0)
     case e: Operators.GtEq[_] => leaf(schema, batch, ordinal, e.getColumn, e.getValue, _ >= 0)
+    case s: Operators.In[_] => in(schema, batch, ordinal, s.getColumn, s.getValues.asScala.toArray[Any])
     case other => throw new IllegalArgumentException(s"not a translated predicate: $other")
   }
 
-  /** One comparison leaf of [[rowCheck]]; `test` reads the comparator's
+  /** Spark's order on doubles (and, widened, floats). */
+  private def sqlCompare(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** A double's key under Spark's equality: −0.0 as 0.0, every NaN as
+    * one. */
+  private def sqlKey(d: Double): Long =
+    java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+
+  /** One comparison leaf of [[rowCheck]]; `test` reads the comparison's
     * sign. */
   private def leaf(schema: MessageType, batch: ColumnarBatch, ordinal: String => Int,
                    column: Operators.Column[_], value: Any,
                    test: Int => Boolean): Int => Boolean = {
-    val name = column.getColumnPath.toDotString
-    val v = batch.column(ordinal(name))
-    val pt = schema.getType(schema.getFieldIndex(name)).asPrimitiveType
-    val cmp = pt.comparator()
+    val v = batch.column(ordinal(column.getColumnPath.toDotString))
+    val pt = physical(schema, column)
+    // only signed ints, dates and timestamps translate: signed compares
     pt.getPrimitiveTypeName match {
       case INT32 =>
         val x = value.asInstanceOf[java.lang.Integer].intValue
         v.dataType match {
-          case ByteType => i => !v.isNullAt(i) && test(cmp.compare(v.getByte(i).toInt, x))
-          case ShortType => i => !v.isNullAt(i) && test(cmp.compare(v.getShort(i).toInt, x))
-          case _ => i => !v.isNullAt(i) && test(cmp.compare(v.getInt(i), x))
+          case ByteType => i => !v.isNullAt(i) && test(Integer.compare(v.getByte(i), x))
+          case ShortType => i => !v.isNullAt(i) && test(Integer.compare(v.getShort(i), x))
+          case _ => i => !v.isNullAt(i) && test(Integer.compare(v.getInt(i), x))
         }
       case INT64 =>
         val x = value.asInstanceOf[java.lang.Long].longValue
-        val millis = pt.getLogicalTypeAnnotation match {
-          case t: TimestampLogicalTypeAnnotation =>
-            t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS
-          case _ => false
-        }
-        if (millis) i => !v.isNullAt(i) && test(cmp.compare(v.getLong(i) / 1000L, x))
-        else i => !v.isNullAt(i) && test(cmp.compare(v.getLong(i), x))
+        if (unit(pt).contains(LogicalTypeAnnotation.TimeUnit.MILLIS))
+          i => !v.isNullAt(i) && test(java.lang.Long.compare(v.getLong(i) / 1000L, x))
+        else i => !v.isNullAt(i) && test(java.lang.Long.compare(v.getLong(i), x))
       case FLOAT =>
-        val x = value.asInstanceOf[java.lang.Float].floatValue
-        i => !v.isNullAt(i) && test(cmp.compare(v.getFloat(i), x))
+        val x = value.asInstanceOf[java.lang.Float].doubleValue
+        i => !v.isNullAt(i) && test(sqlCompare(v.getFloat(i), x))
       case DOUBLE =>
         val x = value.asInstanceOf[java.lang.Double].doubleValue
-        i => !v.isNullAt(i) && test(cmp.compare(v.getDouble(i), x))
+        i => !v.isNullAt(i) && test(sqlCompare(v.getDouble(i), x))
       case BINARY =>
         val x = UTF8String.fromBytes(value.asInstanceOf[Binary].getBytes)
         if (v.dataType == StringType) i => !v.isNullAt(i) && test(v.getUTF8String(i).compareTo(x))
@@ -510,13 +608,60 @@ object ParquetFilters {
     }
   }
 
-  private def primitive(schema: MessageType, name: String): Option[PrimitiveType] = {
-    if (!schema.containsField(name)) return None
-    schema.getType(schema.getFieldIndex(name)) match {
-      case p: PrimitiveType if translatableAnnotation(p) => Some(p)
-      case _ => None
+  /** The IN leaf of [[rowCheck]]: a binary search in the sorted values
+    * (ints, longs, double keys) or a hash lookup (strings). */
+  private def in(schema: MessageType, batch: ColumnarBatch, ordinal: String => Int,
+                 column: Operators.Column[_], values: Array[Any]): Int => Boolean = {
+    import java.util.Arrays.binarySearch
+    val v = batch.column(ordinal(column.getColumnPath.toDotString))
+    val pt = physical(schema, column)
+    pt.getPrimitiveTypeName match {
+      case INT32 =>
+        val set = values.map(_.asInstanceOf[java.lang.Integer].intValue).sorted
+        v.dataType match {
+          case ByteType => i => !v.isNullAt(i) && binarySearch(set, v.getByte(i).toInt) >= 0
+          case ShortType => i => !v.isNullAt(i) && binarySearch(set, v.getShort(i).toInt) >= 0
+          case _ => i => !v.isNullAt(i) && binarySearch(set, v.getInt(i)) >= 0
+        }
+      case INT64 =>
+        val set = values.map(_.asInstanceOf[java.lang.Long].longValue).sorted
+        if (unit(pt).contains(LogicalTypeAnnotation.TimeUnit.MILLIS))
+          i => !v.isNullAt(i) && binarySearch(set, v.getLong(i) / 1000L) >= 0
+        else i => !v.isNullAt(i) && binarySearch(set, v.getLong(i)) >= 0
+      case FLOAT =>
+        val set = values.map(x => sqlKey(x.asInstanceOf[java.lang.Float].doubleValue)).sorted
+        i => !v.isNullAt(i) && binarySearch(set, sqlKey(v.getFloat(i))) >= 0
+      case DOUBLE =>
+        val set = values.map(x => sqlKey(x.asInstanceOf[java.lang.Double].doubleValue)).sorted
+        i => !v.isNullAt(i) && binarySearch(set, sqlKey(v.getDouble(i))) >= 0
+      case BINARY =>
+        val set = new java.util.HashSet[UTF8String]()
+        values.foreach(x => set.add(UTF8String.fromBytes(x.asInstanceOf[Binary].getBytes)))
+        if (v.dataType == StringType) i => !v.isNullAt(i) && set.contains(v.getUTF8String(i))
+        else i => !v.isNullAt(i) && set.contains(UTF8String.fromBytes(v.getBinary(i)))
+      case other => throw new IllegalArgumentException(s"not a translated column type: $other")
     }
   }
+
+  private def physical(schema: MessageType, c: Operators.Column[_]): PrimitiveType = {
+    val name = c.getColumnPath.toDotString
+    schema.getType(schema.getFieldIndex(name)).asPrimitiveType
+  }
+
+  private def unit(pt: PrimitiveType): Option[LogicalTypeAnnotation.TimeUnit] =
+    pt.getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => Some(t.getUnit)
+      case _ => None
+    }
+
+  /** The top-level, non-repeated primitive column `name`. */
+  private def column(schema: MessageType, name: String): Option[PrimitiveType] =
+    if (!schema.containsField(name)) None
+    else schema.getType(schema.getFieldIndex(name)) match {
+      case p: PrimitiveType if !p.isRepetition(org.apache.parquet.schema.Type.Repetition.REPEATED) =>
+        Some(p)
+      case _ => None
+    }
 
   /** Annotations whose value ordering matches the physical column's
     * (so FilterApi comparisons are exact): none, string, timestamp
@@ -535,15 +680,14 @@ object ParquetFilters {
     }
 
   /** Session TZ is UTC engine-wide (Tables/Bench/Verify), so NTZ
-    * LocalDateTime values convert at UTC. Returns the value in the
-    * COLUMN's unit. */
+    * LocalDateTime values convert at UTC; a `java.sql.Timestamp` or
+    * `Date` converts as Spark made it (its calendar rebase undone).
+    * Returns the value in the COLUMN's unit. */
   private def toEpoch(v: Any, ann: TimestampLogicalTypeAnnotation): Option[java.lang.Long] = {
     val micros: Option[Long] = v match {
       case i: java.time.Instant =>
         Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-      case t: java.sql.Timestamp =>
-        val i = t.toInstant
-        Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
+      case t: java.sql.Timestamp => Some(DateTimeUtils.fromJavaTimestamp(t))
       case ldt: java.time.LocalDateTime =>
         Some(ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L)
       case _ => None
@@ -568,88 +712,105 @@ object ParquetFilters {
   }
 
   private def one(f: Filter, schema: MessageType): Option[FilterPredicate] = f match {
-    case EqualTo(a, v) => cmp(schema, a, v, "eq")
-    case GreaterThan(a, v) => cmp(schema, a, v, "gt")
-    case GreaterThanOrEqual(a, v) => cmp(schema, a, v, "gtEq")
-    case LessThan(a, v) => cmp(schema, a, v, "lt")
-    case LessThanOrEqual(a, v) => cmp(schema, a, v, "ltEq")
-    case In(a, vs) if vs.nonEmpty =>
-      val eqs = vs.toSeq.map(v => cmp(schema, a, v, "eq"))
-      if (eqs.exists(_.isEmpty)) None else Some(eqs.flatten.reduce(FilterApi.or))
+    case EqualTo(a, v) => compare(schema, a, "eq", Seq(v))
+    case GreaterThan(a, v) => compare(schema, a, "gt", Seq(v))
+    case GreaterThanOrEqual(a, v) => compare(schema, a, "gtEq", Seq(v))
+    case LessThan(a, v) => compare(schema, a, "lt", Seq(v))
+    case LessThanOrEqual(a, v) => compare(schema, a, "ltEq", Seq(v))
+    // a null in the list never makes IN true
+    case In(a, vs) => compare(schema, a, "in", vs.toSeq.filter(_ != null))
+    case IsNull(a) => nullTest(schema, a, isNull = true)
+    case IsNotNull(a) => nullTest(schema, a, isNull = false)
     case And(l, r) => for (lp <- one(l, schema); rp <- one(r, schema)) yield FilterApi.and(lp, rp)
     case Or(l, r) => for (lp <- one(l, schema); rp <- one(r, schema)) yield FilterApi.or(lp, rp)
     case _ => None
   }
 
-  private def cmp(schema: MessageType, name: String, v: Any,
-                  op: String): Option[FilterPredicate] = {
-    if (v == null) return None
-    primitive(schema, name).flatMap { p =>
-      try {
-        (p.getPrimitiveTypeName, op) match {
-          case (INT64, _) =>
-            val c = FilterApi.longColumn(name)
-            val xOpt = p.getLogicalTypeAnnotation match {
-              case ts: TimestampLogicalTypeAnnotation => toEpoch(v, ts)
-              case _ => Some(java.lang.Long.valueOf(v.asInstanceOf[Number].longValue()))
-            }
-            xOpt.map { x =>
-              op match {
-                case "eq" => FilterApi.eq(c, x); case "gt" => FilterApi.gt(c, x)
-                case "gtEq" => FilterApi.gtEq(c, x); case "lt" => FilterApi.lt(c, x)
-                case "ltEq" => FilterApi.ltEq(c, x)
-              }
-            }
-          case (INT32, _) =>
-            val c = FilterApi.intColumn(name)
-            val xOpt: Option[java.lang.Integer] = v match {
-              case n: Number => Some(java.lang.Integer.valueOf(n.intValue()))
-              // DATE columns: Spark hands LocalDate / java.sql.Date
-              case d: java.time.LocalDate =>
-                Some(java.lang.Integer.valueOf(d.toEpochDay.toInt))
-              case d: java.sql.Date =>
-                Some(java.lang.Integer.valueOf(d.toLocalDate.toEpochDay.toInt))
-              case _ => None
-            }
-            xOpt.map { x =>
-              op match {
-                case "eq" => FilterApi.eq(c, x); case "gt" => FilterApi.gt(c, x)
-                case "gtEq" => FilterApi.gtEq(c, x); case "lt" => FilterApi.lt(c, x)
-                case "ltEq" => FilterApi.ltEq(c, x)
-              }
-            }
-          case (DOUBLE, _) =>
-            val c = FilterApi.doubleColumn(name)
-            val x = java.lang.Double.valueOf(v.asInstanceOf[Number].doubleValue())
-            Some(op match {
-              case "eq" => FilterApi.eq(c, x); case "gt" => FilterApi.gt(c, x)
-              case "gtEq" => FilterApi.gtEq(c, x); case "lt" => FilterApi.lt(c, x)
-              case "ltEq" => FilterApi.ltEq(c, x)
-            })
-          case (FLOAT, _) =>
-            val c = FilterApi.floatColumn(name)
-            val x = java.lang.Float.valueOf(v.asInstanceOf[Number].floatValue())
-            Some(op match {
-              case "eq" => FilterApi.eq(c, x); case "gt" => FilterApi.gt(c, x)
-              case "gtEq" => FilterApi.gtEq(c, x); case "lt" => FilterApi.lt(c, x)
-              case "ltEq" => FilterApi.ltEq(c, x)
-            })
-          case (BINARY, _) if v.isInstanceOf[String] =>
-            val c = FilterApi.binaryColumn(name)
-            val x = Binary.fromString(v.asInstanceOf[String])
-            Some(op match {
-              case "eq" => FilterApi.eq(c, x); case "gt" => FilterApi.gt(c, x)
-              case "gtEq" => FilterApi.gtEq(c, x); case "lt" => FilterApi.lt(c, x)
-              case "ltEq" => FilterApi.ltEq(c, x)
-            })
-          case _ => None
-        }
-      } catch { case _: ClassCastException => None }
+  /** `name IS [NOT] NULL` as parquet's eq/notEq against null, on any
+    * primitive column but INT96. */
+  private def nullTest(schema: MessageType, name: String, isNull: Boolean): Option[FilterPredicate] = {
+    def test[T <: Comparable[T], C <: Operators.Column[T] with Operators.SupportsEqNotEq](
+        c: C): FilterPredicate =
+      if (isNull) FilterApi.eq[T, C](c, null.asInstanceOf[T])
+      else FilterApi.notEq[T, C](c, null.asInstanceOf[T])
+    column(schema, name).map(_.getPrimitiveTypeName).collect {
+      case INT32 => test[java.lang.Integer, Operators.IntColumn](FilterApi.intColumn(name))
+      case INT64 => test[java.lang.Long, Operators.LongColumn](FilterApi.longColumn(name))
+      case FLOAT => test[java.lang.Float, Operators.FloatColumn](FilterApi.floatColumn(name))
+      case DOUBLE => test[java.lang.Double, Operators.DoubleColumn](FilterApi.doubleColumn(name))
+      case BOOLEAN => test[java.lang.Boolean, Operators.BooleanColumn](FilterApi.booleanColumn(name))
+      case BINARY | FIXED_LEN_BYTE_ARRAY =>
+        test[Binary, Operators.BinaryColumn](FilterApi.binaryColumn(name))
     }
   }
+
+  /** A comparison (`op` one of eq, gt, gtEq, lt, ltEq, in) of column
+    * `name` with the literals `vs`, each converted to the column's
+    * physical value; None when the column or any literal does not
+    * convert exactly. */
+  private def compare(schema: MessageType, name: String, op: String,
+                      vs: Seq[Any]): Option[FilterPredicate] =
+    if (vs.isEmpty) None
+    else column(schema, name).filter(translatableAnnotation).flatMap { p =>
+      p.getPrimitiveTypeName match {
+        case INT32 => build(FilterApi.intColumn(name), op, vs.map(int32(p, _)))
+        case INT64 => build(FilterApi.longColumn(name), op, vs.map(int64(p, _)))
+        case FLOAT => build(FilterApi.floatColumn(name), op, vs.map {
+          case n: Number => Some(java.lang.Float.valueOf(n.floatValue)); case _ => None })
+        case DOUBLE => build(FilterApi.doubleColumn(name), op, vs.map {
+          case n: Number => Some(java.lang.Double.valueOf(n.doubleValue)); case _ => None })
+        case BINARY => build(FilterApi.binaryColumn(name), op, vs.map {
+          case s: String => Some(Binary.fromString(s)); case _ => None })
+        case _ => None
+      }
+    }
+
+  private def build[T <: Comparable[T], C <: Operators.Column[T] with Operators.SupportsLtGt](
+      c: C, op: String, xs: Seq[Option[T]]): Option[FilterPredicate] =
+    if (xs.exists(_.isEmpty)) None
+    else {
+      val vs = xs.flatten
+      Some(op match {
+        case "eq" => FilterApi.eq[T, C](c, vs.head)
+        case "gt" => FilterApi.gt[T, C](c, vs.head)
+        case "gtEq" => FilterApi.gtEq[T, C](c, vs.head)
+        case "lt" => FilterApi.lt[T, C](c, vs.head)
+        case "ltEq" => FilterApi.ltEq[T, C](c, vs.head)
+        case "in" => FilterApi.in[T, C](c, new java.util.HashSet[T](vs.asJava))
+      })
+    }
+
+  private def integral(v: Any): Option[Long] = v match {
+    case n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long) =>
+      Some(n.asInstanceOf[Number].longValue)
+    case _ => None
+  }
+
+  /** An INT32 literal as the column's value: an epoch day on a DATE
+    * column, an integer in range otherwise. */
+  private def int32(p: PrimitiveType, v: Any): Option[java.lang.Integer] =
+    (p.getLogicalTypeAnnotation match {
+      case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation => v match {
+        case d: java.time.LocalDate => Some(d.toEpochDay)
+        case d: java.sql.Date => Some(DateTimeUtils.fromJavaDate(d).toLong)
+        case _ => None
+      }
+      case _ => integral(v)
+    }).filter(_.isValidInt).map(x => java.lang.Integer.valueOf(x.toInt))
+
+  /** An INT64 literal as the column's value: epoch time in the column's
+    * unit on a TIMESTAMP column, an integer otherwise. */
+  private def int64(p: PrimitiveType, v: Any): Option[java.lang.Long] =
+    p.getLogicalTypeAnnotation match {
+      case ts: TimestampLogicalTypeAnnotation => toEpoch(v, ts)
+      case _ => integral(v).map(java.lang.Long.valueOf)
+    }
 }
 
-/** Streaming partial-aggregate computation for aggregation pushdown. */
+/** Streaming partial-aggregate computation for aggregation pushdown.
+  * Each aggregate call becomes a [[Fold]] typed for its op and column
+  * once per split, so a row costs each call one typed read and update:
+  * no op lookup, boxing or generic ordering per row. */
 object PartialAgg {
   /** Spark's expected result type for a pushed aggregate (must line up
     * with the final-aggregation plan Spark builds over the partials). */
@@ -673,26 +834,14 @@ object PartialAgg {
            DoubleType | FloatType | _: DecimalType => true
       case _ => false
     }
-    case "min" | "max" => ordFor(colType).isDefined
+    case "min" | "max" => groupable(colType)
     case _ => false
   }
 
-  private def ordFor(t: DataType): Option[Ordering[Any]] = (t match {
-    case LongType | TimestampType | TimestampNTZType => Some(Ordering.Long)
-    case IntegerType | DateType => Some(Ordering.Int)
-    case ShortType => Some(Ordering.Short)
-    case ByteType => Some(Ordering.Byte)
-    case BooleanType => Some(Ordering.Boolean)
-    case DoubleType => Some(Ordering.Double.TotalOrdering)
-    case FloatType => Some(Ordering.Float.TotalOrdering)
-    case StringType => Some(Ordering.by[Any, UTF8String](_.asInstanceOf[UTF8String]))
-    case _: DecimalType => Some(Ordering.ordered[Decimal].on[Any](_.asInstanceOf[Decimal]))
-    case _ => None
-  }).asInstanceOf[Option[Ordering[_]]].map(_.asInstanceOf[Ordering[Any]])
-
   /** Types usable as pushed GROUP BY keys: extracted values carry
     * proper equals/hashCode (UTF8String, Decimal, boxed primitives),
-    * so they can key the per-split hash aggregation. */
+    * so they can key the per-split hash aggregation. The same types
+    * have a typed min/max [[Fold]]. */
   def groupable(t: DataType): Boolean = t match {
     case LongType | IntegerType | ShortType | ByteType | BooleanType |
          DoubleType | FloatType | StringType | DateType | TimestampType |
@@ -700,108 +849,223 @@ object PartialAgg {
     case _ => false
   }
 
-  /** One in-flight partial-aggregation state (per split, or per group
-    * in the grouped path). */
-  private final class Acc(n: Int) {
-    val counts = new Array[Long](n)
-    val sumsL = new Array[Long](n)
-    val sumsD = new Array[Double](n)
-    val sumsB = new Array[java.math.BigDecimal](n)
-    val mins = new Array[Any](n)
-    val maxs = new Array[Any](n)
+  /** One aggregate call's running state over the column at ordinal
+    * `o`; `fresh` starts another of the same kind (one per group). A
+    * SUM, MIN or MAX that saw no non-null value is null. */
+  private abstract class Fold {
+    def add(r: InternalRow): Unit
+    def result: Any
+    def fresh(): Fold
   }
 
-  private def update(acc: Acc, r: InternalRow, calls: Seq[AggCall],
-                     fieldIdx: Seq[Int], types: Seq[DataType],
-                     ords: Seq[Ordering[Any]]): Unit = {
-    val n = calls.length
-    var i = 0
-    while (i < n) {
-      calls(i).op match {
-        case "count_star" => acc.counts(i) += 1
-        case "count" => if (!r.isNullAt(fieldIdx(i))) acc.counts(i) += 1
-        case "sum" =>
-          if (!r.isNullAt(fieldIdx(i))) {
-            types(i) match {
-              case LongType => acc.sumsL(i) += r.getLong(fieldIdx(i)); acc.counts(i) += 1
-              case IntegerType => acc.sumsL(i) += r.getInt(fieldIdx(i)); acc.counts(i) += 1
-              case ShortType => acc.sumsL(i) += r.getShort(fieldIdx(i)); acc.counts(i) += 1
-              case ByteType => acc.sumsL(i) += r.getByte(fieldIdx(i)); acc.counts(i) += 1
-              case DoubleType => acc.sumsD(i) += r.getDouble(fieldIdx(i)); acc.counts(i) += 1
-              case FloatType => acc.sumsD(i) += r.getFloat(fieldIdx(i)); acc.counts(i) += 1
-              case d: DecimalType =>
-                val v = r.getDecimal(fieldIdx(i), d.precision, d.scale).toJavaBigDecimal
-                acc.sumsB(i) = if (acc.sumsB(i) == null) v else acc.sumsB(i).add(v)
-                acc.counts(i) += 1
-              case _ =>
-            }
-          }
-        case "min" | "max" =>
-          if (!r.isNullAt(fieldIdx(i))) {
-            val v = r.get(fieldIdx(i), types(i))
-            val cur = if (calls(i).op == "min") acc.mins(i) else acc.maxs(i)
-            val better = cur == null ||
-              (calls(i).op == "min" && ords(i).lt(v, cur)) ||
-              (calls(i).op == "max" && ords(i).gt(v, cur))
-            if (better) {
-              // rows are views of a reused batch: keep a copy
-              val kept = InternalRow.copyValue(v)
-              if (calls(i).op == "min") acc.mins(i) = kept else acc.maxs(i) = kept
-            }
-          }
-      }
-      i += 1
+  private final class CountStar extends Fold {
+    private var n = 0L
+    def add(r: InternalRow): Unit = n += 1
+    def result: Any = n
+    def fresh(): Fold = new CountStar
+  }
+
+  private final class Count(o: Int) extends Fold {
+    private var n = 0L
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) n += 1
+    def result: Any = n
+    def fresh(): Fold = new Count(o)
+  }
+
+  private abstract class LongSum extends Fold {
+    protected var s = 0L
+    protected var seen = false
+    def result: Any = if (seen) s else null
+  }
+  private final class SumLong(o: Int) extends LongSum {
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) { s += r.getLong(o); seen = true }
+    def fresh(): Fold = new SumLong(o)
+  }
+  private final class SumInt(o: Int) extends LongSum {
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) { s += r.getInt(o); seen = true }
+    def fresh(): Fold = new SumInt(o)
+  }
+  private final class SumShort(o: Int) extends LongSum {
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) { s += r.getShort(o); seen = true }
+    def fresh(): Fold = new SumShort(o)
+  }
+  private final class SumByte(o: Int) extends LongSum {
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) { s += r.getByte(o); seen = true }
+    def fresh(): Fold = new SumByte(o)
+  }
+
+  private abstract class DoubleSum extends Fold {
+    protected var s = 0.0
+    protected var seen = false
+    def result: Any = if (seen) s else null
+  }
+  private final class SumDouble(o: Int) extends DoubleSum {
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) { s += r.getDouble(o); seen = true }
+    def fresh(): Fold = new SumDouble(o)
+  }
+  private final class SumFloat(o: Int) extends DoubleSum {
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) { s += r.getFloat(o); seen = true }
+    def fresh(): Fold = new SumFloat(o)
+  }
+
+  private final class SumDecimal(o: Int, d: DecimalType) extends Fold {
+    private var s: java.math.BigDecimal = _
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val v = r.getDecimal(o, d.precision, d.scale).toJavaBigDecimal
+      s = if (s == null) v else s.add(v)
     }
-  }
-
-  private def result(acc: Acc, calls: Seq[AggCall], types: Seq[DataType]): Array[Any] = {
-    val n = calls.length
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      out(i) = calls(i).op match {
-        case "count_star" | "count" => acc.counts(i)
-        case "sum" =>
-          if (acc.counts(i) == 0) null
-          else types(i) match {
-            case LongType | IntegerType | ShortType | ByteType => acc.sumsL(i)
-            case d: DecimalType =>
-              // overflow of the widened precision → null, matching
-              // Spark's non-ANSI decimal SUM, instead of throwing
-              val ot = outputType("sum", d).asInstanceOf[DecimalType]
-              val dec = Decimal(acc.sumsB(i))
-              if (dec.changePrecision(ot.precision, ot.scale)) dec else null
-            case _ => acc.sumsD(i)
-          }
-        case "min" => acc.mins(i)
-        case "max" => acc.maxs(i)
+    // overflow of the widened precision → null, matching Spark's
+    // non-ANSI decimal SUM, instead of throwing
+    def result: Any =
+      if (s == null) null
+      else {
+        val ot = outputType("sum", d).asInstanceOf[DecimalType]
+        val dec = Decimal(s)
+        if (dec.changePrecision(ot.precision, ot.scale)) dec else null
       }
-      i += 1
-    }
-    out
+    def fresh(): Fold = new SumDecimal(o, d)
   }
 
-  private def ordsFor(types: Seq[DataType]): Seq[Ordering[Any]] =
-    types.map(t => ordFor(t).getOrElse(
-      throw new UnsupportedOperationException(s"agg over $t")))
+  /** MIN (`min`) or MAX over a column: `better(c)` reads the sign of
+    * comparing a candidate with the kept value. */
+  private abstract class Extreme(min: Boolean) extends Fold {
+    protected var seen = false
+    protected final def better(c: Int): Boolean = !seen || (if (min) c < 0 else c > 0)
+  }
+  private final class ExtLong(o: Int, min: Boolean) extends Extreme(min) {
+    private var v = 0L
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val x = r.getLong(o)
+      if (better(java.lang.Long.compare(x, v))) { v = x; seen = true }
+    }
+    def result: Any = if (seen) v else null
+    def fresh(): Fold = new ExtLong(o, min)
+  }
+  private final class ExtInt(o: Int, min: Boolean) extends Extreme(min) {
+    private var v = 0
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val x = r.getInt(o)
+      if (better(Integer.compare(x, v))) { v = x; seen = true }
+    }
+    def result: Any = if (seen) v else null
+    def fresh(): Fold = new ExtInt(o, min)
+  }
+  private final class ExtShort(o: Int, min: Boolean) extends Extreme(min) {
+    private var v: Short = 0
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val x = r.getShort(o)
+      if (better(java.lang.Short.compare(x, v))) { v = x; seen = true }
+    }
+    def result: Any = if (seen) v else null
+    def fresh(): Fold = new ExtShort(o, min)
+  }
+  private final class ExtByte(o: Int, min: Boolean) extends Extreme(min) {
+    private var v: Byte = 0
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val x = r.getByte(o)
+      if (better(java.lang.Byte.compare(x, v))) { v = x; seen = true }
+    }
+    def result: Any = if (seen) v else null
+    def fresh(): Fold = new ExtByte(o, min)
+  }
+  private final class ExtBoolean(o: Int, min: Boolean) extends Extreme(min) {
+    private var v = false
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val x = r.getBoolean(o)
+      if (better(java.lang.Boolean.compare(x, v))) { v = x; seen = true }
+    }
+    def result: Any = if (seen) v else null
+    def fresh(): Fold = new ExtBoolean(o, min)
+  }
+  /** Doubles and floats keep the total order (−0.0 < 0.0, NaN last). */
+  private final class ExtDouble(o: Int, min: Boolean) extends Extreme(min) {
+    private var v = 0.0
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val x = r.getDouble(o)
+      if (better(java.lang.Double.compare(x, v))) { v = x; seen = true }
+    }
+    def result: Any = if (seen) v else null
+    def fresh(): Fold = new ExtDouble(o, min)
+  }
+  private final class ExtFloat(o: Int, min: Boolean) extends Extreme(min) {
+    private var v = 0f
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val x = r.getFloat(o)
+      if (better(java.lang.Float.compare(x, v))) { v = x; seen = true }
+    }
+    def result: Any = if (seen) v else null
+    def fresh(): Fold = new ExtFloat(o, min)
+  }
+  /** Rows are views of a reused batch: a kept string is copied. */
+  private final class ExtString(o: Int, min: Boolean) extends Extreme(min) {
+    private var v: UTF8String = _
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val x = r.getUTF8String(o)
+      if (!seen || better(x.compareTo(v))) { v = x.copy(); seen = true }
+    }
+    def result: Any = v
+    def fresh(): Fold = new ExtString(o, min)
+  }
+  private final class ExtDecimal(o: Int, d: DecimalType, min: Boolean) extends Extreme(min) {
+    private var v: Decimal = _
+    def add(r: InternalRow): Unit = if (!r.isNullAt(o)) {
+      val x = r.getDecimal(o, d.precision, d.scale)
+      if (!seen || better(x.compare(v))) { v = x; seen = true }
+    }
+    def result: Any = v
+    def fresh(): Fold = new ExtDecimal(o, d, min)
+  }
+
+  /** The folds of `calls`, call i reading ordinal `fieldIdx(i)` of type
+    * `types(i)`. */
+  private def folds(calls: Seq[AggCall], fieldIdx: Seq[Int], types: Seq[DataType]): Array[Fold] =
+    calls.indices.map { i =>
+      val (o, min) = (fieldIdx(i), calls(i).op == "min")
+      (calls(i).op, types(i)) match {
+        case ("count_star", _) => new CountStar
+        case ("count", _) => new Count(o)
+        case ("sum", LongType) => new SumLong(o)
+        case ("sum", IntegerType) => new SumInt(o)
+        case ("sum", ShortType) => new SumShort(o)
+        case ("sum", ByteType) => new SumByte(o)
+        case ("sum", DoubleType) => new SumDouble(o)
+        case ("sum", FloatType) => new SumFloat(o)
+        case ("sum", d: DecimalType) => new SumDecimal(o, d)
+        case ("min" | "max", LongType | TimestampType | TimestampNTZType) => new ExtLong(o, min)
+        case ("min" | "max", IntegerType | DateType) => new ExtInt(o, min)
+        case ("min" | "max", ShortType) => new ExtShort(o, min)
+        case ("min" | "max", ByteType) => new ExtByte(o, min)
+        case ("min" | "max", BooleanType) => new ExtBoolean(o, min)
+        case ("min" | "max", DoubleType) => new ExtDouble(o, min)
+        case ("min" | "max", FloatType) => new ExtFloat(o, min)
+        case ("min" | "max", StringType) => new ExtString(o, min)
+        case ("min" | "max", d: DecimalType) => new ExtDecimal(o, d, min)
+        case (op, t) => throw new UnsupportedOperationException(s"$op over $t")
+      }
+    }.toArray
+
+  private def addAll(fs: Array[Fold], r: InternalRow): Unit = {
+    var i = 0
+    while (i < fs.length) { fs(i).add(r); i += 1 }
+  }
 
   def compute(rows: Iterator[InternalRow], calls: Seq[AggCall],
               fieldIdx: Seq[Int], types: Seq[DataType]): InternalRow = {
-    val ords = ordsFor(types)
-    val acc = new Acc(calls.length)
-    rows.foreach(r => update(acc, r, calls, fieldIdx, types, ords))
-    new GenericInternalRow(result(acc, calls, types))
+    val fs = folds(calls, fieldIdx, types)
+    rows.foreach(addAll(fs, _))
+    new GenericInternalRow(fs.map(_.result))
   }
 
   /** Grouped partials (r8, capped r9): one output row per distinct key
     * tuple the hash map holds, key values first then partials. Rows are
     * views of the reader's reused batch, so a key is copied when it is
-    * stored; lookups use the view.
+    * stored; lookups use the view. A single key column keys the map
+    * with its value, several with an `ArraySeq` of theirs.
     *
     * Memory: the map is bounded by `maxGroups` entries, NOT by the
     * split's group cardinality — a near-unique group key would
     * otherwise make the whole split's projection resident at once
-    * (boxed keys + an Acc per group), which is WORSE peak memory than
+    * (boxed keys + folds per group), which is WORSE peak memory than
     * streaming the raw split. Past the cap, rows with a NEW key go
     * through a SECONDARY run map (also `maxGroups`-bounded, so peak
     * memory is 2×cap accumulators): same-key overflow rows keep
@@ -819,39 +1083,51 @@ object PartialAgg {
                      fieldIdx: Seq[Int], types: Seq[DataType],
                      keyIdx: Seq[Int], keyTypes: Seq[DataType],
                      maxGroups: Int = AggSpec.DefaultMaxGroupsPerSplit): Iterator[InternalRow] = {
+    import scala.collection.immutable.ArraySeq
     import scala.jdk.CollectionConverters._
     require(maxGroups >= 1, s"maxGroups must be >= 1: $maxGroups")
-    val ords = ordsFor(types)
-    val n = calls.length
-    val groups = new java.util.LinkedHashMap[Seq[Any], Acc]()
-    val run = new java.util.LinkedHashMap[Seq[Any], Acc]()
-    def row(key: Seq[Any], acc: Acc): InternalRow =
-      new GenericInternalRow(key.toArray[Any] ++ result(acc, calls, types))
-    def drain(m: java.util.LinkedHashMap[Seq[Any], Acc]): Vector[InternalRow] = {
+    val proto = folds(calls, fieldIdx, types)
+    val (ks, kt) = (keyIdx.toArray, keyTypes.toArray)
+    val nk = ks.length
+    def keyAt(r: InternalRow, j: Int): Any = if (r.isNullAt(ks(j))) null else r.get(ks(j), kt(j))
+    def keyOf(r: InternalRow): Any =
+      if (nk == 1) keyAt(r, 0) else ArraySeq.unsafeWrapArray(Array.tabulate[Any](nk)(keyAt(r, _)))
+    def stored(key: Any): Any =
+      if (nk == 1) InternalRow.copyValue(key)
+      else key.asInstanceOf[ArraySeq[Any]].map(InternalRow.copyValue)
+    def open(key: Any, m: java.util.LinkedHashMap[Any, Array[Fold]]): Array[Fold] = {
+      val fs = proto.map(_.fresh()); m.put(stored(key), fs); fs
+    }
+    val groups = new java.util.LinkedHashMap[Any, Array[Fold]]()
+    val run = new java.util.LinkedHashMap[Any, Array[Fold]]()
+    def row(key: Any, fs: Array[Fold]): InternalRow = {
+      val out = new Array[Any](nk + fs.length)
+      if (nk == 1) out(0) = key else key.asInstanceOf[ArraySeq[Any]].copyToArray(out)
+      var i = 0
+      while (i < fs.length) { out(nk + i) = fs(i).result; i += 1 }
+      new GenericInternalRow(out)
+    }
+    def drain(m: java.util.LinkedHashMap[Any, Array[Fold]]): Vector[InternalRow] = {
       val out = m.entrySet().iterator().asScala
         .map(e => row(e.getKey, e.getValue)).toVector
       m.clear(); out
     }
     val overflow = rows.flatMap { r =>
-      val key: Seq[Any] = keyIdx.zip(keyTypes).map {
-        case (i, t) => if (r.isNullAt(i)) null else r.get(i, t)
-      }
+      val key = keyOf(r)
       val existing = groups.get(key)
       if (existing != null) {
-        update(existing, r, calls, fieldIdx, types, ords); Nil
+        addAll(existing, r); Nil
       } else if (groups.size < maxGroups) {
-        val acc = new Acc(n); groups.put(key.map(InternalRow.copyValue), acc)
-        update(acc, r, calls, fieldIdx, types, ords); Nil
+        addAll(open(key, groups), r); Nil
       } else {
         // primary cap reached: combine into the bounded secondary run;
         // flush the run as merged partials only when IT fills
         val inRun = run.get(key)
         if (inRun != null) {
-          update(inRun, r, calls, fieldIdx, types, ords); Nil
+          addAll(inRun, r); Nil
         } else {
           val flushed = if (run.size < maxGroups) Vector.empty else drain(run)
-          val acc = new Acc(n); run.put(key.map(InternalRow.copyValue), acc)
-          update(acc, r, calls, fieldIdx, types, ords)
+          addAll(open(key, run), r)
           flushed
         }
       }

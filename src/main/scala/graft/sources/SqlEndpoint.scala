@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.GraftHttpProtocol.BadRequest
@@ -27,9 +28,10 @@ import graft.sources.GraftHttpProtocol.BadRequest
   * i.e. the client scans the server-held result in parallel splits, the
   * remote contract.
   *
-  * Scale posture: only driver-side schema()/plan() trigger the one-time
-  * server execution; executors never do — scan()/scanAgg() resolve the
-  * part file from SplitInfo.endpoint alone (inherited behavior). On a
+  * Scale posture: only driver-side schema()/exactFilters()/plan()
+  * trigger the one-time server execution; executors never do —
+  * scan()/scanAgg() resolve the part file from SplitInfo.endpoint alone
+  * (inherited behavior). On a
   * real deployment the materialized result lives server-side and this
   * class is replaced by the HTTP endpoint speaking the same trait.
   */
@@ -44,6 +46,9 @@ class SqlEndpoint(dir: String, sqlQuery: String)
   override def plan(ignored: String, query: QuerySpec,
                     splitSizeBytes: Long): Seq[SplitInfo] =
     super.plan(SqlEndpoint.materialize(dir, sqlQuery), query, splitSizeBytes)
+
+  override def exactFilters(ignored: String, filters: Array[Filter]): Array[Boolean] =
+    super.exactFilters(SqlEndpoint.materialize(dir, sqlQuery), filters)
 }
 
 object SqlEndpoint {

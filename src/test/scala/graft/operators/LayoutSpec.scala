@@ -89,7 +89,7 @@ class LayoutSpec extends SparkSpec {
   test("zorderWrite: the written corpus is a complete, correctly-bucketed permutation") {
     val dir = sf("sf0.001")
     val events = graft.Tables(spark, dir, "events")
-    val outDir = sys.props("java.io.tmpdir") + "/graft_zorder_write_spec"
+    val outDir = graft.Scratch.dir("zorder_write_spec")
     val out = Layout.zorderWrite(events, outDir).cache()
     try {
       // conservation: every input row lands in exactly one bucket file
@@ -117,7 +117,7 @@ class LayoutSpec extends SparkSpec {
         (col("max_s") - lit(mns)) * 65535 / lit(rs) -
           (col("min_s") - lit(mns)) * 65535 / lit(rs) > 4095)
       assert(bad.count() === 0, "a written bucket exceeds its z-cell")
-    } finally out.unpersist()
+    } finally { out.unpersist(); graft.Scratch.delete(outDir) }
   }
 
   // -------------------------------------------------------------- C42c
@@ -155,35 +155,37 @@ class LayoutSpec extends SparkSpec {
     // equal the per-bucket stats model's prediction, row for row
     val dir = sf("sf0.001")
     val events = graft.Tables(spark, dir, "events")
-    val outDir = sys.props("java.io.tmpdir") + "/graft_zorder_metrics_spec"
-    val stats = Layout.zorderWrite(events, outDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .map { case (b, n, mnu, mxu) => (b, n, mnu, mxu) }
-    // a user-quartile predicate (the stripe the 1-D time layout
-    // cannot prune): [global min, min + range/4]
-    val gmin = stats.map(_._3).min
-    val gmax = stats.map(_._4).max
-    val uhi = gmin + (gmax - gmin) / 4
-    val expected = stats.filter(s => s._3 <= uhi).map(_._2).sum
-    val totalRows = stats.map(_._2).sum
-    assert(expected * 2 < totalRows,
-      "fixture must actually prune (expected scan < half the corpus)")
-    val df = spark.read.parquet(outDir)
-      .filter(col("user_id") >= gmin && col("user_id") <= uhi)
-    df.collect()
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val scan = plan.collectFirst { case s: FileSourceScanExec => s }
-      .getOrElse(fail("no FileSourceScanExec in the plan"))
-    assert(scan.metadata("PushedFilters").contains("user_id"),
-      s"the predicate must reach the parquet reader: ${scan.metadata}")
-    val scanRows = scan.metrics("numOutputRows").value
-    assert(scanRows === expected,
-      s"reader scanned $scanRows rows; the stats model predicts $expected" +
-        s" (of $totalRows total) — footer pruning diverged from the audit")
+    val outDir = graft.Scratch.dir("zorder_metrics_spec")
+    try {
+      val stats = Layout.zorderWrite(events, outDir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .map { case (b, n, mnu, mxu) => (b, n, mnu, mxu) }
+      // a user-quartile predicate (the stripe the 1-D time layout
+      // cannot prune): [global min, min + range/4]
+      val gmin = stats.map(_._3).min
+      val gmax = stats.map(_._4).max
+      val uhi = gmin + (gmax - gmin) / 4
+      val expected = stats.filter(s => s._3 <= uhi).map(_._2).sum
+      val totalRows = stats.map(_._2).sum
+      assert(expected * 2 < totalRows,
+        "fixture must actually prune (expected scan < half the corpus)")
+      val df = spark.read.parquet(outDir)
+        .filter(col("user_id") >= gmin && col("user_id") <= uhi)
+      df.collect()
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val scan = plan.collectFirst { case s: FileSourceScanExec => s }
+        .getOrElse(fail("no FileSourceScanExec in the plan"))
+      assert(scan.metadata("PushedFilters").contains("user_id"),
+        s"the predicate must reach the parquet reader: ${scan.metadata}")
+      val scanRows = scan.metrics("numOutputRows").value
+      assert(scanRows === expected,
+        s"reader scanned $scanRows rows; the stats model predicts $expected" +
+          s" (of $totalRows total) — footer pruning diverged from the audit")
+    } finally graft.Scratch.delete(outDir)
   }
 }
