@@ -1,12 +1,12 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
-import java.util.concurrent.locks.ReentrantLock
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.graft.Sessions
 
 /** The iterative operators' shared plumbing, written once:
   *
@@ -14,7 +14,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
   *    materializes the round (a `Dataset.observe` CollectMetrics node
   *    fires during that job), so a round costs one driver job instead
   *    of the action plus a separate 1-row scan.
-  *  - [[withConf]]: a session-conf set/restore scope.
+  *  - [[Isolated]]: scoped session conf, in a private session clone.
   */
 private[graft] object Loop {
 
@@ -64,28 +64,24 @@ private[graft] object Loop {
       exact(result).agg(metrics.head, metrics.tail: _*).head()))
   }
 
-  private val confLock = new ReentrantLock
+  /** A private session clone (same SparkContext; a copy of `caller`'s
+    * runtime conf, temp views, UDFs and QueryExecutionListeners) for
+    * the conf one scope needs. Conf set here never reaches `caller`: a
+    * query planned there meanwhile, on any thread, keeps the caller's
+    * settings, and scopes need no lock or restore. A frame built here
+    * keeps this conf, so each one handed back goes through [[out]].
+    * Stream starts scope their conf in `graft.streaming.Streams.run`. */
+  final class Isolated(caller: SparkSession, kvs: (String, String)*) {
+    val session: SparkSession = Sessions.cloneOf(caller)
+    set(kvs: _*)
 
-  /** Run `body` with the given session conf values, restoring what was
-    * there after — a key that was not set is unset again. Every scope
-    * in the JVM holds one reentrant lock for its whole body (nested
-    * scopes on one thread are fine): two scopes that overlapped would
-    * otherwise restore each other's values, leaving e.g. AQE switched
-    * off for the whole session. The lock is JVM-wide although confs
-    * are per-session. An unrelated query that runs on the session
-    * meanwhile still sees the scoped values. Stream starts take their
-    * scope in `graft.streaming.Streams.run`. */
-  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
-    confLock.lock()
-    try {
-      val set = spark.conf.getAll
-      val prev = kvs.map { case (k, _) => k -> set.get(k) }
-      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    } finally confLock.unlock()
+    def set(kvs: (String, String)*): Unit =
+      kvs.foreach { case (k, v) => session.conf.set(k, v) }
+
+    /** `df` moved into the clone. */
+    def in(df: DataFrame): DataFrame = Sessions.rebind(df, session)
+
+    /** `df` moved back into the caller's session. */
+    def out(df: DataFrame): DataFrame = Sessions.rebind(df, caller)
   }
 }

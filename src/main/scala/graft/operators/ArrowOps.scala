@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Loop
 import graft.sources.{CancelPollMonitor, GraftArrow, GraftHttpServers, HttpEndpoint}
 
 /** Oracle-checked entries for the graft-arrow DSv2 source (SURVEY.md §2
@@ -70,15 +71,17 @@ object ArrowOps {
     "SELECT CAST(0 AS BIGINT) AS split_id, CAST(count(*) AS BIGINT) AS split_rows FROM lineitem"
 
   /** SQL-through-catalog: the reference's `SELECT … FROM
-    * dd_read_arrow(…)` usage, as `SELECT … FROM graft.<table>`. */
+    * dd_read_arrow(…)` usage, as `SELECT … FROM graft.<table>`, with
+    * the catalog registered in a session clone. */
   def sqlCatalog(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.dir", dir)
-    spark.sql(
+    val scope = new Loop.Isolated(spark,
+      "spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
+      "spark.sql.catalog.graft.dir" -> dir)
+    scope.out(scope.session.sql(
       """SELECT l_returnflag, count(*) AS n, sum(l_quantity) AS sum_qty
         |FROM graft.lineitem
         |WHERE l_discount > 0.05
-        |GROUP BY l_returnflag""".stripMargin)
+        |GROUP BY l_returnflag""".stripMargin))
   }
 
   val sqlCatalogSql: String =

@@ -78,7 +78,7 @@ object Graph {
             .groupBy(col("v").as("node"))
             .agg(expr("150000 + (850000 * sum(c)) div 1000000").as("r"))
         }
-        rank
+        val top = rank
           .select(
             when(col("node") % 2 === 0, lit("customer"))
               .otherwise(lit("supplier")).as("node_type"),
@@ -87,8 +87,9 @@ object Graph {
           .orderBy(col("rank_ppm").desc, col("node_type"), col("key"))
           .limit(PrTopK)
           .localCheckpoint(true) // bounded: PrTopK rows
+        (top, ())
       } finally deg.unpersist(false)
-    }
+    }._1
   }
 
   def pagerank(spark: SparkSession, dir: String): DataFrame =
@@ -375,20 +376,20 @@ object Graph {
     * 8-round window where the static plan runs ONE job. The shuffles
     * are the node-bounded rank frames (the edge side never
     * re-shuffles), so AQE's coalescing/skew machinery has nothing to
-    * win here. The width scope nests inside the AQE scope: p is only
-    * known once the (AQE-off) edge checkpoint is counted. */
-  private def onEdgeFrame[A](edges: DataFrame)(body: DataFrame => A): A = {
-    val spark = edges.sparkSession
-    Loop.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
-      val ewRaw = edges.localCheckpoint(true)
-      try {
-        val p = sizedWidth(spark, ewRaw.count())
-        Loop.withConf(spark, "spark.sql.shuffle.partitions" -> p.toString) {
-          val ew = ewRaw.repartition(p, col("u")).localCheckpoint(true)
-          try body(ew) finally ew.unpersist(false)
-        }
-      } finally ewRaw.unpersist(false)
-    }
+    * win here. Both settings live in a [[Loop.Isolated]] clone: AQE off
+    * from the start, width p once the edge checkpoint is counted; the
+    * frame `body` returns moves back to the caller's session. */
+  private def onEdgeFrame[B](edges: DataFrame)(
+      body: DataFrame => (DataFrame, B)): (DataFrame, B) = {
+    val scope = new Loop.Isolated(edges.sparkSession, "spark.sql.adaptive.enabled" -> "false")
+    val ewRaw = scope.in(edges).localCheckpoint(true)
+    try {
+      val p = sizedWidth(scope.session, ewRaw.count())
+      scope.set("spark.sql.shuffle.partitions" -> p.toString)
+      val ew = ewRaw.repartition(p, col("u")).localCheckpoint(true)
+      try body(ew) match { case (df, b) => (scope.out(df), b) }
+      finally ew.unpersist(false)
+    } finally ewRaw.unpersist(false)
   }
 
   /** The DISTRIBUTED Kleene loop (C55's engine) — [[kleene]] with the

@@ -210,11 +210,10 @@ object Pipeline {
   /** ≥ this many shared distinct 3-grams with the benchmark ⇒
     * contaminated. */
   private val ContaminationFloor = 3
-  /** Default cap on the benchmark gram set a bloom blob may compile
-    * (16M grams ≈ a 20 MB blob at 10 bits/element — far beyond any real
-    * eval set, far below the 2 GB single-row wall). Overridable via the
-    * `graft.bloom.maxGrams` Spark conf. */
-  private val BloomGramLimit = 16L * 1000 * 1000
+  /** Cap on the benchmark gram set a bloom blob may compile (16M
+    * grams ≈ a 20 MB blob at 10 bits/element — far beyond any real
+    * eval set, far below the 2 GB single-row wall). */
+  private val BloomGramLimit = 16 * 1000 * 1000
 
   /** Benchmark decontamination — the training-data op that keeps eval
     * data out of the corpus: a document is contaminated when it shares
@@ -317,7 +316,12 @@ object Pipeline {
     * bits/element) enter the exact semi-join verify. Output is
     * IDENTICAL to [[decontaminate]] (bloom false positives are removed
     * by the verify), so the oracle is the same SQL. */
-  def decontaminateBloom(documents: DataFrame): DataFrame = {
+  def decontaminateBloom(documents: DataFrame): DataFrame =
+    decontaminateBloom(documents, BloomGramLimit)
+
+  /** [[decontaminateBloom]] with a benchmark gram set of at most `cap`
+    * grams. */
+  private[graft] def decontaminateBloom(documents: DataFrame, cap: Int): DataFrame = {
     import org.apache.spark.sql.graft.{Bridge, WordShingles}
     import graft.functions.GraftFunctions
     val d = documents
@@ -341,21 +345,11 @@ object Pipeline {
     // wall with an opaque OOM. limit(cap+1).count() is a BOUNDED action
     // (CollectLimitExec stops at cap+1 rows — the Dedup.labelMap probe
     // pattern) over the already-materialized checkpoint blocks.
-    val cap = documents.sparkSession.conf
-      .getOption("graft.bloom.maxGrams").map(_.toLong).getOrElse(BloomGramLimit)
-    // cap + 1 must fit limit()'s Int argument — a cap ≥ Int.MaxValue
-    // would silently overflow negative and fail with an opaque
-    // AnalysisException (and a >2³¹-gram collect_set row could never
-    // fit the 2 GB row limit anyway, so the bound loses nothing)
-    require(cap >= 1 && cap < Int.MaxValue,
-      s"graft.bloom.maxGrams must be in [1, ${Int.MaxValue - 1}]: $cap " +
-        "(for benchmark gram sets beyond that, use the distributed " +
-        "semi-join decontaminate())")
-    val probed = benchGrams.limit((cap + 1).toInt).count()
+    val probed = benchGrams.limit(cap + 1).count()
     require(probed <= cap,
       s"decontaminateBloom: benchmark gram set exceeds the $cap-gram bloom " +
-        "cap (raise graft.bloom.maxGrams, or use the distributed " +
-        "semi-join decontaminate() for an unbounded benchmark side)")
+        "cap (use the distributed semi-join decontaminate() for an " +
+        "unbounded benchmark side)")
     // one aggregate row holding the whole (bounded) benchmark gram set
     // → one blob; .head() ships only the blob bytes, never the grams
     val blob: Array[Byte] = benchGrams

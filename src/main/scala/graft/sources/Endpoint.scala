@@ -126,8 +126,8 @@ case class AggCall(op: String, column: String)
   * (Spark's final aggregation merges partial rows for the same key
   * regardless of how many the split emitted, so the degradation is
   * pure perf — worst case the split ships ~one partial per input row,
-  * the no-combine shape, with O(cap) endpoint memory). Conf
-  * `spark.graft.arrow.maxGroupsPerSplit`. */
+  * the no-combine shape, with O(cap) endpoint memory); the client
+  * always sends [[AggSpec.DefaultMaxGroupsPerSplit]]. */
 case class AggSpec(calls: Seq[AggCall], groupBy: Seq[String] = Nil,
                    maxGroupsPerSplit: Int = AggSpec.DefaultMaxGroupsPerSplit) {
   def toSql(table: String, filters: Array[Filter]): String = {
@@ -161,7 +161,6 @@ object AggSpec {
   /** ~tens of MB of Acc map at worst — far below a split's raw data,
     * and far above any GROUP BY that benefits from pushdown. */
   val DefaultMaxGroupsPerSplit: Int = 1 << 20
-  val MaxGroupsConfKey = "spark.graft.arrow.maxGroupsPerSplit"
 
   private val SupportedOps = Set("count_star", "count", "sum", "min", "max")
 
@@ -284,24 +283,25 @@ object FilterSql {
     !v.contains('%') && !v.contains('_')
 
   def toSql(f: Filter): Option[String] = f match {
-    case EqualTo(a, v) => Some(s"$a = ${lit(v)}")
-    case EqualNullSafe(a, v) => Some(s"$a IS NOT DISTINCT FROM ${lit(v)}")
-    case GreaterThan(a, v) => Some(s"$a > ${lit(v)}")
-    case GreaterThanOrEqual(a, v) => Some(s"$a >= ${lit(v)}")
-    case LessThan(a, v) => Some(s"$a < ${lit(v)}")
-    case LessThanOrEqual(a, v) => Some(s"$a <= ${lit(v)}")
-    case In(a, vs) if vs.nonEmpty => Some(s"$a IN (${vs.map(lit).mkString(", ")})")
+    case EqualTo(a, v) => lit(v).map(x => s"$a = $x")
+    case EqualNullSafe(a, v) => lit(v).map(x => s"$a IS NOT DISTINCT FROM $x")
+    case GreaterThan(a, v) => lit(v).map(x => s"$a > $x")
+    case GreaterThanOrEqual(a, v) => lit(v).map(x => s"$a >= $x")
+    case LessThan(a, v) => lit(v).map(x => s"$a < $x")
+    case LessThanOrEqual(a, v) => lit(v).map(x => s"$a <= $x")
+    case In(a, vs) if vs.nonEmpty && vs.forall(lit(_).isDefined) =>
+      Some(s"$a IN (${vs.flatMap(lit).mkString(", ")})")
     case IsNull(a) => Some(s"$a IS NULL")
     case IsNotNull(a) => Some(s"$a IS NOT NULL")
     // empty values are declined too: '%x' / 'x%' / '%x%' are mutually
     // unambiguous to invert only when x is nonempty (an empty-value
     // LIKE is the vacuous always-true-on-non-null filter anyway)
     case StringStartsWith(a, v) if likeSafe(v) && v.nonEmpty =>
-      Some(s"$a LIKE ${lit(v + "%")}")
+      lit(v + "%").map(p => s"$a LIKE $p")
     case StringEndsWith(a, v) if likeSafe(v) && v.nonEmpty =>
-      Some(s"$a LIKE ${lit("%" + v)}")
+      lit("%" + v).map(p => s"$a LIKE $p")
     case StringContains(a, v) if likeSafe(v) && v.nonEmpty =>
-      Some(s"$a LIKE ${lit("%" + v + "%")}")
+      lit("%" + v + "%").map(p => s"$a LIKE $p")
     case And(l, r) => for (ls <- toSql(l); rs <- toSql(r)) yield s"($ls AND $rs)"
     case Or(l, r) => for (ls <- toSql(l); rs <- toSql(r)) yield s"($ls OR $rs)"
     case Not(c) => toSql(c).map(s => s"(NOT $s)")
@@ -514,19 +514,24 @@ object FilterSql {
     }
   }
 
-  private def lit(v: Any): String = v match {
-    case null => "NULL"
-    case s: String => "'" + s.replace("'", "''") + "'"
+  /** A literal in the grammar [[parse]] reads back; None for a value
+    * with no form there (binary, non-finite floating point, …), whose
+    * filter then stays unserialized and Spark applies it. */
+  private def lit(v: Any): Option[String] = v match {
+    case null => Some("NULL")
+    case s: String => Some("'" + s.replace("'", "''") + "'")
     case s: org.apache.spark.unsafe.types.UTF8String => lit(s.toString)
     // the instant a Timestamp denotes, printed at UTC like an Instant:
     // the server reads a TIMESTAMP literal at UTC, and the Timestamp's
     // own toString prints it in the JVM's default zone
     case t: java.sql.Timestamp =>
       lit(DateTimeUtils.microsToInstant(DateTimeUtils.fromJavaTimestamp(t)))
-    case d: java.sql.Date => s"DATE '$d'"
-    case i: java.time.Instant => s"TIMESTAMP '${i.toString.replace("T", " ").stripSuffix("Z")}'"
-    case ld: java.time.LocalDate => s"DATE '$ld'"
-    case ldt: java.time.LocalDateTime => s"TIMESTAMP '${ldt.toString.replace("T", " ")}'"
-    case other => other.toString
+    case d: java.sql.Date => Some(s"DATE '$d'")
+    case i: java.time.Instant => Some(s"TIMESTAMP '${i.toString.replace("T", " ").stripSuffix("Z")}'")
+    case ld: java.time.LocalDate => Some(s"DATE '$ld'")
+    case ldt: java.time.LocalDateTime => Some(s"TIMESTAMP '${ldt.toString.replace("T", " ")}'")
+    case n: java.lang.Number if !java.lang.Double.isFinite(n.doubleValue) => None
+    case n @ (_: java.lang.Number | _: java.lang.Boolean) => Some(n.toString)
+    case _ => None
   }
 }

@@ -143,8 +143,7 @@ class GraftArrowScanBuilder(endpoint: Endpoint, table: String,
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
-    with SupportsPushDownAggregates
-    with org.apache.spark.internal.Logging {
+    with SupportsPushDownAggregates {
 
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
@@ -205,27 +204,7 @@ class GraftArrowScanBuilder(endpoint: Endpoint, table: String,
       case _ => None // AVG, COUNT(DISTINCT), UDAFs… ⇒ whole query local
     }
     if (calls.exists(_.isEmpty)) return false
-    // endpoint-side group cap (r9): resolved from the session conf at
-    // plan time (driver-side) and shipped with the spec, so executors
-    // never read a conf. Validated HERE, not on executors: a malformed
-    // value warns and falls back; a parseable value < 1 would otherwise
-    // pass plan time and abort mid-query in computeGrouped's require —
-    // clamp it to 1 with a warning instead (r10, per ADVICE)
-    val maxGroups = org.apache.spark.sql.SparkSession.active.conf
-      .getOption(AggSpec.MaxGroupsConfKey) match {
-      case None => AggSpec.DefaultMaxGroupsPerSplit
-      case Some(raw) => raw.toIntOption match {
-        case None =>
-          logWarning(s"${AggSpec.MaxGroupsConfKey}='$raw' is not an int; " +
-            s"using default ${AggSpec.DefaultMaxGroupsPerSplit}")
-          AggSpec.DefaultMaxGroupsPerSplit
-        case Some(n) if n < 1 =>
-          logWarning(s"${AggSpec.MaxGroupsConfKey}=$n is < 1; clamping to 1")
-          1
-        case Some(n) => n
-      }
-    }
-    val spec = AggSpec(calls.flatten, groupCols.flatten, maxGroups)
+    val spec = AggSpec(calls.flatten, groupCols.flatten)
     val fieldsByName = fullSchema.fields.map(f => f.name -> f).toMap
     // decline the WHOLE pushdown if any aggregate folds a type the
     // partial-aggregator can't handle, or any group key isn't

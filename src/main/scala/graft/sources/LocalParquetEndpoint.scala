@@ -172,14 +172,12 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
       case (AggCall("count", _), _) => LongType
       case (AggCall(_, _), i) => sparkSchema.fields(i).dataType
     }
-    val aggFields = agg.calls.zip(types).zipWithIndex.map {
-      case ((c, t), i) => StructField(s"${c.op}_$i", PartialAgg.outputType(c.op, t), nullable = true)
-    }
+    val outSchema = agg.outputSchema(sparkSchema)
     if (agg.groupBy.isEmpty) {
       // compute consumes the rows eagerly, so the reader is exhausted
       // and released here; the explicit close is the cancellation path
       val acc = try PartialAgg.compute(rows, agg.calls, fieldIdx, types) finally close()
-      IpcStream(ArrowBridge.toIpc(Iterator.single(acc), StructType(aggFields)), () => ())
+      IpcStream(ArrowBridge.toIpc(Iterator.single(acc), outSchema), () => ())
     } else {
       // grouped partials (r8): key columns lead the projection, so key
       // ordinal i reads field i; one row per distinct key in the split
@@ -190,9 +188,6 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
       val keyTypes = keyIdx.map(sparkSchema.fields(_).dataType)
       val grouped = PartialAgg.computeGrouped(rows, agg.calls, fieldIdx, types,
         keyIdx, keyTypes, agg.maxGroupsPerSplit)
-      val outSchema = StructType(
-        agg.groupBy.zip(keyTypes).map { case (g, t) => StructField(g, t, nullable = true) } ++
-        aggFields)
       IpcStream(ArrowBridge.toIpc(grouped, outSchema), close)
     }
   }
@@ -216,8 +211,8 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     *
     * The rows are views of the reader's reused batch: a consumer that
     * keeps a value past the next row must copy it ([[PartialAgg]] does).
-    * TIMESTAMP(NANOS) columns decode as raw nanos (the check compares in
-    * that unit) and are emitted rescaled to micros with `/ 1000`. */
+    * TIMESTAMP(NANOS) columns decode as raw nanos (only null tests on
+    * them translate) and are emitted rescaled to micros with `/ 1000`. */
   private def readRows(split: SplitInfo, file: SplitFile,
                        query: QuerySpec): (Iterator[InternalRow], StructType, () => Unit) = {
     // the schema is per-file but uniform across the table
@@ -474,7 +469,9 @@ private[sources] object FooterCache {
   * pruning predicate of a 100 TB log/fact table, and translating them
   * lets the parquet layer skip row groups on min/max stats instead of
   * shipping every row for Spark to re-filter. Values are rescaled to
-  * the column's physical unit (nanos/micros/millis). */
+  * the column's physical unit (micros/millis); comparisons on a
+  * TIMESTAMP(NANOS) column, emitted as truncated micros, stay with
+  * Spark. */
 object ParquetFilters {
   def translate(filters: Array[Filter], schema: MessageType): Option[FilterPredicate] =
     filters.flatMap(one(_, schema)).reduceOption(FilterApi.and)
@@ -485,11 +482,10 @@ object ParquetFilters {
     * leaf keeps a row exactly when Spark's evaluation of it is true.
     * Exact leaves: null tests, and comparisons on signed ints, dates,
     * strings and MICROS or MILLIS timestamps (a MILLIS literal that does
-    * not convert exactly declines translation). Not exact: FLOAT/DOUBLE
-    * leaves, whose row groups parquet prunes on statistics that order
-    * −0.0 before 0.0, and TIMESTAMP(NANOS) leaves, compared in raw nanos
-    * but emitted as truncated micros. `And`/`Or`/`In` are exact when
-    * their leaves are. */
+    * not convert exactly declines translation; TIMESTAMP(NANOS)
+    * comparisons never translate). Not exact: FLOAT/DOUBLE leaves,
+    * whose row groups parquet prunes on statistics that order −0.0
+    * before 0.0. `And`/`Or`/`In` are exact when their leaves are. */
   def exact(f: Filter, schema: MessageType): Boolean =
     one(f, schema).exists(exactLeaves(_, schema))
 
@@ -507,13 +503,8 @@ object ParquetFilters {
     case _ => false
   }
 
-  private def exactColumn(schema: MessageType, c: Operators.Column[_]): Boolean = {
-    val pt = physical(schema, c)
-    pt.getPrimitiveTypeName match {
-      case FLOAT | DOUBLE => false
-      case _ => !unit(pt).contains(LogicalTypeAnnotation.TimeUnit.NANOS)
-    }
-  }
+  private def exactColumn(schema: MessageType, c: Operators.Column[_]): Boolean =
+    !Seq(FLOAT, DOUBLE).contains(physical(schema, c).getPrimitiveTypeName)
 
   /** Whether `p` has an equality or IN leaf on a value: the leaves
     * parquet's dictionary row-group filter drops groups for that the
@@ -692,21 +683,14 @@ object ParquetFilters {
         Some(ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L)
       case _ => None
     }
+    // anything else DECLINES the filter, which stays with Spark: a
+    // truncating us/1000 would push `ts < ...00.0015` as lt(1ms) and
+    // drop the 1ms rows, and NANOS rows are emitted as truncated micros
     micros.flatMap { us =>
       ann.getUnit match {
-        // lossy/overflowing conversions DECLINE the filter (it stays a
-        // Spark-side filter — the documented conservative policy): a
-        // truncating us/1000 on a MILLIS column would push e.g.
-        // `ts < ...00.0015` as lt(1ms) and drop the 1ms rows before
-        // Spark's re-evaluation could see them; NANOS us*1000 overflows
-        // Long past ~year 2262 into a negative bound that excludes
-        // every row.
-        case LogicalTypeAnnotation.TimeUnit.NANOS =>
-          try Some(Math.multiplyExact(us, 1000L))
-          catch { case _: ArithmeticException => None }
         case LogicalTypeAnnotation.TimeUnit.MICROS => Some(us)
-        case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-          if (us % 1000L == 0L) Some(us / 1000L) else None
+        case LogicalTypeAnnotation.TimeUnit.MILLIS if us % 1000L == 0L => Some(us / 1000L)
+        case _ => None
       }
     }.map(java.lang.Long.valueOf)
   }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
-import graft.Loop
 import graft.sources.GraftArrow
 
 /** Structured-streaming operators over the events table (SURVEY.md §2
@@ -87,17 +86,33 @@ object Streams {
     * stream start of every gate.
     *
     * The confs are values a query captures at `start()` (state
-    * partitions, the state store provider). They are session-wide
-    * because no per-query option exists, so they are set in one
-    * [[graft.Loop.withConf]] scope: two starts running at once would
-    * otherwise capture each other's width into their checkpoints, which
-    * cannot change across restarts. A started query keeps its captured
-    * values, so the scope ends at `start()`, never at the query's end. */
+    * partitions, the state store provider); no per-query option
+    * exists, so they are set on the caller's session and restored
+    * around `start()` only, under [[startLock]]: two starts at once
+    * would otherwise capture each other's width into their
+    * checkpoints, which cannot change across restarts.
+    *
+    * Starts stay on the caller's session, not a [[graft.Loop.Isolated]]
+    * clone: `StreamExecution` clones the session itself at
+    * construction; each clone's `StreamingQueryManager` adds a listener
+    * bus to the SparkContext that is never removed (one leaked bus per
+    * gate call); and a `StreamingQueryListener` on the caller's
+    * `spark.streams` would not hear a query started in a clone. */
   private def run(spark: SparkSession, confs: Seq[(String, String)])(
       writer: DataStreamWriter[_]): Unit = {
-    val q = Loop.withConf(spark, confs: _*)(writer.start())
+    val q = startLock.synchronized {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try writer.start()
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
     try q.processAllAvailable() finally q.stop()
   }
+
+  private val startLock = new Object
 
   private val sinks = new java.util.concurrent.atomic.AtomicLong
 

@@ -6,13 +6,15 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Graph, GraphSpec, Pipeline, Text}
-import graft.streaming.Streams
 
 /** [[Loop]]'s two parts: observed metrics with their exact fallback,
-  * and conf scopes that restore what they found. */
+  * and conf scopes that live in a private session clone. */
 class LoopSpec extends SparkSpec {
   private val dir = sf("sf0.001")
 
@@ -82,41 +84,65 @@ class LoopSpec extends SparkSpec {
     assert(unobserved(rows(Pipeline.qualityTrain(spark, dir))) === observed)
   }
 
-  test("withConf restores set keys, unsets absent ones, and nests") {
-    val set = "spark.sql.shuffle.partitions"
-    val absent = "graft.loop.spec.absent"
-    val before = spark.conf.get(set)
-    Loop.withConf(spark, set -> "3", absent -> "x") {
-      assert(spark.conf.get(set) === "3")
-      Loop.withConf(spark, set -> "5") { assert(spark.conf.get(set) === "5") }
-      assert(spark.conf.get(set) === "3" && spark.conf.get(absent) === "x")
+  /** Whether `df` plans adaptively, and the widths of its shuffles. */
+  private def planOf(df: DataFrame): (Boolean, Seq[Int]) = {
+    def widths(p: SparkPlan) =
+      p.collect { case x: ShuffleExchangeExec => x.outputPartitioning.numPartitions }
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => (true, widths(a.executedPlan))
+      case p => (false, widths(p))
     }
-    assert(spark.conf.get(set) === before)
-    assert(spark.conf.getOption(absent).isEmpty)
-    intercept[IllegalStateException] {
-      Loop.withConf(spark, set -> "7") { throw new IllegalStateException }
-    }
-    assert(spark.conf.get(set) === before, "a failing body still restores")
   }
 
-  test("conf scopes restore what they found when two Kleene loops and a stream start run at once") {
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.providerClass")
-    def confState = keys.map(k =>
-      (k, spark.conf.getOption(k), spark.conf.getAll.get(k)))
-    val before = confState
+  private def grouped(df: DataFrame): DataFrame =
+    df.groupBy((col("id") % 13).as("k")).count()
+
+  test("a scope's conf stays in its clone: the caller plans adaptively at its own width meanwhile") {
+    val before = spark.conf.getAll
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(width !== 3)
+    val scope = new Loop.Isolated(spark,
+      "spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "3")
+    val inner = grouped(scope.in(spark.range(0, 1000).toDF()))
+    assert(planOf(inner) === ((false, Seq(3))))
+    assert(planOf(grouped(spark.range(0, 1000).toDF())) === ((true, Seq(width))))
+    assert(spark.conf.getAll === before)
+    // a frame moved back plans with the caller's settings again
+    val back = scope.out(inner)
+    assert(planOf(back) === ((true, Seq(width))))
+    assert(rows(back) === rows(grouped(spark.range(0, 1000).toDF())))
+    assert(spark.conf.getAll === before)
+  }
+
+  test("two Kleene loops, a PageRank and an unrelated query at once: serial results, the caller's conf never changes") {
+    val before = spark.conf.getAll
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def unrelated(): ((Boolean, Seq[Int]), Seq[String], Boolean) = {
+      val df = grouped(spark.range(0, 5000).toDF())
+      (planOf(df), rows(df), spark.conf.getAll == before)
+    }
     val serialKleene = kleeneFixture()
-    val serialWindow = rows(Streams.windowAgg(spark, dir))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    val serialRank = rows(Graph.pagerank(spark, dir))
+    val serialUnrelated = ((true, Seq(width)), rows(grouped(spark.range(0, 5000).toDF())), true)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val go = new CountDownLatch(1)
       val kleenes = Seq.fill(2)(Future { go.await(); kleeneFixture() })
-      val window = Future { go.await(); rows(Streams.windowAgg(spark, dir)) }
+      val rank = Future { go.await(); rows(Graph.pagerank(spark, dir)) }
+      val loops = Future.sequence(kleenes :+ rank)
+      // planned and run again and again while the loops run
+      val others = Future {
+        go.await()
+        Iterator.continually(unrelated()).takeWhile(_ => !loops.isCompleted).toVector :+ unrelated()
+      }
       go.countDown()
       kleenes.foreach(k => assert(Await.result(k, 5.minutes) === serialKleene))
-      assert(Await.result(window, 5.minutes) === serialWindow)
+      assert(Await.result(rank, 5.minutes) === serialRank)
+      val seen = Await.result(others, 5.minutes)
+      assert(seen.size > 1)
+      seen.foreach(u => assert(u === serialUnrelated))
     } finally pool.shutdown()
-    assert(confState === before)
+    assert(spark.conf.getAll === before)
   }
 }

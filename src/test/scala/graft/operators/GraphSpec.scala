@@ -193,7 +193,7 @@ class GraphSpec extends SparkSpec {
     val edges = spark.range(0, 1000).toDF("u")
       .select(col("u"), (col("u") + 1).as("v")).localCheckpoint(true)
     for (aqe <- Seq("true", "false"); bcast <- Seq(false, true))
-        graft.Loop.withConf(spark, "spark.sql.adaptive.enabled" -> aqe) {
+        withConf("spark.sql.adaptive.enabled" -> aqe) {
       val path = s"aqe=$aqe broadcast=$bcast"
       var cur = spark.range(0, 1000).toDF("node")
         .select(col("node"), lit(10000L).as("r")).localCheckpoint(true)

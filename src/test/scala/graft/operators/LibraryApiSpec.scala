@@ -96,28 +96,10 @@ class LibraryApiSpec extends SparkSpec {
       (0L, "a b c d e f", "k"), // benchmark doc: 4 distinct grams > cap 2
       (1L, "a b c d e zz", "k")
     ).toDF("doc_id", "text", "junk")
-    spark.conf.set("graft.bloom.maxGrams", "2")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Pipeline.decontaminateBloom(df)
-      }
-      assert(e.getMessage.contains("bloom"))
-    } finally spark.conf.unset("graft.bloom.maxGrams")
-  }
-
-  test("decontaminateBloom rejects a cap that would overflow limit()'s Int argument") {
-    import spark.implicits._
-    val df = Seq((0L, "a b c d e f", "k"), (1L, "a b c d e zz", "k"))
-      .toDF("doc_id", "text", "junk")
-    // cap + 1 > Int.MaxValue used to truncate negative inside limit();
-    // now it must fail fast with the range message
-    spark.conf.set("graft.bloom.maxGrams", (Int.MaxValue.toLong + 5).toString)
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Pipeline.decontaminateBloom(df)
-      }
-      assert(e.getMessage.contains("graft.bloom.maxGrams"))
-    } finally spark.conf.unset("graft.bloom.maxGrams")
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.decontaminateBloom(df, cap = 2)
+    }
+    assert(e.getMessage.contains("bloom"))
   }
 
   test("simhash drops null-text docs (pinned: native expr, explode plan and oracle diverge)") {

@@ -141,9 +141,14 @@ class GraftArrowSpec extends SparkSpec {
         new org.apache.hadoop.fs.Path(s"$nanosDir/events_ns.parquet"), new Configuration()))
       try r.getFooter.getFileMetaData.getSchema finally r.close()
     }
-    assert(ParquetFilters.translatable(
+    // a NANOS column is emitted as truncated micros, so a comparison
+    // on it stays with Spark; its null tests still translate
+    assert(!ParquetFilters.translatable(
       GreaterThanOrEqual("ts", java.time.LocalDateTime.of(2024, 1, 1, 0, 0)),
-      nanosSchema), "nanos timestamp filter must translate")
+      nanosSchema), "nanos timestamp comparison must not translate")
+    assert(ParquetFilters.translatable(
+      org.apache.spark.sql.sources.IsNotNull("ts"), nanosSchema),
+      "nanos null test must translate")
     // correctness through the source, micros column
     val cut = lit("1996-06-01").cast("timestamp")
     assert(arrow("lineitem").filter(col("l_shipdate") >= cut).count() ===
@@ -162,7 +167,7 @@ class GraftArrowSpec extends SparkSpec {
     import org.apache.hadoop.conf.Configuration
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    import org.apache.spark.sql.sources.LessThan
     def schemaOf(path: String) = {
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(path), new Configuration()))
@@ -173,8 +178,7 @@ class GraftArrowSpec extends SparkSpec {
     // the 1ms rows BEFORE Spark's re-filter could see them
     val tmp = java.nio.file.Files.createTempDirectory("graft-millis").toString
     import spark.implicits._
-    graft.Loop.withConf(spark,
-        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MILLIS") {
+    withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MILLIS") {
       Seq(java.sql.Timestamp.valueOf("2024-01-01 00:00:00.001"),
           java.sql.Timestamp.valueOf("2024-01-01 00:00:00.002"))
         .toDF("ts").repartition(1)
@@ -189,15 +193,6 @@ class GraftArrowSpec extends SparkSpec {
       "sub-ms bound on MILLIS column must decline")
     assert(ParquetFilters.translatable(LessThan("ts", wholeMs), millisSchema),
       "whole-ms bound on MILLIS column is lossless and must translate")
-    // NANOS column: us*1000 overflows Long past ~2262 — the negative
-    // bound would silently exclude every row
-    val eventsSchema = schemaOf(s"$nanosDir/events_ns.parquet")
-    assert(!ParquetFilters.translatable(
-      GreaterThanOrEqual("ts", java.time.LocalDateTime.of(2300, 1, 1, 0, 0)),
-      eventsSchema), "overflowing nanos bound must decline")
-    assert(ParquetFilters.translatable(
-      GreaterThanOrEqual("ts", java.time.LocalDateTime.of(2024, 1, 1, 0, 0)),
-      eventsSchema), "in-range nanos bound still translates")
     // end-to-end: the declined filter still evaluates correctly Spark-side
     val got = GraftArrow.read(spark, tmp, "millis").filter(col("ts") < lit(subMs)).count()
     assert(got === 1L, "the 1ms row must survive (sub-ms bound not truncated away)")
@@ -546,20 +541,28 @@ class GraftArrowSpec extends SparkSpec {
     assert(merged(capped) === merged(uncapped))
     assert(merged(capped) === Map(1L -> ((3L, 100L)), 2L -> ((2L, 70L)), 3L -> ((1L, 40L))))
 
-    // end-to-end: a near-unique group key under a tiny conf'd cap still
-    // answers exactly, and the pushdown stays on (the cap changes the
-    // partial SHAPE, never the plan or the merged answer)
-    graft.Loop.withConf(spark, AggSpec.MaxGroupsConfKey -> "4") {
-      val g = arrow("lineitem").groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sq"),
-          max(col("l_extendedprice")).as("mx"))
-      assert(g.queryExecution.executedPlan.toString.contains("PushedAggregates"),
-        "capped grouped agg should still push")
-      val e = plain("lineitem").groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sq"),
-          max(col("l_extendedprice")).as("mx"))
-      assert(g.collect().map(_.toSeq).toSet === e.collect().map(_.toSeq).toSet)
+    // end-to-end: the endpoint's partials for an unordered group key
+    // under a tiny cap merge to the exact answer (the cap changes the
+    // partial SHAPE, never the merged answer)
+    val ep = new LocalParquetEndpoint(dir)
+    val spec = AggSpec(Seq(AggCall("count_star", ""), AggCall("sum", "l_quantity"),
+      AggCall("max", "l_extendedprice")), Seq("l_partkey"), maxGroupsPerSplit = 4)
+    val q = QuerySpec("lineitem", Array.empty, Array.empty)
+    val partialSchema = spec.outputSchema(ep.schema("lineitem"))
+    val partials = ep.plan("lineitem", q, Long.MaxValue / 4).flatMap { split =>
+      val st = ep.scanAgg(split, q, spec)
+      try org.apache.spark.sql.graft.ArrowBridge.fromIpc(st, partialSchema)
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toVector
+      finally st.close()
     }
+    val mergedEnd = partials.groupBy(_._1).map { case (k, rs) =>
+      (k, rs.map(_._2).sum, rs.map(_._3).sum, rs.map(_._4).max)
+    }.toSet
+    assert(partials.size > mergedEnd.size, "the cap must leave keys uncombined")
+    val expected = plain("lineitem").groupBy(col("l_partkey"))
+      .agg(count(lit(1)), sum(col("l_quantity")), max(col("l_extendedprice")))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
+    assert(mergedEnd === expected)
   }
 
   test("grouped pushdown overflow run-merges: adversarial key order stays sublinear (r10)") {
@@ -701,36 +704,6 @@ class GraftArrowSpec extends SparkSpec {
       assert(expected.nonEmpty && expected.size < FilterRows, s"$f must split the rows")
       assert(scanIds(f) === expected, s"scan under $f")
       assert(aggOf(f) === ((expected.size.toLong, expected.sum)), s"scanAgg under $f")
-    }
-
-    // TIMESTAMP(NANOS): the check compares raw nanos with the bound
-    // rescaled to nanos (row k carries k % 1000 extra nanos, so `=` on
-    // hour k holds only for k % 1000 == 0) and emits micros
-    val nep = new LocalParquetEndpoint(nanosDir)
-    val nSchema = nep.schema("events_ns")
-    def hour(k: Int) = java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusHours(k)
-    def hourNanos(k: Int) = NanosFixture.tsNanos(k) - k % 1000
-    def cmpWith(f: Filter): Long => Boolean = f match {
-      case EqualTo(_, _) => _ == hourNanos(500)
-      case LessThan(_, _) => _ < hourNanos(500)
-      case LessThanOrEqual(_, _) => _ <= hourNanos(500)
-      case GreaterThan(_, _) => _ > hourNanos(500)
-      case GreaterThanOrEqual(_, _) => _ >= hourNanos(500)
-      case In(_, _) => v => v == hourNanos(0) || v == hourNanos(500)
-    }
-    Seq(EqualTo("ts", hour(500)), LessThan("ts", hour(500)), LessThanOrEqual("ts", hour(500)),
-        GreaterThan("ts", hour(500)), GreaterThanOrEqual("ts", hour(500)),
-        In("ts", Array(hour(0), hour(500)))).foreach { f =>
-      val q = QuerySpec("events_ns", Array("event_id", "ts"), Array(f))
-      val got = nep.plan("events_ns", q, Long.MaxValue / 4).flatMap { split =>
-        val st = nep.scan(split, q)
-        try ArrowBridge.fromIpc(st, StructType(q.requiredColumns.map(nSchema(_))))
-          .map(r => (r.getLong(0), r.getLong(1))).toVector
-        finally st.close()
-      }.sortBy(_._1)
-      val want = (0 until NanosFixture.Rows).filter(i => cmpWith(f)(NanosFixture.tsNanos(i)))
-        .map(i => (i.toLong, NanosFixture.tsNanos(i) / 1000L))
-      assert(got === want, s"nanos scan under $f")
     }
   }
 

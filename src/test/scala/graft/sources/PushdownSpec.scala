@@ -29,7 +29,7 @@ class PushdownSpec extends SparkSpec {
     * directory of part files); returns the served directory. */
   private def table(name: String, table: String, df: DataFrame): String = {
     val dir = s"$root/$name"
-    graft.Loop.withConf(spark, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+    withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$table.parquet")
     }
     dir
@@ -134,10 +134,72 @@ class PushdownSpec extends SparkSpec {
       Or(EqualTo("s", "x"), EqualTo("f", 1f)), EqualTo("missing", 1))
     exact.foreach(f => assert(ParquetFilters.exact(f, schema), s"$f should be exact"))
     inexact.foreach(f => assert(!ParquetFilters.exact(f, schema), s"$f should not be exact"))
-    // float, double and NANOS leaves still translate: they prune and
-    // are checked per row, and Spark evaluates them again
-    Seq(EqualTo("f", 0.5f), GreaterThan("dbl", 0.0), LessThan("ns", t0))
+    // float and double leaves still translate: they prune and are
+    // checked per row, and Spark evaluates them again
+    Seq(EqualTo("f", 0.5f), GreaterThan("dbl", 0.0))
       .foreach(f => assert(ParquetFilters.translatable(f, schema), s"$f should translate"))
+    // a NANOS column is emitted as truncated micros: its comparisons
+    // stay with Spark, its null tests translate
+    Seq(LessThan("ns", t0), EqualTo("ns", t0), In("ns", Array(t0)))
+      .foreach(f => assert(!ParquetFilters.translatable(f, schema), s"$f should not translate"))
+    assert(ParquetFilters.translatable(IsNull("ns"), schema))
+  }
+
+  test("comparisons on a TIMESTAMP(NANOS) column keep every row Spark keeps") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.schema.{LogicalTypeAnnotation => L, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    // ten rows at t0 + i µs + 500 ns, read back as t0 + i µs
+    val dir = s"$root/nanos"
+    val schema = Types.buildMessage()
+      .required(INT64).named("id")
+      .required(INT64).as(L.timestampType(false, L.TimeUnit.NANOS)).named("ts")
+      .named("ns")
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    val t0Nanos = t0.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/ns.parquet"))
+      .withConf(conf).withType(schema).build()
+    val gf = new SimpleGroupFactory(schema)
+    try (0 until 10).foreach { i =>
+      writer.write(gf.newGroup().append("id", i.toLong).append("ts", t0Nanos + i * 1000L + 500L))
+    } finally writer.close()
+    val ns = GraftArrow.read(spark, dir, "ns")
+    val t5 = lit(t0.plusNanos(5000))
+    assert(ns.filter(col("ts") <= t5).count() === 6L)
+    assert(ns.filter(col("ts") === t5).count() === 1L)
+    assert(ns.filter(col("ts") > t5).count() === 4L)
+    assert(ns.filter(col("ts").isin(t0.plusNanos(5000), t0.plusNanos(7000))).count() === 2L)
+    assert(ns.filter(col("ts").isNotNull).count() === 10L)
+  }
+
+  test("a literal with no SQL form stays with Spark: BINARY and non-finite filters agree in-process and over HTTP") {
+    import spark.implicits._
+    val dir = table("bin", "bin", Seq(
+        (1L, Array[Byte](1), 1.0), (2L, Array[Byte](3), Double.NaN),
+        (3L, Array[Byte](3, 0), Double.PositiveInfinity), (4L, Array[Byte](7), -1.0))
+      .toDF("id", "b", "x"))
+    Seq(EqualTo("b", Array[Byte](3)), EqualTo("x", Double.NaN), LessThan("x", Double.PositiveInfinity),
+        GreaterThan("x", Double.NegativeInfinity), EqualTo("x", Float.NaN),
+        In("x", Array(1.0, Double.NaN))).foreach { f =>
+      assert(FilterSql.toSql(f).isEmpty, s"$f has no SQL form")
+    }
+    // finite doubles keep theirs, and it parses back to the same value
+    Seq(-0.0, 1e-300, Double.MaxValue, Double.MinPositiveValue).foreach { v =>
+      assert(FilterSql.toSql(EqualTo("x", v)).flatMap(FilterSql.parse) === Some(EqualTo("x", v)))
+    }
+    val preds = Seq(col("b") === lit(Array[Byte](3)), col("x") === lit(Double.NaN),
+      col("x") < lit(Double.PositiveInfinity), col("x") > lit(Double.NegativeInfinity))
+    val want = Seq(1L, 1L, 2L, 4L)
+    val plain = spark.read.parquet(s"$dir/bin.parquet")
+    assert(preds.map(plain.filter(_).count()) === want)
+    assert(preds.map(GraftArrow.read(spark, dir, "bin").filter(_).count()) === want)
+    val server = new GraftHttpServer(dir, authRequired = false).start()
+    try assert(preds.map(GraftArrow.readHttp(spark, server.url, "bin").filter(_).count()) === want)
+    finally server.stop()
   }
 
   test("a pushed timestamp literal goes over the wire at UTC, whatever the JVM's zone") {

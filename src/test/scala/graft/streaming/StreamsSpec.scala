@@ -617,6 +617,35 @@ class StreamsSpec extends SparkSpec {
     }
   }
 
+  test("a listener on the caller's session hears every gate's start and termination, and the conf is restored") {
+    import java.util.UUID
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[UUID]()
+    val terminated = java.util.concurrent.ConcurrentHashMap.newKeySet[UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.id): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = terminated.add(e.id): Unit
+    }
+    val gates = Streams.queries.toSeq.filter(_._1 != "stream_sessionize").sortBy(_._1)
+    val before = spark.conf.getAll
+    spark.streams.addListener(listener)
+    try {
+      gates.foreach { case (name, gate) =>
+        val n = started.size
+        gate(spark, dir)
+        // onQueryStarted is delivered synchronously by start()
+        assert(started.size > n, s"$name: no start event on the caller's session")
+        assert(spark.conf.getAll === before, s"$name: the start's conf was not restored")
+      }
+      // termination events arrive on the listener bus, asynchronously
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!terminated.containsAll(started) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(terminated.containsAll(started), "a gate's query ended unheard")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("drain rethrows a failing query's error, having stopped it and dropped its view") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -39,9 +39,8 @@ import graft.streaming.Streams.{AsofEnriched, AsofState, Event}
 class TransformWithStateSpec extends SparkSpec {
 
   private def withRocksDb[A](body: => A): A =
-    graft.Loop.withConf(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   test("TWS twin reproduces the flatMapGroupsWithState D6 output exactly") {
     import spark.implicits._
