@@ -6,6 +6,7 @@ import scala.concurrent.Await
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.Sessions
 
 /** The iterative operators' shared plumbing, written once:
@@ -15,6 +16,7 @@ import org.apache.spark.sql.graft.Sessions
   *    fires during that job), so a round costs one driver job instead
   *    of the action plus a separate 1-row scan.
   *  - [[Isolated]]: scoped session conf, in a private session clone.
+  *  - [[release]]: a checkpointed frame's blocks freed.
   */
 private[graft] object Loop {
 
@@ -62,6 +64,14 @@ private[graft] object Loop {
     }
     (result, fired.getOrElse(
       exact(result).agg(metrics.head, metrics.tail: _*).head()))
+  }
+
+  /** Free the blocks of a `localCheckpoint`ed frame. `Dataset.unpersist`
+    * drops cache-manager entries only, and a checkpoint is none: its
+    * blocks belong to the RDD the frame's plan scans, which stays
+    * persisted until unpersisted itself. */
+  def release(checkpoint: DataFrame): Unit = checkpoint.queryExecution.logical match {
+    case l: LogicalRDD => l.rdd.unpersist(blocking = false): Unit
   }
 
   /** A private session clone (same SparkContext; a copy of `caller`'s

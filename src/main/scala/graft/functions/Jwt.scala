@@ -89,9 +89,9 @@ class LocalAuthProvider(secret: String,
 
 /** Provider registry backing the `dd_login` SQL function: the url
   * argument selects a provider (the reference would POST to
-  * `url/v1/login`; here it's an in-process lookup — zero egress). The
-  * clock is injectable so login output can be made deterministic for
-  * the correctness gate. Single-JVM registry; on a multi-executor
+  * `url/v1/login`; here it's an in-process lookup — zero egress). A
+  * call can pin its clock ([[resolveCall]]) for deterministic login
+  * output in the correctness gate. Single-JVM registry; on a multi-executor
   * cluster login evaluates wherever the expression runs, so providers
   * must be constructible from configuration shipped with the job. */
 object GraftAuth {
@@ -101,15 +101,11 @@ object GraftAuth {
   @volatile private var providers: Map[String, AuthProvider] = Map(
     DefaultUrl -> new LocalAuthProvider(DefaultSecret,
       Map("admin" -> "admin", "alice" -> "pw1")))
-  @volatile private var clock: () => Long = () => System.currentTimeMillis() / 1000
 
   def register(url: String, p: AuthProvider): Unit =
     synchronized { providers = providers + (url -> p) }
   def resolve(url: String): Option[AuthProvider] = providers.get(url)
-  def nowSec(): Long = clock()
-  /** Pin the clock (deterministic tokens); pass None to restore. */
-  def fixClock(at: Option[Long]): Unit =
-    clock = at.fold(() => System.currentTimeMillis() / 1000)(t => () => t)
+  def nowSec(): Long = System.currentTimeMillis() / 1000
 
   /** Resolve a login-call URL of the form `base[?clock=<epochSec>]`.
     * The optional clock query parameter pins the mint time for THAT

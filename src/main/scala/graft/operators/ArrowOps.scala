@@ -7,10 +7,10 @@ import graft.Loop
 import graft.sources.{CancelPollMonitor, GraftArrow, GraftHttpServers, HttpEndpoint}
 
 /** Oracle-checked entries for the graft-arrow DSv2 source (SURVEY.md §2
-  * A1–A6): the same rows must come back through endpoint → Arrow IPC →
-  * bridge as a plain SQL scan of the parquet file produces. The oracle
-  * is deliberately the *plain* query — pushdown must be semantically
-  * invisible. */
+  * A1–A6): the same rows must come back through the endpoint (over
+  * HTTP: Arrow IPC and the bridge) as a plain SQL scan of the parquet
+  * file produces. The oracle is the *plain* query on purpose — pushdown
+  * must be semantically invisible. */
 object ArrowOps {
 
   /** A1–A3: projected + filtered scan through the endpoint. */

@@ -86,9 +86,11 @@ object Graph {
             col("r").as("rank_ppm"))
           .orderBy(col("rank_ppm").desc, col("node_type"), col("key"))
           .limit(PrTopK)
-          .localCheckpoint(true) // bounded: PrTopK rows
-        (top, ())
-      } finally deg.unpersist(false)
+        // bounded (PrTopK rows): a local relation of the collected rows
+        // holds no persisted RDD for the caller to release
+        val rows = java.util.Arrays.asList(top.collect(): _*)
+        (top.sparkSession.createDataFrame(rows, top.schema), ())
+      } finally Loop.release(deg)
     }._1
   }
 
@@ -388,8 +390,8 @@ object Graph {
       scope.set("spark.sql.shuffle.partitions" -> p.toString)
       val ew = ewRaw.repartition(p, col("u")).localCheckpoint(true)
       try body(ew) match { case (df, b) => (scope.out(df), b) }
-      finally ew.unpersist(false)
-    } finally ewRaw.unpersist(false)
+      finally Loop.release(ew)
+    } finally Loop.release(ewRaw)
   }
 
   /** The DISTRIBUTED Kleene loop (C55's engine) — [[kleene]] with the

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.Locale
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -13,10 +14,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * API in /root/reference/src/http/split_info.cpp).
   *
   * An endpoint can describe a table, plan a split set for a scan, and
-  * stream each split back as Arrow IPC record-batch messages. The only
-  * in-repo implementation is [[LocalParquetEndpoint]] (zero egress); an
-  * HTTP implementation would speak the same trait over the reference's
-  * REST protocol.
+  * read each split back as Spark rows: in process
+  * ([[LocalParquetEndpoint]]), or over the reference's REST protocol
+  * ([[HttpEndpoint]]), the only place rows cross Arrow IPC.
   */
 trait Endpoint extends Serializable {
   /** Table schema, as Spark types. */
@@ -35,18 +35,16 @@ trait Endpoint extends Serializable {
     * reference's `split_size` named parameter). */
   def plan(table: String, query: QuerySpec, splitSizeBytes: Long): Seq[SplitInfo]
 
-  /** Stream one split as Arrow IPC record-batch message bytes. The
-    * caller MUST close() the stream (Spark does, via
-    * PartitionReader.close) — exhaustion also releases resources, but
-    * early-terminated scans (limit/take/cancelled tasks) only release
-    * through close(). */
-  def scan(split: SplitInfo, query: QuerySpec): IpcStream
-
-  /** Stream the partial-aggregate row for one split (aggregation
-    * pushdown, reference optimizer/aggregation_pushdown.cpp: partials
-    * are merged across splits by the caller — here, by Spark's final
-    * aggregation). */
-  def scanAgg(split: SplitInfo, query: QuerySpec, agg: AggSpec): IpcStream
+  /** Read one split: its rows of `query`'s projection, or with `agg`
+    * its partial-aggregate rows ([[AggSpec.outputSchema]]; reference
+    * optimizer/aggregation_pushdown.cpp: partials are merged across
+    * splits by the caller — here, by Spark's final aggregation). A row
+    * may be a view that the next one overwrites. The caller MUST
+    * close() the rows (Spark does, via PartitionReader.close) —
+    * exhaustion also releases resources, but early-terminated scans
+    * (limit/take/cancelled tasks) only release through close(). */
+  def read(split: SplitInfo, query: QuerySpec,
+           agg: Option[AggSpec]): CloseableIterator[InternalRow]
 }
 
 /** Token-enforcing endpoint decorator — the server side of the
@@ -71,25 +69,23 @@ class AuthEndpoint(inner: Endpoint, secret: String,
   override def plan(table: String, query: QuerySpec, splitSizeBytes: Long): Seq[SplitInfo] = {
     check(); inner.plan(table, query, splitSizeBytes)
   }
-  override def scan(split: SplitInfo, query: QuerySpec): IpcStream = {
-    check(); inner.scan(split, query)
-  }
-  override def scanAgg(split: SplitInfo, query: QuerySpec, agg: AggSpec): IpcStream = {
-    check(); inner.scanAgg(split, query, agg)
+  override def read(split: SplitInfo, query: QuerySpec,
+                    agg: Option[AggSpec]): CloseableIterator[InternalRow] = {
+    check(); inner.read(split, query, agg)
   }
 }
 
-/** An Arrow-IPC message stream that owns upstream resources (open
-  * parquet readers here; an HTTP response there). close() is idempotent
-  * and safe at any point of consumption. */
-trait IpcStream extends Iterator[Array[Byte]] with AutoCloseable
+/** An iterator that owns upstream resources (open parquet readers
+  * here; an HTTP response there). close() is idempotent and safe at
+  * any point of consumption. */
+trait CloseableIterator[A] extends Iterator[A] with AutoCloseable
 
-object IpcStream {
-  def apply(it: Iterator[Array[Byte]], onClose: () => Unit): IpcStream =
-    new IpcStream {
+object CloseableIterator {
+  def apply[A](it: Iterator[A], onClose: () => Unit): CloseableIterator[A] =
+    new CloseableIterator[A] {
       private val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
       override def hasNext: Boolean = it.hasNext
-      override def next(): Array[Byte] = it.next()
+      override def next(): A = it.next()
       override def close(): Unit = if (closed.compareAndSet(false, true)) onClose()
     }
 }
@@ -140,7 +136,7 @@ case class AggSpec(calls: Seq[AggCall], groupBy: Seq[String] = Nil,
     s"SELECT $select FROM $table${FilterSql.toWhere(filters)}$group"
   }
 
-  /** The partial-row schema this spec's scanAgg streams: group-by
+  /** The partial-row schema of this spec's split reads: group-by
     * columns first (original names/types), then one partial per
     * aggregate call — the contract Spark's final aggregation merges.
     * Shared by the scan builder and the HTTP server so the wire schema

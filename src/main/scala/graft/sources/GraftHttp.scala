@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.ArrowBridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -360,14 +361,20 @@ class GraftHttpServer(dir: String,
         throw new BadRequest(s"graft-http: unparseable $param clause: $text"))
     }
 
-  /** The query a split or plan request describes: `where` and `exact`
-    * filters both apply, and the `exact` ones must apply exactly. */
+  /** The query a split, probe or plan request describes: `where` and
+    * `exact` filters both apply, and the `exact` ones must apply exactly. */
   private def querySpec(p: Map[String, String], table: String): QuerySpec = {
     val cols = p.get("cols").filter(_.nonEmpty)
       .map(_.split(',').toArray[String]).getOrElse(Array.empty[String])
     val exact = parsedFilters(p, "exact")
     QuerySpec(table, cols, parsedFilters(p, "where") ++ exact, exact)
   }
+
+  /** The columns of `full` that `spec` reads: all of them when it
+    * names none. */
+  private def projected(full: StructType, spec: QuerySpec): StructType =
+    if (spec.requiredColumns.isEmpty) full
+    else StructType(spec.requiredColumns.map(c => full(full.fieldIndex(c))))
 
   /** GET /v1/exact?table=…|sql=…&filters=<JSON array of SQL conditions>
     * → `{"exact":[…]}`: per condition, whether this server applies it
@@ -455,21 +462,16 @@ class GraftHttpServer(dir: String,
       // schema probe: schema message + EOS, no scan (the reference
       // binds schema by reading the stream header)
       val (ep, table) = endpointFor(p)
-      val fullSchema = ep.schema(table)
-      val cols = p.get("cols").filter(_.nonEmpty)
-        .map(_.split(',').toArray[String]).getOrElse(Array.empty[String])
-      val projected =
-        if (cols.isEmpty) fullSchema
-        else StructType(cols.map(c => fullSchema(fullSchema.fieldIndex(c))))
+      val schema = projected(ep.schema(table), querySpec(p, table))
       ex.getResponseHeaders.set("Content-Type", ArrowContentType)
       ex.sendResponseHeaders(200, 0)
       val out = ex.getResponseBody
-      ArrowBridge.writeIpcStream(projected, Iterator.empty, out)
+      ArrowBridge.writeIpcStream(schema, Iterator.empty, out)
       out.close()
       return
     }
 
-    val (schema: StructType, ipc: IpcStream) =
+    val (schema: StructType, rows: CloseableIterator[InternalRow]) =
       if (structured) {
         // exact split scan — the sidecar params carry the parsed form
         val (ep, table) = endpointFor(p)
@@ -479,10 +481,6 @@ class GraftHttpServer(dir: String,
         // resolution (for `sql :=`, no re-materialization) per split
         val fullSchema = LocalParquetEndpoint.fileSchema(file)
         val spec = querySpec(p, table)
-        val cols = spec.requiredColumns
-        val projected =
-          if (cols.isEmpty) fullSchema
-          else StructType(cols.map(c => fullSchema(fullSchema.fieldIndex(c))))
         val split = SplitInfo(
           endpoint = file, queryId = queryId, producerId = "graft-http",
           query = p.getOrElse("q", ""), queryChecksum = "",
@@ -492,12 +490,10 @@ class GraftHttpServer(dir: String,
           startByte = p.get("start").flatMap(_.toLongOption).getOrElse(0L),
           endByte = p.get("end").flatMap(_.toLongOption).getOrElse(Long.MaxValue),
           rowCount = 0L)
-        p.get("agg").map(j => AggSpec.fromJson(j).getOrElse(
-          throw new BadRequest(s"unparseable agg spec: $j"))) match {
-          case Some(agg) =>
-            (agg.outputSchema(fullSchema), ep.scanAgg(split, spec, agg))
-          case None => (projected, ep.scan(split, spec))
-        }
+        val agg = p.get("agg").map(j => AggSpec.fromJson(j).getOrElse(
+          throw new BadRequest(s"unparseable agg spec: $j")))
+        (agg.fold(projected(fullSchema, spec))(_.outputSchema(fullSchema)),
+          ep.read(split, spec, agg))
       } else {
         // free-form q: the server's engine executes it and streams the
         // whole result — the reference's plain (non-split) dd_read_arrow
@@ -506,12 +502,13 @@ class GraftHttpServer(dir: String,
         val sqlEp = new SqlEndpoint(dir, q)
         val schema = sqlEp.schema(null)
         val qs = QuerySpec(s"($q)", schema.fieldNames, Array.empty)
-        val splits = sqlEp.plan(null, qs, Long.MaxValue)
-        val streams = splits.map(s => () => sqlEp.scan(s, qs))
-        var current: IpcStream = null
-        val it = streams.iterator.flatMap { open => current = open(); current }
-        (schema, IpcStream(it, () => Option(current).foreach(_.close())))
+        var current: CloseableIterator[InternalRow] = null
+        val all = sqlEp.plan(null, qs, Long.MaxValue).iterator.flatMap { s =>
+          current = sqlEp.read(s, qs, None); current
+        }
+        (schema, CloseableIterator(all, () => Option(current).foreach(_.close())))
       }
+    val ipc = ArrowBridge.toIpc(rows, schema)
 
     active.incrementAndGet()
     if (queryId >= 0) streamOpened(queryId, nonce)
@@ -537,7 +534,7 @@ class GraftHttpServer(dir: String,
         aborted.incrementAndGet()
         throw e
     } finally {
-      ipc.close()
+      rows.close()
       if (queryId >= 0) streamClosed(queryId, nonce)
       active.decrementAndGet()
     }
@@ -671,7 +668,7 @@ class HttpEndpoint(baseUrl: String, token: Option[String],
     * whole split cleanly and re-enters the failover ladder from the
     * top. */
   private def streamSplit(split: SplitInfo, query: QuerySpec,
-                          agg: Option[AggSpec]): IpcStream = {
+                          agg: Option[AggSpec]): (StructType, CloseableIterator[Array[Byte]]) = {
     val aggParam = agg.map(a => s"&agg=${enc(AggSpec.toJson(a))}").getOrElse("")
     val path =
       s"/v1/query?${commonParams(query)}&id=${split.queryId}" +
@@ -681,16 +678,17 @@ class HttpEndpoint(baseUrl: String, token: Option[String],
         s"&start=${split.startByte}&end=${split.endByte}$aggParam"
     val hosts = ((if (split.endpoint.startsWith("http")) Seq(split.endpoint)
                   else Seq(base)) ++ split.altEndpoints).distinct
-    def openHost(at: String): (HttpURLConnection, Iterator[Array[Byte]]) = {
+    def openHost(at: String): (HttpURLConnection, StructType, Iterator[Array[Byte]]) = {
       val conn = checked(openAt(at, path, ArrowContentType))
-      // strict framing (r15): EOF without the end-of-stream marker is
-      // an ERROR — a producer dying mid-stream must never read as a
-      // short-but-valid result (silent truncation at scale)
-      (conn, ArrowBridge.strictBatchesFromStream(
-        java.nio.channels.Channels.newChannel(conn.getInputStream)))
+      val in = java.nio.channels.Channels.newChannel(conn.getInputStream)
+      // the schema message, then strict framing (r15): EOF without the
+      // end-of-stream marker is an ERROR — a producer dying mid-stream
+      // must never read as a short-but-valid result (silent truncation)
+      val schema = ArrowBridge.readStreamSchema(in)
+      (conn, schema, ArrowBridge.strictBatchesFromStream(in))
     }
     var hostIdx = 0
-    var current: (HttpURLConnection, Iterator[Array[Byte]]) = null
+    var current: (HttpURLConnection, StructType, Iterator[Array[Byte]]) = null
     // producer-cancel poll (r15, cancel_monitor.cpp parity): register
     // this stream's (url, token, id, nonce) with the per-JVM monitor;
     // the poll follows failover via handle.url, and onCancel breaks a
@@ -742,26 +740,47 @@ class HttpEndpoint(baseUrl: String, token: Option[String],
             openNext()
             body
         }
-      override def hasNext: Boolean = { checkCancelled(); guard(current._2.hasNext) }
+      override def hasNext: Boolean = { checkCancelled(); guard(current._3.hasNext) }
       override def next(): Array[Byte] = {
         checkCancelled()
-        val b = guard(current._2.next())
+        val b = guard(current._3.next())
         delivered = true
         b
       }
     }
-    IpcStream(it, () => {
+    (current._2, CloseableIterator(it, () => {
       CancelPollMonitor.unregister(handle)
       Option(current).foreach(_._1.disconnect())
-    })
+    }))
   }
 
-  override def scan(split: SplitInfo, query: QuerySpec): IpcStream =
-    streamSplit(split, query, None)
+  /** One split's Arrow IPC record-batch messages as they come off the
+    * wire, the stream's schema message skipped. */
+  def scan(split: SplitInfo, query: QuerySpec): CloseableIterator[Array[Byte]] =
+    streamSplit(split, query, None)._2
 
-  override def scanAgg(split: SplitInfo, query: QuerySpec,
-                       agg: AggSpec): IpcStream =
-    streamSplit(split, query, Some(agg))
+  /** One split's rows, decoded with the schema message at the stream's
+    * head. A close before the end-of-stream marker (a limit, a killed
+    * or failed task) also fires the reference's best-effort server-side
+    * cancel (cancel_monitor.cpp): the disconnect alone stops the stream
+    * at the server's next write, but an explicit /v1/cancel releases it
+    * at the next FRAME even if the socket buffers would have absorbed
+    * more (r14, verdict slate #2b). The cancel names this split only:
+    * the plan's other splits (a limit written through a sink reads them
+    * side by side) run on. */
+  override def read(split: SplitInfo, query: QuerySpec,
+                    agg: Option[AggSpec]): CloseableIterator[InternalRow] = {
+    val (schema, wire) = streamSplit(split, query, agg)
+    val rows = ArrowBridge.fromIpc(wire, schema)
+    var ended = false
+    CloseableIterator(new Iterator[InternalRow] {
+      override def hasNext: Boolean = rows.hasNext || { ended = true; false }
+      override def next(): InternalRow = rows.next()
+    }, () => {
+      wire.close()
+      if (!ended) cancelQuery(split.queryId, split.nonce, Some(split.splitId))
+    })
+  }
 
   /** Best-effort server-side cancel of a (query id, plan nonce)
     * (arrow_http_client.cpp:170-199: errors ignored). The nonce scopes

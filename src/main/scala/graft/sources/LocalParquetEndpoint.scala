@@ -30,8 +30,8 @@ import scala.jdk.CollectionConverters._
 /** The in-process Arrow endpoint over a directory of parquet tables —
   * the zero-egress stand-in for a DazzleDuck server (SURVEY.md §6): it
   * executes the pushed projection + filters against
-  * `<dir>/<table>.parquet` and streams Arrow IPC record batches, just
-  * like the reference server answers `dd_read_arrow`'s HTTP query.
+  * `<dir>/<table>.parquet` and hands each split's rows to the caller, as
+  * the reference server answers `dd_read_arrow`'s HTTP query.
   *
   * Pushdown is real, not cosmetic: splits are decoded column-wise by
   * Spark's vectorized parquet reader, the projection becomes its
@@ -128,12 +128,12 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     }
   }
 
-  // ------------------------------------------------------------- scan
-  override def scan(split: SplitInfo, query: QuerySpec): IpcStream = {
+  // ------------------------------------------------------------- read
+  override def read(split: SplitInfo, query: QuerySpec,
+                    agg: Option[AggSpec]): CloseableIterator[InternalRow] = {
     val file = splitFile(split.endpoint)
     requireExact(query, file)
-    val (rows, sparkSchema, close) = readRows(split, file, query)
-    IpcStream(ArrowBridge.toIpc(rows, sparkSchema), close)
+    agg.fold(readRows(split, file, query)._1)(readAgg(split, file, query, _))
   }
 
   /** A filter the client dropped from its plan as exact must be exact
@@ -147,16 +147,14 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
         inexact.map(f => FilterSql.toSql(f).getOrElse(f.toString)).mkString(", "))
   }
 
-  override def scanAgg(split: SplitInfo, query: QuerySpec,
-                       agg: AggSpec): IpcStream = {
+  private def readAgg(split: SplitInfo, file: SplitFile, query: QuerySpec,
+                      agg: AggSpec): CloseableIterator[InternalRow] = {
     // STRICT filtering contract (r14): a raw scan may return rows a
     // filter not marked exact rejects (the client re-evaluates those —
     // the DSv2 contract), but a partial AGGREGATE over such rows is
     // silently wrong, so every filter must translate to a parquet
     // predicate the endpoint applies here, or the request is refused
     // loudly.
-    val file = splitFile(split.endpoint)
-    requireExact(query, file)
     val fsch = file.footer.getFileMetaData.getSchema
     val unapplied = query.filters.filterNot(ParquetFilters.translatable(_, fsch))
     if (unapplied.nonEmpty) throw new UnsupportedOperationException(
@@ -164,7 +162,7 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
         s"cannot apply: ${unapplied.mkString(", ")}")
     val aggCols = agg.calls.collect { case AggCall(op, c) if op != "count_star" => c }.distinct
     val cols = (agg.groupBy ++ aggCols.filterNot(agg.groupBy.contains)).toSeq
-    val (rows, sparkSchema, close) = readRows(split, file, query.copy(requiredColumns = cols.toArray))
+    val (rows, sparkSchema) = readRows(split, file, query.copy(requiredColumns = cols.toArray))
     val idx = cols.zipWithIndex.toMap
     val fieldIdx = agg.calls.map(c => if (c.op == "count_star") -1 else idx(c.column))
     val types = agg.calls.zip(fieldIdx).map {
@@ -172,30 +170,28 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
       case (AggCall("count", _), _) => LongType
       case (AggCall(_, _), i) => sparkSchema.fields(i).dataType
     }
-    val outSchema = agg.outputSchema(sparkSchema)
     if (agg.groupBy.isEmpty) {
       // compute consumes the rows eagerly, so the reader is exhausted
       // and released here; the explicit close is the cancellation path
-      val acc = try PartialAgg.compute(rows, agg.calls, fieldIdx, types) finally close()
-      IpcStream(ArrowBridge.toIpc(Iterator.single(acc), outSchema), () => ())
+      val acc = try PartialAgg.compute(rows, agg.calls, fieldIdx, types) finally rows.close()
+      CloseableIterator(Iterator.single(acc), () => ())
     } else {
       // grouped partials (r8): key columns lead the projection, so key
       // ordinal i reads field i; one row per distinct key in the split
       // up to the r9 cap, then streamed singleton partials. The
       // iterator is lazy over the reader, so the close rides the
-      // IpcStream like a raw scan (exhaustion or caller close)
+      // returned rows like a raw read (exhaustion or caller close)
       val keyIdx = agg.groupBy.indices
       val keyTypes = keyIdx.map(sparkSchema.fields(_).dataType)
-      val grouped = PartialAgg.computeGrouped(rows, agg.calls, fieldIdx, types,
-        keyIdx, keyTypes, agg.maxGroupsPerSplit)
-      IpcStream(ArrowBridge.toIpc(grouped, outSchema), close)
+      CloseableIterator(PartialAgg.computeGrouped(rows, agg.calls, fieldIdx, types,
+        keyIdx, keyTypes, agg.maxGroupsPerSplit), () => rows.close())
     }
   }
 
   /** Read the split's rows with projection + filter applied at the
     * source, through Spark's vectorized parquet reader over the split's
-    * byte range. The third element closes the reader (idempotent —
-    * exhaustion also triggers it).
+    * byte range, and their schema. Closing the rows closes the reader
+    * (exhaustion also does).
     *
     * The translated filter goes to the reader, which skips row groups on
     * their statistics (and on their dictionaries, when the filter has an
@@ -214,7 +210,7 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
     * TIMESTAMP(NANOS) columns decode as raw nanos (only null tests on
     * them translate) and are emitted rescaled to micros with `/ 1000`. */
   private def readRows(split: SplitInfo, file: SplitFile,
-                       query: QuerySpec): (Iterator[InternalRow], StructType, () => Unit) = {
+                       query: QuerySpec): (CloseableIterator[InternalRow], StructType) = {
     // the schema is per-file but uniform across the table
     val SplitFile(status, footer) = file
     val fs = footer.getFileMetaData.getSchema
@@ -337,7 +333,7 @@ class LocalParquetEndpoint(dir: String) extends Endpoint {
         out.getRow(rowId - 1)
       }
     }
-    (it, sparkSchema, closeOnce)
+    (CloseableIterator(it, closeOnce), sparkSchema)
   }
 
   /** Reader configuration: Spark's parquet read support with the

@@ -30,10 +30,10 @@ import graft.sources.GraftHttpProtocol.BadRequest
   *
   * Scale posture: only driver-side schema()/exactFilters()/plan()
   * trigger the one-time server execution; executors never do —
-  * scan()/scanAgg() resolve the part file from SplitInfo.endpoint alone
-  * (inherited behavior). On a
-  * real deployment the materialized result lives server-side and this
-  * class is replaced by the HTTP endpoint speaking the same trait.
+  * read() resolves the part file from SplitInfo.endpoint alone
+  * (inherited behavior). On a real deployment the materialized result
+  * lives server-side and the client reads it through [[HttpEndpoint]],
+  * which speaks the same trait.
   */
 class SqlEndpoint(dir: String, sqlQuery: String)
     extends LocalParquetEndpoint(SqlEndpoint.cacheRoot) {

@@ -45,6 +45,14 @@ class GraphSpec extends SparkSpec {
     assert(keys === keys.sorted)
   }
 
+  test("pagerank leaves no persisted RDD behind for its caller") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val top = Graph.pagerank(spark, dir)
+    val gained = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(gained.isEmpty, s"pagerank left persisted RDDs $gained")
+    assert(top.collect().length === 20)
+  }
+
   private def corpusRanks() =
     Graph.pagerank(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toList

@@ -356,11 +356,10 @@ class GraftArrowSpec extends SparkSpec {
     assert(spark.table(name).count() === p.count())
   }
 
-  /** Rows of one split scan, decoded and copied. */
-  private def scanned(ep: Endpoint, split: SplitInfo, q: QuerySpec,
-                      schema: org.apache.spark.sql.types.StructType) = {
-    val st = ep.scan(split, q)
-    try org.apache.spark.sql.graft.ArrowBridge.fromIpc(st, schema).map(_.copy()).toVector
+  /** Rows of one split read, copied. */
+  private def scanned(ep: Endpoint, split: SplitInfo, q: QuerySpec) = {
+    val st = ep.read(split, q, None)
+    try st.map(_.copy()).toVector
     finally st.close()
   }
 
@@ -369,9 +368,8 @@ class GraftArrowSpec extends SparkSpec {
     val ep = new LocalParquetEndpoint(tmp)
     def ids(): Seq[Long] = {
       val q = QuerySpec("t", Array("id"), Array.empty)
-      val schema = ep.schema("t")
       ep.plan("t", q, 1L << 30)
-        .flatMap(s => scanned(ep, s, q, org.apache.spark.sql.types.StructType(Seq(schema("id")))))
+        .flatMap(s => scanned(ep, s, q))
         .map(_.getLong(0)).sorted
     }
     LineitemFixture.writeSingleFile(spark.range(100).selectExpr("id", "id * 2 AS v"),
@@ -409,7 +407,6 @@ class GraftArrowSpec extends SparkSpec {
     assert(kept <= 4, s"the key range should prune row groups, keeps $kept of ${keyRanges.size}")
     val cols = Seq("l_orderkey", "l_linenumber", "l_quantity")
     val q = QuerySpec("li", cols.toArray, Array.empty)
-    val schema = org.apache.spark.sql.types.StructType(cols.map(ep.schema("li")(_)))
     val pred = col("l_orderkey") > lo && col("l_orderkey") <= hi
     val p = spark.read.parquet(file.toString).filter(pred).select(cols.map(col): _*)
     // one split per row group, and splits of several row groups
@@ -417,7 +414,7 @@ class GraftArrowSpec extends SparkSpec {
       val plan = ep.plan("li", q, splitSize)
       assert(plan.count(_.rowGroups.head > 0) >= 4, s"splits past row group 0 at $splitSize")
       // each split decodes exactly its own row groups
-      plan.foreach(s => assert(scanned(ep, s, q, schema).size === s.rowCount, s"split $s"))
+      plan.foreach(s => assert(scanned(ep, s, q).size === s.rowCount, s"split $s"))
       val a = GraftArrow.read(spark, liDir, "li", splitSize = splitSize)
         .filter(pred).select(cols.map(col): _*)
       assert(a.count() === p.count())
@@ -426,9 +423,8 @@ class GraftArrowSpec extends SparkSpec {
     // TIMESTAMP(NANOS) rows decode through the handed footer too
     val nep = new LocalParquetEndpoint(nanosDir)
     val nq = QuerySpec("events_ns", Array("event_id", "ts"), Array.empty)
-    val nSchema = nep.schema("events_ns")
     val got = nep.plan("events_ns", nq, 1L)
-      .flatMap(s => scanned(nep, s, nq, nSchema).map(r => (r.getLong(0), r.getLong(1))))
+      .flatMap(s => scanned(nep, s, nq).map(r => (r.getLong(0), r.getLong(1))))
       .sortBy(_._1)
     assert(got === (0 until NanosFixture.Rows).map(i => (i.toLong, NanosFixture.tsNanos(i) / 1000L)))
   }
@@ -438,13 +434,11 @@ class GraftArrowSpec extends SparkSpec {
     val ep = new LocalParquetEndpoint(liDir)
     val q = QuerySpec("li", Array("l_orderkey", "l_quantity"),
       Array(org.apache.spark.sql.sources.LessThan("l_quantity", 10.0)))
-    val schema = ep.schema("li")
     val plan = ep.plan("li", q, 1L << 20)
     val warm = FooterCache.reads
-    val rows = plan.take(3).map(s => scanned(ep, s, q,
-      org.apache.spark.sql.types.StructType(q.requiredColumns.map(schema(_)))).size).sum
+    val rows = plan.take(3).map(s => scanned(ep, s, q).size).sum
     assert(rows > 0)
-    val agg = ep.scanAgg(plan(1), q, AggSpec(Seq(AggCall("count_star", ""))))
+    val agg = ep.read(plan(1), q, Some(AggSpec(Seq(AggCall("count_star", "")))))
     try assert(agg.nonEmpty) finally agg.close()
     assert(FooterCache.reads === warm, "a split scan on a warm cache parsed a footer")
     // a fresh file: schema, plan and scan share one parse
@@ -453,8 +447,8 @@ class GraftArrowSpec extends SparkSpec {
     val tep = new LocalParquetEndpoint(tmp)
     val cold = FooterCache.reads
     val tq = QuerySpec("t", Array("id"), Array.empty)
-    val tSchema = tep.schema("t")
-    assert(tep.plan("t", tq, 1L << 30).map(s => scanned(tep, s, tq, tSchema).size).sum === 10)
+    assert(tep.schema("t").fieldNames.toSeq === Seq("id"))
+    assert(tep.plan("t", tq, 1L << 30).map(s => scanned(tep, s, tq).size).sum === 10)
     assert(FooterCache.reads === cold + 1)
   }
 
@@ -548,11 +542,9 @@ class GraftArrowSpec extends SparkSpec {
     val spec = AggSpec(Seq(AggCall("count_star", ""), AggCall("sum", "l_quantity"),
       AggCall("max", "l_extendedprice")), Seq("l_partkey"), maxGroupsPerSplit = 4)
     val q = QuerySpec("lineitem", Array.empty, Array.empty)
-    val partialSchema = spec.outputSchema(ep.schema("lineitem"))
     val partials = ep.plan("lineitem", q, Long.MaxValue / 4).flatMap { split =>
-      val st = ep.scanAgg(split, q, spec)
-      try org.apache.spark.sql.graft.ArrowBridge.fromIpc(st, partialSchema)
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toVector
+      val st = ep.read(split, q, Some(spec))
+      try st.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toVector
       finally st.close()
     }
     val mergedEnd = partials.groupBy(_._1).map { case (k, rs) =>
@@ -630,7 +622,6 @@ class GraftArrowSpec extends SparkSpec {
 
   test("the per-row filter check equals the parquet record filter, per type, nulls present") {
     import org.apache.spark.sql.Column
-    import org.apache.spark.sql.graft.ArrowBridge
     import org.apache.spark.sql.sources._
     import org.apache.spark.sql.types._
     val ep = new LocalParquetEndpoint(filterDir)
@@ -651,24 +642,22 @@ class GraftArrowSpec extends SparkSpec {
       case And(l, r) => toCol(l) && toCol(r)
       case Or(l, r) => toCol(l) || toCol(r)
     }
-    val idSchema = StructType(Seq(StructField("id", LongType)))
-    val aggSchema = StructType(Seq(StructField("n", LongType), StructField("s", LongType)))
     val agg = AggSpec(Seq(AggCall("count_star", ""), AggCall("sum", "id")))
     // the endpoint's rows: only `id` is projected, so the filter
     // column rides past the emitted ordinals
     def scanIds(f: Filter): Vector[Long] = {
       val q = QuerySpec("typed", Array("id"), Array(f))
       ep.plan("typed", q, 16 * 1024).toVector.flatMap { split =>
-        val st = ep.scan(split, q)
-        try ArrowBridge.fromIpc(st, idSchema).map(_.getLong(0)).toVector finally st.close()
+        val st = ep.read(split, q, None)
+        try st.map(_.getLong(0)).toVector finally st.close()
       }.sorted
     }
     def aggOf(f: Filter): (Long, Long) = {
       val q = QuerySpec("typed", Array.empty, Array(f))
       ep.plan("typed", q, 16 * 1024).map { split =>
-        val st = ep.scanAgg(split, q, agg)
+        val st = ep.read(split, q, Some(agg))
         try {
-          val r = ArrowBridge.fromIpc(st, aggSchema).next()
+          val r = st.next()
           (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
         } finally st.close()
       }.foldLeft((0L, 0L)) { case ((n, s), (n1, s1)) => (n + n1, s + s1) }
@@ -703,7 +692,7 @@ class GraftArrowSpec extends SparkSpec {
       val expected = plainTyped.filter(toCol(f)).select("id").collect().map(_.getLong(0)).sorted.toVector
       assert(expected.nonEmpty && expected.size < FilterRows, s"$f must split the rows")
       assert(scanIds(f) === expected, s"scan under $f")
-      assert(aggOf(f) === ((expected.size.toLong, expected.sum)), s"scanAgg under $f")
+      assert(aggOf(f) === ((expected.size.toLong, expected.sum)), s"aggregate read under $f")
     }
   }
 

@@ -720,6 +720,78 @@ class GraftHttpSpec extends SparkSpec {
     assert(e.getMessage.contains("truncated"))
   }
 
+  test("read answers a split alike in process and over HTTP; an early close cancels it once") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.schema.{LogicalTypeAnnotation => L, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    // nulls in every column but the key, a string, a decimal, a date and
+    // a TIMESTAMP(NANOS) column, in small row groups: several splits
+    val tmp = java.nio.file.Files.createTempDirectory("graft-read").toString
+    val schema = Types.buildMessage()
+      .required(INT64).named("id")
+      .optional(BINARY).as(L.stringType()).named("g")
+      .optional(BINARY).as(L.stringType()).named("s")
+      .optional(INT64).as(L.decimalType(2, 12)).named("dec")
+      .optional(INT32).as(L.dateType()).named("d")
+      .optional(INT64).as(L.timestampType(true, L.TimeUnit.NANOS)).named("ts")
+      .named("mixed")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val writer = ExampleParquetWriter.builder(new Path(s"$tmp/mixed.parquet"))
+      .withConf(conf).withType(schema).withRowGroupSize(16 * 1024L).build()
+    val gf = new SimpleGroupFactory(schema)
+    try (0 until 20000).foreach { i =>
+      val g = gf.newGroup()
+      g.add("id", i.toLong)
+      if (i % 5 != 0) g.add("g", s"g${i % 7}")
+      if (i % 3 != 0) g.add("s", s"row-$i")
+      if (i % 4 != 0) g.add("dec", i * 137L - 500000L)
+      if (i % 6 != 0) g.add("d", 18000 + i % 900)
+      if (i % 7 != 3) g.add("ts", NanosFixture.tsNanos(i))
+      writer.write(g)
+    } finally writer.close()
+    val srv = new GraftHttpServer(tmp).start()
+    try {
+      val local = new LocalParquetEndpoint(tmp)
+      val http = new HttpEndpoint(srv.url, Some(token))
+      def rows(ep: Endpoint, split: SplitInfo, q: QuerySpec, agg: Option[AggSpec]) = {
+        val st = ep.read(split, q, agg)
+        try st.map(_.copy()).toVector finally st.close()
+      }
+      val q = QuerySpec("mixed", Array("id", "g", "s", "dec", "d", "ts"), Array.empty)
+      val agg = AggSpec(Seq(AggCall("count_star", ""), AggCall("count", "s"),
+        AggCall("sum", "dec"), AggCall("min", "d"), AggCall("max", "ts")), Seq("g"))
+      val localPlan = local.plan("mixed", q, 64 * 1024)
+      val httpPlan = http.plan("mixed", q, 64 * 1024)
+      assert(localPlan.size > 1, "several splits expected")
+      assert(httpPlan.map(_.rowGroups) === localPlan.map(_.rowGroups))
+      val raw = localPlan.zip(httpPlan).flatMap { case (l, h) =>
+        val inProcess = rows(local, l, q, None)
+        assert(inProcess.size === l.rowCount)
+        assert(rows(http, h, q, None) === inProcess, s"rows of split ${l.splitId}")
+        val partials = rows(local, l, q, Some(agg))
+        assert(partials.size > 1, "one partial per group")
+        assert(rows(http, h, q, Some(agg)) === partials, s"partials of split ${l.splitId}")
+        inProcess
+      }
+      assert(raw.size === 20000)
+      assert((1 until 6).forall(c => raw.exists(_.isNullAt(c))), "every nullable column has nulls")
+      assert(raw.filterNot(_.isNullAt(5)).forall(r =>
+        r.getLong(5) === NanosFixture.tsNanos(r.getLong(0).toInt) / 1000L))
+      // drained to its end-of-stream marker: no cancel
+      val before = srv.cancelsReceived
+      val drained = http.read(httpPlan.head, q, None)
+      try drained.foreach(_ => ()) finally drained.close()
+      assert(srv.cancelsReceived === before, "a drained read must not cancel")
+      // closed before it: exactly one split-scoped cancel
+      val early = http.read(httpPlan.head, q, None)
+      try { assert(early.hasNext); early.next() } finally early.close()
+      assert(srv.cancelsReceived === before + 1, "an early-closed read cancels its split once")
+    } finally srv.stop()
+  }
+
   override def afterAll(): Unit = {
     try { server.stop(); bigServer.stop(); GraftHttpServers.stopAll() }
     finally super.afterAll()

@@ -5,7 +5,6 @@ import java.net.{HttpURLConnection, URI}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => FilterNode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ArrowBridge
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -267,9 +266,8 @@ class PushdownSpec extends SparkSpec {
     def scanned(f: Filter): Long = {
       val query = QuerySpec("z", Array("x"), Array(f))
       ep.plan("z", query, Long.MaxValue).map { split =>
-        val st = ep.scan(split, query)
-        try ArrowBridge.fromIpc(st, StructType(Seq(StructField("x", DoubleType)))).size.toLong
-        finally st.close()
+        val st = ep.read(split, query, None)
+        try st.size.toLong finally st.close()
       }.sum
     }
     assert(scanned(EqualTo("x", 0.0)) === 2L)
@@ -299,9 +297,8 @@ class PushdownSpec extends SparkSpec {
       val query = QuerySpec("dict", Array("k"), Array(f))
       val before = LocalParquetEndpoint.rowsDecoded
       val n = ep.plan("dict", query, Long.MaxValue).map { split =>
-        val st = ep.scan(split, query)
-        try ArrowBridge.fromIpc(st, StructType(Seq(StructField("k", LongType)))).size.toLong
-        finally st.close()
+        val st = ep.read(split, query, None)
+        try st.size.toLong finally st.close()
       }.sum
       (LocalParquetEndpoint.rowsDecoded - before, n)
     }
@@ -361,9 +358,8 @@ class PushdownSpec extends SparkSpec {
       val q = QuerySpec("pd", Array("id"), Array(GreaterThan("k", 5L), LessThan("dbl", 0.5)),
         Array(GreaterThan("k", 5L)))
       val ids = plan.flatMap { s =>
-        val st = new HttpEndpoint(server.url, None).scan(s, q)
-        try ArrowBridge.fromIpc(st, StructType(Seq(StructField("id", LongType)))).map(_.getLong(0)).toVector
-        finally st.close()
+        val st = new HttpEndpoint(server.url, None).read(s, q, None)
+        try st.map(_.getLong(0)).toVector finally st.close()
       }
       val expected = spark.read.parquet(s"$typedDir/pd.parquet")
         .filter(col("k") > 5 && col("dbl") < 0.5).select("id").collect().map(_.getLong(0))

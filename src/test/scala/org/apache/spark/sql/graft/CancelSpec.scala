@@ -29,17 +29,23 @@ class CancelSpec extends SparkSpec {
     val ctx = new FlagContext
     TaskContext.setTaskContext(ctx)
     try {
-      val stream = endpoint.scan(split, query)
+      val stream = endpoint.read(split, query, None)
       try {
-        assert(stream.hasNext, "stream yields at least one IPC batch")
+        assert(stream.hasNext, "stream yields at least one row")
         stream.next()
         ctx.interrupted = true
+        var drained = 0
         val n = intercept[org.apache.spark.TaskKilledException] {
-          // the Arrow bridge batches rows, so draining a couple more
-          // IPC messages crosses a check window
-          while (stream.hasNext) stream.next()
+          // the reader checks the flag between its batches of
+          // CancelCheckRows rows, so draining more rows than one batch
+          // holds crosses a check
+          while (drained <= LocalParquetEndpoint.CancelCheckRows) {
+            stream.next(); drained += 1
+          }
         }
         assert(n.getMessage == null || n.reason.contains("cancelled"))
+        assert(drained < LocalParquetEndpoint.CancelCheckRows,
+          s"the kill must land within one check window, drained $drained rows")
       } finally stream.close()
     } finally TaskContext.unset()
   }
@@ -49,11 +55,8 @@ class CancelSpec extends SparkSpec {
     val endpoint = new LocalParquetEndpoint(sf("sf0.001"))
     val query = QuerySpec("nation", Array("n_nationkey"), Array.empty)
     val split = endpoint.plan("nation", query, Long.MaxValue / 4).head
-    val stream = endpoint.scan(split, query)
-    try {
-      var batches = 0
-      while (stream.hasNext) { stream.next(); batches += 1 }
-      assert(batches > 0)
-    } finally stream.close()
+    val stream = endpoint.read(split, query, None)
+    try assert(stream.size.toLong === split.rowCount)
+    finally stream.close()
   }
 }
