@@ -62,7 +62,10 @@ private[graft] object Loop {
           None
       }
     }
-    (result, fired.getOrElse(
+    // a fired metric may be an empty row: when the observed frame has
+    // no rows, adaptive execution can prune the node that collects it
+    // (an empty join side), so no value was ever computed
+    (result, fired.filter(_.length == metrics.length).getOrElse(
       exact(result).agg(metrics.head, metrics.tail: _*).head()))
   }
 

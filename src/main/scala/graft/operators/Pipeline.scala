@@ -34,7 +34,9 @@ object Pipeline {
     *   (stop_cnt/n_words)·0.35 → (350000·stop_cnt) div n_words
     *   (alpha/n_chars)·0.35    → (350000·alpha_chars) div n_chars
     * All terms are < 2³² and non-negative, so truncating and floor
-    * division coincide and nothing overflows. */
+    * division coincide and nothing overflows. Empty text (n_chars = 0)
+    * scores NULL — never kept — as DuckDB's `//` by zero gives NULL;
+    * Spark's ANSI `div` would raise. */
   private def qualityMicro(documents: DataFrame): DataFrame =
     documents
       .withColumn("toks", split(col("text"), " "))
@@ -46,7 +48,7 @@ object Pipeline {
       .select(col("doc_id"), col("n_words"),
         (least(col("n_words") * lit(6000L), lit(300000L)) +
           expr("(350000 * stop_cnt) div n_words") +
-          expr("(350000 * alpha_chars) div n_chars")).as("quality_micro"))
+          expr("(350000 * alpha_chars) div nullif(n_chars, 0)")).as("quality_micro"))
 
   /** The surviving documents after every gate — the pipeline's actual
     * output corpus (what a training run reads); [[curate]] aggregates
@@ -858,11 +860,13 @@ object Pipeline {
     * discipline). Each factor here is instead ONE division of two
     * exact longs — `(c_tgt(b)+1)·(C_raw+B)` over `(c_raw(b)+1)·(C_tgt+B)`
     * — and the per-doc weight is the POSITION-ORDERED product of those
-    * factors (`aggregate` over the feature array ≡ DuckDB
+    * factors (a [[Text.bucketFold]] product over the per-bucket
+    * factor table, computed once per bucket on the driver ≡ DuckDB
     * `list_reduce(list(q ORDER BY pos))`, the C25 ordered-fold idiom:
     * long→double conversion, multiply, and divide are all exactly
     * rounded, so identical operand order means identical bits).
-    * Overflow: each long product is ≤ (C+1)·(C+B); safe through
+    * Overflow: each long product is ≤ (C+1)·(C+B) and is taken with
+    * `Math.multiplyExact`, so it raises rather than wraps; safe through
     * ~3·10⁹ feature occurrences per model, far past the gate SFs —
     * beyond that, pre-divide both totals by a common 2^k (the scaladoc
     * constant trade: ≤1 ulp drift per factor) or lift to DECIMAL(38).
@@ -870,10 +874,13 @@ object Pipeline {
     * Scale shape: the bucket-count models are ONE map-side-combined
     * aggregation over the exploded buckets (≤[[DsirBuckets]] rows
     * cross the wire per partition), collected — a BOUNDED collect, 4096
-    * rows by construction — and re-broadcast as two literal arrays, so
-    * the scoring pass is a pure per-row fold: features never leave
-    * their row, zero corpus shuffles, one corpus-linear count pass plus
-    * one corpus-linear score pass.
+    * rows by construction — and ride the scoring pass as two
+    * [[Text.bucketFold]] tables (the factors q[b] and the 0/1
+    * target-leaning flags), so the scoring pass is a pure per-row fold:
+    * features never leave their row, zero corpus shuffles, one
+    * corpus-linear count pass plus one corpus-linear score pass. A doc
+    * with NULL text has no features and no output row (the oracle's
+    * unnest emits none either).
     *
     * Alongside `w` the entry emits `n_pos`, the count of the doc's
     * features whose smoothed target probability exceeds the raw one —
@@ -895,31 +902,20 @@ object Pipeline {
     * the result (`spark.sparkContext.getPersistentRDDs` sweep or
     * session teardown); Bench/Verify's per-entry cleanup already does. */
   def dsirWeights(documents: DataFrame): DataFrame = {
-    val feats = documents
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("feats",
-        concat(col("toks"),
-          when(size(col("toks")) >= 2,
-            zip_with(
-              slice(col("toks"), lit(1), size(col("toks")) - 1),
-              slice(col("toks"), lit(2), size(col("toks")) - 1),
-              (a, b) => concat_ws(" ", a, b)))
-            .otherwise(array().cast("array<string>"))))
-      .withColumn("buckets", expr(
-        s"""transform(feats, g ->
-           |  CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)
-           |    % $DsirBuckets)""".stripMargin))
+    import org.apache.spark.sql.graft.BucketFold
     // r18 opt: the count pass and the scoring pass each re-derived
-    // tokenize → bigrams → md5-per-feature from the raw text (the md5
-    // fold is the dominant per-row cost); one persisted bucketed
-    // projection (doc_id, is-target, n_feats, buckets) now feeds both
-    // passes, halving the feature-hashing work. Still zero corpus
-    // shuffles (PlanAuditSpec's no-Exchange pin holds over the
+    // the md5-per-feature buckets from the raw text; one persisted
+    // bucketed projection (doc_id, is-target, n_feats, buckets) now
+    // feeds both passes, halving the feature-hashing work. Still zero
+    // corpus shuffles (PlanAuditSpec's no-Exchange pin holds over the
     // InMemoryTableScan); the projection is released by the caller's
     // post-entry cleanup (the bench's leaked-persist discipline).
-    val bucketed = feats
+    val bucketed = documents
+      .filter(col("text").isNotNull)
       .select(col("doc_id"), (col("lang") === "en").as("t"),
-        size(col("feats")).cast("long").as("n_feats"), col("buckets"))
+        Text.hashedFeatures(col("text"), DsirBuckets).as("buckets"))
+      .select(col("doc_id"), col("t"),
+        size(col("buckets")).cast("long").as("n_feats"), col("buckets"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = bucketed
       .select(explode(col("buckets")).as("b"), col("t"))
@@ -935,19 +931,16 @@ object Pipeline {
     }
     val rawTot = raw.sum + DsirBuckets
     val tgtTot = tgt.sum + DsirBuckets
-    val rawLit = typedLit(raw.toSeq)
-    val tgtLit = typedLit(tgt.toSeq)
+    // the factor's two exact longs, once per bucket
+    val num = tgt.map(c => Math.multiplyExact(c + 1L, rawTot))
+    val den = raw.map(c => Math.multiplyExact(c + 1L, tgtTot))
+    val q = BucketFold.Product(num.indices.map(b =>
+      num(b).toDouble / den(b).toDouble).toArray)
+    val pos = BucketFold.Sum(num.indices.map(b =>
+      if (num(b) > den(b)) 1L else 0L).toArray)
     bucketed
-      .withColumn("w", aggregate(col("buckets"), lit(1.0d), (acc, b) =>
-        acc * (((element_at(tgtLit, (b + 1).cast("int")) + 1L) * rawTot)
-                 .cast("double") /
-               ((element_at(rawLit, (b + 1).cast("int")) + 1L) * tgtTot)
-                 .cast("double"))))
-      .withColumn("n_pos", aggregate(col("buckets"), lit(0L), (acc, b) =>
-        acc + when(
-          (element_at(tgtLit, (b + 1).cast("int")) + 1L) * rawTot >
-            (element_at(rawLit, (b + 1).cast("int")) + 1L) * tgtTot,
-          1L).otherwise(0L)))
+      .withColumn("w", Text.bucketFold(col("buckets"), q))
+      .withColumn("n_pos", Text.bucketFold(col("buckets"), pos))
       .select(col("doc_id"), col("n_feats"), col("n_pos"), col("w"))
   }
 
@@ -1389,7 +1382,9 @@ object Pipeline {
     * the quality scorer C32 runs with stand-in weights): a linear
     * classifier over the SAME hashed feature space as
     * [[Text.qualityModel]] (words + word bigrams, md5-hashed into
-    * [[Text.ModelBuckets]] buckets, binary presence — bounded updates
+    * [[Text.ModelBuckets]] buckets — [[Text.hashedFeatures]], exploded
+    * — binary presence; a NULL-text doc has no feature and scores 0
+    * every round, as the oracle's `tr LEFT JOIN` keeps it — bounded updates
     * where raw counts let long docs swamp a round), labels from the C14
     * heuristic gate (y = +1 ⇔ the doc survives [[kept]] — the
     * distill-the-pipeline trick: a cheap linear model imitates the full
@@ -1434,20 +1429,14 @@ object Pipeline {
   def qualityTrain(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val t = documents
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("feats",
-        concat(col("toks"),
-          when(size(col("toks")) >= 2,
-            zip_with(
-              slice(col("toks"), lit(1), size(col("toks")) - 1),
-              slice(col("toks"), lit(2), size(col("toks")) - 1),
-              (a, b) => concat_ws(" ", a, b)))
-            .otherwise(array().cast("array<string>"))))
-    val fb = t.select(col("doc_id"), explode(col("feats")).as("g"))
+    // a doc with NULL text has no features but still trains (s = 0,
+    // the oracle's tr LEFT JOIN): explode_outer keeps it as one
+    // (doc_id, NULL bucket) row, which no weight joins and the delta
+    // pass skips
+    val fb = documents
       .select(col("doc_id"),
-        expr(s"CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)" +
-          s" % ${Text.ModelBuckets}").as("bucket"))
+        explode_outer(Text.hashedFeatures(col("text"), Text.ModelBuckets))
+          .as("bucket"))
       .distinct()
       .withColumn("cnt", lit(1L))
     val lab = documents.select(col("doc_id"))
@@ -1478,12 +1467,11 @@ object Pipeline {
       // the ONE groupBy(doc_id) scoring pass — tf already carries y,
       // so the former per-round tr ⋈ scores join (two corpus-scaled
       // exchanges + sorts) disappears. Exactness: every tr doc reaches
-      // tf (this corpus has no null/empty text, so fb emits ≥1 feature
-      // row per doc — verified at all five test SFs; a null-text doc
-      // would be dropped from fb by BOTH engines' split/explode), a
-      // doc with no weighted bucket keeps s = 0 via left join + sum-
-      // ignores-nulls + coalesce, and y is constant per doc so max(y)
-      // IS the label — bit-identical (doc_id, y, s) rows.
+      // tf (fb emits ≥1 row per doc: ≥1 feature for any text, the NULL
+      // bucket row for NULL text), a doc with no weighted bucket keeps
+      // s = 0 via left join + sum-ignores-nulls + coalesce, and y is
+      // constant per doc so max(y) IS the label — bit-identical
+      // (doc_id, y, s) rows.
       def trainScores(): DataFrame = {
         val wdf = broadcast(w.toSeq.toDF("bucket", "wt"))
         tf.join(wdf, Seq("bucket"), "left")
@@ -1520,7 +1508,8 @@ object Pipeline {
               .as("nep"),
             sum(when(col("y") === -1L, 1L).otherwise(0L)).cast("long")
               .as("nen")) { eo =>
-          tf.join(eo.select(col("doc_id")), "doc_id")
+          tf.filter(col("bucket").isNotNull)
+            .join(eo.select(col("doc_id")), "doc_id")
             .groupBy(col("bucket"))
             .agg((sum(when(col("y") === 1L, col("cnt")).otherwise(0L))
                 * TrainRate).cast("long").as("p"),
@@ -1549,7 +1538,7 @@ object Pipeline {
       (w.toSeq.filter(_._2 != 0L).sortBy(_._1) :+ (-1L -> theta))
         .toDF("bucket", "weight")
         .orderBy(col("bucket"))
-    } finally { tf.unpersist(false); () }
+    } finally Loop.release(tf)
   }
 
   def qualityTrain(spark: SparkSession, dir: String): DataFrame =

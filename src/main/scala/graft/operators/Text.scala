@@ -578,37 +578,46 @@ object Text {
   private val WeightMul = 2654435761L
   private val WeightMod = 2001L
 
+  /** The hashed words + word bigrams of `text`, one bucket id each
+    * ([[org.apache.spark.sql.graft.HashedFeatures]]): the feature space
+    * of [[qualityModel]], [[Pipeline.dsirWeights]] and
+    * [[Pipeline.qualityTrain]]. */
+  private[operators] def hashedFeatures(text: Column, buckets: Long): Column = {
+    import org.apache.spark.sql.graft.{Bridge, HashedFeatures}
+    Bridge.column(HashedFeatures(Bridge.expression(text), buckets))
+  }
+
+  /** `buckets` folded over a per-bucket table
+    * ([[org.apache.spark.sql.graft.BucketFold]]). */
+  private[operators] def bucketFold(buckets: Column,
+      table: org.apache.spark.sql.graft.BucketFold.Table): Column = {
+    import org.apache.spark.sql.graft.{Bridge, BucketFold}
+    Bridge.column(BucketFold(Bridge.expression(buckets), table))
+  }
+
   /** Model-based quality scoring — the fastText-architecture linear
     * classifier (Joulin et al. 2016) that CCNet-style pipelines run as
     * the learned complement to [[quality]]'s heuristics: features are
     * the document's words plus word bigrams, each hashed into one of
-    * [[ModelBuckets]] buckets, and the document score is the integer
-    * sum of the per-bucket weights; keep ⇔ score > 0. The weights here
-    * are a deterministic stand-in (`(bucket·[[WeightMul]]) mod
-    * [[WeightMod]] − 1000` — the Multimodal fake-decode contract: the
-    * plumbing is the operator, a trained model substitutes its weight
-    * vector as a broadcast/literal array indexed by the same bucket).
-    * All arithmetic is exact integer (hash ≤ 2⁶⁰, bucket·mul < 2⁴⁴),
-    * so the oracle replays scores bit-for-bit.
+    * [[ModelBuckets]] buckets ([[hashedFeatures]]), and the document
+    * score is the integer sum of the per-bucket weights; keep ⇔
+    * score > 0. The weights here are a deterministic stand-in
+    * (`(bucket·[[WeightMul]]) mod [[WeightMod]] − 1000` — the
+    * Multimodal fake-decode contract: the plumbing is the operator, a
+    * trained model substitutes its weight vector as the table of the
+    * same [[bucketFold]]). All arithmetic is exact integer (hash ≤ 2⁶⁰,
+    * bucket·mul < 2⁴⁴; the fold's additions raise on overflow, never
+    * wrap), so the oracle replays scores bit-for-bit.
     *
     * Scale shape: pure per-row fold (no explode, no gram shuffle — the
     * features never leave their row), then one map-side-combined
     * groupBy on source. Linear in corpus bytes, zero corpus shuffles. */
   def qualityModel(documents: DataFrame): DataFrame = {
-    val t = documents.withColumn("toks", toks(col("text")))
-      // word bigrams; guarded because Spark sequence(1, 0) descends
-      .withColumn("feats",
-        concat(col("toks"),
-          when(size(col("toks")) >= 2,
-            zip_with(
-              slice(col("toks"), lit(1), size(col("toks")) - 1),
-              slice(col("toks"), lit(2), size(col("toks")) - 1),
-              (a, b) => concat_ws(" ", a, b)))
-            .otherwise(array().cast("array<string>"))))
-      .withColumn("score",
-        expr(s"""aggregate(feats, 0L, (acc, g) ->
-            acc + ((CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)
-                      % $ModelBuckets) * $WeightMul) % $WeightMod - 1000)"""))
+    import org.apache.spark.sql.graft.BucketFold
+    val weights = BucketFold.Sum(Array.tabulate(ModelBuckets.toInt)(b =>
+      (b * WeightMul) % WeightMod - 1000))
+    val t = documents.withColumn("score",
+      bucketFold(hashedFeatures(col("text"), ModelBuckets), weights))
     t.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("score") > 0, 1L).otherwise(0L)).cast("long").as("n_keep"),

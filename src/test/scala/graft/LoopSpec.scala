@@ -47,6 +47,19 @@ class LoopSpec extends SparkSpec {
     } finally Loop.rides = true
   }
 
+  test("an observed frame with no rows gives the exact metrics, not an empty row") {
+    try {
+      val none = spark.range(0, 100).toDF("x").filter(col("x") < 0)
+      val (joined, m) = Loop.observed(none,
+        sum(col("x")).as("s"), count(lit(1)).as("n"))(
+        eo => spark.range(0, 100).toDF("x").join(eo, "x").collect().length)(
+        _ => none)
+      assert(joined === 0)
+      assert(m.length === 2 && m.isNullAt(0) && m.getLong(1) === 0L, m.toString)
+      assert(Loop.rides, "an empty frame is not a missed Observation")
+    } finally Loop.rides = true
+  }
+
   test("a missed Observation returns the exact agg and clears the sticky flag") {
     try {
       val base = spark.range(0, 100).toDF("x")

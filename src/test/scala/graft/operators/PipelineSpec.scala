@@ -577,4 +577,67 @@ class PipelineSpec extends SparkSpec {
     assert(learnedOk > standinOk,
       s"learned ($learnedOk/$n) must beat the C32 stand-in ($standinOk/$n)")
   }
+
+  /** qualityTrain's semantics (qualityTrainSql's rounds) replayed on
+    * the driver over (doc_id, y, feature buckets) train rows. */
+  private def trainReplay(train: Seq[(Long, Long, Set[Long])]): Seq[(Long, Long)] = {
+    var w = Map.empty[Long, Long]
+    var theta = 0L
+    def scores = train.map { case (_, y, bs) => y -> bs.iterator.map(w.getOrElse(_, 0L)).sum }
+    for (_ <- 1 to Pipeline.TrainRounds) {
+      val err = train.zip(scores).collect {
+        case (d, (y, s)) if (y == 1L && s <= theta) || (y == -1L && s > theta) => d
+      }
+      def n(y: Long) = math.max(err.count(_._2 == y).toLong, 1L)
+      def cnt(y: Long) = err.filter(_._2 == y).flatMap(_._3).groupBy(identity)
+        .map { case (b, xs) => b -> xs.size.toLong * Pipeline.TrainRate }
+      val (p, q) = (cnt(1L), cnt(-1L))
+      val dlt = (p.keySet ++ q.keySet).map(b =>
+        b -> (p.getOrElse(b, 0L) / n(1L) - q.getOrElse(b, 0L) / n(-1L))).toMap
+      w = (w.keySet ++ dlt.keySet).map(b => b -> (w.getOrElse(b, 0L) + dlt.getOrElse(b, 0L))).toMap
+      val s2 = scores
+      theta = (s2.map(_._2).distinct :+ (s2.map(_._2).min - 1L)).map { th =>
+        (s2.count { case (y, s) => (y == 1L && s <= th) || (y == -1L && s > th) }, th)
+      }.min._2
+    }
+    ((-1L -> theta) +: w.toSeq.filter(_._2 != 0L)).sortBy(_._1)
+  }
+
+  test("qualityTrain: NULL-text train docs keep s = 0, as the oracle's LEFT JOIN does") {
+    // the corpus's kept docs (y = +1), each again under a fresh id with
+    // NULL text (y = −1): a NULL doc scores 0, so it is an error
+    // exactly when θ < 0 and moves the θ argmin to 0
+    val base = graft.Tables(spark, dir, "documents")
+    val pos = base.join(Pipeline.kept(base).select("doc_id"), Seq("doc_id"), "left_semi")
+    val docs = pos.unionByName(pos
+      .withColumn("doc_id", col("doc_id") + 10000000L)
+      .withColumn("text", lit(null).cast("string")))
+    val got = Pipeline.qualityTrain(docs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    // features by the declarative chain, labels and hold-out as specified
+    val toks = split(col("text"), " ")
+    val feats = concat(toks, when(size(toks) >= 2, zip_with(
+      slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
+      (a, b) => concat_ws(" ", a, b))).otherwise(array().cast("array<string>")))
+    val bucketsOf = docs.select(col("doc_id"), transform(feats, g =>
+        conv(substring(md5(g), 1, 15), 16, 10).cast("bigint") % Text.ModelBuckets))
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) Set.empty[Long] else r.getSeq[Long](1).toSet)).toMap
+    val keptIds = Pipeline.kept(docs).select("doc_id").collect().map(_.getLong(0)).toSet
+    val heldOut = docs.select(col("doc_id"), expr(s"CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT) % ${Pipeline.TrainHoldMod} = 0"))
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val train = bucketsOf.keys.toSeq.sorted.filterNot(heldOut).map(d =>
+      (d, if (keptIds(d)) 1L else -1L, bucketsOf(d)))
+    assert(train.count(_._3.isEmpty) > 20, "the fixture trains NULL-text docs")
+    assert(train.count(_._2 == 1L) > 20, "and positives")
+    assert(got === trainReplay(train))
+  }
+
+  test("qualityTrain leaves no persisted RDD behind for its caller") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Pipeline.qualityTrain(spark, dir).collect()
+    val gained = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(gained.isEmpty, s"qualityTrain left persisted RDDs $gained")
+    assert(out.exists(_.getLong(0) == -1L))
+  }
 }
