@@ -47,19 +47,14 @@ case class KmvAgg(
   override def createAggregationBuffer(): mutable.TreeSet[Long] =
     mutable.TreeSet.empty[Long]
 
-  @inline private def add(buf: mutable.TreeSet[Long], v: Long): Unit =
-    if (buf.size < k) buf += v
-    else if (v < buf.last) { buf += v; if (buf.size > k) buf -= buf.last }
-    // v >= buf.last with a full buffer can never enter the bottom-k
-
   override def update(buf: mutable.TreeSet[Long], input: InternalRow): mutable.TreeSet[Long] = {
     val h = hash.eval(input)
-    if (h != null) add(buf, h.asInstanceOf[Long])
+    if (h != null) KmvAgg.insert(buf, h.asInstanceOf[Long], k)
     buf
   }
 
   override def merge(buf: mutable.TreeSet[Long], other: mutable.TreeSet[Long]): mutable.TreeSet[Long] = {
-    other.foreach(add(buf, _))
+    other.foreach(KmvAgg.insert(buf, _, k))
     buf
   }
 
@@ -91,4 +86,13 @@ case class KmvAgg(
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): KmvAgg =
     copy(hash = newChildren(0))
   override def prettyName: String = "graft_kmv"
+}
+
+object KmvAgg {
+  /** Insert `v` into the bottom-`k` set `buf`: the one bottom-k insert,
+    * shared with the live KMV fold (`graft.streaming.Streams`). */
+  @inline def insert(buf: mutable.TreeSet[Long], v: Long, k: Int): Unit =
+    if (buf.size < k) buf += v
+    else if (v < buf.last) { buf += v; if (buf.size > k) buf -= buf.last }
+    // v >= buf.last with a full buffer can never enter the bottom-k
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
-import graft.Tables
+import graft.{Loop, Tables}
 import graft.functions.TopKAgg
 
 /** Approximate-nearest-neighbor search over the embeddings table
@@ -1937,13 +1937,14 @@ object Ann {
       .localCheckpoint(true)
     for (_ <- 1 to NndRounds) {
       val next = nndRound(e, emb).localCheckpoint(true)
-      e.unpersist(false)
+      Loop.release(e)
       e = next
     }
     val edges = e.select(col("vec_id"), col("nbr"))
       .unionAll(e.select(col("nbr").as("vec_id"), col("vec_id").as("nbr")))
       .distinct()
       .localCheckpoint(true) // bounded: ≤ 2·n·GraphDeg rows; 3 hops read it
+    Loop.release(e)
     beamSearch(c, cents, assigned, edges)
   }
 

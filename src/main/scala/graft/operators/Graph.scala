@@ -492,7 +492,7 @@ object Graph {
         .foreach(i => iters = (t + i).toLong)
       t += n
       prevMass = masses.last
-      rank.unpersist(false)
+      Loop.release(rank)
       rank = next
     }
     (rank, iters)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 
-import graft.Tables
+import graft.{Loop, Tables}
 
 /** Multimodal-column pipeline (SURVEY.md §2 C8): media as opaque BINARY
   * columns + typed metadata, with a REAL image decode (javax.imageio —
@@ -364,7 +364,7 @@ object Multimodal {
     val df = fusedMemo.remove(fuseKey(spark, dir))
     if (df != null) {
       fusedRdds(df).foreach(r => graft.SharedFrames.unregister(r.id))
-      df.unpersist(false): Unit
+      Loop.release(df)
     }
   }
 

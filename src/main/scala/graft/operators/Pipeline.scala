@@ -1074,10 +1074,17 @@ object Pipeline {
     *
     * Input must be distinct on (quality_micro, n_words) — the entry
     * groups first, which also makes dominance strict-in-one
-    * well-defined (duplicate docs ride along in `n_docs`). */
+    * well-defined (duplicate docs ride along in `n_docs`).
+    *
+    * A point with a NULL coordinate (a NULL or empty text's score) is
+    * compared with nothing, as under the oracle's NOT EXISTS: it is
+    * never dominated and dominates nothing, so it bypasses the grid
+    * and is kept as it is. */
   private[operators] def skyline2d(pts: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val b = pts.withColumn("b", expr(s"quality_micro div $SkyBucket"))
+    val known = col("quality_micro").isNotNull && col("n_words").isNotNull
+    val b = pts.filter(known)
+      .withColumn("b", expr(s"quality_micro div $SkyBucket"))
     val buckets = b.groupBy(col("b")).agg(min(col("n_words")).as("bmin"))
       .withColumn("hmin", min(col("bmin")).over(
         Window.partitionBy().orderBy(col("b").desc)
@@ -1091,6 +1098,7 @@ object Pipeline {
     surv.withColumn("m", min(col("n_words")).over(w))
       .filter(col("m").isNull || col("n_words") < col("m"))
       .drop("b", "hmin", "m")
+      .unionByName(pts.filter(!known))
   }
 
   /** Pareto-skyline data selection (C36) — the skyline operator

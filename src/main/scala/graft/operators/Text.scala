@@ -98,14 +98,17 @@ object Text {
     // across engines for the same expression tree — while round(x, 6)
     // on a double is legal-to-disagree at a 6-dp boundary (the r2
     // pipeline_curate lesson; Spark BigDecimal-HALF_UP vs DuckDB scaled
-    // float)
+    // float). A zero divisor (the empty text has no characters) gives
+    // NULL, as DuckDB does
+    val words = nullif(col("n_words"), lit(0L))
+    val chars = nullif(col("n_chars"), lit(0L))
     d.select(
       col("doc_id"), col("n_chars"), col("n_words"), col("stop_cnt"),
-      (col("stop_cnt") / col("n_words")).as("stop_ratio"),
-      (col("alpha_chars") / col("n_chars")).as("alpha_ratio"),
+      (col("stop_cnt") / words).as("stop_ratio"),
+      (col("alpha_chars") / chars).as("alpha_ratio"),
       (least(col("n_words") / lit(50.0), lit(1.0)) * 0.3 +
-        (col("stop_cnt") / col("n_words")) * 0.35 +
-        (col("alpha_chars") / col("n_chars")) * 0.35).as("quality"))
+        (col("stop_cnt") / words) * 0.35 +
+        (col("alpha_chars") / chars) * 0.35).as("quality"))
   }
 
   def quality(spark: SparkSession, dir: String): DataFrame =
@@ -139,7 +142,7 @@ object Text {
       .withColumn("re_tokens", size(regexp_extract_all(col("text"), lit(pat), lit(0))).cast("long"))
       .select(col("doc_id"), col("n_chars"), col("ws_tokens"), col("re_tokens"),
         // raw quotient of exact longs — bit-stable; see quality()
-        (col("n_chars") / col("re_tokens")).as("chars_per_token"))
+        (col("n_chars") / nullif(col("re_tokens"), lit(0L))).as("chars_per_token"))
   }
 
   def tokens(spark: SparkSession, dir: String): DataFrame =
@@ -915,7 +918,7 @@ object Text {
         val (next, m) = Loop.observed(cur.select(col("cnt"), sc.as("s")),
           bpeTokenCount)(_.localCheckpoint(true))(identity)
         val toks = m.getLong(0)
-        if (cur ne wc) cur.unpersist(false)
+        if (cur ne wc) Loop.release(cur)
         cur = next
         accepted.foreach { case (l, r, c) =>
           rank += 1
@@ -927,7 +930,7 @@ object Text {
         .orderBy(col("rank"))
     } finally {
       wc.unpersist(false)
-      if (cur ne wc) cur.unpersist(false)
+      if (cur ne wc) Loop.release(cur)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
@@ -722,41 +722,25 @@ object Streams {
     drain(spark, OutputMode.Append(), statePartitions(8))(asofEnrichStreaming(evs))
   }
 
-  // ---------------------------------------------------------------- D7
-  /** One token occurrence flowing into the streaming sketch. */
+  // ------------------------------------------------- live sketch fold
+  /** One token occurrence flowing into the subsharded sketch fold. */
   case class Tok(source: String, item: String)
-
-  /** Per-source streaming sketch state: C30's count-min d×w counter
-    * cells flattened row-major — exactly
-    * [[graft.operators.Sketch.CmsDepth]]×[[graft.operators.Sketch.CmsWidth]]
-    * = 192 longs per key, however long the stream runs. */
-  case class CmsState(cells: Array[Long])
-
-  case class CmsCell(source: String, sub: Int, r: Int, bucket: Long,
-      cnt: Long)
-
-  /** Subshards per source for the streaming sketch fold — a source's
-    * token firehose is too hot for one state key (the C24e straggler
-    * class), so the stream keys by (source, item-hash mod this) and
-    * the finisher re-merges the subshard cells by per-cell SUM: cells
-    * are a commutative monoid, so the re-key is free and exact — C30b's
-    * merge law, applied operationally. */
-  private val CmsSubShards = 32
 
   /** Pre-combined token occurrences: the map-side form that actually
     * crosses the state shuffle. */
   case class TokC(source: String, item: String, cnt: Long)
 
-  /** Map-side combiner for the streaming sketch: collapse a
-    * partition's token occurrences to per-(source, item) counts before
-    * the state shuffle, so shuffle volume is the partition's DISTINCT
+  /** Map-side combiner for the subsharded fold: collapse a partition's
+    * token occurrences to per-(source, item) counts before the state
+    * shuffle, so shuffle volume is the partition's DISTINCT
     * vocabulary, not its occurrence count (on a Zipf feed that is the
     * difference between shipping every token and shipping the word
     * list). Memory is BOUNDED: the local map flushes whenever it
     * reaches `maxEntries` distinct keys — a unique-heavy adversarial
     * feed degrades gracefully to pass-through instead of growing a
-    * partition-sized map. Exact under any flush pattern because the
-    * downstream fold ADDS counts (the same commutative monoid). */
+    * partition-sized map. Exact under any flush pattern because every
+    * fold is insensitive to how occurrences are grouped: counters ADD
+    * counts, and bottom-k is idempotent (it ignores them). */
   private[streaming] def localCombine(
       it: Iterator[Tok], maxEntries: Int = 1 << 16): Iterator[TokC] =
     new Iterator[TokC] {
@@ -780,183 +764,141 @@ object Streams {
       }
     }
 
-  /** Streaming count-min maintenance (D7) — C30's sketch kept as LIVE
-    * `flatMapGroupsWithState` state, the operational form of the
-    * persist-per-day / merge-on-query law the batch merge entry (C30b)
-    * proves: each micro-batch's tokens fold into the keyed cell table
-    * by per-cell addition — the same commutative monoid — so the
-    * summed state after any prefix of the stream IS the batch sketch
-    * of that prefix, regardless of batch boundaries, arrival order, or
-    * subshard layout (StreamsSpec proves streamed ≡
-    * [[graft.operators.Sketch.topkSketch]] over a multi-batch
-    * out-of-order feed).
+  /** One emitted cell of a live sketch — the one schema of both
+    * drivers. `g` is the group, `sub` its subshard (0 under TTL), `ver`
+    * the key's snapshot version, `key` a counter index or a bottom-k
+    * hash, `cnt` its count (1 for a bottom-k member). `key` −1 is the
+    * eviction tombstone, so the latest snapshot of an idle-expired key
+    * reads as empty. */
+  case class SketchCell(g: String, sub: Int, ver: Long, key: Long, cnt: Long)
+
+  /** A live sketch as keyed state: a flat long array per key, folded
+    * slice by slice. Both instances obey a merge law that makes the
+    * state after any stream prefix the batch sketch of that prefix,
+    * whatever the batch boundaries, arrival order or subshard layout —
+    * so a stream may re-key by subshard for free, and a gate that
+    * replays the whole feed equals the batch entry.
     *
-    * Unlike D6's as-of fold, the slice needs NO sort and NO
-    * materialization — counters commute, so the iterator streams
-    * through in O(1) state memory (a fixed 192 longs per key).
-    * Commutativity also buys a map-side combine ([[localCombine]]):
-    * each input partition collapses to per-(source, item) counts
-    * before the state shuffle, so wire volume is the partition's
-    * distinct vocabulary, not its occurrence count. The
-    * only per-slice allocation is a bucket memo keyed by distinct
-    * token (bounded by the slice's vocabulary), which cuts the
-    * 3-md5-per-OCCURRENCE cost to 3-md5-per-DISTINCT-token — the
-    * cross-row reuse a per-row codegen'd Column cannot express, and
-    * what makes the streaming fold competitive with the batch scan on
-    * a Zipf-distributed feed. Hashes are the md5-derived C26 conv
-    * idiom ([[graft.operators.Sketch.cmsBucketLocal]], byte-identical
-    * to the batch Column form) so the cells stay cross-engine exact. */
-  def topkSketchStreaming(toks: Dataset[Tok]): Dataset[CmsCell] = {
+    * A key's emissions are its full state, stamped with a version:
+    * bottom-k EVICTS (a later batch's small hash pushes an earlier
+    * member out), so a sink's history is not max-mergeable and only
+    * each key's latest snapshot counts ([[snapshot]]). */
+  sealed trait SketchFold extends Serializable {
+    /** `prev` (or the empty sketch) with the slice's (item, count)
+      * pairs folded in, as a new array. */
+    def fold(prev: Option[Array[Long]], in: Iterator[(String, Long)]): Array[Long]
+    /** The state's (key, cnt) cells. */
+    def cells(state: Array[Long]): Iterator[(Long, Long)]
+    /** Merge the latest (g, key, cnt) cells of a group's subshards. */
+    def merge(latest: DataFrame): DataFrame
+  }
+
+  /** Counter cells under per-cell addition — a commutative monoid, so
+    * subshards re-merge by per-cell SUM (C30b's law, operationally).
+    * `cellsOf` names the cells one occurrence of an item increments.
+    * The only per-slice allocation is a memo of it keyed by distinct
+    * item (bounded by the slice's vocabulary): the CMS hashes 3 md5s
+    * per DISTINCT token instead of per occurrence — the cross-row
+    * reuse a per-row codegen'd Column cannot express. State is a FIXED
+    * `n` longs per key however long the stream runs. */
+  final class Counters(n: Int, cellsOf: String => Array[Int]) extends SketchFold {
+    def fold(prev: Option[Array[Long]], in: Iterator[(String, Long)]): Array[Long] = {
+      val cells = prev.map(_.clone()).getOrElse(new Array[Long](n))
+      val memo = new java.util.HashMap[String, Array[Int]]()
+      in.foreach { case (item, c) =>
+        var is = memo.get(item)
+        if (is == null) { is = cellsOf(item); memo.put(item, is) }
+        var j = 0
+        while (j < is.length) { cells(is(j)) += c; j += 1 }
+      }
+      cells
+    }
+    def cells(state: Array[Long]): Iterator[(Long, Long)] =
+      (0 until n).iterator.filter(state(_) != 0L).map(i => (i.toLong, state(i)))
+    def merge(latest: DataFrame): DataFrame =
+      latest.groupBy(col("g"), col("key")).agg(sum(col("cnt")).as("cnt"))
+  }
+
+  /** The bottom-k hashes of the items (C47), through
+    * [[graft.functions.KmvAgg.insert]]. The SEMILATTICE law —
+    * bottomK(A ∪ B) = bottomK(bottomK(A) ∪ bottomK(B)) — is idempotent
+    * as well as commutative, so duplicate arrivals fold away and
+    * subshards re-merge by union then bottom-k into an (g, sk) frame.
+    * State is ≤k longs per key forever. */
+  final class BottomK(k: Int) extends SketchFold {
+    def fold(prev: Option[Array[Long]], in: Iterator[(String, Long)]): Array[Long] = {
+      val set = scala.collection.mutable.TreeSet.empty[Long]
+      prev.foreach(set ++= _)
+      in.foreach { case (item, _) =>
+        graft.functions.KmvAgg.insert(set, graft.operators.Sketch.kmvHashLocal(item), k)
+      }
+      set.toArray // ascending
+    }
+    def cells(state: Array[Long]): Iterator[(Long, Long)] = state.iterator.map((_, 1L))
+    def merge(latest: DataFrame): DataFrame =
+      latest.groupBy(col("g"))
+        .agg(slice(sort_array(collect_set(col("key"))), 1, k).as("sk"))
+  }
+
+  /** C30's count-min: an item adds to its bucket in each of the d rows
+    * of the row-major d×w table ([[graft.operators.Sketch.cmsBucketLocal]],
+    * byte-identical to the batch Column form). */
+  private[streaming] val CmsFold: SketchFold = {
+    import graft.operators.Sketch.{CmsDepth, CmsWidth, cmsBucketLocal}
+    new Counters(CmsDepth * CmsWidth,
+      item => Array.tabulate(CmsDepth)(r => r * CmsWidth + cmsBucketLocal(r, item)))
+  }
+
+  /** C29's 64-bucket log histogram; the item is the bucket ordinal
+    * ([[logBucketLocal]]), mapped before the fold. */
+  private[streaming] val HistFold: SketchFold = new Counters(64, item => Array(item.toInt))
+
+  /** C47's KMV distinct sketch; items hash with
+    * [[graft.operators.Sketch.kmvHashLocal]], the byte-parity JVM twin
+    * of the md5-conv Column form. */
+  private[streaming] val KmvFold: SketchFold = new BottomK(graft.operators.Sketch.KmvK)
+
+  /** JVM twin of Sketch's `length(bin(v))` bucket Column (0 for 0) —
+    * parity spec-pinned on power-of-two edges. Negative values fail
+    * fast, the batch raise_error discipline. */
+  private[streaming] def logBucketLocal(v: Long): Int = {
+    require(v >= 0,
+      s"stream quantile sketch: negative value $v — scale to non-negative first")
+    if (v == 0L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(v)
+  }
+
+  /** Untimed state of the subsharded fold. */
+  case class FoldState(cells: Array[Long], ver: Long)
+
+  /** Subshards per group for the untimed fold — a group's item
+    * firehose is too hot for one state key (the C24e straggler class),
+    * so the stream keys by (group, item-hash mod this), and the merge
+    * law makes the re-key free and exact. */
+  private val SubShards = 32
+
+  /** The untimed driver (D7/D8/D9): `fold` kept as LIVE
+    * `flatMapGroupsWithState` state keyed by (source, subshard). Each
+    * input partition is pre-combined ([[localCombine]]), then every
+    * micro-batch's slice folds into the key's state and the key emits
+    * its whole state under the next version. Unlike D6's as-of fold
+    * the slice needs no sort and no materialization: the iterator
+    * streams through. */
+  def foldStreaming(fold: SketchFold)(toks: Dataset[Tok]): Dataset[SketchCell] = {
     import toks.sparkSession.implicits._
-    val d = graft.operators.Sketch.CmsDepth
-    val w = graft.operators.Sketch.CmsWidth
     toks.mapPartitions(localCombine(_))
       .groupByKey(t =>
-        (t.source, java.lang.Math.floorMod(t.item.hashCode, CmsSubShards)))
-      .flatMapGroupsWithState[CmsState, CmsCell](
+        (t.source, java.lang.Math.floorMod(t.item.hashCode, SubShards)))
+      .flatMapGroupsWithState[FoldState, SketchCell](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: (String, Int), in: Iterator[TokC], state: GroupState[CmsState]) =>
-          val cells = state.getOption.map(_.cells.clone())
-            .getOrElse(new Array[Long](d * w))
-          val memo = new java.util.HashMap[String, Array[Int]]()
-          in.foreach { t =>
-            var bs = memo.get(t.item)
-            if (bs == null) {
-              bs = Array.tabulate(d)(
-                graft.operators.Sketch.cmsBucketLocal(_, t.item))
-              memo.put(t.item, bs)
-            }
-            var r = 0
-            while (r < d) { cells(r * w + bs(r)) += t.cnt; r += 1 }
-          }
-          state.update(CmsState(cells))
-          (0 until d * w).iterator.filter(cells(_) != 0L).map { i =>
-            CmsCell(key._1, key._2, i / w, (i % w).toLong, cells(i))
-          }
+        (key: (String, Int), in: Iterator[TokC], state: GroupState[FoldState]) =>
+          val prev = state.getOption
+          val cells = fold.fold(prev.map(_.cells), in.map(t => (t.item, t.cnt)))
+          val ver = prev.fold(1L)(_.ver + 1)
+          state.update(FoldState(cells, ver))
+          fold.cells(cells).map { case (k, c) => SketchCell(key._1, key._2, ver, k, c) }
       }
   }
 
-  /** D7 entry: the documents feed replayed through the streaming
-    * sketch (split=false — one in-order micro-batch, the D6 gate
-    * shape), then C30's batch finisher
-    * ([[graft.operators.Sketch.topkEstimate]]) reads the emitted cells.
-    * With the whole feed folded, the state IS the batch sketch, so the
-    * output equals `agg_topk_sketch` and the oracle is topkWordsSql
-    * VERBATIM — the batch/streaming sketch pair proven equal
-    * cross-engine, like D6's as-of pair. The cross-batch accumulation
-    * contract is spec-gated on a MemoryStream (the D5/D6 precedent). */
-  def streamTopkSketch(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val toks = feed(spark, dir, "documents", split = false)
-      .select(col("source"), col("text"))
-      .as[(String, String)]
-      .flatMap { case (src, text) =>
-        text.split(" ", -1).iterator.filter(_.nonEmpty).map(Tok(src, _))
-      }
-    // per-(source, subshard) counters are monotone → max is the final
-    // snapshot; subshards then re-merge by per-cell SUM (C30b's law)
-    val sketch = drain(spark, OutputMode.Append(),
-        statePartitions(coresWidth(spark)))(topkSketchStreaming(toks))
-      .groupBy(col("source"), col("sub"), col("r"), col("bucket"))
-      .agg(max(col("cnt")).as("c"))
-      .groupBy(col("source"), col("r"), col("bucket"))
-      .agg(sum(col("c")).as("cnt"))
-    val cand = graft.Tables(spark, dir, "documents")
-      .select(col("source"), explode(split(col("text"), " ")).as("item"))
-      .filter(length(col("item")) > 0)
-      .distinct()
-    graft.operators.Sketch.topkEstimate(sketch, cand, Seq("source"), 10)
-  }
-
-  // --------------------------------------------------------------- D8
-  /** Bottom-k KMV state: ascending, ≤K longs, plus a fold version.
-    * Unlike D7's monotone counters, KMV EVICTS (a later batch's small
-    * hash pushes an earlier member out), so the sink's history is not
-    * max-mergeable — `ver` identifies each key's LATEST snapshot, and
-    * only that row set feeds the finisher. */
-  case class KmvState(hs: Array[Long], ver: Long)
-
-  case class KmvCell(event_type: String, sub: Int, ver: Long, h: Long)
-
-  private val KmvSubShards = 32
-
-  /** Streaming KMV distinct maintenance (D8) — C47's bottom-k sketch
-    * kept as live `flatMapGroupsWithState` state: the operational live
-    * distinct counter (HLL's register array cannot compose into set
-    * operations; this state can, which is why the KMV form is the one
-    * worth keeping online). Correctness rests on the bottom-k
-    * SEMILATTICE law C47's spec proves — bottomK(A ∪ B) =
-    * bottomK(bottomK(A) ∪ bottomK(B)) — which is idempotent as well as
-    * commutative/associative, so the state after any stream prefix IS
-    * the batch sketch of that prefix regardless of batch boundaries,
-    * duplicate arrivals, arrival order, or subshard layout
-    * (StreamsSpec proves streamed ≡ [[graft.operators.Sketch.kmvDistinct]]
-    * over a multi-batch out-of-order feed with cross-batch eviction).
-    *
-    * State is ≤K+1 longs per key forever. The hot-key discipline is
-    * D7's: key by (event_type, item-hash mod [[KmvSubShards]]) and
-    * re-merge subshards in the finisher — free and exact by the same
-    * semilattice law. [[localCombine]] collapses duplicate
-    * (type, user) arrivals per input partition before the state
-    * shuffle (KMV is duplicate-insensitive, so the counts it carries
-    * are simply ignored). Hashes are
-    * [[graft.operators.Sketch.kmvHashLocal]], the byte-parity JVM twin
-    * of the entry's md5-conv Column form. */
-  def kmvStreaming(users: Dataset[Tok]): Dataset[KmvCell] = {
-    import users.sparkSession.implicits._
-    val K = graft.operators.Sketch.KmvK
-    users.mapPartitions(localCombine(_))
-      .groupByKey(t =>
-        (t.source, java.lang.Math.floorMod(t.item.hashCode, KmvSubShards)))
-      .flatMapGroupsWithState[KmvState, KmvCell](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: (String, Int), in: Iterator[TokC], state: GroupState[KmvState]) =>
-          val set = scala.collection.mutable.TreeSet.empty[Long]
-          state.getOption.foreach(s => set ++= s.hs)
-          in.foreach { t =>
-            val h = graft.operators.Sketch.kmvHashLocal(t.item)
-            if (set.size < K || h < set.max) {
-              set += h
-              if (set.size > K) set -= set.max
-            }
-          }
-          val ver = state.getOption.map(_.ver + 1).getOrElse(1L)
-          val hs = set.toArray // ascending
-          state.update(KmvState(hs, ver))
-          hs.iterator.map(h => KmvCell(key._1, key._2, ver, h))
-      }
-  }
-
-  /** D8 entry: the events feed replayed through the streaming KMV
-    * (split=false, the D6/D7 gate shape), latest snapshot per
-    * (type, subshard) re-merged by union→bottom-k, then C47's batch
-    * finisher. With the whole feed folded the state IS the batch
-    * sketch, so the output equals `agg_kmv_distinct` and the oracle is
-    * kmvDistinctSql VERBATIM — the batch/streaming pair proven equal
-    * cross-engine. */
-  def streamKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val users = feed(spark, dir, "events", split = false)
-      .select(col("event_type"), col("user_id"))
-      .as[(String, Long)]
-      .map { case (t, u) => Tok(t, u.toString) }
-    // latest snapshot per key via a window over the (tiny,
-    // types×subshards×K-bounded) cell frame — a groupBy+self-join of
-    // the memory table trips conflicting-reference resolution
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type"), col("sub"))
-    val hs = drain(spark, OutputMode.Append(),
-        statePartitions(coresWidth(spark)))(kmvStreaming(users))
-      .withColumn("mv", max(col("ver")).over(w))
-      .filter(col("ver") === col("mv"))
-      .select(col("event_type"), col("h"))
-    graft.operators.Sketch.kmvFinish(
-      hs.groupBy(col("event_type"))
-        .agg(slice(sort_array(collect_set(col("h"))), 1,
-          graft.operators.Sketch.KmvK).as("sk")))
-  }
-
-  // -------------------------------------------------------------- D8b
   /** Event-time idle window before a key's sketch state is evicted. */
   private[streaming] val KmvTtlWindowMs = 7L * 24 * 3600 * 1000
   /** Window for the GATE entries: wider than any test corpus's time
@@ -969,51 +911,45 @@ object Streams {
     * by TransformWithStateSpec's controlled MemoryStream. */
   private[streaming] val TtlGateWindowMs = 36500L * 24 * 3600 * 1000
 
-  case class KmvTtlIn(event_type: String, user_id: Long,
-                      ts: java.sql.Timestamp)
-  /** hs ascending ≤K; lastMs = newest event time folded; timerMs = the
-    * armed idle timer (so re-arming can delete the old one). */
-  case class KmvTtlState(hs: Array[Long], lastMs: Long, timerMs: Long)
-  /** ver orders snapshots; h = −1 is the EVICTION tombstone so the
-    * latest snapshot of an idle-expired key reads as empty. */
-  case class KmvTtlCell(event_type: String, ver: Long, h: Long)
+  /** One TTL'd occurrence: group, item, event time. */
+  case class TtlIn(g: String, item: String, ts: java.sql.Timestamp)
+  /** lastMs = newest event time folded; timerMs = the armed idle timer
+    * (so re-arming can delete the old one). */
+  case class TtlState(cells: Array[Long], lastMs: Long, timerMs: Long)
 
-  /** D8's fold as a `transformWithState` StatefulProcessor with
-    * EVENT-TIME TTL — the capability the r14 TWS probe identified as
-    * the reason to migrate (TTL'd/timer-driven state; plain semantics
-    * migration is churn): at 100 TB-stream scale the key space must be
-    * bounded by RECENCY, not history, so each key arms an idle timer
-    * at (latest event time + [[KmvTtlWindowMs]]) and, when the
-    * WATERMARK passes it with no newer arrival, the sketch state is
-    * CLEARED — a returning key restarts from empty. Eviction is
-    * watermark-driven, hence deterministic for a given batch sequence
-    * (the spec's controlled MemoryStream) — never wall-clock.
+  /** The event-time TTL driver (D7b/D8b/D9b): `fold` as a
+    * `transformWithState` StatefulProcessor — the capability the r14
+    * TWS probe identified as the reason to migrate: at 100 TB-stream
+    * scale the key space must be bounded by RECENCY, not history, so
+    * each key arms an idle timer at (latest event time + `windowMs`)
+    * and, when the WATERMARK passes it with no newer arrival, the
+    * sketch state is CLEARED and a tombstone emitted — a returning key
+    * restarts from empty. Eviction is watermark-driven, hence
+    * deterministic for a given batch sequence — never wall-clock.
     *
-    * Robustness detail: input rows and expired timers can land in the
-    * same micro-batch, and their processing order is an engine detail
-    * — so the expiry handler re-checks staleness against the state
-    * (the armed-timer id must match AND the watermark must genuinely
-    * exceed lastMs + window); a late firing of a superseded timer is a
-    * no-op. `ver` lives in its own ValueState that eviction does NOT
-    * clear, so snapshot ordering stays monotone across a restart.
+    * Input rows and expired timers can land in the same micro-batch,
+    * and their processing order is an engine detail — so the expiry
+    * handler re-checks staleness against the state (the armed-timer id
+    * must match AND the watermark must genuinely exceed lastMs +
+    * window); a late firing of a superseded timer is a no-op. `ver`
+    * lives in its own ValueState that eviction does NOT clear, so
+    * snapshot ordering stays monotone across a restart.
     *
-    * The TTL variant keys by event_type alone (no D8 subshards): a
-    * per-subshard timer would evict shards of one key at different
-    * watermark readings, making the surviving window
-    * hash-layout-dependent — the D8 form keeps subsharding for hot
-    * keys; this form keeps the eviction semantics clean. */
-  final class KmvTtlProcessor(windowMs: Long)
+    * Keys are the group alone, with no subshards: a per-subshard timer
+    * would evict shards of one key at different watermark readings,
+    * making the surviving window hash-layout-dependent. */
+  final class TtlFoldProcessor(fold: SketchFold, windowMs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, KmvTtlIn, KmvTtlCell] {
+        String, TtlIn, SketchCell] {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimerValues, TTLConfig, ValueState}
     import org.apache.spark.sql.{Encoders => E}
-    @transient private var sketch: ValueState[KmvTtlState] = _
+    @transient private var sketch: ValueState[TtlState] = _
     @transient private var ver: ValueState[Long] = _
 
     override def init(outputMode: OutputMode,
         timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      sketch = getHandle.getValueState[KmvTtlState]("sketch",
-        E.product[KmvTtlState], TTLConfig.NONE)
+      sketch = getHandle.getValueState[TtlState]("sketch",
+        E.product[TtlState], TTLConfig.NONE)
       ver = getHandle.getValueState[Long]("ver", E.scalaLong, TTLConfig.NONE)
     }
 
@@ -1022,218 +958,177 @@ object Streams {
       ver.update(v); v
     }
 
-    override def handleInputRows(key: String, in: Iterator[KmvTtlIn],
-        timerValues: TimerValues): Iterator[KmvTtlCell] = {
-      val K = graft.operators.Sketch.KmvK
-      val set = scala.collection.mutable.TreeSet.empty[Long]
+    override def handleInputRows(key: String, in: Iterator[TtlIn],
+        timerValues: TimerValues): Iterator[SketchCell] = {
       val prev = if (sketch.exists()) Some(sketch.get()) else None
-      prev.foreach(s => set ++= s.hs)
-      var lastMs = prev.map(_.lastMs).getOrElse(Long.MinValue)
-      in.foreach { e =>
-        val h = graft.operators.Sketch.kmvHashLocal(e.user_id.toString)
-        if (set.size < K || h < set.max) {
-          set += h
-          if (set.size > K) set -= set.max
-        }
-        if (e.ts.getTime > lastMs) lastMs = e.ts.getTime
-      }
+      var lastMs = prev.fold(Long.MinValue)(_.lastMs)
+      val cells = fold.fold(prev.map(_.cells), in.map { e =>
+        lastMs = math.max(lastMs, e.ts.getTime)
+        (e.item, 1L)
+      })
       prev.foreach(s => getHandle.deleteTimer(s.timerMs))
       val t = lastMs + windowMs
       getHandle.registerTimer(t)
-      sketch.update(KmvTtlState(set.toArray, lastMs, t))
+      sketch.update(TtlState(cells, lastMs, t))
       val v = bumpVer()
-      set.iterator.map(h => KmvTtlCell(key, v, h))
+      fold.cells(cells).map { case (k, c) => SketchCell(key, 0, v, k, c) }
     }
 
     override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[KmvTtlCell] = {
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[SketchCell] = {
       if (sketch.exists()) {
         val s = sketch.get()
         if (s.timerMs == expiredTimerInfo.getExpiryTimeInMs &&
             timerValues.getCurrentWatermarkInMs >= s.lastMs + windowMs) {
           sketch.clear()
-          return Iterator(KmvTtlCell(key, bumpVer(), -1L))
+          return Iterator(SketchCell(key, 0, bumpVer(), -1L, 0L))
         }
       }
       Iterator.empty
     }
   }
 
-  /** D8b entry: the events feed replayed through the TTL'd TWS sketch
-    * (split=false — one in-order micro-batch, the D6/D7/D8 gate
-    * shape) under [[TtlGateWindowMs]], wider than the corpus's time
-    * span — so no key can evict even in the watermark-advancing timer
-    * batch AFTER the data batch, and the folded state IS the batch
-    * sketch — the entry gates the full TWS/timer/RocksDB plumbing
-    * against C47's kmvDistinctSql verbatim, while EVICTION semantics
-    * are spec-gated at the 7-day window on a controlled multi-batch
-    * MemoryStream in TransformWithStateSpec, the D5 precedent. */
-  def streamKmvTtl(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val in = feed(spark, dir, "events", split = false)
-      .select(col("event_type"), col("user_id"),
-        col("ts").cast("timestamp").as("ts"))
-      .withWatermark("ts", "0 seconds")
-      .as[KmvTtlIn]
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type"))
-    val hs = drain(spark, OutputMode.Append(),
-        statePartitions(coresWidth(spark)), RocksDbProvider)(
-        in.groupByKey(_.event_type)
-          .transformWithState(new KmvTtlProcessor(TtlGateWindowMs),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Append()))
-      .withColumn("mv", max(col("ver")).over(w))
-      .filter(col("ver") === col("mv") && col("h") >= 0)
-      .select(col("event_type"), col("h"))
-    graft.operators.Sketch.kmvFinish(
-      hs.groupBy(col("event_type"))
-        .agg(slice(sort_array(collect_set(col("h"))), 1,
-          graft.operators.Sketch.KmvK).as("sk")))
+  /** [[TtlFoldProcessor]] over `in` keyed by group, under a zero-delay
+    * watermark on `ts`. */
+  def ttlStreaming(fold: SketchFold, windowMs: Long)(
+      in: Dataset[TtlIn]): Dataset[SketchCell] = {
+    import in.sparkSession.implicits._
+    in.withWatermark("ts", "0 seconds")
+      .groupByKey(_.g)
+      .transformWithState(new TtlFoldProcessor(fold, windowMs),
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        OutputMode.Append())
   }
 
-  // -------------------------------------------------------- D7b / D9b
-  /** TTL'd counter-sketch input: group key, CMS item (D7b), scaled
-    * value (D9b), event time. */
-  case class SketchTtlIn(g: String, item: String, v: Long,
-                         ts: java.sql.Timestamp)
-  /** Flat counter array + the D8b lastMs/timerMs bookkeeping. */
-  case class CellTtlState(cells: Array[Long], lastMs: Long, timerMs: Long)
-  /** idx = −1 is the eviction tombstone (cnt 0), the D8b convention. */
-  case class CellTtlCell(g: String, ver: Long, idx: Int, cnt: Long)
+  /** The one read of a live sketch's cells: each (g, sub)'s latest
+    * version, tombstones dropped, subshards merged by the fold's own
+    * merge — (g, key, cnt) for counters, (g, sk) for bottom-k. The
+    * latest version is a window over the (tiny, groups × subshards ×
+    * state-bounded) cell frame: a groupBy + self-join of a memory table
+    * trips conflicting-reference resolution. */
+  private[streaming] def snapshot(fold: SketchFold, cells: DataFrame): DataFrame =
+    fold.merge(cells
+      .withColumn("mv", max(col("ver")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("g"), col("sub"))))
+      .filter(col("ver") === col("mv") && col("key") >= 0))
 
-  /** D8b's event-time-TTL machinery applied to the COUNT-MONOID
-    * sketches — the CMS (D7) and the log-histogram (D9) were the two
-    * remaining live sketches whose key space grows with HISTORY
-    * (every event_type / group ever seen holds its counters forever);
-    * this processor bounds both by RECENCY: each key arms an idle
-    * timer at (latest event time + window), and when the WATERMARK
-    * passes it with no newer arrival the counter array is CLEARED —
-    * a returning key restarts from zero. All the D8b hard parts
-    * carry over verbatim: the expiry handler re-checks staleness
-    * against the state (armed-timer id must match AND the watermark
-    * must genuinely exceed lastMs + window — input rows and expired
-    * timers can share a micro-batch in either order), `ver` lives in
-    * its own un-cleared ValueState so snapshot ordering stays
-    * monotone across eviction, and keying is by the group alone (no
-    * subshards — per-subshard timers would evict shards of one key at
-    * different watermark readings, making the surviving window
-    * hash-layout-dependent).
-    *
-    * The sketch-specific part is ONE function: `cellsOf` maps an
-    * input row to its (cell index, increment) contributions —
-    * [[cmsCellsOf]] (d rows of +1) or [[histCellsOf]] (one log-bucket
-    * of +1). Because both sketches are commutative count monoids,
-    * the state after any stream prefix with no eviction IS the batch
-    * sketch of that prefix, so the gate entries replay the whole feed
-    * under [[TtlGateWindowMs]] and compare against the BATCH oracles
-    * verbatim; eviction semantics are spec-gated on a controlled
-    * multi-batch MemoryStream (TransformWithStateSpec, the D8b
-    * precedent). */
-  final class CellTtlProcessor(nCells: Int, windowMs: Long,
-      cellsOf: SketchTtlIn => Iterator[(Int, Long)])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, SketchTtlIn, CellTtlCell] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.{Encoders => E}
-    @transient private var sketch: ValueState[CellTtlState] = _
-    @transient private var ver: ValueState[Long] = _
+  /** A gate's whole feed through the untimed driver, read back. */
+  private def untimedGate(spark: SparkSession, fold: SketchFold,
+      toks: Dataset[Tok]): DataFrame =
+    snapshot(fold, drain(spark, OutputMode.Append(),
+      statePartitions(coresWidth(spark)))(foldStreaming(fold)(toks)))
 
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      sketch = getHandle.getValueState[CellTtlState]("sketch",
-        E.product[CellTtlState], TTLConfig.NONE)
-      ver = getHandle.getValueState[Long]("ver", E.scalaLong, TTLConfig.NONE)
-    }
+  /** A gate's whole feed through the TTL driver under
+    * [[TtlGateWindowMs]], read back: nothing evicts, even in the
+    * watermark-advancing timer batch after the data batch, so the
+    * state IS the batch sketch. */
+  private def ttlGate(spark: SparkSession, fold: SketchFold,
+      in: Dataset[TtlIn]): DataFrame =
+    snapshot(fold, drain(spark, OutputMode.Append(),
+      statePartitions(coresWidth(spark)), RocksDbProvider)(
+      ttlStreaming(fold, TtlGateWindowMs)(in)))
 
-    private def bumpVer(): Long = {
-      val v = (if (ver.exists()) ver.get() else 0L) + 1L
-      ver.update(v); v
-    }
-
-    override def handleInputRows(key: String, in: Iterator[SketchTtlIn],
-        timerValues: TimerValues): Iterator[CellTtlCell] = {
-      val prev = if (sketch.exists()) Some(sketch.get()) else None
-      val cells = prev.map(_.cells.clone())
-        .getOrElse(new Array[Long](nCells))
-      var lastMs = prev.map(_.lastMs).getOrElse(Long.MinValue)
-      in.foreach { e =>
-        cellsOf(e).foreach { case (i, c) => cells(i) += c }
-        if (e.ts.getTime > lastMs) lastMs = e.ts.getTime
-      }
-      prev.foreach(s => getHandle.deleteTimer(s.timerMs))
-      val t = lastMs + windowMs
-      getHandle.registerTimer(t)
-      sketch.update(CellTtlState(cells, lastMs, t))
-      val v = bumpVer()
-      (0 until nCells).iterator.filter(cells(_) != 0L)
-        .map(i => CellTtlCell(key, v, i, cells(i)))
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[CellTtlCell] = {
-      if (sketch.exists()) {
-        val s = sketch.get()
-        if (s.timerMs == expiredTimerInfo.getExpiryTimeInMs &&
-            timerValues.getCurrentWatermarkInMs >= s.lastMs + windowMs) {
-          sketch.clear()
-          return Iterator(CellTtlCell(key, bumpVer(), -1, 0L))
-        }
-      }
-      Iterator.empty
-    }
-  }
-
-  /** D7b cell mapper: the item contributes +1 to its CMS bucket in
-    * each of the d rows ([[graft.operators.Sketch.cmsBucketLocal]],
-    * byte-identical to the batch Column form). */
-  private[streaming] def cmsCellsOf(e: SketchTtlIn): Iterator[(Int, Long)] = {
+  /** A CMS snapshot's cells as C30's (group, r, bucket, cnt) table. */
+  private def cmsTable(snap: DataFrame, group: String): DataFrame = {
     val w = graft.operators.Sketch.CmsWidth
-    (0 until graft.operators.Sketch.CmsDepth).iterator
-      .map(r => (r * w + graft.operators.Sketch.cmsBucketLocal(r, e.item), 1L))
+    snap.select(col("g").as(group),
+      expr(s"key div $w").cast("int").as("r"),
+      (col("key") % w).as("bucket"), col("cnt"))
   }
 
-  /** D9b cell mapper: the value's log-bucket gets +1. */
-  private[streaming] def histCellsOf(e: SketchTtlIn): Iterator[(Int, Long)] =
-    Iterator((logBucketLocal(e.v), 1L))
+  // ------------------------------------------------------- D7 / D8 / D9
+  /** Order value in exact-decimal cents (the Olap money discipline),
+    * computed IN Catalyst before rows reach the JVM fold. */
+  private def cents: Column =
+    (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+
+  /** D7 entry: the documents feed's words (a NULL text has none, as in
+    * the batch `explode(split(...))`) through the untimed CMS fold
+    * (split=false — one in-order micro-batch, the D6 gate shape), then
+    * C30's batch finisher ([[graft.operators.Sketch.topkEstimate]]).
+    * With the whole feed folded, the state IS the batch sketch, so the
+    * output equals `agg_topk_sketch` and the oracle is topkWordsSql
+    * VERBATIM. The cross-batch accumulation contract is spec-gated on
+    * a MemoryStream (the D5/D6 precedent). */
+  def streamTopkSketch(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val toks = feed(spark, dir, "documents", split = false)
+      .select(col("source"), col("text"))
+      .as[(String, String)]
+      .flatMap { case (src, text) =>
+        Option(text).iterator.flatMap(_.split(" ", -1)).filter(_.nonEmpty)
+          .map(Tok(src, _))
+      }
+    val cand = graft.Tables(spark, dir, "documents")
+      .select(col("source"), explode(split(col("text"), " ")).as("item"))
+      .filter(length(col("item")) > 0)
+      .distinct()
+    graft.operators.Sketch.topkEstimate(
+      cmsTable(untimedGate(spark, CmsFold, toks), "source"), cand, Seq("source"), 10)
+  }
+
+  /** D8 entry: distinct users per event type through the untimed KMV
+    * fold, then C47's batch finisher; [[localCombine]] collapses
+    * duplicate (type, user) arrivals before the state shuffle. Whole
+    * feed folded ⇒ output equals `agg_kmv_distinct` ⇒ the oracle is
+    * kmvDistinctSql VERBATIM. */
+  def streamKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val users = feed(spark, dir, "events", split = false)
+      .select(col("event_type"), col("user_id"))
+      .as[(String, Long)]
+      .map { case (t, u) => Tok(t, u.toString) }
+    graft.operators.Sketch.kmvFinish(
+      untimedGate(spark, KmvFold, users).withColumnRenamed("g", "event_type"))
+  }
+
+  /** D9 entry: order [[cents]] mapped to their log buckets BEFORE the
+    * state shuffle — so [[localCombine]] collapses each partition to
+    * at most 64 rows per group whatever the value volume — through the
+    * untimed histogram fold, then C29's batch finisher. Whole feed folded ⇒ output equals
+    * `agg_quantile_sketch` ⇒ the oracle is quantileOrderValuesSql
+    * VERBATIM. */
+  def streamQuantileSketch(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val toks = feed(spark, dir, "orders", split = false)
+      .select(col("o_orderpriority"), cents)
+      .as[(String, Long)]
+      .map { case (g, v) => Tok(g, logBucketLocal(v).toString) }
+    graft.operators.Sketch.logHistQuantile(
+      untimedGate(spark, HistFold, toks).select(col("g").as("o_orderpriority"),
+        col("key").cast("int").as("bucket"), col("cnt")),
+      Seq("o_orderpriority"), Seq(50, 90, 99))
+  }
+
+  // ---------------------------------------------------- D7b / D8b / D9b
+  /** The events feed as TTL'd (event type, user) occurrences — the
+    * D7b and D8b input. The TTL gates replay one in-order batch
+    * (split=false) under [[TtlGateWindowMs]], so each gates the full
+    * TWS/timer/RocksDB plumbing against its batch oracle verbatim,
+    * while EVICTION is spec-gated at the 7-day window on a controlled
+    * multi-batch MemoryStream in TransformWithStateSpec (the D5
+    * precedent). */
+  private def eventUsersTtl(spark: SparkSession, dir: String): Dataset[TtlIn] = {
+    import spark.implicits._
+    feed(spark, dir, "events", split = false)
+      .select(col("event_type").as("g"), col("user_id").cast("string").as("item"),
+        col("ts").cast("timestamp").as("ts"))
+      .as[TtlIn]
+  }
 
   /** D7b entry: CMS heavy hitters with event-time TTL — top users per
     * event type over the events feed (the feed HAS event time, which
-    * the D7 documents feed does not), replayed in one in-order batch
-    * under [[TtlGateWindowMs]] (wider than the corpus: nothing evicts,
-    * even in the watermark-advancing timer batch), latest snapshot per
-    * key, then C30's batch finisher over the same candidate set. The
-    * folded state IS the batch sketch, so the oracle is the batch CMS
-    * replayed on (event_type, user_id) — [[topkEventUsersSql]]. */
+    * the D7 documents feed does not), then C30's batch finisher over
+    * the same candidate set. The oracle is the batch CMS replayed on
+    * (event_type, user_id) — [[topkEventUsersSql]]. */
   def streamTopkTtl(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val d = graft.operators.Sketch.CmsDepth
-    val w = graft.operators.Sketch.CmsWidth
-    val in = feed(spark, dir, "events", split = false)
-      .select(col("event_type").as("g"),
-        col("user_id").cast("string").as("item"),
-        lit(0L).as("v"),
-        col("ts").cast("timestamp").as("ts"))
-      .withWatermark("ts", "0 seconds")
-      .as[SketchTtlIn]
-    val win = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
-    val sketch = drain(spark, OutputMode.Append(),
-        statePartitions(coresWidth(spark)), RocksDbProvider)(
-        in.groupByKey(_.g)
-          .transformWithState(
-            new CellTtlProcessor(d * w, TtlGateWindowMs, cmsCellsOf),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Append()))
-      .withColumn("mv", max(col("ver")).over(win))
-      .filter(col("ver") === col("mv") && col("idx") >= 0)
-      .select(col("g").as("event_type"),
-        expr(s"idx div $w").cast("int").as("r"),
-        (col("idx") % w).cast("long").as("bucket"),
-        col("cnt"))
+    val in = eventUsersTtl(spark, dir)
     val cand = graft.Tables(spark, dir, "events")
       .select(col("event_type"), col("user_id").cast("string").as("item"))
       .distinct()
-    graft.operators.Sketch.topkEstimate(sketch, cand, Seq("event_type"), 10)
+    graft.operators.Sketch.topkEstimate(
+      cmsTable(ttlGate(spark, CmsFold, in), "event_type"), cand,
+      Seq("event_type"), 10)
   }
 
   /** The D7b batch oracle: C30's CMS estimate replayed on
@@ -1262,111 +1157,26 @@ object Streams {
        |SELECT event_type, CAST(rank AS BIGINT) AS rank, item, est
        |FROM rk WHERE rank <= 10""".stripMargin
 
-  /** D9b entry: the log-histogram quantile sketch with event-time TTL
-    * — order-value quantiles per priority keyed by o_orderdate, the
-    * D7b shape with [[histCellsOf]] (cents computed IN Catalyst before
-    * the fold, the D9 money discipline). Whole feed folded under
-    * [[TtlGateWindowMs]] ⇒ state IS the batch sketch ⇒ the oracle is
-    * quantileOrderValuesSql VERBATIM. */
+  /** D8b entry: D8's KMV with event-time TTL; the oracle is
+    * kmvDistinctSql VERBATIM. */
+  def streamKmvTtl(spark: SparkSession, dir: String): DataFrame = {
+    graft.operators.Sketch.kmvFinish(
+      ttlGate(spark, KmvFold, eventUsersTtl(spark, dir)).withColumnRenamed("g", "event_type"))
+  }
+
+  /** D9b entry: the log-histogram with event-time TTL — order-value
+    * quantiles per priority keyed by o_orderdate, cents bucketed as in
+    * D9 before the fold. The oracle is quantileOrderValuesSql
+    * VERBATIM. */
   def streamQuantileTtl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val in = feed(spark, dir, "orders", split = false)
-      .select(col("o_orderpriority").as("g"),
-        lit("").as("item"),
-        (col("o_totalprice").cast("decimal(18,2)") * 100)
-          .cast("long").as("v"),
-        col("o_orderdate").cast("timestamp").as("ts"))
-      .withWatermark("ts", "0 seconds")
-      .as[SketchTtlIn]
-    val win = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
-    val sketch = drain(spark, OutputMode.Append(),
-        statePartitions(coresWidth(spark)), RocksDbProvider)(
-        in.groupByKey(_.g)
-          .transformWithState(
-            new CellTtlProcessor(64, TtlGateWindowMs, histCellsOf),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Append()))
-      .withColumn("mv", max(col("ver")).over(win))
-      .filter(col("ver") === col("mv") && col("idx") >= 0)
-      .select(col("g").as("o_orderpriority"),
-        col("idx").as("bucket"), col("cnt"))
-    graft.operators.Sketch.logHistQuantile(sketch,
-      Seq("o_orderpriority"), Seq(50, 90, 99))
-  }
-
-  // --------------------------------------------------------------- D9
-  /** 64 log-histogram buckets (bit lengths of non-negative longs),
-    * fixed state per key forever. */
-  case class QHistState(cells: Array[Long])
-
-  case class QHistCell(g: String, sub: Int, bucket: Int, cnt: Long)
-
-  private val QSubShards = 32
-
-  /** JVM twin of Sketch's `length(bin(v))` bucket Column (0 for 0) —
-    * parity spec-pinned on power-of-two edges. Negative values fail
-    * fast, the batch raise_error discipline. */
-  private[streaming] def logBucketLocal(v: Long): Int = {
-    require(v >= 0,
-      s"stream quantile sketch: negative value $v — scale to non-negative first")
-    if (v == 0L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(v)
-  }
-
-  /** Streaming log-histogram quantile maintenance (D9) — C29's sketch
-    * as LIVE flatMapGroupsWithState state, completing the streaming
-    * sketch TRIO (D8 = distinct via the KMV semilattice, D7 =
-    * frequencies via the CMS count monoid, D9 = quantiles via the SAME
-    * count monoid over bit-length buckets): per-bucket counts add, so
-    * the summed state after any stream prefix IS the batch
-    * [[graft.operators.Sketch.logHistSketch]] of that prefix under any
-    * batch boundaries, arrival order, or subshard layout (StreamsSpec
-    * proves streamed ≡ batch over a multi-batch out-of-order feed).
-    * State is a FIXED 64 longs per key. Values map to buckets BEFORE
-    * the state shuffle, so [[localCombine]] collapses each partition
-    * to per-(group, bucket) counts — at most 64 rows per group per
-    * partition cross the wire whatever the value volume (the item is
-    * the bucket ordinal in string form: the Tok reuse costs one
-    * toInt per combined row, not per occurrence). */
-  def quantileSketchStreaming(toks: Dataset[Tok]): Dataset[QHistCell] = {
-    import toks.sparkSession.implicits._
-    toks.mapPartitions(localCombine(_))
-      .groupByKey(t =>
-        (t.source, java.lang.Math.floorMod(t.item.hashCode, QSubShards)))
-      .flatMapGroupsWithState[QHistState, QHistCell](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: (String, Int), in: Iterator[TokC], state: GroupState[QHistState]) =>
-          val cells = state.getOption.map(_.cells.clone())
-            .getOrElse(new Array[Long](64))
-          in.foreach(t => cells(t.item.toInt) += t.cnt)
-          state.update(QHistState(cells))
-          (0 until 64).iterator.filter(cells(_) != 0L)
-            .map(b => QHistCell(key._1, key._2, b, cells(b)))
-      }
-  }
-
-  /** D9 entry: order cents (the exact-decimal Olap money discipline,
-    * applied IN Catalyst before rows reach the JVM fold) replayed
-    * through the streaming log-histogram (split=false, the D6/D7/D8
-    * gate shape), monotone max-snapshot per subshard, per-cell SUM
-    * re-merge (the C29b monoid law, operationally), then C29's batch
-    * finisher. With the whole feed folded the state IS the batch
-    * sketch, so the output equals `agg_quantile_sketch` and the oracle
-    * is quantileOrderValuesSql VERBATIM. */
-  def streamQuantileSketch(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val toks = feed(spark, dir, "orders", split = false)
-      .select(col("o_orderpriority"),
-        (col("o_totalprice").cast("decimal(18,2)") * 100)
-          .cast("long").as("cents"))
-      .as[(String, Long)]
-      .map { case (g, v) => Tok(g, logBucketLocal(v).toString) }
-    val sketch = drain(spark, OutputMode.Append(),
-        statePartitions(coresWidth(spark)))(quantileSketchStreaming(toks))
-      .groupBy(col("g"), col("sub"), col("bucket"))
-      .agg(max(col("cnt")).as("c"))
-      .groupBy(col("g").as("o_orderpriority"), col("bucket"))
-      .agg(sum(col("c")).as("cnt"))
-    graft.operators.Sketch.logHistQuantile(sketch,
+      .select(col("o_orderpriority"), cents, col("o_orderdate").cast("timestamp"))
+      .as[(String, Long, java.sql.Timestamp)]
+      .map { case (g, v, ts) => TtlIn(g, logBucketLocal(v).toString, ts) }
+    graft.operators.Sketch.logHistQuantile(
+      ttlGate(spark, HistFold, in).select(col("g").as("o_orderpriority"),
+        col("key").cast("int").as("bucket"), col("cnt")),
       Seq("o_orderpriority"), Seq(50, 90, 99))
   }
 

@@ -21,6 +21,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The persisted RDDs `body` leaves behind that its result frame does
+    * not scan: blocks no caller can reach to free. */
+  def leakedRdds(body: => org.apache.spark.sql.DataFrame): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val df = body
+    val scanned = df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }
+    (spark.sparkContext.getPersistentRDDs.keySet -- before -- scanned).toSet
+  }
 }
 
 object SparkSpec {

@@ -88,6 +88,11 @@ class AnnGraphSpec extends SparkSpec {
       shuffled.sortBy(r => (r._1, r._2)).toSeq)
   }
 
+  test("nn-descent keeps only the checkpoints its result scans") {
+    val leaked = leakedRdds(Ann.graphNndescent(spark, dir))
+    assert(leaked.isEmpty, s"graphNndescent left persisted RDDs $leaked")
+  }
+
   test("graph beam: partition invariance") {
     import graft.Tables
     val base = Ann.graphBeam(spark, dir).collect().map(_.toSeq).toSeq

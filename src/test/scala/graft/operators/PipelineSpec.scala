@@ -383,6 +383,34 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("skyline2d keeps NULL-coordinate points, which dominate nothing (brute force)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val known = Seq.fill(200)((rnd.nextInt(100000).toLong,
+      rnd.nextInt(50).toLong + 1)).distinct
+    // a NULL quality with the shortest length, and the highest quality
+    // with a NULL length, would each dominate the frontier if compared
+    val pts: Seq[(Option[Long], Option[Long])] =
+      known.map { case (q, n) => (Some(q), Some(n)) } ++
+        Seq((None, Some(0L)), (Some(1000000L), None), (None, None))
+    // the oracle's NOT EXISTS: comparisons with NULL are never true
+    val brute = pts.filter {
+      case (Some(q), Some(n)) => !pts.exists {
+        case (Some(q2), Some(n2)) => q2 >= q && n2 <= n && (q2 > q || n2 < n)
+        case _ => false
+      }
+      case _ => true
+    }.toSet
+    val df = pts.toDF("quality_micro", "n_words")
+      .withColumn("n_docs", lit(1L))
+      .withColumn("min_doc_id", lit(0L))
+    val got = Pipeline.skyline2d(df).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        Option(r.get(1)).map(_.asInstanceOf[Long]))).toSet
+    assert(got === brute)
+    assert(got.count(p => p._1.isEmpty || p._2.isEmpty) === 3)
+  }
+
   test("pareto skyline on the corpus: sound, complete, and layout-invariant") {
     val d = graft.Tables(spark, dir, "documents")
     val sky = Pipeline.paretoSkyline(d).collect()

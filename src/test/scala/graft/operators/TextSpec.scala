@@ -22,6 +22,20 @@ class TextSpec extends SparkSpec {
     assert(bad.count() === 0)
   }
 
+  test("quality and tokens: the empty text gives NULL ratios, never a division error") {
+    import spark.implicits._
+    val df = Seq((1L, ""), (2L, "the cat")).toDF("doc_id", "text")
+    val q = Text.quality(df).orderBy("doc_id").collect()
+    assert(q(0).getLong(1) === 0L) // n_chars
+    assert(q(0).isNullAt(q(0).fieldIndex("alpha_ratio")))
+    assert(q(0).isNullAt(q(0).fieldIndex("quality")))
+    assert(q(1).getDouble(q(1).fieldIndex("stop_ratio")) === 0.5)
+    val t = Text.tokens(df).orderBy("doc_id").collect()
+    assert(t(0).getLong(t(0).fieldIndex("re_tokens")) === 0L)
+    assert(t(0).isNullAt(t(0).fieldIndex("chars_per_token")))
+    assert(t(1).getDouble(t(1).fieldIndex("chars_per_token")) === 3.5) // 7 chars / 2 tokens
+  }
+
   test("token counts: ws_tokens equals wordcount of single-spaced text") {
     import spark.implicits._
     val df = Seq((1L, "a b c"), (2L, "one"), (3L, "x  y")).toDF("doc_id", "text")
@@ -564,6 +578,11 @@ class TextSpec extends SparkSpec {
     // depth-vs-count demonstration (C37 would need one round per merge)
     assert(got.map(_._1).max < Text.BpeBatchRounds,
       "expected the merge table to exhaust before the last round")
+  }
+
+  test("bpe learn batched keeps no round checkpoint behind") {
+    val leaked = leakedRdds(Text.bpeLearnBatched(spark, dir))
+    assert(leaked.isEmpty, s"bpeLearnBatched left persisted RDDs $leaked")
   }
 
   test("bpe learn batched: application order within a round is irrelevant (disjointness law)") {

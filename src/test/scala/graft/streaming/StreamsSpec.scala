@@ -418,32 +418,35 @@ class StreamsSpec extends SparkSpec {
     assert(batch.exceptAll(streamed).count() === 0)
   }
 
+  /** Run the untimed sketch driver over explicit micro-batches; the
+    * sink's full cell history. */
+  private def runFold(fold: Streams.SketchFold,
+      batches: Seq[Seq[Streams.Tok]]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Streams.Tok]
+    val name = s"fold_test_${System.nanoTime()}"
+    val q = Streams.foldStreaming(fold)(input.toDS())
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append()).start()
+    try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(name)
+  }
+
   test("D7: streaming CMS state equals the batch sketch across out-of-order micro-batches") {
     import spark.implicits._
     import graft.streaming.Streams.Tok
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Tok]
-    val name = s"d7_test_${System.nanoTime()}"
-    val q = Streams.topkSketchStreaming(input.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).start()
+    val w = graft.operators.Sketch.CmsWidth
     val b1 = Seq(Tok("a", "x"), Tok("a", "y"), Tok("b", "x"), Tok("a", "x"))
     val b2 = Seq(Tok("a", "z"), Tok("b", "x"), Tok("a", "x"), Tok("b", "q"))
-    try {
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      input.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // per-(source, subshard) counters are monotone: max per cell across
-    // the append emissions is the final snapshot; subshards re-merge by
+    val cells = runFold(Streams.CmsFold, Seq(b1, b2))
+    // each (source, subshard)'s latest snapshot, subshards re-merged by
     // per-cell SUM — and the result must equal the batch sketch of the
     // CONCATENATED batches (the monoid law, operationally)
-    def finalCells = spark.table(name)
-      .groupBy(col("source"), col("sub"), col("r"), col("bucket"))
-      .agg(max(col("cnt")).as("c"))
-      .groupBy(col("source"), col("r"), col("bucket"))
-      .agg(sum(col("c")).as("cnt"))
+    def finalCells = Streams.snapshot(Streams.CmsFold, cells)
+      .select(col("g").as("source"), expr(s"key div $w").cast("int").as("r"),
+        (col("key") % w).as("bucket"), col("cnt"))
     val streamed = finalCells.collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .toSet
@@ -464,15 +467,26 @@ class StreamsSpec extends SparkSpec {
     }
   }
 
+  test("D7: a NULL text has no tokens — the entry equals agg_topk_sketch") {
+    val tmp = java.nio.file.Files.createTempDirectory("d7_null_text").toFile
+    try {
+      val docs = graft.Tables(spark, dir, "documents")
+      docs.withColumn("text",
+          when(col("doc_id") % 7 === 0, lit(null).cast("string"))
+            .otherwise(col("text")))
+        .write.parquet(s"$tmp/documents.parquet")
+      val nulls = graft.Tables(spark, tmp.getPath, "documents")
+        .filter(col("text").isNull).count()
+      assert(nulls > 0, "the fixture must hold NULL texts")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+      assert(rows(Streams.streamTopkSketch(spark, tmp.getPath)) ===
+        rows(graft.operators.Sketch.topkWords(spark, tmp.getPath)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
   test("D8: streaming KMV equals the batch sketch; later batches evict across batches") {
     import spark.implicits._
     import graft.streaming.Streams.Tok
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Tok]
-    val name = s"d8_test_${System.nanoTime()}"
-    val q = Streams.kmvStreaming(input.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).start()
     // >K distinct per (type, subshard) so the sketch saturates and
     // batch 2's smaller hashes must EVICT batch-1 members; overlapping
     // id ranges exercise duplicate-arrival idempotence
@@ -480,25 +494,12 @@ class StreamsSpec extends SparkSpec {
       (0L until 300L).map(i => Tok("view", (i * 7).toString))
     val b2 = (1500L until 3500L).map(i => Tok("click", i.toString)) ++
       (0L until 300L).map(i => Tok("view", (i * 3).toString))
-    try {
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      input.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val cells = spark.table(name)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type"), col("sub"))
-    val hs = cells.withColumn("mv", max(col("ver")).over(w))
-      .filter(col("ver") === col("mv"))
-      .select(col("event_type"), col("h"))
+    val cells = runFold(Streams.KmvFold, Seq(b1, b2))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getString(4))).toSeq
     val streamed = rows(graft.operators.Sketch.kmvFinish(
-      hs.groupBy(col("event_type"))
-        .agg(slice(sort_array(collect_set(col("h"))), 1,
-          graft.operators.Sketch.KmvK).as("sk"))))
+      Streams.snapshot(Streams.KmvFold, cells).withColumnRenamed("g", "event_type")))
     val direct = rows(graft.operators.Sketch.kmvDistinct(
       (b1 ++ b2).map(t => (t.source, t.item)).toDF("event_type", "user_id")))
     assert(streamed === direct)
@@ -508,8 +509,8 @@ class StreamsSpec extends SparkSpec {
     // direct eviction evidence: some batch-1 member of a subshard that
     // re-emitted in batch 2 is gone from its ver=2 snapshot
     def snap(v: Int) = cells
-      .filter(col("ver") === v && col("event_type") === "click")
-      .select(col("sub"), col("h")).collect()
+      .filter(col("ver") === v && col("g") === "click")
+      .select(col("sub"), col("key")).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet
     val v1 = snap(1); val v2 = snap(2)
     val resub = v2.map(_._1)
@@ -530,12 +531,6 @@ class StreamsSpec extends SparkSpec {
   test("D9: streaming log-histogram equals the batch sketch across out-of-order batches") {
     import spark.implicits._
     import graft.streaming.Streams.Tok
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Tok]
-    val name = s"d9_test_${System.nanoTime()}"
-    val q = Streams.quantileSketchStreaming(input.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).start()
     // values spanning buckets incl. 0 and a repeat in a later batch
     // (cross-batch carry); buckets computed by the JVM twin exactly as
     // the entry's map stage does
@@ -543,18 +538,9 @@ class StreamsSpec extends SparkSpec {
     val b2v = Seq("a" -> 6L, "b" -> 100L, "a" -> 1L, "b" -> 255L, "a" -> 1023L)
     def toks(vs: Seq[(String, Long)]) =
       vs.map { case (g, v) => Tok(g, Streams.logBucketLocal(v).toString) }
-    try {
-      input.addData(toks(b1v): _*)
-      q.processAllAvailable()
-      input.addData(toks(b2v): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table(name)
-      .groupBy(col("g"), col("sub"), col("bucket"))
-      .agg(max(col("cnt")).as("c"))
-      .groupBy(col("g"), col("bucket"))
-      .agg(sum(col("c")).as("cnt"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
+    val streamed = Streams.snapshot(Streams.HistFold,
+        runFold(Streams.HistFold, Seq(toks(b1v), toks(b2v))))
+      .collect().map(r => (r.getString(0), r.getLong(1).toInt, r.getLong(2))).toSet
     val direct = graft.operators.Sketch
       .logHistSketch((b1v ++ b2v).toDF("g", "v"), Seq("g"), "v")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet

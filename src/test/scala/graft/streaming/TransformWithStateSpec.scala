@@ -129,48 +129,48 @@ class TransformWithStateSpec extends SparkSpec {
     // live state supersedes the seed where newer
     assert(out.exists(r => r.click_id == 12 && r.purchase_id.contains(11L)))
   }
-  // ------------------------------------------------------- D8b TTL KMV
+  // --------------------------------------- D7b/D8b/D9b TTL live sketches
   import java.sql.Timestamp
-  import graft.streaming.Streams.{KmvTtlCell, KmvTtlIn}
+  import org.apache.spark.sql.functions.col
+  import graft.streaming.Streams.TtlIn
 
   private def tsAt(t0: LocalDateTime, plusMin: Long): Timestamp =
     Timestamp.valueOf(t0.plusMinutes(plusMin))
 
-  /** Drive the TTL processor over explicit micro-batches; returns the
+  /** Drive the TTL driver over explicit micro-batches; returns the
     * full emitted cell history. */
-  private def runTtl(batches: Seq[Seq[KmvTtlIn]], windowMs: Long): Seq[KmvTtlCell] = {
+  private def runTtl(fold: Streams.SketchFold, batches: Seq[Seq[TtlIn]],
+      windowMs: Long): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     withRocksDb {
-      val input = MemoryStream[KmvTtlIn]
+      val input = MemoryStream[TtlIn]
       val name = s"tws_ttl_${System.nanoTime()}"
-      val q = input.toDS()
-        .withWatermark("ts", "0 seconds")
-        .groupByKey(_.event_type)
-        .transformWithState(new Streams.KmvTtlProcessor(windowMs),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
+      val q = Streams.ttlStreaming(fold, windowMs)(input.toDS())
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
-      try {
-        batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        spark.table(name).as[KmvTtlCell].collect().toSeq
-      } finally q.stop()
+      try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      spark.table(name)
     }
   }
 
-  /** Latest-version surviving hash set per key — the entry's read. */
-  private def survivors(cells: Seq[KmvTtlCell]): Map[String, Set[Long]] =
-    cells.groupBy(_.event_type).map { case (k, cs) =>
-      val latest = cs.map(_.ver).max
-      k -> cs.filter(c => c.ver == latest && c.h >= 0).map(_.h).toSet
-    }
+  private def tombstoned(cells: org.apache.spark.sql.DataFrame, g: String): Boolean =
+    !cells.filter(col("g") === g && col("key") === -1L).isEmpty
+
+  /** Latest-version surviving hash set per key — the entries' read. */
+  private def survivors(cells: org.apache.spark.sql.DataFrame): Map[String, Set[Long]] =
+    Streams.snapshot(Streams.KmvFold, cells).collect()
+      .map(r => r.getString(0) -> r.getSeq[Long](1).toSet).toMap
+
+  private def kmv(uids: Long*): Set[Long] =
+    uids.map(u => graft.operators.Sketch.kmvHashLocal(u.toString)).toSet
 
   test("TTL KMV: an idle key's state is evicted at the event-time watermark and restarts") {
     val t0 = LocalDateTime.of(2024, 3, 1, 10, 0, 0)
     val w = 10L * 60 * 1000 // 10 minutes
-    def in(tp: String, uid: Long, m: Long) = KmvTtlIn(tp, uid, tsAt(t0, m))
-    val cells = runTtl(Seq(
+    def in(tp: String, uid: Long, m: Long) = TtlIn(tp, uid.toString, tsAt(t0, m))
+    val cells = runTtl(Streams.KmvFold, Seq(
       // batch 1: A has 5 users, B one — both sketches live
       Seq(in("A", 1, 0), in("A", 2, 0), in("A", 3, 0), in("A", 4, 0),
         in("A", 5, 0), in("B", 100, 0)),
@@ -183,61 +183,30 @@ class TransformWithStateSpec extends SparkSpec {
       // batch 4: A returns — the sketch RESTARTS from empty
       Seq(in("A", 6, 45), in("A", 7, 45))), w)
     // the eviction tombstone was emitted for A
-    assert(cells.exists(c => c.event_type == "A" && c.h == -1L),
-      "expected an eviction tombstone for the idle key")
+    assert(tombstoned(cells, "A"), "expected an eviction tombstone for the idle key")
     val sv = survivors(cells)
-    def kmv(uids: Long*) =
-      uids.map(u => graft.operators.Sketch.kmvHashLocal(u.toString)).toSet
     // streamed ≡ batch ON THE SURVIVING WINDOW: A restarted at batch 4;
     // B never idled past the window, so its full history survives
     assert(sv("A") === kmv(6, 7))
     assert(sv("B") === kmv(100, 101, 102))
   }
 
-  // --------------------------------------------- D7b/D9b TTL counters
-  import graft.streaming.Streams.{CellTtlCell, SketchTtlIn}
-
-  /** Drive the counter-TTL processor over explicit micro-batches. */
-  private def runCellTtl(batches: Seq[Seq[SketchTtlIn]], windowMs: Long,
-      nCells: Int, cellsOf: SketchTtlIn => Iterator[(Int, Long)])
-      : Seq[CellTtlCell] = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val input = MemoryStream[SketchTtlIn]
-      val name = s"tws_cttl_${System.nanoTime()}"
-      val q = input.toDS()
-        .withWatermark("ts", "0 seconds")
-        .groupByKey(_.g)
-        .transformWithState(
-          new Streams.CellTtlProcessor(nCells, windowMs, cellsOf),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        spark.table(name).as[CellTtlCell].collect().toSeq
-      } finally q.stop()
-    }
-  }
-
   /** Latest-version surviving (idx → cnt) map per key. */
-  private def cellSurvivors(cells: Seq[CellTtlCell])
-      : Map[String, Map[Int, Long]] =
-    cells.groupBy(_.g).map { case (k, cs) =>
-      val latest = cs.map(_.ver).max
-      k -> cs.filter(c => c.ver == latest && c.idx >= 0)
-        .map(c => c.idx -> c.cnt).toMap
-    }
+  private def cellSurvivors(fold: Streams.SketchFold,
+      cells: org.apache.spark.sql.DataFrame): Map[String, Map[Int, Long]] =
+    Streams.snapshot(fold, cells).collect().toSeq
+      .groupBy(_.getString(0)).map { case (g, rs) =>
+        g -> rs.map(r => r.getLong(1).toInt -> r.getLong(2)).toMap
+      }
 
-  /** The batch fold of [[Streams.cmsCellsOf]] over items, as the
-    * expected cell map. */
+  /** The batch CMS fold over items, as the expected cell map. */
   private def cmsFold(items: Seq[String]): Map[Int, Long] = {
     val m = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
     items.foreach { it =>
-      Streams.cmsCellsOf(SketchTtlIn("", it, 0L, new Timestamp(0L)))
-        .foreach { case (i, c) => m(i) += c }
+      (0 until graft.operators.Sketch.CmsDepth).foreach { r =>
+        m(r * graft.operators.Sketch.CmsWidth +
+          graft.operators.Sketch.cmsBucketLocal(r, it)) += 1L
+      }
     }
     m.toMap
   }
@@ -245,10 +214,8 @@ class TransformWithStateSpec extends SparkSpec {
   test("TTL cells: an idle CMS key evicts at the watermark; the survivor is the window's fold") {
     val t0 = LocalDateTime.of(2024, 3, 1, 10, 0, 0)
     val w = 10L * 60 * 1000 // 10 minutes
-    val nc = graft.operators.Sketch.CmsDepth * graft.operators.Sketch.CmsWidth
-    def in(g: String, item: String, m: Long) =
-      SketchTtlIn(g, item, 0L, tsAt(t0, m))
-    val cells = runCellTtl(Seq(
+    def in(g: String, item: String, m: Long) = TtlIn(g, item, tsAt(t0, m))
+    val cells = runTtl(Streams.CmsFold, Seq(
       // batch 1: A counts u1 twice + u2 once; B one item
       Seq(in("A", "u1", 0), in("A", "u2", 0), in("A", "u1", 0),
         in("B", "x", 0)),
@@ -257,10 +224,9 @@ class TransformWithStateSpec extends SparkSpec {
       Seq(in("B", "y", 30)),
       Seq(in("B", "x", 40)),
       // batch 4: A returns — counters RESTART from zero
-      Seq(in("A", "u1", 45))), w, nc, Streams.cmsCellsOf)
-    assert(cells.exists(c => c.g == "A" && c.idx == -1),
-      "expected an eviction tombstone for the idle key")
-    val sv = cellSurvivors(cells)
+      Seq(in("A", "u1", 45))), w)
+    assert(tombstoned(cells, "A"), "expected an eviction tombstone for the idle key")
+    val sv = cellSurvivors(Streams.CmsFold, cells)
     // A's surviving counters are batch 4's fold alone; B never idled
     // past the window, so its full history survives
     assert(sv("A") === cmsFold(Seq("u1")))
@@ -270,25 +236,23 @@ class TransformWithStateSpec extends SparkSpec {
   test("TTL cells: without an over-window gap, streamed equals the batch fold (CMS and histogram)") {
     val t0 = LocalDateTime.of(2024, 3, 1, 10, 0, 0)
     val w = 60L * 60 * 1000 // 1 hour — gaps below never expire
-    val nc = graft.operators.Sketch.CmsDepth * graft.operators.Sketch.CmsWidth
-    def in(g: String, item: String, m: Long) =
-      SketchTtlIn(g, item, 0L, tsAt(t0, m))
+    def in(g: String, item: String, m: Long) = TtlIn(g, item, tsAt(t0, m))
     // out-of-order arrivals within batches; multi-batch accumulation
-    val cells = runCellTtl(Seq(
+    val cells = runTtl(Streams.CmsFold, Seq(
       Seq(in("A", "u1", 20), in("A", "u2", 0), in("B", "x", 5)),
-      Seq(in("A", "u1", 25), in("B", "x", 50), in("A", "u3", 35))), w,
-      nc, Streams.cmsCellsOf)
-    assert(!cells.exists(_.idx == -1), "nothing may evict below the window")
-    val sv = cellSurvivors(cells)
+      Seq(in("A", "u1", 25), in("B", "x", 50), in("A", "u3", 35))), w)
+    assert(cells.filter(col("key") === -1L).isEmpty, "nothing may evict below the window")
+    val sv = cellSurvivors(Streams.CmsFold, cells)
     assert(sv("A") === cmsFold(Seq("u1", "u2", "u1", "u3")))
     assert(sv("B") === cmsFold(Seq("x", "x")))
-    // the histogram mapper through the same processor: values land in
-    // their bit-length buckets and accumulate across batches
-    def hin(g: String, v: Long, m: Long) = SketchTtlIn(g, "", v, tsAt(t0, m))
-    val hcells = runCellTtl(Seq(
+    // the histogram through the same driver: values land in their
+    // bit-length buckets and accumulate across batches
+    def hin(g: String, v: Long, m: Long) =
+      TtlIn(g, Streams.logBucketLocal(v).toString, tsAt(t0, m))
+    val hcells = runTtl(Streams.HistFold, Seq(
       Seq(hin("P", 1L, 0), hin("P", 7L, 10)),
-      Seq(hin("P", 8L, 20), hin("Q", 0L, 20))), w, 64, Streams.histCellsOf)
-    val hv = cellSurvivors(hcells)
+      Seq(hin("P", 8L, 20), hin("Q", 0L, 20))), w)
+    val hv = cellSurvivors(Streams.HistFold, hcells)
     assert(hv("P") === Map(1 -> 1L, 3 -> 1L, 4 -> 1L))
     assert(hv("Q") === Map(0 -> 1L))
   }
@@ -296,15 +260,13 @@ class TransformWithStateSpec extends SparkSpec {
   test("TTL KMV: without an over-window gap, streamed equals the full batch sketch") {
     val t0 = LocalDateTime.of(2024, 3, 1, 10, 0, 0)
     val w = 60L * 60 * 1000 // 1 hour — gaps below never expire
-    def in(tp: String, uid: Long, m: Long) = KmvTtlIn(tp, uid, tsAt(t0, m))
-    val cells = runTtl(Seq(
+    def in(tp: String, uid: Long, m: Long) = TtlIn(tp, uid.toString, tsAt(t0, m))
+    val cells = runTtl(Streams.KmvFold, Seq(
       Seq(in("A", 1, 0), in("B", 9, 5)),
       Seq(in("A", 2, 20), in("A", 1, 25)), // duplicate arrival folds away
       Seq(in("B", 8, 50), in("A", 3, 55))), w)
-    assert(!cells.exists(_.h == -1L), "nothing may evict below the window")
+    assert(cells.filter(col("key") === -1L).isEmpty, "nothing may evict below the window")
     val sv = survivors(cells)
-    def kmv(uids: Long*) =
-      uids.map(u => graft.operators.Sketch.kmvHashLocal(u.toString)).toSet
     assert(sv("A") === kmv(1, 2, 3))
     assert(sv("B") === kmv(8, 9))
   }
